@@ -37,10 +37,3 @@ def content_hash_and_count(df: DataFrame, cols: list[str] | None = None) -> tupl
     h = hex_to_long(F.substring(row_md5(*[F.col(c) for c in cols]), 1, 10))
     row = df.agg(F.sum(h).alias("h"), F.count(F.lit(1)).alias("n")).collect()[0]
     return (row["h"] or 0) + row["n"], row["n"]
-
-
-def content_hash_agg(df: DataFrame, cols: list[str] | None = None) -> int:
-    """Order-insensitive content hash of a DataFrame: sum of per-row
-    md5-longs. One number per dataset; identical across re-runs and
-    partitionings. Used by the idempotent publish protocol."""
-    return content_hash_and_count(df, cols)[0]

@@ -3,4 +3,3 @@ from .banded_join import banded_priority_join  # noqa: F401
 from .argmin_join import nearest_by_distance  # noqa: F401
 from .enrich import enrich_update  # noqa: F401
 from .ledger import missing_dates  # noqa: F401
-from .bloom import bloom_anti_join, bloom_semi_join  # noqa: F401

@@ -52,7 +52,7 @@ def banded_priority_join(
     ``extra_eq_keys`` carries the route). With ``n_salts > 1`` the left
     side adds a deterministic salt (hash of ``left_id``) and the right
     side replicates per salt, splitting every bin across ``n_salts``
-    reducers — the operators/skew.py recipe fused into the bin key.
+    reducers — the classic salted-join recipe fused into the bin key.
     Right-side replication cost is 3×n_salts, so keep n_salts modest
     (8-16) and only when the right side is the small one; a big-big
     skewed banded join should instead rely on AQE's runtime skew-join

@@ -106,8 +106,7 @@ def balanced_docs(
 ) -> DataFrame:
     """The balanced corpus itself: every ``docs`` column, restricted to
     the rows that survive source balancing (md5-bucket membership under
-    the per-source rate). This is the composable pipeline stage —
-    ``balance_sources`` reports the same selection as per-source stats.
+    the per-source rate). This is the composable pipeline stage.
 
     Membership depends only on the doc id and the broadcast rate table:
     map-local, reproducible across engines, reruns and repartitionings.
@@ -119,45 +118,6 @@ def balanced_docs(
         docs.join(F.broadcast(rates.select(source_col, "rate_bp")), on=source_col)
         .where(hash_bucket_bp(F.col(id_col)) < F.col("rate_bp"))
         .drop("rate_bp")
-    )
-
-
-def balance_sources(
-    docs: DataFrame,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Downsample every source to ~the smallest source's size (uniform
-    source mixing): per-source keep rate (basis points) =
-    floor(min_n * 10000 / n_source); a doc survives when its
-    deterministic md5 bucket falls under its source's rate. Returns
-    per-source stats: n_docs, rate_bp, n_kept — for the balanced corpus
-    itself use ``balanced_docs`` (same broadcast rate table, same
-    membership rule).
-
-    Exact-by-construction across engines AND across cluster layouts:
-    membership depends only on the doc id, never on partitioning or row
-    order. The rate table is one tiny aggregation + broadcast; the
-    filter is map-local (this is the 100 TB-safe shape — a per-source
-    rank/quota would sort giant single-source partitions)."""
-    rates = source_rates(docs, source_col)
-    kept = (
-        docs.select(source_col, hash_bucket_bp(F.col(id_col)).alias("_b"))
-        .join(F.broadcast(rates), on=source_col)
-        .where(F.col("_b") < F.col("rate_bp"))
-        .groupBy(source_col)
-        .agg(F.count(F.lit(1)).alias("n_kept"))
-    )
-    # kept is one row per source (tiny by construction) — broadcast it so
-    # the stats join never sort-merges
-    return (
-        rates.join(F.broadcast(kept), on=source_col, how="left")
-        .select(
-            source_col,
-            "n_docs",
-            "rate_bp",
-            F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
-        )
     )
 
 
@@ -176,7 +136,7 @@ def epoch_upsample(
     guaranteed copies plus one more iff its deterministic md5 bucket
     falls under the fractional remainder — so exactly the right
     fraction of each source repeats, reproducibly across engines and
-    repartitionings (same doctrine as deterministic_sample). Output:
+    repartitionings (same doctrine as sampling.hash_bucket). Output:
     one row per materialized copy ``(doc_id, source, copy_idx)``.
 
     Scale shape: the weights table broadcasts (it is |sources| rows);

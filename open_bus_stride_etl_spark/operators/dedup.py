@@ -594,75 +594,6 @@ def _local_cc_finish(edges: DataFrame) -> DataFrame:
     return edges.sparkSession.createDataFrame(out, schema)
 
 
-def _map_local_contract(edges: DataFrame) -> DataFrame:
-    """One MAP-LOCAL contraction round before the distributed stars:
-    each partition's edges are collapsed with a partition-local
-    union-find (union-by-min with path compression), emitting one
-    ``(node, local_component_min)`` edge per non-root node. No shuffle —
-    an Arrow-batched mapInPandas whose state is bounded by the
-    partition's edge count (at default 128 MB splits: ~8M 16-byte edges,
-    a dict union-find well inside executor memory).
-
-    Why it helps: LSH/SimHash band files arrive roughly clustered (near
-    -dup groups emit several co-located pairs), so a partition-local
-    pass removes most intra-group redundancy and shortens chains before
-    the first large-star shuffle — the rounds that remain operate on the
-    contracted graph. Correctness: the emitted star preserves the node
-    set (every non-root points at its root; roots of >= 2-node local
-    components appear as targets; a node seen ONLY in self-loop edges —
-    possible when the caller passes input_simple=True on a non-simple
-    graph — is preserved as an explicit (u, u) row rather than silently
-    dropped, matching _local_cc_finish's us|vs node tracking) and
-    the component partition (nodes sharing a local root were connected;
-    cross-partition connectivity survives because both endpoints map
-    into their local roots, which remain connected through the nodes'
-    other copies). Those are exactly the invariants each distributed
-    round maintains, so the main loop (and the hybrid local finish)
-    consumes the contracted graph unchanged."""
-    import pandas as pd  # noqa: PLC0415
-
-    def per_partition(batches):
-        parent: dict = {}
-        seen: set = set()
-
-        def find(x):
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != x:
-                parent[x], x = r, parent[x]
-            return r
-
-        for pdf in batches:
-            for u, v in zip(pdf["u"].to_numpy(), pdf["v"].to_numpy()):
-                u, v = int(u), int(v)
-                seen.add(u)
-                seen.add(v)
-                ru, rv = find(u), find(v)
-                if ru != rv:
-                    if rv < ru:
-                        ru, rv = rv, ru
-                    parent[rv] = ru
-        if seen:
-            us, vs = [], []
-            referenced: set = set()
-            for x in seen:
-                r = find(x)
-                if x != r:
-                    us.append(x)
-                    vs.append(r)
-                    referenced.add(r)
-            # self-loop-only nodes (find never united them): keep their
-            # singleton component as an explicit (u, u) row
-            for x in seen:
-                if find(x) == x and x not in referenced:
-                    us.append(x)
-                    vs.append(x)
-            yield pd.DataFrame({"u": us, "v": vs}, dtype="int64")
-
-    return edges.mapInPandas(per_partition, schema="u long, v long")
-
-
 def _derived_finish_bound(spark) -> int:
     """``local_finish_edges`` derived from the driver's configured heap
     instead of a constant (r6, VERDICT r5 item 5): the Arrow collect
@@ -717,7 +648,6 @@ def connected_components(
     max_iter: int = 25,
     input_simple: bool = False,
     local_finish_edges: int | None = None,
-    precontract: bool = False,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair graph:
     ``(doc_id, component_id)`` where component_id = MIN doc id in the
@@ -828,14 +758,6 @@ def connected_components(
     e = pairs.select(F.col(id_a).cast("long").alias("u"), F.col(id_b).cast("long").alias("v"))
     if not input_simple:
         e = e.where(F.col("u") != F.col("v")).distinct()
-    if precontract:
-        # map-local union-find round (shuffle-free) — see _map_local_contract;
-        # OFF by default: measured neutral on the LSH/SimHash bench graphs
-        # (sf10: 305075 -> 304504 edges — their components are overwhelmingly
-        # isolated pairs, so partitions hold nothing to collapse). Turn on
-        # for chain-heavy graphs (e.g. shared-span or transcript-overlap
-        # pair streams) where partition-local redundancy is real.
-        e = _map_local_contract(e)
     edges, fp = _checkpoint_with_fingerprint(e)
     for _ in range(max_iter):
         if fp[0] <= local_finish_edges:
@@ -914,11 +836,6 @@ def simhash(
         term = bit * F.lit(1 << j).cast("long")
         sim = term if sim is None else sim + term
     return per_doc.select(F.col(id_col), sim.alias("simhash"))
-
-
-def simhash32(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """32-bit SimHash — the oracle-twinned registered config."""
-    return simhash(docs, id_col, text_col, bits=32)
 
 
 def simhash_hamming_pairs(

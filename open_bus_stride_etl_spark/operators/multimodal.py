@@ -28,21 +28,9 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .util import fan_out
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image|audio|video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-    ]
-)
 
 DECODE_STATS_SCHEMA = T.StructType(
     [
@@ -437,91 +425,4 @@ def decode_audio_stats(media: DataFrame) -> DataFrame:
 
     return fan_out(media.select("media_id", "payload")).mapInPandas(
         batches, AUDIO_STATS_SCHEMA
-    )
-
-
-def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling *plan*: expands (media_id, frame_no) rows for
-    a stubbed frame count derived from payload size — the real extractor
-    replaces the count; the explode/partition shape is what matters."""
-    n_frames = (F.octet_length("payload") / F.lit(1024)).cast("int")
-    return (
-        media.where(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)), F.lit(every_n))).alias(
-                "frame_no"
-            ),
-        )
-    )
-
-
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("payload", T.BinaryType(), True),
-    ]
-)
-
-
-def fake_resize(media: DataFrame, max_dim: int = 256) -> DataFrame:
-    """Resize *plumbing*: aspect-preserving dimension scaling in an
-    Arrow-batched pandas stage; a real implementation replaces the
-    payload passthrough with actual pixel resampling. Metadata math is
-    real (and the part a planner cares about)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            scale = (
-                pd.concat([pdf["width"], pdf["height"]], axis=1).max(axis=1) / float(max_dim)
-            ).clip(lower=1.0)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": (pdf["width"] / scale).round().astype("Int32"),
-                    "height": (pdf["height"] / scale).round().astype("Int32"),
-                    "payload": pdf["payload"],  # real resize plugs in here
-                }
-            )
-
-    return fan_out(media.select("media_id", "width", "height", "payload")).mapInPandas(
-        batches, RESIZE_SCHEMA
-    )
-
-
-FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("embedding", T.ArrayType(T.FloatType()), True),
-    ]
-)
-
-
-def fake_feature_extract(media: DataFrame, dim: int = 8) -> DataFrame:
-    """Feature-extraction plumbing: a deterministic byte-histogram
-    "embedding" (dim buckets over byte values, L1-normalized) standing in
-    for a real vision/audio encoder. The output column is the same
-    array<float> the similarity operators consume, so media rows flow
-    straight into cosine_topk / ann_lsh_topk / embedding_near_dup_pairs."""
-    bucket = 256 // dim
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            def embed(b):
-                if b is None or len(b) == 0:
-                    return None
-                hist = [0] * dim
-                for byte in b:
-                    hist[min(byte // bucket, dim - 1)] += 1
-                total = float(len(b))
-                return [float(h) / total for h in hist]
-
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "embedding": pdf["payload"].map(embed)}
-            )
-
-    return fan_out(media.select("media_id", "payload")).mapInPandas(
-        batches, FEATURES_SCHEMA
     )

@@ -1,20 +1,14 @@
-"""Sampling and cardinality/quantile sketches — the remaining data-prep
-operations a 100 TB training-data pipeline needs.
+"""Deterministic sampling and shuffling — the data-prep operations a
+100 TB training-data pipeline needs.
 
-Design stance:
-- **Deterministic hash sampling**, not Bernoulli RNG: at pipeline scale a
-  sample must be reproducible across reruns/engines and stable under
-  repartitioning, so membership is a pure function of the row key
-  (md5-derived integer mod N), exactly like the engine's other
-  cross-engine-exact hashes — which also makes these operators
-  DuckDB-oracle-checkable, where `df.sample()` never can be.
-- **Sketches are the scale path for distinct counts/quantiles**:
-  `approx_count_distinct` (HyperLogLog++) and `percentile_approx`
-  (Greenwald-Khanna) aggregate in fixed memory with map-side partials,
-  where exact COUNT(DISTINCT)/sorting would shuffle every value. They
-  are engine-specific by nature, so their tests assert tolerance
-  against the exact answer instead of an oracle hash (the exact twins
-  stay in the oracle suite).
+Deterministic hash sampling, not Bernoulli RNG: at pipeline scale a
+sample must be reproducible across reruns/engines and stable under
+repartitioning, so membership is a pure function of the row key
+(md5-derived integer mod N), exactly like the engine's other
+cross-engine-exact hashes — which also makes these operators
+DuckDB-oracle-checkable, where `df.sample()` never can be. Keeping ~pct%
+of rows is ``df.where(hash_bucket(key) < pct)``; a superset percentage
+always contains the subset (nested train/dev carve-outs).
 """
 
 from __future__ import annotations
@@ -31,16 +25,6 @@ def hash_bucket(key: Column, buckets: int = 100, seed: str = "") -> Column:
     any engine with md5 — the portability contract of the repo."""
     h = hex_to_long(F.substring(F.md5(F.concat(key.cast("string"), F.lit(seed))), 1, 10))
     return F.pmod(h, F.lit(buckets))
-
-
-def deterministic_sample(
-    df: DataFrame, key_col: str, pct: int, seed: str = ""
-) -> DataFrame:
-    """Keep ~pct% of rows: membership = hash_bucket(key) < pct.
-    Reproducible across runs, engines, and repartitioning; sampling a
-    superset percentage always contains the subset (nested samples —
-    useful for train/dev carve-outs)."""
-    return df.where(hash_bucket(F.col(key_col), 100, seed) < F.lit(pct))
 
 
 def stratified_hash_sample(
@@ -77,19 +61,6 @@ def reservoir_per_group(
         .where(F.col("_rn") <= k)
         .drop("_rn")
     )
-
-
-def approx_distinct(df: DataFrame, col: str, rsd: float = 0.05) -> DataFrame:
-    """HyperLogLog++ distinct count — fixed-memory map-side sketch vs
-    the full shuffle of exact COUNT(DISTINCT). rsd = target relative
-    standard deviation."""
-    return df.agg(F.approx_count_distinct(col, rsd).alias(f"approx_distinct_{col}"))
-
-
-def approx_quantiles(df: DataFrame, col: str, probs: list, rel_err: float = 0.01):
-    """Greenwald-Khanna approximate quantiles (driver-side list) —
-    bounded-memory alternative to sorting the column."""
-    return df.stat.approxQuantile(col, list(probs), rel_err)
 
 
 def shard_shuffle(

@@ -100,9 +100,6 @@ def _indexed_lsh_pairs(
     )
 
 
-_PERSIST_SCORED = False
-
-
 def _load_docs(spark: SparkSession, base_dir: str, input_format: str) -> DataFrame:
     configure(spark)
     if input_format == "jsonl":
@@ -168,12 +165,10 @@ def llm_curate_corpus(
     # table — and, after the write, append the NEW survivors'
     # fingerprints so the next run sees them. The index append is
     # distinct fingerprints only: it grows with unique content, not
-    # crawl volume. A Bloom-pre-filtered variant (operators/bloom.py)
-    # was tried here in r5 and REVERTED on measurement: at a 20M-key
-    # materialized index x 5M-row batch the per-run bitset build made
-    # it 12x slower than Spark's native AQE anti-join (2.4 s vs 29 s,
-    # interleaved A/B x3) — see bloom.py's docstring for the full
-    # verdict and the narrow amortized-bitset niche where it can win.
+    # crawl volume. A Bloom-pre-filtered variant was tried here in r5
+    # and deleted on measurement: at a 20M-key materialized index x
+    # 5M-row batch the per-run bitset build made it 12x slower than
+    # Spark's native AQE anti-join (2.4 s vs 29 s, interleaved A/B x3).
     seen = None
     if history_dir is not None:
         import os  # noqa: PLC0415
@@ -199,15 +194,9 @@ def llm_curate_corpus(
     ]
     obs_flags = None
     if seen is not None:
-        if _PERSIST_SCORED:
-            # measure-only toggle (VERDICT r9 #2): cache the scored
-            # full-text corpus so the flags aggregation and the write
-            # derivation share one scoring pass — flipped by
-            # tools/probe_scored.py's paired A/B; see the probe verdict
-            # in OPTIMIZATION_r10.md before trusting either default.
-            from ..operators.util import track_persist  # noqa: PLC0415
-
-            scored = track_persist(scored)
+        # Persisting ``scored`` so this pass and the write share one
+        # scoring scan was measured in r10 (+1.38 s sf10) and left off: a
+        # corpus-sized cache.
         fl = scored.join(
             seen.select(F.col("fingerprint").alias("_fp")).distinct().withColumn(
                 "_seen", F.lit(1)

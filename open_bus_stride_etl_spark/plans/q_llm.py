@@ -1136,10 +1136,7 @@ def balanced_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate (membership a pure function of doc_id, so reproducible across
     engines/reruns/partitionings; the filter is map-local after a
     broadcast of the tiny per-source rate table, no per-source
-    rank/quota sort). The per-source selection REPORT
-    (operators/curation.py:balance_sources) shares this exact rate
-    table + membership core — its standalone query was merged into this
-    one in the r5 registry consolidation.
+    rank/quota sort).
 
     The driver corpus is PERFECTLY source-balanced (20 sources x
     exactly 25 docs at sf0.01), so every rate_bp computed to 10000 and
@@ -1975,15 +1972,12 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of re-deduping the whole corpus. Emits (new doc, historical
     keeper) for every already-seen document.
 
-    The Bloom-pre-filtered variant (operators/bloom.py:bloom_anti_join,
-    used by the llm-curate-corpus incremental task) was TRIED here in
-    r5 and reverted on measurement: with the index recomputed from the
-    same corpus scan each run, the extra build pass + bitset collect
-    cost 0.42 -> 2.15 s at sf0.1 and 1.25 -> 2.63 s at sf10 — the
-    bloom pays off when the index is a large PRE-MATERIALIZED table
-    whose shuffle it avoids (the task shape), not when the index is
-    derived in-query. Result-equality of the two paths is pinned by
-    tests/test_bloom.py either way."""
+    A Bloom-pre-filtered variant was TRIED here in r5 and deleted on
+    measurement: with the index recomputed from the same corpus scan
+    each run, the extra build pass + bitset collect cost 0.42 -> 2.15 s
+    at sf0.1 and 1.25 -> 2.63 s at sf10 — and against a 20M-key
+    PRE-MATERIALIZED index (the llm-curate-corpus shape) it was 12x
+    slower than the plain AQE anti-join too."""
     d = _docs(spark, sf_dir).withColumn(
         "fingerprint", tx.prefix_fingerprint(F.col("text"), 60)
     )
@@ -2276,7 +2270,7 @@ def curate_incremental_noop(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (the task's): one map-combined scoring pass, the exact-
     dup fingerprint window, the flattened MinHash-LSH pair plan, and a
     seen-index anti-join that is a plain AQE equi-join on an 8-byte key
-    (the Bloom variant was measured 12x slower and reverted — bloom.py).
+    (a Bloom pre-filter was measured 12x slower there and deleted).
     The index grows with unique content, not crawl volume.
     Self-contained: temp base removed before returning."""
     import shutil  # noqa: PLC0415

@@ -1,1 +1,1 @@
-from .lake import load_table, register_views, TESTDATA_TABLES  # noqa: F401
+from .lake import load_table, TESTDATA_TABLES  # noqa: F401

@@ -157,6 +157,49 @@ def delete(path: str, spark: SparkSession | None = None) -> None:
         fs.delete(jp, True)
 
 
+def _parked(final: str) -> str:
+    """Where ``swap_dir`` parks the previous ``final`` between its renames."""
+    return f"{final.rstrip('/')}.old"
+
+
+def swap_dir(staged: str, final: str, spark: SparkSession | None = None) -> None:
+    """Publish directory ``staged`` at ``final``: old out, new in, delete
+    old. The previous ``final`` is parked at ``<final>.old`` between the
+    two renames. Both renames are checked — Hadoop's rename reports
+    failure by RETURNING false, and an unchecked false would nest
+    ``staged`` inside a still-existing ``final`` — and a failed second
+    rename puts the original back.
+
+    A crash between the two renames leaves no ``final``, only
+    ``<final>.old``; a reader that checks for ``final`` before reading
+    calls ``exists_restoring`` instead of ``exists`` to put it back.
+    Single writer per ``final`` (see ``rename``)."""
+    old = _parked(final)
+    had_final = exists(final, spark)
+    if had_final:
+        delete(old, spark)  # left by a crash after an earlier publish
+        if not rename(final, old, spark):
+            raise OSError(f"swap failed: could not move {final} -> {old}")
+    if not rename(staged, final, spark):
+        if had_final:
+            rename(old, final, spark)
+        raise OSError(f"swap failed: could not move {staged} -> {final}")
+    delete(old, spark)
+
+
+def exists_restoring(final: str, spark: SparkSession | None = None) -> bool:
+    """``exists(final)``, after first moving back the ``<final>.old`` a
+    ``swap_dir`` crashed between its renames left behind."""
+    if exists(final, spark):
+        return True
+    old = _parked(final)
+    if not exists(old, spark):
+        return False
+    if not rename(old, final, spark):
+        raise OSError(f"restore failed: could not move {old} -> {final}")
+    return True
+
+
 def compact_parquet(
     spark: SparkSession,
     path: str,
@@ -175,12 +218,11 @@ def compact_parquet(
     dataset is somehow under-split), optionally sorting rows into the
     new files by ``sort_cols`` so parquet row-group min/max stats stay
     tight for range pruning (a shuffle-range-sort; skip it for pure
-    bin-packing). The rewrite goes through a staging dir and an atomic
-    rename swap, so readers see either the old or the new layout.
+    bin-packing). The rewrite goes through a staging dir and
+    ``swap_dir``.
 
     Returns {files_before, files_after, bytes_total}. Local-FS and
-    Hadoop-FS paths both work (the staging swap uses the same
-    rename/delete helpers as the object-store sink)."""
+    Hadoop-FS paths both work."""
     import math  # noqa: PLC0415
     import uuid as _uuid  # noqa: PLC0415
 
@@ -208,13 +250,6 @@ def compact_parquet(
         out = df.repartition(n_target)
     staging = f"{path.rstrip('/')}__compact_{_uuid.uuid4().hex[:8]}"
     out.write.mode("overwrite").parquet(staging)
-    old = f"{path.rstrip('/')}__old_{_uuid.uuid4().hex[:8]}"
-    rename(path, old, spark)
-    if not rename(staging, path, spark):
-        # put the original back before failing: readers never see a gap
-        rename(old, path, spark)
-        delete(staging, spark)
-        raise IOError(f"compact_parquet: could not swap {staging} into {path}")
-    delete(old, spark)
+    swap_dir(staging, path, spark)
     n_after = len(_data_files(jfs, _hadoop(spark, path)[1]))
     return {"files_before": n_before, "files_after": n_after, "bytes_total": total}

@@ -1,4 +1,4 @@
-"""JSONL (newline-delimited JSON) source/sink — the interchange format
+"""JSONL (newline-delimited JSON) source — the interchange format
 crawl pipelines and LLM training-data dumps actually ship (one JSON
 object per line, splittable, append-friendly). Extends SURVEY §2.1's
 source family (S4/S5 cover CSV/datapackage; the reference's lake is
@@ -19,7 +19,7 @@ Design points, all Spark-native:
   for contract-checked internal handoffs.
 - **Splittable at scale**: uncompressed (or zstd/bzip2) JSONL splits on
   line boundaries, so one 10 TB dump still fans out across executors;
-  gzip does not split — the writer never gzips.
+  gzip does not split.
 """
 
 from __future__ import annotations
@@ -90,10 +90,3 @@ def load_documents_jsonl(spark: SparkSession, path: str) -> DataFrame:
     text analysis) run unchanged on the result."""
     clean, _ = quarantine_corrupt(read_jsonl(spark, path, DOCUMENTS_SCHEMA))
     return clean
-
-
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Write a DataFrame as JSONL, one object per line, uncompressed
-    (splittable on re-read). Partition count controls file count —
-    callers coalesce for few-large-files layouts."""
-    df.write.mode(mode).json(path)

@@ -119,12 +119,6 @@ def load_table_jdbc(
     return spark.read.jdbc(url, table, properties=props)
 
 
-def register_views(spark: SparkSession, sf_dir: str, tables=TESTDATA_TABLES) -> None:
-    """Register each table as a temp view for spark.sql() plans."""
-    for name in tables:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def write_partitioned(
     df: DataFrame, path: str, partition_cols: tuple[str, ...] = ("date",), mode: str = "overwrite"
 ) -> None:

@@ -22,20 +22,6 @@ from pyspark.sql import functions as F
 
 from . import fs
 
-STRIDE_TABLES = (
-    "siri_snapshot",
-    "siri_route",
-    "siri_stop",
-    "siri_ride",
-    "siri_ride_stop",
-    "siri_vehicle_location",
-    "gtfs_stop",
-    "gtfs_route",
-    "gtfs_ride",
-    "gtfs_ride_stop",
-    "gtfs_data_task",
-)
-
 
 def table_path(base_dir: str, name: str) -> str:
     """``base_dir`` may be a plain path or any Hadoop-FS URI (s3a://…):
@@ -83,14 +69,5 @@ def overwrite_table_observed(
     df.observe(obs, *aggs).write.mode("overwrite").parquet(tmp)
     vals = dict(obs.get)
     n = vals.pop("_rows")
-    old = f"{final}.old-{int(time.time() * 1000)}"
-    # Hadoop FileSystem.rename reports failure by RETURNING false (not
-    # raising); an unchecked false here would nest tmp inside the still-
-    # existing final dir and silently corrupt the snapshot.
-    if fs.exists(final, spark):
-        if not fs.rename(final, old, spark):
-            raise OSError(f"snapshot swap failed: could not move {final} -> {old}")
-    if not fs.rename(tmp, final, spark):
-        raise OSError(f"snapshot swap failed: could not move {tmp} -> {final}")
-    fs.delete(old, spark)
+    fs.swap_dir(tmp, final, spark)
     return {"rows": n, **vals}

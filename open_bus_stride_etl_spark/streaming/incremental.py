@@ -20,7 +20,6 @@ emulation was approximating.
 
 from __future__ import annotations
 
-import datetime
 from typing import Iterator
 
 import pandas as pd
@@ -45,32 +44,6 @@ def first_last_aggs(ts_col: str, id_col: str) -> list[Column]:
         F.max(ts_col).alias("last_ts"),
         F.count(F.lit(1)).alias("n_points"),
     ]
-
-
-def stream_ride_first_last(
-    locations: DataFrame,
-    ride_stops_static: DataFrame,
-    ts_col: str = "recorded_at_time",
-    id_col: str = "id",
-    watermark: str = "4 days",
-) -> DataFrame:
-    """Streaming first/last location per ride: stream-static join onto
-    the ride-stop dimension, then a watermarked groupBy(ride).
-
-    The watermark duration IS the reference's ``num_days`` lookback
-    (siri/cli.py:13): telemetry later than that is dropped rather than
-    reprocessed, exactly like rows outside the re-scan window."""
-    joined = locations.join(
-        ride_stops_static.select(
-            F.col("id").alias("siri_ride_stop_id"), "siri_ride_id"
-        ),
-        on="siri_ride_stop_id",
-    )
-    return (
-        joined.withWatermark(ts_col, watermark)
-        .groupBy("siri_ride_id")
-        .agg(*first_last_aggs(ts_col, id_col))
-    )
 
 
 def stream_hourly_stats(
@@ -99,21 +72,6 @@ def stream_hourly_stats(
             "n_rows",
         )
     )
-
-
-def stream_exact_dedup(
-    docs: DataFrame,
-    key_cols: list[str],
-    ts_col: str,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact deduplication: keep the first arrival of each key,
-    dropping re-arrivals across micro-batches.
-    ``dropDuplicatesWithinWatermark`` bounds the dedup state by the
-    watermark — the streaming analog of the batch hash-groupBy dedup,
-    with state TTL instead of unbounded memory (at 100 TB/day the TTL IS
-    the feasibility condition)."""
-    return docs.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(key_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -231,30 +189,3 @@ def stream_ride_tracker(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# Streaming flat export (stream-static join, the packager as a stream)
-# ---------------------------------------------------------------------------
-
-
-def stream_flat_export(
-    locations: DataFrame,
-    ride_stops: DataFrame,
-    rides: DataFrame,
-    routes: DataFrame,
-    stops: DataFrame,
-    gtfs_stops: DataFrame,
-) -> DataFrame:
-    """The hourly flat export (packagers/siri.py:27-67) as a continuous
-    stream-static join: each micro-batch of telemetry joins the static
-    dimension snapshot; ``writeStream.partitionBy(hour)`` then lands the
-    same per-hour layout the batch packager produces, without the
-    backwards hour sweep."""
-    from ..plans.stride import siri_flat_export  # noqa: PLC0415 — shared projection
-
-    wide = siri_flat_export(
-        locations, ride_stops, rides, routes, stops, gtfs_stops,
-        "1970-01-01", "9999-01-01",
-    )
-    return wide.withColumn("hour", F.date_trunc("hour", F.col("recorded_at_time")))

@@ -23,8 +23,11 @@ Scale + correctness notes:
   rewritten, so per-batch cost follows the batch's partition spread,
   not snapshot size.
 - Atomicity: the unpartitioned form writes to ``<dir>.staging-<epoch>``
-  and swaps with two renames (a crash leaves either whole snapshot,
-  never a torn mix); the partitioned form relies on Spark's per-
+  and publishes it with ``fs.swap_dir`` (two checked renames; readers
+  never see a torn mix). A crash between the renames leaves no
+  snapshot, only ``<dir>.old``: the replayed epoch moves it back
+  (``fs.exists_restoring``) before merging, so the replay sees the
+  previous snapshot. The partitioned form relies on Spark's per-
   partition commit protocol (the standard plain-parquet trade — a
   transactional table format upgrades this without changing the merge).
   foreachBatch re-runs an epoch on restart and the merge is idempotent
@@ -35,11 +38,10 @@ Scale + correctness notes:
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..sources import fs
 
 
 def upsert_merge(
@@ -78,7 +80,7 @@ def parquet_upsert_sink(
 
     def sink(batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession
-        exists = os.path.isdir(snapshot_dir)
+        exists = fs.exists_restoring(snapshot_dir, spark)
         if partition_cols and exists:
             # read-merge-rewrite ONLY the partitions this batch touches:
             # dynamic partition overwrite replaces exactly those
@@ -109,12 +111,6 @@ def parquet_upsert_sink(
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
         writer.parquet(staging)
-        # atomic-enough swap: old out, new in (a crash leaves one whole
-        # snapshot; foreachBatch re-runs the epoch on restart)
-        old = f"{snapshot_dir}.old-{epoch_id}"
-        if exists:
-            os.rename(snapshot_dir, old)
-        os.rename(staging, snapshot_dir)
-        shutil.rmtree(old, ignore_errors=True)
+        fs.swap_dir(staging, snapshot_dir, spark)
 
     return sink

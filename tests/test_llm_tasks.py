@@ -49,9 +49,7 @@ def test_curate_corpus_task_parquet(spark, lake, capsys):
 
 def test_curate_corpus_task_jsonl(spark, lake, tmp_path):
     docs = spark.read.parquet(f"{lake}/documents.parquet")
-    from open_bus_stride_etl_spark.sources.jsonl import write_jsonl
-
-    write_jsonl(docs.coalesce(1), f"{lake}/documents_jsonl")
+    docs.coalesce(1).write.mode("overwrite").json(f"{lake}/documents_jsonl")
     m = run_task(
         spark,
         "llm-curate-corpus",

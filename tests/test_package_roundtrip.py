@@ -1,4 +1,4 @@
-"""Package write -> read roundtrip (S4/S5/S6) and the salted skew join."""
+"""Package write -> read roundtrip (S4/S5/S6)."""
 
 import datetime
 import json
@@ -6,7 +6,6 @@ import json
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from open_bus_stride_etl_spark.operators.skew import salted_join
 from open_bus_stride_etl_spark.sources.csv_package import (
     load_package,
     manifest_row_count,
@@ -104,23 +103,6 @@ def test_load_reference_shaped_manifest(spark, tmp_path):
     got = {r["id"]: r for r in back.collect()}
     assert got[1]["seen"] == datetime.datetime(2024, 5, 1, 10, 0)
     assert got[1]["score"] == 1.5 and got[2]["name"] is None and got[2]["ok"] is False
-
-
-def test_salted_join_matches_plain_join(spark):
-    # heavily skewed big side: 90% of rows share key 1
-    big = spark.createDataFrame(
-        [Row(k=1 if i % 10 else 2 + i % 5, payload=i) for i in range(1000)]
-    )
-    small = spark.createDataFrame([Row(k=i, label=f"dim{i}") for i in range(1, 7)])
-    plain = big.join(small, on="k").select("k", "payload", "label")
-    salted = salted_join(big, small, on="k", n_salts=8).select("k", "payload", "label")
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
-    # salt spreads the hot key across reducers: >1 distinct salt for k=1
-    b = big.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(8))
-    )
-    n_salts_hot = b.where(F.col("k") == 1).select("_salt").distinct().count()
-    assert n_salts_hot == 8
 
 
 def test_write_package_zero_rows_header_only(spark, tmp_path):

@@ -13,7 +13,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from open_bus_stride_etl_spark.functions.geo import haversine_meters
-from open_bus_stride_etl_spark.functions.hashing import content_hash_agg
+from open_bus_stride_etl_spark.functions.hashing import content_hash_and_count
 from open_bus_stride_etl_spark.operators.banded_join import banded_priority_join
 from open_bus_stride_etl_spark.operators.enrich import enrich_update
 from open_bus_stride_etl_spark.operators.first_last import first_last_by
@@ -67,8 +67,10 @@ def test_first_last_by_matches_python(spark, rows):
 @settings(**SETTINGS)
 def test_content_hash_is_order_and_partition_invariant(spark, rows):
     df = spark.createDataFrame(rows, "id long, g long, ts timestamp")
-    h1 = content_hash_agg(df)
-    h2 = content_hash_agg(df.orderBy(F.col("ts").desc_nulls_first(), "id").repartition(7))
+    h1 = content_hash_and_count(df)[0]
+    h2 = content_hash_and_count(
+        df.orderBy(F.col("ts").desc_nulls_first(), "id").repartition(7)
+    )[0]
     assert h1 == h2
     # equals the pure-python recomputation of the same hash definition
     total = 0
@@ -222,97 +224,7 @@ def test_shared_span_pairs_matches_bruteforce(spark, pair):
         assert r["max_run_words"] == want[0] + 2
 
 
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 30), st.integers(0, 30)),
-        min_size=0,
-        max_size=50,
-    ),
-    st.sampled_from([0, 50_000]),
-)
-@settings(**SETTINGS)
-def test_connected_components_precontract_invariant(spark, edges, local_finish):
-    """The map-local union-find pre-contraction must preserve components
-    on arbitrary random multigraphs (self-loops, duplicate edges,
-    chains) under BOTH finish paths — the same invariant the
-    parametrized unit test pins on hand-picked graphs."""
-    from open_bus_stride_etl_spark.operators import dedup as dd
-
-    df = spark.createDataFrame(
-        [Row(doc_a=u, doc_b=v) for u, v in edges], "doc_a long, doc_b long"
-    )
-    base = {
-        (r["doc_id"], r["component_id"])
-        for r in dd.connected_components(
-            df, local_finish_edges=local_finish, precontract=False
-        ).collect()
-    }
-    pre = {
-        (r["doc_id"], r["component_id"])
-        for r in dd.connected_components(
-            df, local_finish_edges=local_finish, precontract=True
-        ).collect()
-    }
-    assert pre == base
-
-
-# --- r5 operators: bloom joins, salted top-k, PNG/WAV codecs ---------------
-
-
-@st.composite
-def key_sets(draw):
-    new_keys = draw(st.lists(st.integers(0, 40), min_size=1, max_size=30))
-    seen_keys = draw(st.lists(st.integers(0, 40), min_size=0, max_size=30))
-    return new_keys, seen_keys
-
-
-@given(key_sets(), st.sampled_from([6, 12]))
-@settings(**SETTINGS)
-def test_bloom_joins_match_plain_property(spark, keys, bits_log2):
-    """bloom_anti_join / bloom_semi_join == plain anti/semi join for ANY
-    key overlap and ANY filter size (undersized filters force false
-    positives; results must still match exactly)."""
-    from open_bus_stride_etl_spark.operators import bloom as bl
-
-    new_keys, seen_keys = keys
-    new = spark.createDataFrame(
-        [Row(fp=f"k{k}", i=i) for i, k in enumerate(new_keys)], "fp string, i long"
-    )
-    seen = spark.createDataFrame([Row(fp=f"k{k}") for k in seen_keys], "fp string") \
-        if seen_keys else spark.createDataFrame([], "fp string")
-    for how, fn in (("left_anti", bl.bloom_anti_join), ("left_semi", bl.bloom_semi_join)):
-        plain = sorted(r["i"] for r in new.join(seen, on="fp", how=how).collect())
-        got = sorted(
-            r["i"] for r in fn(new, seen, "fp", bits_log2=bits_log2).collect()
-        )
-        assert got == plain, f"{how} bits_log2={bits_log2}"
-
-
-@st.composite
-def keyed_rows(draw):
-    n = draw(st.integers(1, 40))
-    return [
-        (i, draw(st.integers(0, 3)), draw(st.integers(0, 50)))
-        for i in range(n)
-    ]
-
-
-@given(keyed_rows(), st.integers(1, 4), st.sampled_from([1, 3, 8]))
-@settings(**SETTINGS)
-def test_salted_topk_property(spark, rows, k, n_salts):
-    from open_bus_stride_etl_spark.operators import skew as sk
-
-    df = spark.createDataFrame(rows, "id long, g long, v long")
-    order = [F.col("v").desc(), F.col("id").asc()]
-    got = sorted(
-        (r["g"], r["id"], r["rn"])
-        for r in sk.topk_per_key_salted(df, ["g"], order, k=k, n_salts=n_salts).collect()
-    )
-    want = []
-    for g in {r[1] for r in rows}:
-        grp = sorted((r for r in rows if r[1] == g), key=lambda r: (-r[2], r[0]))
-        want += [(g, r[0], i + 1) for i, r in enumerate(grp[:k])]
-    assert got == sorted(want)
+# --- PNG/WAV codecs ----------------------------------------------------------
 
 
 @given(

@@ -57,38 +57,6 @@ def _run_to_memory(df, name, mode, spark):
         shutil.rmtree(ckpt, ignore_errors=True)  # don't leak /tmp dirs per run
 
 
-def test_stream_ride_first_last_matches_batch(spark, tables, loc_stream_dir):
-    stream = spark.readStream.schema(LOC_SCHEMA).parquet(loc_stream_dir)
-    out = _run_to_memory(
-        si.stream_ride_first_last(stream, tables["siri_ride_stop"]),
-        "ride_fl", "complete", spark,
-    )
-    got = {
-        r["siri_ride_id"]: (
-            r["first_vehicle_location_id"], r["last_vehicle_location_id"], r["n_points"]
-        )
-        for r in out.collect()
-    }
-    batch = (
-        tables["siri_vehicle_location"]
-        .join(
-            tables["siri_ride_stop"].select(
-                F.col("id").alias("siri_ride_stop_id"), "siri_ride_id"
-            ),
-            on="siri_ride_stop_id",
-        )
-        .groupBy("siri_ride_id")
-        .agg(*si.first_last_aggs("recorded_at_time", "id"))
-    )
-    want = {
-        r["siri_ride_id"]: (
-            r["first_vehicle_location_id"], r["last_vehicle_location_id"], r["n_points"]
-        )
-        for r in batch.collect()
-    }
-    assert got == want and len(got) == 26  # 30 rides - 4 without telemetry
-
-
 def test_stream_hourly_stats_matches_batch(spark, tables, loc_stream_dir):
     stream = spark.readStream.schema(LOC_SCHEMA).parquet(loc_stream_dir)
     out = _run_to_memory(si.stream_hourly_stats(stream), "hourly", "complete", spark)
@@ -147,58 +115,6 @@ def test_stream_ride_tracker_state_and_finalize(spark, tmp_path):
     assert len(fin) == 1
     assert fin[0]["last_vehicle_location_id"] == 3
     assert fin[0]["duration_minutes"] == 30
-
-
-def test_stream_flat_export_smoke(spark, tables, loc_stream_dir):
-    stream = spark.readStream.schema(LOC_SCHEMA).parquet(loc_stream_dir)
-    wide = si.stream_flat_export(
-        stream,
-        tables["siri_ride_stop"],
-        tables["siri_ride"],
-        tables["siri_route"],
-        tables["siri_stop"],
-        tables["gtfs_stop"],
-    )
-    assert wide.isStreaming
-    out = _run_to_memory(wide, "flatstream", "append", spark)
-    n = out.count()
-    assert n == tables["siri_vehicle_location"].where(
-        F.col("recorded_at_time").isNotNull()
-    ).count()
-    assert "hour" in out.columns and "stop_city" in out.columns
-
-
-def test_stream_exact_dedup_across_batches(spark, tmp_path):
-    """Duplicate keys arriving in different micro-batches are dropped;
-    the first arrival survives."""
-    D = datetime.datetime
-    d = str(tmp_path / "dd")
-    os.makedirs(d)
-    batches = [
-        [(1, "a", D(2024, 5, 1, 10, 0)), (2, "b", D(2024, 5, 1, 10, 1))],
-        [(3, "a", D(2024, 5, 1, 10, 5)), (4, "c", D(2024, 5, 1, 10, 6))],
-    ]
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(rows, "id long, k string, ts timestamp").coalesce(1)
-        p = str(tmp_path / f"db{i}")
-        df.write.mode("overwrite").parquet(p)
-        part = [f for f in os.listdir(p) if f.startswith("part-")][0]
-        dst = os.path.join(d, f"{i:02d}.parquet")
-        os.rename(os.path.join(p, part), dst)
-        os.utime(dst, (1700000000 + i * 100, 1700000000 + i * 100))
-
-    stream = (
-        spark.readStream.schema("id long, k string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
-    out = _run_to_memory(
-        si.stream_exact_dedup(stream, ["k"], "ts", watermark="1 hour"),
-        "dedup_stream", "append", spark,
-    )
-    rows = sorted((r["k"], r["id"]) for r in out.collect())
-    # key 'a' re-arrived in batch 2 (id 3) and was dropped
-    assert rows == [("a", 1), ("b", 2), ("c", 4)]
 
 
 def test_run_task_error_capture(spark, capsys):

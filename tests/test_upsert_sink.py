@@ -1,6 +1,7 @@
 """Keyed-upsert parquet sink (streaming/upsert_sink.py): latest-wins
 merge semantics, idempotent replay, a real multi-micro-batch streaming
-run, and the partitioned form's untouched-partition guarantee."""
+run, the partitioned form's untouched-partition guarantee, and the
+replay of an epoch that crashed between the two snapshot-swap renames."""
 
 import os
 
@@ -103,3 +104,36 @@ def test_sink_idempotent_replay(spark, tmp_path):
     sink(b, 0)  # foreachBatch retry of the same epoch
     rows = spark.read.parquet(snap).collect()
     assert len(rows) == 1 and rows[0]["v"] == "x"
+
+
+def test_sink_replay_after_crash_between_swap_renames(spark, tmp_path, monkeypatch):
+    """A crash after the first rename of the snapshot swap (old snapshot
+    moved aside, new one not yet in place), then foreachBatch's replay of
+    the same epoch: the replay must merge into the previous snapshot,
+    not into an empty one."""
+
+    class Crash(Exception):
+        pass
+
+    snap = str(tmp_path / "snap")
+    sink = parquet_upsert_sink(snap, ["k"], "ver")
+    sink(spark.range(100).selectExpr("id AS k", "'v' AS v", "CAST(1 AS BIGINT) AS ver"), 0)
+    batch = spark.createDataFrame([Row(k=100, v="new", ver=1)], "k long, v string, ver long")
+
+    real_rename = os.rename
+    calls = []
+
+    def crash_on_second_rename(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise Crash
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_second_rename)
+    with pytest.raises(Crash):
+        sink(batch, 1)
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert not os.path.exists(snap)  # the crash window: no snapshot in place
+
+    sink(batch, 1)  # the replay
+    assert spark.read.parquet(snap).count() == 101

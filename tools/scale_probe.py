@@ -220,11 +220,11 @@ def main() -> None:
             "  the plan). streaming_click_purchase_join sizes its own state width\n"
             "  from source bytes (already 32-way at sf10); its ratio is\n"
             "  stream-stream join + state-store fixed cost, 12 s for 10M events.\n"
-            "- dedup_incremental stays the PLAIN index join: the Bloom-pre-filtered\n"
-            "  variant (operators/bloom.py) measured 0.42 -> 2.15 s at sf0.1 and\n"
-            "  1.25 -> 2.63 s at sf10 here, because this query derives the index\n"
-            "  from the same corpus scan — the bloom wins only against a large\n"
-            "  pre-materialized index (the llm-curate-corpus incremental shape).\n\n"
+            "- dedup_incremental stays the PLAIN index join: a Bloom-pre-filtered\n"
+            "  variant measured 0.42 -> 2.15 s at sf0.1 and 1.25 -> 2.63 s at sf10\n"
+            "  here, because this query derives the index from the same corpus\n"
+            "  scan; it also lost 12x against a pre-materialized 20M-key index,\n"
+            "  so it was deleted.\n\n"
             "| query | " + " | ".join(labels) + " | x100 cost |\n"
             "|---|" + "---|" * (len(labels) + 1) + "\n"
         )
