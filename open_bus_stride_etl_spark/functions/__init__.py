@@ -5,4 +5,4 @@ from .timeutil import (  # noqa: F401
     israel_iso_string,
     parse_window,
 )
-from .hashing import row_md5, content_hash_and_count, hex_to_long  # noqa: F401
+from .hashing import row_md5, hex_to_long  # noqa: F401

@@ -11,7 +11,7 @@ commutative, distributed-friendly, and reproducible across engines
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -30,10 +30,3 @@ def row_md5(*cols: Column) -> Column:
     safe = [F.coalesce(c.cast("string"), F.lit("\x00NULL\x00")) for c in cols]
     return F.md5(F.concat_ws("|", *safe))
 
-
-def content_hash_and_count(df: DataFrame, cols: list[str] | None = None) -> tuple[int, int]:
-    """(order-insensitive content hash, row count) in one aggregation."""
-    cols = cols or df.columns
-    h = hex_to_long(F.substring(row_md5(*[F.col(c) for c in cols]), 1, 10))
-    row = df.agg(F.sum(h).alias("h"), F.count(F.lit(1)).alias("n")).collect()[0]
-    return (row["h"] or 0) + row["n"], row["n"]

@@ -37,7 +37,6 @@ def banded_priority_join(
     right_id: str,
     extra_eq_keys: list[str] | None = None,
     broadcast_right: bool = False,
-    n_salts: int = 1,
 ) -> DataFrame:
     """For each left row, the single best right row: smallest tier whose
     band contains it, then smallest |Δt|, then smallest right id.
@@ -47,17 +46,11 @@ def banded_priority_join(
     rows are kept with NULLs (left outer semantics, like the reference's
     guarded UPDATEs which leave unmatched rows untouched).
 
-    Skew (``n_salts``): the join key is a TIME BIN, and transit telemetry
-    has hot bins by construction (rush hour × a popular route when
-    ``extra_eq_keys`` carries the route). With ``n_salts > 1`` the left
-    side adds a deterministic salt (hash of ``left_id``) and the right
-    side replicates per salt, splitting every bin across ``n_salts``
-    reducers — the classic salted-join recipe fused into the bin key.
-    Right-side replication cost is 3×n_salts, so keep n_salts modest
-    (8-16) and only when the right side is the small one; a big-big
-    skewed banded join should instead rely on AQE's runtime skew-join
-    split (enabled in session.py), which this equi-join shape is exactly
-    eligible for (sort-merge on the bin key)."""
+    Skew: the join key is a TIME BIN, and transit telemetry has hot bins
+    by construction (rush hour × a popular route when ``extra_eq_keys``
+    carries the route). AQE's runtime skew-join split (enabled in
+    session.py) handles them: this equi-join shape is exactly eligible
+    for it (sort-merge on the bin key)."""
     tiers = sorted(tiers_minutes)
     widest_s = tiers[-1] * 60
     eq = extra_eq_keys or []
@@ -74,20 +67,11 @@ def banded_priority_join(
         .withColumn("_bin", F.explode(F.array(F.col("_b0") - 1, F.col("_b0"), F.col("_b0") + 1)))
         .drop("_b0")
     )
-    if n_salts > 1:
-        l_binned = l_binned.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(left_id)), F.lit(n_salts)).cast("int")
-        )
-        r_binned = r_binned.withColumn(
-            "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-        )
     if broadcast_right:
         r_binned = F.broadcast(r_binned)
 
     dt = F.abs(F.unix_timestamp(lt) - F.unix_timestamp(rt))
     cond = (F.col("l._bin") == F.col("r._bin")) & (dt <= F.lit(widest_s))
-    if n_salts > 1:
-        cond = cond & (F.col("l._salt") == F.col("r._salt"))
     for k in eq:
         cond = cond & (F.col(f"l.{k}") == F.col(f"r.{k}"))
 

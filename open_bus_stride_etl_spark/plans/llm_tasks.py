@@ -226,7 +226,8 @@ def llm_curate_corpus(
     else:
         # Non-incremental mode never branches on the counts, so they
         # ride the artifact write as observed metrics (guide §1.4 /
-        # write_package's pattern) — ONE scoring pass instead of two.
+        # stride_lake.overwrite_table_observed's pattern) — ONE scoring
+        # pass instead of two.
         obs_flags = Observation()
         scored = scored.observe(obs_flags, *flag_aggs)
         n_remaining = None
@@ -314,7 +315,8 @@ def llm_curate_corpus(
         )
     out = out_dir or f"{base_dir}/curated_documents"
     # n_final rides the write job via the Observation API (the
-    # csv_package.write_package pattern) instead of a read-back count.
+    # stride_lake.overwrite_table_observed pattern) instead of a
+    # read-back count.
     obs = Observation()
     survivors.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
         "overwrite"

@@ -26,10 +26,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.ledger import missing_dates
-from ..operators.stats import status_counts, validate_freshness
+from ..operators.stats import incomplete_dates, status_counts, validate_freshness
 from ..sources import parquet_stats, stride_lake as lake
 from ..sources.artifacts import register_artifact
-from ..sources.csv_package import publish_if_changed, read_manifest
+from ..sources.csv_package import partitioned_csv, publish_packages, read_manifest
 from . import stride
 from .tasks import task
 
@@ -212,18 +212,11 @@ def gtfs_update_ride_aggregations(spark: SparkSession, base_dir: str):
     fresh = lake.read_table(spark, base_dir, "gtfs_ride").join(
         g_routes.select(F.col("id").alias("gtfs_route_id"), "date"), on="gtfs_route_id"
     )
-    complete = F.when(
-        F.col("start_time").isNotNull() & F.col("end_time").isNotNull(), 100.0
-    ).otherwise(0.0)
-    pct = {
-        r["date"]: r["pct"]
-        for r in fresh.where(F.col("date").isin(todo_dates))
-        .groupBy("date")
-        .agg(F.avg(complete).alias("pct"))
-        .collect()
+    failed = {
+        r["date"] for r in incomplete_dates(fresh.where(F.col("date").isin(todo_dates))).collect()
     }
-    ok = [d for d in todo_dates if pct.get(d, 0.0) >= 90.0]
-    bad = [d for d in todo_dates if d not in ok]
+    ok = [d for d in todo_dates if d not in failed]
+    bad = [d for d in todo_dates if d in failed]
     _record_ledger(
         spark, base_dir, task_name,
         [(d, True, None) for d in ok]
@@ -276,92 +269,6 @@ def _flat_export_hourly(
     )
 
 
-def _hour_hashes(wide: DataFrame) -> dict[str, tuple[int, int]]:
-    """ONE aggregation job → {hour_key: (content_hash, row_count)} for
-    every hour present in ``wide``. Hash formula identical to
-    csv_package.write_package's observed metrics (sum of per-row
-    md5-longs + count, order-insensitive)."""
-    from ..functions.hashing import hex_to_long, row_md5  # noqa: PLC0415
-
-    data_cols = [c for c in wide.columns if c != "_hour"]
-    h = hex_to_long(F.substring(row_md5(*[F.col(c) for c in data_cols]), 1, 10))
-    return {
-        r["_hour"]: ((r["h"] or 0) + r["n"], r["n"])
-        for r in wide.groupBy("_hour")
-        .agg(F.sum(h).alias("h"), F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-
-
-def _write_hour_packages(
-    wide: DataFrame,
-    hours: list[str],
-    hashes: dict[str, tuple[int, int]],
-    out_dir: str,
-    zip_it: bool,
-) -> None:
-    """Materialize `{hour}.csv` + manifest (+zip) for every hour in
-    ``hours`` from ONE partitioned CSV write (`repartition("_hour")`
-    routes each hour to exactly one shuffle partition, `partitionBy`
-    yields one directory per hour), then stitch each hour's shards
-    driver-side — the backfill's two-job shape, shared with the hourly
-    sweep so a catch-up sweep does not pay one Spark job per hour.
-    Artifact bytes and manifests are identical to write_package's
-    (same header handling, same manifest builder, same zip params)."""
-    import glob  # noqa: PLC0415
-    import json  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-    import zipfile  # noqa: PLC0415
-
-    from ..sources.csv_package import build_manifest  # noqa: PLC0415
-
-    data_cols = [c for c in wide.columns if c != "_hour"]
-    fields = [
-        {"name": c, "type": wide.schema[c].dataType.simpleString()} for c in data_cols
-    ]
-    os.makedirs(out_dir, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix="pkg_hours_")
-    try:
-        (
-            wide.where(F.col("_hour").isin(hours))
-            .repartition("_hour")
-            .write.mode("overwrite")
-            .option("header", True)
-            .partitionBy("_hour")
-            .csv(tmp)
-        )
-        for hour in hours:
-            hdir = os.path.join(tmp, f"_hour={hour}")
-            parts = sorted(glob.glob(os.path.join(hdir, "part-*.csv")))
-            csv_path = os.path.join(out_dir, f"{hour}.csv")
-            with open(csv_path, "wb") as out:
-                out.write((",".join(f["name"] for f in fields) + "\n").encode())
-                for p in parts:
-                    with open(p, "rb") as fh:
-                        fh.readline()  # per-shard header
-                        shutil.copyfileobj(fh, out)
-            # The manifest row count is the EXACT aggregation count from
-            # _hour_hashes (the same job that produced the hash), never a
-            # physical-line count of the stitched file: a string field
-            # containing a newline is RFC-4180-quoted by Spark's CSV
-            # writer and spans multiple physical lines (r10 — the hourly
-            # sweep briefly line-counted here and would have overcounted).
-            manifest = build_manifest(hour, fields, hashes.get(hour, (0, 0))[1], hashes.get(hour, (0, 0))[0])
-            mpath = os.path.join(out_dir, f"{hour}-metadata.json")
-            with open(mpath, "w") as fh:
-                json.dump(manifest, fh, indent=1, sort_keys=True)
-            if zip_it:
-                zpath = os.path.join(out_dir, f"{hour}.zip")
-                with zipfile.ZipFile(
-                    zpath, "w", zipfile.ZIP_DEFLATED, compresslevel=9
-                ) as zf:
-                    zf.write(csv_path, f"{hour}.csv")
-                    zf.write(mpath, f"{hour}-metadata.json")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 @task("siri-hourly-update-packages", cadence="daily", force_days=5, chunk_hours=168)
 def siri_hourly_update_packages(
     spark: SparkSession,
@@ -383,12 +290,12 @@ def siri_hourly_update_packages(
     and manifest-driven, exactly the reference's control flow, but its
     Spark work is batched): the sweep first resolves every hour's
     short-circuit verdict from the manifests alone (no Spark job), then
-    ONE aggregation computes the content hash of every remaining hour
-    (was: one hash/write job per hour — 11 created hours cost 11 serial
-    jobs ≈ 0.9 s each at sf0.1), classifies each against its manifest
-    (created / updated / skipped — same decisions row-for-row), and ONE
-    partitioned write materializes just the changed hours. The
-    wall-clock budget bounds the sweep enumeration as before, AND
+    ``csv_package.publish_packages`` hashes every remaining hour in ONE
+    aggregation (was: one hash/write job per hour — 11 created hours
+    cost 11 serial jobs ≈ 0.9 s each at sf0.1), classifies each against
+    its manifest (created / updated / skipped / empty — same decisions
+    row-for-row), and writes just the changed hours in ONE partitioned
+    write. The wall-clock budget bounds the sweep enumeration as before, AND
     (r10) the batched Spark work itself: hours needing a hash compare
     are processed in ``chunk_hours`` chunks (newest first), with the
     budget re-checked before every chunk's hash/write jobs — a catch-up
@@ -434,32 +341,15 @@ def siri_hourly_update_packages(
         if time.time() - t0 > budget_seconds:
             break  # budget exhausted between chunks: stop mid-sweep
         sub = need[i : i + step]
-        # Range predicate keeps parquet pushdown (per chunk); the isin
-        # filter drops any interior skipped_exists hours from the jobs.
+        # Range predicate keeps parquet pushdown (per chunk); the key
+        # list drops any interior skipped_exists hours from the jobs.
         wide = _flat_export_hourly(
             spark, base_dir,
             str(min(sub)), str(max(sub) + datetime.timedelta(hours=1)),
         )
-        keys = [_hour_key(h) for h in sub]
-        wide = wide.where(F.col("_hour").isin(keys))
-        hashes = _hour_hashes(wide)
-        to_write: list[str] = []
-        for key in keys:
-            chash, n = hashes.get(key, (0, 0))
-            existing = read_manifest(out_dir, key)
-            if existing is None:
-                if n == 0:
-                    counts["empty"] += 1  # no rows, nothing published
-                else:
-                    counts["created"] += 1
-                    to_write.append(key)
-            elif existing.get("hash") == chash:
-                counts["skipped"] += 1
-            else:
-                counts["updated"] += 1
-                to_write.append(key)
-        if to_write:
-            _write_hour_packages(wide, to_write, hashes, out_dir, zip_it=True)
+        verdicts = publish_packages(wide, "_hour", out_dir, [_hour_key(h) for h in sub])
+        for status, keys in verdicts.items():
+            counts[status] += len(keys)
     return {"hours_scanned": scanned, **counts}
 
 
@@ -472,29 +362,20 @@ def siri_packages_backfill(
     partitioned by hour"). Two Spark jobs total for ANY number of hours:
 
     1. one aggregation computes every hour's order-insensitive content
-       hash (the same sum-of-md5-longs as csv_package);
+       hash;
     2. one partitioned write materializes ONLY the hours whose hash
        differs from their existing manifest.
 
     The newest-first loop (siri-hourly-update-packages) remains the
     incremental path; this is the catch-up path, where per-hour loop
-    latency (2 jobs x N hours) would dominate at scale. Hash / write /
-    stitch machinery is shared with the hourly sweep (r9:
-    `_hour_hashes` / `_write_hour_packages`)."""
+    latency (2 jobs x N hours) would dominate at scale. Both go through
+    ``csv_package.publish_packages``."""
     out_dir = out_dir or os.path.join(base_dir, "packages")
     wide = _flat_export_hourly(spark, base_dir, "1970-01-01", "9999-01-01")
-    hashes = _hour_hashes(wide)
-    changed = [
-        hour
-        for hour, (chash, _n) in hashes.items()
-        if (read_manifest(out_dir, hour) or {}).get("hash") != chash
-    ]
-    counts = {"hours_total": len(hashes), "skipped": len(hashes) - len(changed), "written": 0}
-    if not changed:
-        return counts
-    _write_hour_packages(wide, changed, hashes, out_dir, zip_it=True)
-    counts["written"] = len(changed)
-    return counts
+    verdicts = publish_packages(wide, "_hour", out_dir)
+    written = len(verdicts["created"]) + len(verdicts["updated"])
+    skipped = len(verdicts["skipped"])
+    return {"hours_total": written + skipped, "skipped": skipped, "written": written}
 
 
 @task("update-areas-fake-gtfs", cadence="daily")
@@ -502,7 +383,6 @@ def update_areas_fake_gtfs(
     spark: SparkSession,
     base_dir: str,
     areas_file: str | None = None,
-    out_dir: str | None = None,
     days: int = 32,
     only_area: str | None = None,
     only_hours: str | None = None,
@@ -527,18 +407,16 @@ def update_areas_fake_gtfs(
     probe reads the registry ONCE and resolves every key driver-side
     (the registry is control-plane small), instead of one lookup query
     per (area, window, date); and all missing dates of an area are
-    extracted in ONE partitioned Spark job, then packaged per artifact
-    from the partition files. Steady-state runs skip everything without
-    touching the data plane.
+    extracted in ONE partitioned Spark job (``csv_package.
+    partitioned_csv``), then packaged per artifact from the partition
+    files. Steady-state runs skip everything without touching the data
+    plane.
 
-    Config shapes: the reference's areas.yaml (``bbox: "min_lon,
-    min_lat, max_lon, max_lat"`` string + ``hours: [[8, 12], ...]``
-    Israel-local inclusive windows) runs the full sweep; the simple
-    ``{min_lon: ..}`` dict shape (no hours) keeps the legacy single
-    whole-table package per area."""
-    import glob  # noqa: PLC0415
+    Config shape: the reference's areas.yaml — per area a ``bbox:
+    "min_lon, min_lat, max_lon, max_lat"`` string and ``hours: [[8, 12],
+    ...]`` Israel-local inclusive windows (default the whole day). An
+    area without a ``bbox`` raises ``ValueError``."""
     import json  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
     import zipfile  # noqa: PLC0415
 
@@ -546,39 +424,19 @@ def update_areas_fake_gtfs(
     from ..sources.artifacts import read_registry  # noqa: PLC0415
 
     areas = _load_areas(areas_file)
-    out_dir = out_dir or os.path.join(base_dir, "fake_gtfs")
+    for name, cfg in areas.items():
+        if "bbox" not in cfg:
+            raise ValueError(f"area {name!r} has no bbox")
     gtfs_stops = lake.read_table(spark, base_dir, "gtfs_stop")
-    metrics: dict = {}
     only_hw = (
         tuple(int(x.strip()) for x in only_hours.split(",")) if only_hours else None
     )
-
-    # Legacy simple-shape areas (flat bbox dict, no hour windows).
-    for name, cfg in areas.items():
-        if "bbox" in cfg or (only_area and name != only_area):
-            continue
-        in_box = gtfs_stops.where(
-            F.col("lon").between(cfg["min_lon"], cfg["max_lon"])
-            & F.col("lat").between(cfg["min_lat"], cfg["max_lat"])
-        )
-        res = publish_if_changed(in_box, os.path.join(out_dir, name), f"{name}-fake-gtfs")
-        if res["status"] != "skipped":
-            register_artifact(
-                spark,
-                base_dir,
-                f"fake-gtfs-{name}",
-                os.path.join(out_dir, name, f"{name}-fake-gtfs.zip"),
-                metadata={"area": name, **cfg, "rows": res["row_count"]},
-            )
-        metrics[name] = {"status": res["status"], "rows": res["row_count"]}
-
+    stats = {"fake_gtfs_processed": 0, "skipped": 0, "invalidated": 0}
     sweep_areas = {
-        name: cfg
-        for name, cfg in areas.items()
-        if "bbox" in cfg and not (only_area and name != only_area)
+        name: cfg for name, cfg in areas.items() if not (only_area and name != only_area)
     }
     if not sweep_areas:
-        return {"areas": metrics}
+        return stats
 
     today = today or datetime.date.today()
     # One registry read; newest metadata per prefix resolved driver-side.
@@ -590,10 +448,12 @@ def update_areas_fake_gtfs(
         .select("file_prefix", "metadata_json")
         .collect()
     }
-    stats = {"fake_gtfs_processed": 0, "skipped": 0, "invalidated": 0}
+    bboxes = {
+        area_id: [float(x) for x in cfg["bbox"].split(",")]
+        for area_id, cfg in sweep_areas.items()
+    }
     todo: dict[str, list] = {}  # area -> [(date, sh_utc, eh_utc, prefix)]
     for area_id, cfg in sweep_areas.items():
-        bbox = [float(x.strip()) for x in cfg["bbox"].split(",")]
         for sh, eh in cfg.get("hours", [[0, 23]]):
             if only_hw and (sh, eh) != only_hw:
                 continue
@@ -607,7 +467,7 @@ def update_areas_fake_gtfs(
                 )
                 meta = reg.get(prefix)
                 if meta is not None:
-                    if json.loads(meta).get("bbox") == bbox:
+                    if json.loads(meta).get("bbox") == bboxes[area_id]:
                         stats["skipped"] += 1
                         continue
                     stats["invalidated"] += 1  # bbox changed: recreate
@@ -619,29 +479,20 @@ def update_areas_fake_gtfs(
             break
         if budget is not None:
             items = items[: budget - stats["fake_gtfs_processed"]]
-        bbox = [float(x.strip()) for x in sweep_areas[area_id]["bbox"].split(",")]
-        dates = sorted({d for d, *_ in items})
-        min_lon, min_lat, max_lon, max_lat = bbox
+        dates = sorted({str(d) for d, *_ in items})
+        min_lon, min_lat, max_lon, max_lat = bboxes[area_id]
         extract = gtfs_stops.where(
             F.col("lon").between(min_lon, max_lon)
             & F.col("lat").between(min_lat, max_lat)
-            & F.col("date").isin([str(d) for d in dates])
-        )
-        tmp = tempfile.mkdtemp(prefix=f"fake_gtfs_{area_id}_")
-        try:
-            (
-                extract.withColumn("_d", F.col("date").cast("string"))
-                .repartition("_d")
-                .write.mode("overwrite")
-                .option("header", True)
-                .partitionBy("_d")
-                .csv(tmp)
-            )
+            & F.col("date").isin(dates)
+        ).withColumn("_d", F.col("date").cast("string"))
+        with partitioned_csv(extract, "_d", dates) as shards, tempfile.TemporaryDirectory(
+            prefix=f"fake_gtfs_{area_id}_"
+        ) as zdir:
             for d, sh_utc, eh_utc, prefix in items:
-                parts = sorted(glob.glob(os.path.join(tmp, f"_d={d}", "part-*.csv")))
-                zpath = os.path.join(tmp, f"{os.path.basename(prefix)}.zip")
+                zpath = os.path.join(zdir, f"{os.path.basename(prefix)}.zip")
                 with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as zf:
-                    for j, p in enumerate(parts):
+                    for j, p in enumerate(shards[str(d)]):
                         zf.write(p, f"stops-{j}.csv")
                 register_artifact(
                     spark,
@@ -652,18 +503,16 @@ def update_areas_fake_gtfs(
                         "area_id": area_id,
                         "start_hour_utc": sh_utc,
                         "end_hour_utc": eh_utc,
-                        "bbox": bbox,
+                        "bbox": bboxes[area_id],
                     },
                 )
                 stats["fake_gtfs_processed"] += 1
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return {"areas": metrics, **stats}
+    return stats
 
 
 def _load_areas(areas_file: str | None) -> dict:
-    """Area bboxes from YAML (if available) or JSON; the reference ships
-    areas.yaml with (min_lon, min_lat, max_lon, max_lat) per area."""
+    """Area config from YAML (if available) or JSON, in the shape of the
+    reference's areas.yaml: per area a ``bbox`` string and ``hours``."""
     if areas_file is None:
         return {}
     with open(areas_file) as fh:

@@ -8,20 +8,23 @@ Reference behavior (SURVEY.md §2.1 S6/S7, §2.9 X12):
 - :163-203 skips the upload when the destination exists and the content
   hash is unchanged (effectively-once publishing).
 
-Spark re-expression: the data rows are written by executors
-(`df.write.csv`) with the content hash and row count computed IN the
-same job via the Observation API — one execution per package, where a
-naive port would run hash, count and write as three. The manifest is
-shaped like the frictionless `datapackage.json` the reference's
-`dataflows` dump emits (top-level `hash`/`count_of_rows`, a
-`resources[0].schema.fields` list with datapackage types), so consumers
-of the reference's packages can read ours; a `spark_type` annotation per
-field keeps the round trip lossless (datapackage's `integer`/`number`
-erase width and precision). The hash is ORDER-INSENSITIVE (sum of
-per-row md5-longs — functions/hashing.py) because Spark row order is
-nondeterministic and the skip-if-unchanged contract must survive
-re-partitioning. The zip/rename step is driver-side on the final small
-artifact, exactly like the reference.
+Spark re-expression: one DataFrame carries many packages, told apart
+by a key column (the hour, for the SIRI packager). ``publish_packages``
+runs ONE aggregation that hashes every key, classifies each key against
+its manifest, and writes the changed keys in ONE partitioned CSV write
+(``partitioned_csv``) — two Spark jobs for any number of packages, where
+a per-package loop pays two per package. The manifest is shaped like the
+frictionless `datapackage.json` the reference's `dataflows` dump emits
+(top-level `hash`/`count_of_rows`, a `resources[0].schema.fields` list
+with datapackage types), so consumers of the reference's packages can
+read ours; a `spark_type` annotation per field keeps the round trip
+lossless (datapackage's `integer`/`number` erase width and precision).
+The hash is ORDER-INSENSITIVE (sum of per-row md5-longs —
+functions/hashing.py) because Spark row order is nondeterministic and
+the skip-if-unchanged contract must survive re-partitioning. The
+stitch/zip step is driver-side on the final small artifact, exactly like
+the reference; the manifest is published last, so it is the commit
+record of its package.
 """
 
 from __future__ import annotations
@@ -32,11 +35,13 @@ import os
 import shutil
 import tempfile
 import zipfile
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import content_hash_and_count, hex_to_long, row_md5
+from ..functions.hashing import hex_to_long, row_md5
 
 # Spark simpleString -> frictionless datapackage field type
 # (https://specs.frictionlessdata.io/table-schema/ — public spec).
@@ -127,80 +132,6 @@ def manifest_fields(manifest: dict) -> list[dict]:
     return out
 
 
-def manifest_row_count(manifest: dict) -> int | None:
-    return manifest.get("count_of_rows", manifest.get("row_count"))
-
-
-def write_package(
-    df: DataFrame,
-    out_dir: str,
-    base_name: str,
-    precomputed: tuple[int, int] | None = None,
-    empty_is_noop: bool = False,
-) -> dict | None:
-    """Write `{base_name}.csv` + `{base_name}-metadata.json` under
-    ``out_dir``. Returns the manifest dict (schema, row count, hash).
-
-    ONE Spark execution: the order-insensitive content hash and row
-    count ride along with the CSV write as observed metrics instead of
-    running as separate jobs. ``precomputed`` lets a caller that already
-    aggregated (hash, count) — e.g. publish_if_changed's skip check —
-    avoid even the observation arithmetic. ``empty_is_noop`` returns
-    None WITHOUT creating any artifact when the observed row count is 0
-    (publish_if_changed's 'empty' contract for never-published hours —
-    the check rides the same single execution)."""
-    os.makedirs(out_dir, exist_ok=True)
-    obs = None
-    to_write = df
-    if precomputed is None:
-        h = hex_to_long(F.substring(row_md5(*[F.col(c) for c in df.columns]), 1, 10))
-        obs = Observation()
-        to_write = df.observe(
-            obs,
-            (F.coalesce(F.sum(h), F.lit(0)) + F.count(F.lit(1))).alias("chash"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    tmp = tempfile.mkdtemp(prefix="pkg_")
-    try:
-        # Executors write shards; the driver stitches the (small, hourly)
-        # artifact. A cluster deployment with huge packages would keep
-        # the sharded layout and zip per shard instead.
-        to_write.write.mode("overwrite").option("header", True).csv(tmp)
-        if empty_is_noop and (precomputed or (0, obs.get["n"]))[1] == 0:
-            return None  # nothing published; tmp shards removed below
-        parts = sorted(glob.glob(os.path.join(tmp, "part-*.csv")))
-        csv_path = os.path.join(out_dir, f"{base_name}.csv")
-        with open(csv_path, "wb") as out:
-            if not parts:  # zero partitions: header-only artifact
-                # RFC-4180 quoting, matching Spark's own header escaping
-                import csv as _csv  # noqa: PLC0415
-                import io  # noqa: PLC0415
-
-                buf = io.StringIO()
-                _csv.writer(buf, lineterminator="\n").writerow(df.columns)
-                out.write(buf.getvalue().encode())
-            for i, p in enumerate(parts):
-                with open(p, "rb") as fh:
-                    if i > 0:
-                        fh.readline()  # drop repeated header
-                    shutil.copyfileobj(fh, out)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    chash, n_rows = precomputed if precomputed is not None else (
-        obs.get["chash"],
-        obs.get["n"],
-    )
-    manifest = build_manifest(
-        base_name,
-        [{"name": f.name, "type": f.dataType.simpleString()} for f in df.schema],
-        n_rows,
-        chash,
-    )
-    with open(os.path.join(out_dir, f"{base_name}-metadata.json"), "w") as fh:
-        json.dump(manifest, fh, indent=1, sort_keys=True)
-    return manifest
-
-
 def load_package(spark, out_dir: str, base_name: str) -> "DataFrame":
     """Read a package back (SURVEY.md §2.1 S4/S5): CSV loaded with an
     all-string schema first (the reference's CAST_TO_STRINGS strategy,
@@ -236,45 +167,102 @@ def read_manifest(out_dir: str, base_name: str) -> dict | None:
         return json.load(fh)
 
 
-def publish_if_changed(df: DataFrame, out_dir: str, base_name: str, zip_it: bool = True) -> dict:
-    """Effectively-once publish: skip when the existing manifest hash
-    matches (packagers/siri.py:194-202); an hour with no rows and no
-    prior package is a no-op ('empty'), so the hour sweep and the
-    one-job backfill (which only sees hours that have data) agree.
-    ONE Spark execution for never-published targets (the hash/count
-    rides the write job as observed metrics — a prior manifest is the
-    only thing a skip can compare against, so without one the pre-write
-    hash-check pass was pure duplicate work; r9) and when skipped; TWO
-    only for the updated path (hash-check aggregation + observed write).
-    Returns {status: created|updated|skipped|empty, hash, row_count}."""
-    existing = read_manifest(out_dir, base_name)
-    if existing is None:
-        # An empty frame publishes nothing (write_package returns None
-        # before stitching; the observed hash of an empty set is 0+0).
-        manifest = write_package(df, out_dir, base_name, empty_is_noop=True)
-        if manifest is None:
-            return {"status": "empty", "hash": 0, "row_count": 0}
-        status = "created"
-    else:
-        chash, n = content_hash_and_count(df)
-        if existing.get("hash") == chash:
-            return {
-                "status": "skipped",
-                "hash": chash,
-                "row_count": manifest_row_count(existing),
-            }
-        manifest = write_package(df, out_dir, base_name, precomputed=(chash, n))
-        status = "updated"
-    if zip_it:
-        zpath = os.path.join(out_dir, f"{base_name}.zip")
-        with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED, compresslevel=9) as zf:
-            zf.write(os.path.join(out_dir, f"{base_name}.csv"), f"{base_name}.csv")
-            zf.write(
-                os.path.join(out_dir, f"{base_name}-metadata.json"),
-                f"{base_name}-metadata.json",
-            )
+def key_hashes(df: DataFrame, key_col: str) -> dict[str, tuple[int, int]]:
+    """ONE aggregation job -> {key: (content_hash, row_count)} for every
+    key present in ``df``. The hash is the sum of per-row md5-longs over
+    the data columns plus the row count."""
+    cols = [c for c in df.columns if c != key_col]
+    h = hex_to_long(F.substring(row_md5(*[F.col(c) for c in cols]), 1, 10))
     return {
-        "status": status,
-        "hash": manifest["hash"],
-        "row_count": manifest_row_count(manifest),
+        r[key_col]: ((r["h"] or 0) + r["n"], r["n"])
+        for r in df.groupBy(key_col)
+        .agg(F.sum(h).alias("h"), F.count(F.lit(1)).alias("n"))
+        .collect()
     }
+
+
+@contextmanager
+def partitioned_csv(
+    df: DataFrame, key_col: str, keys: list[str]
+) -> Iterator[dict[str, list[str]]]:
+    """ONE Spark job writes the rows of every key in ``keys`` as CSV
+    shards with a header, one directory per key: `repartition(key)`
+    routes a key to exactly one shuffle partition and `partitionBy(key)`
+    gives it its own directory (the key column is not in the shards).
+    Yields {key: sorted shard paths}; a key with no rows has none. The
+    shards are deleted on exit."""
+    tmp = tempfile.mkdtemp(prefix="csv_parts_")
+    try:
+        (
+            df.where(F.col(key_col).isin(keys))
+            .repartition(key_col)
+            .write.mode("overwrite")
+            .option("header", True)
+            .partitionBy(key_col)
+            .csv(tmp)
+        )
+        yield {
+            k: sorted(glob.glob(os.path.join(tmp, f"{key_col}={k}", "part-*.csv")))
+            for k in keys
+        }
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def publish_packages(
+    df: DataFrame, key_col: str, out_dir: str, keys: list[str] | None = None
+) -> dict[str, list[str]]:
+    """Effectively-once publish of one package per key of ``df``:
+    `{key}.csv`, `{key}-metadata.json` and `{key}.zip` under ``out_dir``.
+    ``keys`` (default: every key present) are classified against their
+    manifests (packagers/siri.py:194-202): no manifest and no rows ->
+    empty (nothing published), no manifest -> created, same hash ->
+    skipped, else updated. Returns the keys per verdict, in ``keys``
+    order.
+
+    Two Spark jobs: ``key_hashes``, then one ``partitioned_csv`` write
+    of the created and updated keys, whose shards the driver stitches.
+    The manifest row count is the aggregation's exact count, never a
+    line count of the CSV: a string field holding a newline is quoted
+    and spans several physical lines (r10). Each manifest goes to a temp
+    file, the zip is built from it, and it is published last with
+    ``os.replace``: a crash anywhere before leaves the key with no
+    manifest or its old one, so the next run rewrites it."""
+    if keys is not None:
+        df = df.where(F.col(key_col).isin(keys))
+    hashes = key_hashes(df, key_col)
+    verdicts: dict[str, list[str]] = {"created": [], "updated": [], "skipped": [], "empty": []}
+    for key in sorted(hashes) if keys is None else keys:
+        chash, n = hashes.get(key, (0, 0))
+        existing = read_manifest(out_dir, key)
+        if existing is None:
+            verdicts["empty" if n == 0 else "created"].append(key)
+        else:
+            verdicts["skipped" if existing.get("hash") == chash else "updated"].append(key)
+    changed = verdicts["created"] + verdicts["updated"]
+    if not changed:
+        return verdicts
+
+    cols = [c for c in df.columns if c != key_col]
+    fields = [{"name": c, "type": df.schema[c].dataType.simpleString()} for c in cols]
+    os.makedirs(out_dir, exist_ok=True)
+    with partitioned_csv(df, key_col, changed) as shards:
+        for key in changed:
+            csv_path = os.path.join(out_dir, f"{key}.csv")
+            with open(csv_path, "wb") as out:
+                out.write((",".join(cols) + "\n").encode())
+                for p in shards[key]:
+                    with open(p, "rb") as fh:
+                        fh.readline()  # per-shard header
+                        shutil.copyfileobj(fh, out)
+            chash, n = hashes.get(key, (0, 0))
+            mpath = os.path.join(out_dir, f"{key}-metadata.json")
+            staged = f"{mpath}.tmp"
+            with open(staged, "w") as fh:
+                json.dump(build_manifest(key, fields, n, chash), fh, indent=1, sort_keys=True)
+            zpath = os.path.join(out_dir, f"{key}.zip")
+            with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED, compresslevel=9) as zf:
+                zf.write(csv_path, f"{key}.csv")
+                zf.write(staged, f"{key}-metadata.json")
+            os.replace(staged, mpath)
+    return verdicts

@@ -30,11 +30,16 @@ def table_path(base_dir: str, name: str) -> str:
 
 
 def table_exists(base_dir: str, name: str) -> bool:
-    return fs.exists(table_path(base_dir, name))
+    return fs.exists_restoring(table_path(base_dir, name))
 
 
 def read_table(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(table_path(base_dir, name))
+    """The table's snapshot. A crash between the two renames of a
+    previous snapshot swap left only ``<table>.old``; it is moved back
+    first, so the next run reads the last complete snapshot."""
+    path = table_path(base_dir, name)
+    fs.exists_restoring(path, spark)
+    return spark.read.parquet(path)
 
 
 def overwrite_table(df: DataFrame, base_dir: str, name: str) -> int:
@@ -53,9 +58,8 @@ def overwrite_table_observed(
 ) -> dict:
     """``overwrite_table`` with the row count — and any extra aggregate
     ``metrics`` — computed via the Observation API IN the write job
-    itself (the csv_package.write_package pattern), instead of
-    re-reading the written files. One plan execution per snapshot swap;
-    the pre-r9 read-back count was a whole extra scan per task write,
+    itself, instead of re-reading the written files. One plan execution
+    per snapshot swap; the pre-r9 read-back count was a whole extra scan per task write,
     and task metrics like "rows newly set" paid yet another
     (`stride_tasks._write_and_count`). Returns ``{"rows": n, **metrics}``.
     """

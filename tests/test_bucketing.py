@@ -2,19 +2,12 @@
 two tables bucketed by the join key must join WITHOUT a shuffle — the
 reducer-side exchange disappears because bucket layout already
 co-locates matching keys. This is the strategy for recurring big-big
-joins (fact ⋈ fact on ride id) where broadcast is impossible.
+joins (fact ⋈ fact on ride id) where broadcast is impossible."""
 
-Also: salting the banded join's hot time bins (rush hour × popular
-route) — the realistic skew case for transit telemetry."""
-
-import datetime
 import shutil
 
 import pytest
 from pyspark.sql import Row
-from pyspark.sql import functions as F
-
-from open_bus_stride_etl_spark.operators.banded_join import banded_priority_join
 
 
 @pytest.fixture()
@@ -49,51 +42,6 @@ def test_bucketed_join_has_no_shuffle(spark, bucketed_tables):
         assert joined.count() == 5000 * 10  # each key: 10 left x 10 right / 500 keys
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
-
-def test_banded_join_salting_matches_unsalted_on_hot_bin(spark):
-    """100x-skewed time bin: ~99% of telemetry lands in ONE rush-hour
-    bin. Salting must not change results — only spread the hot bin
-    across n_salts reducer keys."""
-    base = datetime.datetime(2024, 5, 1, 8, 0)  # rush hour
-    # 2000 left rows inside one 5-minute bin, 20 scattered across the day
-    left_rows = [
-        Row(vid=i, seen=base + datetime.timedelta(seconds=i % 290)) for i in range(2000)
-    ] + [
-        Row(vid=10_000 + i, seen=base + datetime.timedelta(hours=1 + i, minutes=7))
-        for i in range(20)
-    ]
-    right_rows = [
-        Row(rid=j, sched=base + datetime.timedelta(seconds=17 * j % 290)) for j in range(200)
-    ] + [
-        Row(rid=10_000 + i, sched=base + datetime.timedelta(hours=1 + i, minutes=8))
-        for i in range(20)
-    ]
-    left = spark.createDataFrame(left_rows)
-    right = spark.createDataFrame(right_rows)
-
-    kwargs = dict(
-        left_ts="seen", right_ts="sched", tiers_minutes=[1, 3, 5],
-        left_id="vid", right_id="rid",
-    )
-    plain = banded_priority_join(left, right, **kwargs)
-    salted = banded_priority_join(left, right, n_salts=8, **kwargs)
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
-
-    # the hot bin really is skewed AND really gets split 8 ways
-    widest_s = 5 * 60
-    binned = left.withColumn("_bin", (F.unix_timestamp("seen") / widest_s).cast("long"))
-    top_bin, top_n = (
-        binned.groupBy("_bin").count().orderBy(F.col("count").desc()).first()
-    )
-    assert top_n >= 100 * 20 / 20  # >=100x the cold-bin occupancy
-    salted_keys = (
-        binned.where(F.col("_bin") == top_bin)
-        .select(F.pmod(F.xxhash64("vid"), F.lit(8)).cast("int").alias("_salt"))
-        .distinct()
-        .count()
-    )
-    assert salted_keys == 8
 
 
 def test_unbucketed_join_does_shuffle(spark):

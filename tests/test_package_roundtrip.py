@@ -8,10 +8,14 @@ from pyspark.sql import functions as F
 
 from open_bus_stride_etl_spark.sources.csv_package import (
     load_package,
-    manifest_row_count,
+    publish_packages,
     read_manifest,
-    write_package,
 )
+
+
+def publish_one(df, out_dir, key):
+    """Publish ``df`` as the single package ``key``."""
+    return publish_packages(df.withColumn("_k", F.lit(key)), "_k", out_dir, [key])
 
 
 def test_package_roundtrip_types(spark, tmp_path):
@@ -22,7 +26,7 @@ def test_package_roundtrip_types(spark, tmp_path):
         ],
         "id long, name string, ts timestamp, v double, ok boolean",
     )
-    write_package(df, str(tmp_path), "rt")
+    assert publish_one(df, str(tmp_path), "rt")["created"] == ["rt"]
     back = load_package(spark, str(tmp_path), "rt")
     # schema restored from the manifest contract, not inference
     assert [(f.name, f.dataType.simpleString()) for f in back.schema] == [
@@ -35,26 +39,9 @@ def test_package_roundtrip_types(spark, tmp_path):
     assert got[2]["v"] is None and got[2]["ok"] is False
 
 
-def test_write_package_single_execution(spark, tmp_path):
-    """The hash/count ride along with the CSV write as observed metrics:
-    exactly ONE Spark job per package (the reference-parity fix for the
-    hash+count+write triple execution)."""
-    df = spark.range(0, 100, 1, 4).select(F.col("id"), (F.col("id") * 2).alias("v"))
-    sc = spark.sparkContext
-    sc.setLocalProperty("spark.jobGroup.id", "pkg_single_exec")
-    try:
-        manifest = write_package(df, str(tmp_path), "one")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("pkg_single_exec")
-    assert len(jobs) == 1, f"expected 1 Spark job for write_package, saw {len(jobs)}"
-    assert manifest_row_count(manifest) == 100
-    assert manifest["hash"] > 0
-
-
 def test_manifest_is_frictionless_shaped(spark, tmp_path):
     df = spark.createDataFrame([Row(id=1, v=1.5)], "id long, v double")
-    write_package(df, str(tmp_path), "fr")
+    publish_one(df, str(tmp_path), "fr")
     m = read_manifest(str(tmp_path), "fr")
     res = m["resources"][0]
     assert m["profile"] == "data-package" and "hash" in m and "count_of_rows" in m
@@ -106,12 +93,16 @@ def test_load_reference_shaped_manifest(spark, tmp_path):
 
 
 def test_write_package_zero_rows_header_only(spark, tmp_path):
-    """An empty hour still publishes a valid package: header-only CSV,
-    count_of_rows 0, hash 0 — and loads back empty with the right
-    schema (the backfill/sweep agreement depends on this)."""
-    df = spark.createDataFrame([], "id long, name string").where(F.lit(False))
-    manifest = write_package(df, str(tmp_path), "empty")
-    assert manifest_row_count(manifest) == 0 and manifest["hash"] == 0
+    """A published key whose rows are all gone is updated to a valid
+    empty package: header-only CSV, count_of_rows 0, hash 0 — and loads
+    back empty with the right schema."""
+    df = spark.createDataFrame([Row(id=1, name="a")], "id long, name string")
+    publish_one(df, str(tmp_path), "empty")
+    assert publish_one(df.where(F.lit(False)), str(tmp_path), "empty")["updated"] == ["empty"]
+    manifest = read_manifest(str(tmp_path), "empty")
+    assert manifest["count_of_rows"] == 0 and manifest["hash"] == 0
+    with open(str(tmp_path / "empty.csv")) as fh:
+        assert fh.read() == "id,name\n"
     back = load_package(spark, str(tmp_path), "empty")
     assert back.count() == 0
     assert [f.name for f in back.schema] == ["id", "name"]
@@ -124,13 +115,6 @@ def test_hour_packages_manifest_exact_rows_with_newlines(spark, tmp_path):
     quoted by Spark's writer and spans multiple physical lines, which
     the old line counter overcounted. Round-trips through load_package
     (multiLine read) to prove the bytes themselves are sound."""
-    from pyspark.sql import Row
-
-    from open_bus_stride_etl_spark.plans.stride_tasks import (
-        _hour_hashes,
-        _write_hour_packages,
-    )
-
     wide = spark.createDataFrame(
         [
             Row(id=1, name="line1\nline2", _hour="2024-05-08.10"),
@@ -139,13 +123,10 @@ def test_hour_packages_manifest_exact_rows_with_newlines(spark, tmp_path):
         ],
         "id long, name string, _hour string",
     )
-    hashes = _hour_hashes(wide)
-    _write_hour_packages(
-        wide, ["2024-05-08.10", "2024-05-08.11"], hashes, str(tmp_path), zip_it=False
-    )
+    publish_packages(wide, "_hour", str(tmp_path))
     m = read_manifest(str(tmp_path), "2024-05-08.10")
     # 2 logical rows even though the CSV body spans 3 physical lines
-    assert manifest_row_count(m) == 2
+    assert m["count_of_rows"] == 2
     with open(str(tmp_path / "2024-05-08.10.csv"), "rb") as fh:
         assert fh.read().count(b"\n") == 4  # header + 3 body lines
     back = load_package(spark, str(tmp_path), "2024-05-08.10")
@@ -153,4 +134,4 @@ def test_hour_packages_manifest_exact_rows_with_newlines(spark, tmp_path):
         (1, "line1\nline2"),
         (2, "plain"),
     ]
-    assert manifest_row_count(read_manifest(str(tmp_path), "2024-05-08.11")) == 1
+    assert read_manifest(str(tmp_path), "2024-05-08.11")["count_of_rows"] == 1

@@ -13,10 +13,10 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from open_bus_stride_etl_spark.functions.geo import haversine_meters
-from open_bus_stride_etl_spark.functions.hashing import content_hash_and_count
 from open_bus_stride_etl_spark.operators.banded_join import banded_priority_join
 from open_bus_stride_etl_spark.operators.enrich import enrich_update
 from open_bus_stride_etl_spark.operators.first_last import first_last_by
+from open_bus_stride_etl_spark.sources.csv_package import key_hashes
 
 SETTINGS = dict(
     max_examples=12, deadline=None, suppress_health_check=[HealthCheck.too_slow]
@@ -66,11 +66,11 @@ def test_first_last_by_matches_python(spark, rows):
 @given(event_rows())
 @settings(**SETTINGS)
 def test_content_hash_is_order_and_partition_invariant(spark, rows):
-    df = spark.createDataFrame(rows, "id long, g long, ts timestamp")
-    h1 = content_hash_and_count(df)[0]
-    h2 = content_hash_and_count(
-        df.orderBy(F.col("ts").desc_nulls_first(), "id").repartition(7)
-    )[0]
+    df = spark.createDataFrame(rows, "id long, g long, ts timestamp").withColumn(
+        "_k", F.lit("k")
+    )
+    h1 = key_hashes(df, "_k")["k"][0]
+    h2 = key_hashes(df.orderBy(F.col("ts").desc_nulls_first(), "id").repartition(7), "_k")["k"][0]
     assert h1 == h2
     # equals the pure-python recomputation of the same hash definition
     total = 0

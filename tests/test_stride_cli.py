@@ -101,31 +101,6 @@ def test_packages_backfill_one_job(spark, lake_dir, tmp_path):
     assert m3["created"] == 0 and m3["updated"] == 0
 
 
-def test_update_areas_fake_gtfs(spark, lake_dir, tmp_path):
-    areas = tmp_path / "areas.json"
-    areas.write_text(
-        '{"center": {"min_lon": 34.75, "min_lat": 32.05, "max_lon": 34.85, "max_lat": 32.15}}'
-    )
-    out = str(tmp_path / "fake_gtfs")
-    m = run_task(
-        spark, "update-areas-fake-gtfs", base_dir=lake_dir,
-        areas_file=str(areas), out_dir=out,
-    )
-    assert m["areas"]["center"]["status"] == "created"
-    assert 0 < m["areas"]["center"]["rows"] < 60  # bbox filtered a strict subset
-    from open_bus_stride_etl_spark.sources.artifacts import latest_artifact
-
-    a = latest_artifact(spark, lake_dir, "fake-gtfs-center")
-    assert a is not None and a["url"].endswith("center-fake-gtfs.zip")
-
-    # re-run: unchanged content -> skipped, no new artifact row
-    m2 = run_task(
-        spark, "update-areas-fake-gtfs", base_dir=lake_dir,
-        areas_file=str(areas), out_dir=out,
-    )
-    assert m2["areas"]["center"]["status"] == "skipped"
-
-
 def test_stats_collect(spark, lake_dir):
     m = run_task(spark, "stats-collect", base_dir=lake_dir)
     assert m["snapshot_status_counts"] == {"loaded": 9, "error": 3}
@@ -180,10 +155,12 @@ def test_cli_run(spark, lake_dir):
 def test_update_areas_fake_gtfs_sweep(spark, lake_dir, tmp_path):
     """Reference-shaped config drives the per-(area, hour-window, date)
     artifact sweep (urbanaccess/update_areas_fake_gtfs.py:28-60): key
-    layout, skip-when-current, bbox-change invalidation, per-area hour
-    windows, and the creation budget."""
+    layout, bbox filtering, skip-when-current, bbox-change invalidation,
+    per-area hour windows, and the creation budget. An area without a
+    bbox is rejected."""
     import datetime
     import json
+    import zipfile
 
     from open_bus_stride_etl_spark.sources.artifacts import latest_artifact
 
@@ -208,6 +185,11 @@ def test_update_areas_fake_gtfs_sweep(spark, lake_dir, tmp_path):
     assert meta["area_id"] == "tlv"
     assert meta["start_hour_utc"] == 5 and meta["end_hour_utc"] == 9
     assert meta["bbox"] == [34.70, 32.00, 34.80, 32.10]
+    # the bbox keeps a strict subset of the date's stops
+    with zipfile.ZipFile(a["url"]) as zf:
+        n_stops = sum(len(zf.read(n).splitlines()) - 1 for n in zf.namelist())
+    n_date = lake.read_table(spark, lake_dir, "gtfs_stop").where("date = '2024-05-10'").count()
+    assert 0 < n_stops < n_date
 
     # steady state: everything current -> all skipped, nothing created
     m2 = run_task(spark, "update-areas-fake-gtfs", **kw)
@@ -233,6 +215,12 @@ def test_update_areas_fake_gtfs_sweep(spark, lake_dir, tmp_path):
     )
     assert m5["fake_gtfs_processed"] == 1 and m5["skipped"] == 2
 
+    # an area without a bbox is a config error, not a silent skip
+    cfg["center"] = {"hours": [[8, 12]]}
+    areas.write_text(json.dumps(cfg))
+    with pytest.raises(ValueError, match="'center'"):
+        run_task(spark, "update-areas-fake-gtfs", **kw)
+
 
 def test_hourly_sweep_budget_stops_between_chunks(spark, lake_dir, tmp_path, monkeypatch):
     """The wall-clock budget bounds the batched Spark work, not just the
@@ -243,15 +231,16 @@ def test_hourly_sweep_budget_stops_between_chunks(spark, lake_dir, tmp_path, mon
     two-job shape (one hash aggregation, one partitioned write) is
     unchanged for an in-budget window."""
     import open_bus_stride_etl_spark.plans.stride_tasks as st
+    from open_bus_stride_etl_spark.sources import csv_package
 
     calls = {"hash_jobs": 0}
-    orig_hashes = st._hour_hashes
+    orig_hashes = csv_package.key_hashes
 
-    def counting_hashes(wide):
+    def counting_hashes(df, key_col):
         calls["hash_jobs"] += 1
-        return orig_hashes(wide)
+        return orig_hashes(df, key_col)
 
-    monkeypatch.setattr(st, "_hour_hashes", counting_hashes)
+    monkeypatch.setattr(csv_package, "key_hashes", counting_hashes)
 
     # default chunking: the 3-hour window is one chunk -> ONE hash job
     out1 = str(tmp_path / "p1")
@@ -282,3 +271,81 @@ def test_hourly_sweep_budget_stops_between_chunks(spark, lake_dir, tmp_path, mon
         m2["created"] + m2["updated"] + m2["skipped"] + m2["empty"]
         + m2["skipped_exists"] == 1
     )
+
+
+def test_hourly_sweep_rebuilds_package_after_crash_before_manifest(
+    spark, lake_dir, tmp_path, monkeypatch
+):
+    """The manifest is the commit record of a package: a crash while an
+    hour's zip is built leaves that hour without a current manifest, so
+    the next sweep rebuilds it instead of skipping it, and every zip
+    then holds exactly the CSV and manifest on disk."""
+    import os
+    import zipfile
+
+    real_zipfile = zipfile.ZipFile
+    calls = {"n": 0}
+
+    def crash_once(*a, **kw):
+        calls["n"] += 1
+        if calls["n"] == 1:
+            raise OSError("crash while zipping")
+        return real_zipfile(*a, **kw)
+
+    monkeypatch.setattr(zipfile, "ZipFile", crash_once)
+    out = str(tmp_path / "packages")
+    kw = dict(base_dir=lake_dir, out_dir=out, max_hours=3)
+    with pytest.raises(OSError, match="crash while zipping"):
+        run_task(spark, "siri-hourly-update-packages", **kw)
+    m = run_task(spark, "siri-hourly-update-packages", **kw)
+    assert m["created"] >= 1 and m["updated"] == 0
+
+    hours = [f[: -len("-metadata.json")] for f in os.listdir(out) if f.endswith("-metadata.json")]
+    assert len(hours) == m["created"] + m["skipped"]
+    for hour in hours:
+        with real_zipfile(os.path.join(out, f"{hour}.zip")) as zf:
+            for name in (f"{hour}.csv", f"{hour}-metadata.json"):
+                with open(os.path.join(out, name), "rb") as fh:
+                    assert zf.read(name) == fh.read(), name
+
+
+def test_enrichment_rerun_heals_crash_mid_swap(spark, tmp_path, monkeypatch):
+    """A crash between the two renames of a snapshot swap leaves only
+    `<table>.old`. Rerunning the task puts it back and converges to the
+    state of a run that never crashed."""
+    import os
+    from collections import Counter
+
+    from open_bus_stride_etl_spark.sources import fs
+
+    def seeded(name):
+        base = str(tmp_path / name)
+        for t, df in stride_fixtures.build(spark).items():
+            lake.overwrite_table(df, base, t)
+        return base
+
+    def row_set(base):
+        return Counter(map(tuple, lake.read_table(spark, base, "siri_ride").collect()))
+
+    clean, crashed = seeded("clean"), seeded("crashed")
+    assert run_task(spark, "siri-update-rides-gtfs", base_dir=clean, **WINDOW)[
+        "matched_gtfs_rides"
+    ] > 0
+
+    real_rename = fs.rename
+    calls = {"n": 0}
+
+    def crash_on_second(src, dest, spark=None):
+        calls["n"] += 1
+        if calls["n"] == 2:  # old snapshot parked, new one not yet in place
+            raise OSError("crash between renames")
+        return real_rename(src, dest, spark)
+
+    monkeypatch.setattr(fs, "rename", crash_on_second)
+    with pytest.raises(OSError, match="crash between renames"):
+        run_task(spark, "siri-update-rides-gtfs", base_dir=crashed, **WINDOW)
+    monkeypatch.setattr(fs, "rename", real_rename)
+    assert not os.path.exists(lake.table_path(crashed, "siri_ride"))
+
+    run_task(spark, "siri-update-rides-gtfs", base_dir=crashed, **WINDOW)
+    assert row_set(crashed) == row_set(clean)

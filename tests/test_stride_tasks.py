@@ -17,7 +17,7 @@ from open_bus_stride_etl_spark.operators.stats import (
 )
 from open_bus_stride_etl_spark.plans import stride
 from open_bus_stride_etl_spark.plans.tasks import REGISTRY, run_task, task
-from open_bus_stride_etl_spark.sources.csv_package import publish_if_changed
+from open_bus_stride_etl_spark.sources.csv_package import publish_packages, read_manifest
 from tests import stride_fixtures
 
 MIN_D, MAX_D = "2024-05-08", "2024-05-11"
@@ -264,16 +264,19 @@ def test_siri_flat_export_plan_broadcasts_dims(tables):
 
 
 def test_publish_if_changed_idempotent(tables, tmp_path):
-    df = tables["siri_stop"]
+    """publish_packages is effectively-once: created, then skipped for
+    the same content under another partitioning, then updated."""
+    df = tables["siri_stop"].withColumn("_k", F.lit("pkg"))
     out = str(tmp_path)
-    r1 = publish_if_changed(df, out, "pkg")
-    assert r1["status"] == "created" and r1["row_count"] == 20
+    assert publish_packages(df, "_k", out)["created"] == ["pkg"]
+    m1 = read_manifest(out, "pkg")
+    assert m1["count_of_rows"] == 20
     # same content, different partitioning -> hash equal -> skipped
-    r2 = publish_if_changed(df.repartition(7), out, "pkg")
-    assert r2["status"] == "skipped" and r2["hash"] == r1["hash"]
+    assert publish_packages(df.repartition(7), "_k", out)["skipped"] == ["pkg"]
+    assert read_manifest(out, "pkg") == m1
     # changed content -> updated with a new hash
-    r3 = publish_if_changed(df.where(F.col("id") != 1), out, "pkg")
-    assert r3["status"] == "updated" and r3["hash"] != r1["hash"]
+    assert publish_packages(df.where(F.col("id") != 1), "_k", out)["updated"] == ["pkg"]
+    assert read_manifest(out, "pkg")["hash"] != m1["hash"]
     assert (tmp_path / "pkg.zip").exists() and (tmp_path / "pkg.csv").exists()
 
 
