@@ -32,6 +32,10 @@ MINHASH_P = (1 << 61) - 1
 MINHASH_A = (999983, 999979, 999961, 999959, 999953, 999931, 999917, 999907)
 MINHASH_B = (15485863, 32452843, 49979687, 67867967, 86028121, 104395301, 122949823, 141650939)
 N_BANDS = 4  # 8 signatures = 4 bands x 2 rows
+# Degenerate-corpus guard for the pair-level broadcasts (see
+# minhash_lsh_pairs): above this many candidate pairs / probe rows the
+# hints drop and AQE shuffle joins take over. Read at call time.
+MAX_BROADCAST_ROWS = 5_000_000
 
 
 def _shingled(
@@ -112,7 +116,7 @@ def shared_span_pairs(
     iterative loop).
 
     Scale shape: candidate pairs and the member prune follow
-    ``jaccard_pairs``'s candidate-first doctrine — positional shingles
+    ``minhash_lsh_pairs``'s candidate-first doctrine — positional shingles
     are computed ONLY for member docs (pre-explosion semi-join), and
     nothing pair-level shuffles corpus volume. Only the CANDIDATE-PAIR
     table and the member-id list carry broadcast hints (both are
@@ -122,12 +126,9 @@ def shared_span_pairs(
     identical at bench scale; a hint there would force a driver collect
     that can exceed the broadcast limit on a large candidate set)."""
     if candidates is None:
-        raw = _shingled(docs, id_col, text_col, k, distinct=False)
-        aggs = [
-            F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"m{i}")
-            for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
-        ]
-        candidates = lsh_candidate_pairs(raw.groupBy(id_col).agg(*aggs), id_col=id_col)
+        candidates = lsh_candidate_pairs(
+            minhash_signatures(docs, id_col, text_col, k), id_col=id_col
+        )
     cands = track_persist(candidates)
     members = (
         cands.select(F.col("doc_a").alias(id_col))
@@ -166,26 +167,22 @@ def shared_span_pairs(
 
 
 def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    shingled: DataFrame | None = None,
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
 ) -> DataFrame:
-    """Per doc: 8 MinHash values m0..m7 over word-k-gram shingles.
+    """Per doc: 8 MinHash values m0..m7 over word-k-gram shingles — the
+    one signature aggregation every LSH consumer (pair pipeline, span
+    candidates, curate band index, streaming probes) goes through.
 
-    ``shingled`` lets a pipeline that needs the shingle table more than
-    once (signatures + exact Jaccard re-rank) compute it a single time —
-    Catalyst does not reuse the subtree across the two aggregation
-    shapes on its own (exchange reuse does fire for the shuffle).
-    MIN is duplicate-insensitive, so a ``distinct=False`` shingle
-    stream works here too (what ``minhash_lsh_pairs`` exploits)."""
-    sh = shingled if shingled is not None else _shingled(docs, id_col, text_col, k)
+    It reads the RAW shingle stream (``distinct=False``): MIN is
+    duplicate-insensitive, so the values are those of the distinct
+    shingle set while the only full-corpus shuffle is this one
+    groupBy(doc) — no corpus-wide distinct in front of it."""
+    raw = _shingled(docs, id_col, text_col, k, distinct=False)
     aggs = [
         F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"m{i}")
         for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
     ]
-    return sh.groupBy(id_col).agg(*aggs)
+    return raw.groupBy(id_col).agg(*aggs)
 
 
 def band_buckets(signatures: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -210,7 +207,7 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id") -> DataFr
     aliases of ONE bucket subtree, so they share a single exchange at
     runtime — do NOT filter one side here (a per-side filter breaks the
     reuse and runs the signature aggregation twice; measured r9, the
-    first b_ids draft cost ~1 s at sf0.1)."""
+    first b-side-restriction draft cost ~1 s at sf0.1)."""
     keyed = band_buckets(signatures, id_col)
     a, b = keyed.alias("a"), keyed.alias("b")
     return (
@@ -225,60 +222,29 @@ def jaccard_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 3,
-    candidates: DataFrame | None = None,
     shingled: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact shingle-set Jaccard per doc pair (basis points). With
-    ``candidates`` (doc_a, doc_b) the computation is restricted to those
-    pairs (the LSH path); without, every pair sharing >= 1 shingle is
-    scored (only sane at small scale — the blocker is the shared
-    shingle itself). ``shingled``: see minhash_signatures.
+    """Exact shingle-set Jaccard (basis points) for every doc pair
+    sharing >= 1 shingle — the shingle itself is the blocker, so this
+    is only sane at small scale. ``shingled`` lets a caller pass a
+    persisted ``_shingled`` table: it is consumed three times here
+    (both self-join sides and the set sizes) with no exchange reuse.
 
-    This is the composable primitive; the end-to-end LSH dedup query
-    should use ``minhash_lsh_pairs``, whose fused plan avoids the
-    corpus-wide distinct and set-size passes entirely."""
+    The end-to-end LSH dedup should use ``minhash_lsh_pairs``, which
+    scores only candidate pairs and never runs a corpus-wide distinct
+    or set-size pass."""
     sh = shingled if shingled is not None else _shingled(docs, id_col, text_col, k)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    if candidates is not None:
-        # The scale path: never self-join the whole corpus. Intersections
-        # are computed pair-first — candidates ⋈ a-shingles ⋈ b-shingles —
-        # so work is O(|candidates| * shingles/doc), independent of corpus
-        # size. This is the reason LSH banding exists; filtering an
-        # all-pairs join afterwards would throw that away.
-        # The candidate set is consumed three times below (member
-        # semi-join + the intersection join) and is small by contract
-        # (it IS the point of LSH banding) — persist it so the banding
-        # subtree runs once and AQE sees its true (tiny) size, turning
-        # the member semi-join into a broadcast.
-        candidates = track_persist(candidates)
-        # ONE pruned shingle table for both pair sides (doc_a ∪ doc_b
-        # members), consumed twice below — the two consumers share the
-        # same exchange. Pruning before touching shingles matters: at
-        # 500k docs the unpruned b-side meant shuffling 14M rows to
-        # score 42k pairs.
-        members = (
-            candidates.select(F.col("doc_a").alias(id_col))
-            .union(candidates.select(F.col("doc_b").alias(id_col)))
-            .distinct()
+    a, b = sh.alias("a"), sh.alias("b")
+    inter = (
+        a.join(
+            b,
+            (F.col("a.h") == F.col("b.h"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
         )
-        m_sh = sh.join(members, on=id_col, how="left_semi")
-        inter = (
-            candidates.join(m_sh.select(F.col(id_col).alias("doc_a"), "h"), on="doc_a")
-            .join(m_sh.select(F.col(id_col).alias("doc_b"), "h"), on=["doc_b", "h"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
-    else:
-        a, b = sh.alias("a"), sh.alias("b")
-        inter = (
-            a.join(
-                b,
-                (F.col("a.h") == F.col("b.h"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .groupBy(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"))
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
+        .groupBy(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+    )
     na = sizes.select(F.col(id_col).alias("doc_a"), F.col("n").alias("n_a"))
     nb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n").alias("n_b"))
     return (
@@ -297,12 +263,7 @@ def jaccard_pairs(
 
 
 def minhash_lsh_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    max_broadcast_pairs: int | None = 5_000_000,
-    b_ids: DataFrame | None = None,
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
 ) -> DataFrame:
     """Full MinHash → LSH-banding → exact-Jaccard pipeline as ONE
     plan-tuned operator: ``(doc_a, doc_b, jaccard_bp)`` for every LSH
@@ -312,12 +273,11 @@ def minhash_lsh_pairs(
     from the naive composition's 13-exchange plan (~7 static exchanges):
 
     - The shingle stream is consumed RAW (no full-corpus distinct
-      ANYWHERE): MinHash MIN is duplicate-insensitive, so the only
-      full-corpus shuffle left is the one groupBy(doc) signature
-      aggregate — the old plan shuffled the corpus twice (distinct,
-      then each aggregate). Exact set sizes are only ever needed for
-      docs that appear in a candidate pair, so they are computed from
-      the member-pruned shingle table, never the corpus.
+      ANYWHERE): ``minhash_signatures`` is the only full-corpus shuffle
+      — the old plan shuffled the corpus twice (distinct, then each
+      aggregate). Exact set sizes are only ever needed for docs that
+      appear in a candidate pair, so they are computed from the
+      member-pruned shingle table, never the corpus.
     - Candidates and the member-pruned shingle table are persisted:
       each is small by the LSH contract (candidate pairs / member
       shingles), each is consumed 2+ times, and persisting stops
@@ -338,55 +298,21 @@ def minhash_lsh_pairs(
       driver with an opaque Spark error (observed on a synthetic
       all-near-identical 20k-doc lake). The candidate count is known
       for free (``cands`` is persisted for its 2+ consumers anyway; the
-      count materializes that cache), so above ``max_broadcast_pairs``
+      count materializes that cache), so above ``MAX_BROADCAST_ROWS``
       the broadcast hints are dropped and AQE falls back to mergeable
       shuffle joins — slower, but it completes and the caller gets the
-      same rows. Healthy corpora never hit the bound.
-      ``max_broadcast_pairs=None`` skips the count and keeps the
-      unconditional broadcasts (the pre-guard build); it exists so the
-      guard's cost could be measured. r6 interleaved paired A/B
-      (tools/ab_probe.py protocol): the guarded build is FASTER, not
-      just free — median paired delta -0.75 s at sf0.1 (5/5 rounds)
-      and -3.1 s at sf1 (4/4) — because the count materializes the
-      persist in one dedicated job before any consumer runs, while the
-      lazy-persist path lets each eager broadcast build re-derive the
-      corpus-wide candidate subtree before the cache is populated.
-      Keep the count; never pass None on a hot path.
+      same rows. Healthy corpora never hit the bound. The count also
+      makes the guarded build faster than unconditional broadcasts
+      (r6 paired A/B: -0.75 s sf0.1, -3.1 s sf1): it fills the persist
+      in one job before any eager broadcast build can re-derive the
+      candidate subtree.
     """
-    raw = _shingled(docs, id_col, text_col, k, distinct=False)
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"m{i}")
-        for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
-    ]
-    sigs = raw.groupBy(id_col).agg(*aggs)
-    # ``b_ids`` (optional, single ``id_col`` column) restricts the PAIR
-    # B-SIDE (the higher id — the side dedup callers drop) via a
-    # semi-join on the candidate pairs (guide §3.2). Signatures and the
-    # bucket self-join still cover the full corpus (any doc can be the
-    # a-side, and the self-join's two sides must stay one shared
-    # exchange — see lsh_candidate_pairs), but everything pair-level —
-    # the persisted candidate set, the member re-shingle explode, and
-    # the exact-Jaccard verify — shrinks to pairs whose b-side is in
-    # the batch. Verdicts for every returned pair are identical; plain
-    # (not forced-broadcast) join — the batch size is the caller's
-    # contract, not the LSH occupancy invariant's.
-    pairs = lsh_candidate_pairs(sigs, id_col=id_col)
-    if b_ids is not None:
-        pairs = pairs.join(
-            b_ids.select(F.col(id_col).alias("doc_b")).distinct(),
-            on="doc_b",
-            how="left_semi",
-        )
-    return _verified_jaccard(docs, pairs, id_col, text_col, k, max_broadcast_pairs)
+    pairs = lsh_candidate_pairs(minhash_signatures(docs, id_col, text_col, k), id_col=id_col)
+    return _verified_jaccard(docs, pairs, id_col, text_col, k)
 
 
 def _verified_jaccard(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int,
-    max_broadcast_pairs: int | None,
+    docs: DataFrame, pairs: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
     """The exact-Jaccard verify tail shared by ``minhash_lsh_pairs`` and
     ``minhash_lsh_pairs_from_buckets``: candidate pairs → member prune →
@@ -396,11 +322,8 @@ def _verified_jaccard(
     pre-explosion member semi-join are all documented on
     ``minhash_lsh_pairs``)."""
     cands = track_persist(pairs)
-    if max_broadcast_pairs is None:
-        bc = F.broadcast
-    else:
-        n_cands = cands.count()  # materializes the persist its consumers reuse
-        bc = F.broadcast if n_cands <= max_broadcast_pairs else (lambda df: df)
+    n_cands = cands.count()  # materializes the persist its consumers reuse
+    bc = F.broadcast if n_cands <= MAX_BROADCAST_ROWS else (lambda df: df)
     members = (
         cands.select(F.col("doc_a").alias(id_col))
         .union(cands.select(F.col("doc_b").alias(id_col)))
@@ -442,89 +365,53 @@ def _verified_jaccard(
     )
 
 
-def minhash_band_buckets(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
-) -> DataFrame:
-    """``(id, bucket)`` for every doc — the full MinHash → LSH banding
-    stage as a standalone frame, in the PERSISTED-INDEX row format (the
-    exact subtree ``minhash_lsh_pairs`` derives internally: raw
-    duplicate-preserving shingle stream → 8 MIN permutations → 4 band
-    buckets). A curate-style task materializes this once per doc into an
-    append-only band index and probes it on later runs
-    (``minhash_lsh_pairs_from_buckets``) instead of re-aggregating
-    signatures over the whole corpus."""
-    raw = _shingled(docs, id_col, text_col, k, distinct=False)
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"m{i}")
-        for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
-    ]
-    return band_buckets(raw.groupBy(id_col).agg(*aggs), id_col)
-
-
 def minhash_lsh_pairs_from_buckets(
     docs: DataFrame,
     buckets: DataFrame,
+    b_ids: DataFrame,
+    probe_rows: int,
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 3,
-    max_broadcast_pairs: int | None = 5_000_000,
-    b_ids: DataFrame | None = None,
-    max_broadcast_probe: int | None = 5_000_000,
-    probe_rows: int | None = None,
 ) -> DataFrame:
     """``minhash_lsh_pairs`` computed from a PRE-MATERIALIZED
     ``(id, bucket)`` table covering the whole corpus (r10, VERDICT r9
     #1 — the amortized band-index path): candidate generation is an
     equi-join over the materialized bucket table, with NO full-corpus
     shingle/MinHash signature aggregation anywhere in the plan. Returns
-    exactly the rows ``minhash_lsh_pairs(docs, b_ids=b_ids)`` returns
-    PROVIDED ``buckets`` equals ``minhash_band_buckets(docs)`` row-set-
-    wise (duplicate index rows are harmless — the pair ``distinct()``
-    absorbs them; missing or stale rows are NOT, which is why the
-    curate task validity-filters its index against the current corpus's
+    exactly the rows of ``minhash_lsh_pairs(docs)`` whose ``doc_b`` is
+    in ``b_ids``, PROVIDED ``buckets`` equals
+    ``band_buckets(minhash_signatures(docs))`` row-set-wise (duplicate
+    index rows are harmless — the pair ``distinct()`` absorbs them;
+    missing or stale rows are NOT, which is why the curate task
+    validity-filters its index against the current corpus's
     fingerprints before calling this).
 
     Probe shape: the b-side is the bucket rows of ``b_ids`` docs
     (fetched FROM the index via a semi-join — never recomputed from
     text: ``b_ids`` carries every never-seen doc, incl. all prior LSH
     losers, so re-shingling it would be O(non-survivors), not
-    O(batch)). The b-side is persisted and counted (the
-    ``max_broadcast_pairs`` guard doctrine): when it fits, it
-    broadcasts into the probe join so the corpus-sized index is
-    SCANNED but never SHUFFLED — the steady-state incremental run's
-    only full-corpus touch is one slim columnar scan. A degenerate
-    (huge-batch / bootstrap-sized) b-side drops the hint and AQE falls
-    back to a shuffle join, same rows.
-
-    ``probe_rows``: the caller's exact (or upper-bound) b-side row
-    count, when it already knows it — the curate task reads the unseen
-    doc count off the flags aggregation it runs anyway, and the b-side
-    is 4 band rows per unseen doc — which skips this function's own
-    persist+count sizing job (measured: the count job was most of the
-    index path's fixed overhead at small scale)."""
+    O(batch)). ``probe_rows`` is the caller's exact (or upper-bound)
+    b-side row count — the curate task reads the unseen doc count off
+    the flags aggregation it runs anyway, and the b-side is 4 band rows
+    per unseen doc — so no sizing job runs here. When it is within
+    ``MAX_BROADCAST_ROWS`` the b-side broadcasts into the probe join, so
+    the corpus-sized index is SCANNED but never SHUFFLED — the
+    steady-state incremental run's only full-corpus touch is one slim
+    columnar scan. A degenerate (huge-batch / bootstrap-sized) b-side
+    drops the hint and AQE falls back to a shuffle join, same rows."""
     a = buckets.select(F.col(id_col).alias("doc_a"), "bucket")
-    if b_ids is not None:
-        probe = buckets.join(
-            b_ids.select(id_col).distinct(), on=id_col, how="left_semi"
-        )
-    else:
-        probe = buckets
-    probe = probe.select(F.col(id_col).alias("doc_b"), "bucket")
-    if max_broadcast_probe is None:
-        pb = F.broadcast
-    elif probe_rows is not None:
-        pb = F.broadcast if probe_rows <= max_broadcast_probe else (lambda df: df)
-    else:
-        probe = track_persist(probe)
-        n_probe = probe.count()  # materializes the persist; sizes the hint
-        pb = F.broadcast if n_probe <= max_broadcast_probe else (lambda df: df)
+    probe = buckets.join(b_ids.select(id_col).distinct(), on=id_col, how="left_semi").select(
+        F.col(id_col).alias("doc_b"), "bucket"
+    )
+    pb = F.broadcast if probe_rows <= MAX_BROADCAST_ROWS else (lambda df: df)
     pairs = (
         a.join(pb(probe), on="bucket")
         .where(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
         .distinct()
     )
-    return _verified_jaccard(docs, pairs, id_col, text_col, k, max_broadcast_pairs)
+    return _verified_jaccard(docs, pairs, id_col, text_col, k)
 
 
 def _local_cc_finish(edges: DataFrame) -> DataFrame:

@@ -3,10 +3,11 @@ into schedulable stages with written artifacts, driven through the same
 task registry/CLI as the transit ETL tasks (SURVEY.md §3; no
 reference-repo analog — BASELINE.json extension). Four stages:
 llm-curate-corpus (ingest -> score -> dedup -> write, optionally
-incremental against a Bloom-pre-filtered history index),
-llm-build-ann-index / llm-ann-query (the persisted IVF lifecycle), and
-llm-export-training-shards (tokenize -> seeded shuffle -> sharded
-replay-ordered write — the artifact a training loader consumes).
+incremental against a history of seen fingerprints and a persisted LSH
+band index), llm-build-ann-index / llm-ann-query (the persisted IVF
+lifecycle), and llm-export-training-shards (tokenize -> seeded shuffle
+-> sharded replay-ordered write — the artifact a training loader
+consumes).
 
 The selection logic is the oracle-pinned `corpus_clean_keep` query
 (plans/q_llm.py): quality >= threshold, language allow-list, exact-dup
@@ -24,6 +25,7 @@ from pyspark.sql import functions as F
 from ..operators import dedup as dd
 from ..operators import text as tx
 from ..session import configure
+from ..sources import fs
 from .tasks import task
 
 
@@ -33,7 +35,7 @@ def _indexed_lsh_pairs(
     history_dir: str,
     b_ids: DataFrame,
     cur: DataFrame,
-    probe_rows: int | None = None,
+    probe_rows: int,
 ) -> DataFrame:
     """Incremental LSH pairs via the AMORTIZED persisted band-bucket
     index (r10, VERDICT r9 #1): ``{history_dir}/lsh_band_index.parquet``
@@ -50,20 +52,18 @@ def _indexed_lsh_pairs(
     fingerprint in ``cur``, so removed docs, changed text, and stale
     rows are invisible; after the top-up every current doc has a valid
     row, making the validity-filtered index row-set-equal to
-    ``minhash_band_buckets(docs)`` — the precondition under which
-    ``minhash_lsh_pairs_from_buckets`` returns exactly
-    ``minhash_lsh_pairs(docs, b_ids=b_ids)``'s rows (pinned by
-    tests/test_llm_ops.py::test_lsh_pairs_from_buckets_*). The index is
-    append-only (a crash-replayed append at worst duplicates rows,
-    which the candidate ``distinct()`` absorbs); compaction of stale
-    rows is the deployment's lake-compaction concern, like every other
-    append artifact here."""
-    import os  # noqa: PLC0415
-
+    ``band_buckets(minhash_signatures(docs))`` — the precondition under
+    which ``minhash_lsh_pairs_from_buckets`` returns exactly
+    ``minhash_lsh_pairs(docs)`` filtered to ``doc_b ∈ b_ids`` (pinned by
+    tests/test_llm_ops.py::test_lsh_pairs_from_buckets_equals_full). The
+    index is append-only (a crash-replayed append at worst duplicates
+    rows, which the candidate ``distinct()`` absorbs); compaction of
+    stale rows is the deployment's lake-compaction concern, like every
+    other append artifact here."""
     from ..operators.util import track_persist  # noqa: PLC0415
 
     idx_path = f"{history_dir}/lsh_band_index.parquet"
-    if os.path.isdir(idx_path):
+    if fs.exists(idx_path, spark):
         existing = spark.read.parquet(idx_path)
         # ONE corpus-scale validity join per run (the first cut ran it
         # per consumer — three corpus-sized joins; measured the whole
@@ -81,13 +81,12 @@ def _indexed_lsh_pairs(
     else:
         valid = None
         new_docs = docs  # bootstrap: first incremental run signs everything once
-    os.makedirs(history_dir, exist_ok=True)
     # The batch's new buckets are computed ONCE (eager localCheckpoint):
     # the index append writes from the checkpoint and the probe union
     # reads it — no re-read of the just-written files, no second
     # signature pass over the batch.
     new_buckets = (
-        dd.minhash_band_buckets(new_docs)
+        dd.band_buckets(dd.minhash_signatures(new_docs))
         .join(cur, on="doc_id")
         .select("doc_id", F.col("_fp").alias("fp"), "bucket")
         .localCheckpoint(eager=True)
@@ -95,9 +94,7 @@ def _indexed_lsh_pairs(
     new_buckets.write.mode("append").parquet(idx_path)
     nb = new_buckets.select("doc_id", "bucket")
     buckets_now = nb if valid is None else valid.unionByName(nb)
-    return dd.minhash_lsh_pairs_from_buckets(
-        docs, buckets_now, b_ids=b_ids, probe_rows=probe_rows
-    )
+    return dd.minhash_lsh_pairs_from_buckets(docs, buckets_now, b_ids, probe_rows)
 
 
 def _load_docs(spark: SparkSession, base_dir: str, input_format: str) -> DataFrame:
@@ -116,7 +113,6 @@ def _load_docs(spark: SparkSession, base_dir: str, input_format: str) -> DataFra
     jaccard_min_bp=5000,
     langs="en,und",
     input_format="parquet",
-    band_index=True,
 )
 def llm_curate_corpus(
     spark: SparkSession,
@@ -127,7 +123,6 @@ def llm_curate_corpus(
     input_format: str = "parquet",
     out_dir: str | None = None,
     history_dir: str | None = None,
-    band_index: bool = True,
 ) -> dict:
     """Curate ``{base_dir}/documents.parquet`` (or ``documents_jsonl/``)
     into ``{out_dir or base_dir/curated_documents}``: quality floor,
@@ -135,16 +130,19 @@ def llm_curate_corpus(
     pruning — then write the surviving documents WITH their text as
     parquet and report per-stage counts.
 
+    ``history_dir`` (any path ``sources.fs`` accepts, URIs included)
+    holds the seen-fingerprint index and the LSH band index; with it,
+    each run admits only documents whose fingerprint it has not seen.
+
     Scale notes: the flag aggregation is one map-combined pass over the
     scored scan; the only full-corpus shuffles are the exact-dup
     fingerprint window and the LSH pipeline's signature aggregate (the
-    flattened `minhash_lsh_pairs` plan) — and on INCREMENTAL runs with
-    ``band_index`` (the default) even that disappears: signatures are
-    read from the amortized persisted band-bucket index in
-    ``history_dir`` (see ``_indexed_lsh_pairs``; each doc is signed
-    exactly once across the task's lifetime). The final write streams
-    the survivor rows — nothing collects to the driver but the metric
-    scalars."""
+    flattened `minhash_lsh_pairs` plan) — and on INCREMENTAL runs even
+    that disappears: signatures are read from the amortized persisted
+    band-bucket index in ``history_dir`` (see ``_indexed_lsh_pairs``;
+    each doc is signed exactly once across the task's lifetime). The
+    final write streams the survivor rows — nothing collects to the
+    driver but the metric scalars."""
     allow = [s.strip() for s in langs.split(",") if s.strip()]
     docs = _load_docs(spark, base_dir, input_format)
     t = F.col("text")
@@ -171,10 +169,8 @@ def llm_curate_corpus(
     # Spark's native AQE anti-join (2.4 s vs 29 s, interleaved A/B x3).
     seen = None
     if history_dir is not None:
-        import os  # noqa: PLC0415
-
         seen_path = f"{history_dir}/seen_fingerprints.parquet"
-        if os.path.isdir(seen_path):
+        if fs.exists(seen_path, spark):
             seen = spark.read.parquet(seen_path)
 
     # ONE aggregation pass computes every pre-LSH metric (r9; the
@@ -263,48 +259,29 @@ def llm_curate_corpus(
         # survive the anti-join below anyway, so survivors are
         # identical either way.
         #
-        # With ``band_index`` (r10, the default) the candidate a-side
-        # comes from the persisted band-bucket index in history_dir
-        # (_indexed_lsh_pairs) instead of a fresh full-corpus signature
-        # aggregation — the amortized O(batch)-signing shape. The first
-        # run (seen is None) keeps the in-plan minhash_lsh_pairs
-        # pipeline unchanged (bootstrap happens on the FIRST incremental
-        # LSH run, which must sign the backlog once either way);
-        # band_index=False keeps the r9 recompute-per-run path for
-        # callers that don't want index storage.
-        pairs_src = None
-        b_ids = None
+        # The candidate a-side comes from the persisted band-bucket
+        # index in history_dir (_indexed_lsh_pairs) instead of a fresh
+        # full-corpus signature aggregation — the amortized
+        # O(batch)-signing shape. The first run (seen is None) keeps the
+        # in-plan minhash_lsh_pairs pipeline (bootstrap happens on the
+        # FIRST incremental run, which must sign the backlog once either
+        # way).
         if seen is not None:
-            if band_index:
-                from ..operators.util import track_persist  # noqa: PLC0415
+            from ..operators.util import track_persist  # noqa: PLC0415
 
-                cur = track_persist(
-                    docs.select(
-                        "doc_id", tx.doc_fingerprint(F.col("text")).alias("_fp")
-                    )
-                )
-                b_ids = cur.join(
-                    seen.select(F.col("fingerprint").alias("_fp")),
-                    on="_fp",
-                    how="left_anti",
-                ).select("doc_id")
-                pairs_src = _indexed_lsh_pairs(
-                    spark, docs, history_dir, b_ids, cur, probe_rows=4 * n_unseen
-                )
-            else:
-                b_ids = (
-                    docs.select(
-                        "doc_id", tx.doc_fingerprint(F.col("text")).alias("_fp")
-                    )
-                    .join(
-                        seen.select(F.col("fingerprint").alias("_fp")),
-                        on="_fp",
-                        how="left_anti",
-                    )
-                    .select("doc_id")
-                )
-        if pairs_src is None:
-            pairs_src = dd.minhash_lsh_pairs(docs, b_ids=b_ids)
+            cur = track_persist(
+                docs.select("doc_id", tx.doc_fingerprint(F.col("text")).alias("_fp"))
+            )
+            b_ids = cur.join(
+                seen.select(F.col("fingerprint").alias("_fp")),
+                on="_fp",
+                how="left_anti",
+            ).select("doc_id")
+            pairs_src = _indexed_lsh_pairs(
+                spark, docs, history_dir, b_ids, cur, probe_rows=4 * n_unseen
+            )
+        else:
+            pairs_src = dd.minhash_lsh_pairs(docs)
         near_dup_losers = (
             pairs_src.where(F.col("jaccard_bp") >= jaccard_min_bp)
             .select(F.col("doc_b").alias("doc_id"))
@@ -325,10 +302,6 @@ def llm_curate_corpus(
     if history_dir is not None and n_final > 0:
         # (an empty run appends nothing — skip the no-op job; the index
         # CONTENT is identical either way)
-        import os  # noqa: PLC0415
-
-        os.makedirs(history_dir, exist_ok=True)
-        seen_path = f"{history_dir}/seen_fingerprints.parquet"
         (
             spark.read.parquet(out)
             .select(tx.doc_fingerprint(F.col("text")).alias("fingerprint"))

@@ -41,120 +41,61 @@ def test_jaccard_identical_is_10000(spark):
     assert pairs[(1, 3)] == round(10000 * 5 / 7)
 
 
+_LSH_DOCS = [
+    Row(doc_id=1, text="the quick brown fox jumps over the lazy dog today"),
+    Row(doc_id=2, text="the quick brown fox jumps over the lazy dog tonight"),
+    Row(doc_id=3, text="an entirely different document about spark pipelines"),
+    Row(doc_id=4, text="an entirely different document about spark pipelines"),
+    Row(doc_id=5, text="the quick brown fox jumps over the lazy dog today"),
+]
+
+
+def _pairs(df):
+    return {(r["doc_a"], r["doc_b"]): r["jaccard_bp"] for r in df.collect()}
+
+
 def test_minhash_lsh_pairs_matches_primitive_composition(spark):
     """The plan-tuned composite (raw shingles, fused sizes, broadcast
     pair joins) must produce exactly the pairs + scores of the naive
-    primitive composition it replaced."""
-    docs = spark.createDataFrame(
-        [
-            Row(doc_id=1, text="the quick brown fox jumps over the lazy dog today"),
-            Row(doc_id=2, text="the quick brown fox jumps over the lazy dog tonight"),
-            Row(doc_id=3, text="an entirely different document about spark pipelines"),
-            Row(doc_id=4, text="an entirely different document about spark pipelines"),
-            Row(doc_id=5, text="the quick brown fox jumps over the lazy dog today"),
-        ]
-    )
-    sh = dd._shingled(docs, "doc_id", "text", 3)
-    sigs = dd.minhash_signatures(docs, shingled=sh)
-    cands = dd.lsh_candidate_pairs(sigs)
-    naive = {
-        (r["doc_a"], r["doc_b"]): r["jaccard_bp"]
-        for r in dd.jaccard_pairs(docs, candidates=cands, shingled=sh).collect()
+    primitive composition: all-pairs Jaccard restricted to the LSH
+    candidates. Exact, because every LSH candidate pair shares a
+    shingle and so appears in the all-pairs result."""
+    docs = spark.createDataFrame(_LSH_DOCS)
+    cands = {
+        (r["doc_a"], r["doc_b"])
+        for r in dd.lsh_candidate_pairs(dd.minhash_signatures(docs)).collect()
     }
-    tuned = {
-        (r["doc_a"], r["doc_b"]): r["jaccard_bp"]
-        for r in dd.minhash_lsh_pairs(docs).collect()
-    }
+    naive = {p: j for p, j in _pairs(dd.jaccard_pairs(docs)).items() if p in cands}
+    tuned = _pairs(dd.minhash_lsh_pairs(docs))
     assert tuned == naive
     assert tuned[(1, 5)] == 10000 and tuned[(3, 4)] == 10000
 
 
-def test_minhash_lsh_pairs_b_ids_restriction(spark):
-    """The incremental b-side restriction (r9) returns EXACTLY the full
-    pipeline's pairs filtered to doc_b ∈ b_ids — same jaccard values,
-    nothing extra, nothing missing (the curate fast-path's correctness
-    precondition)."""
-    docs = spark.createDataFrame(
-        [
-            Row(doc_id=1, text="the quick brown fox jumps over the lazy dog today"),
-            Row(doc_id=2, text="the quick brown fox jumps over the lazy dog tonight"),
-            Row(doc_id=3, text="an entirely different document about spark pipelines"),
-            Row(doc_id=4, text="an entirely different document about spark pipelines"),
-            Row(doc_id=5, text="the quick brown fox jumps over the lazy dog today"),
-        ]
-    )
-    full = {
-        (r["doc_a"], r["doc_b"]): r["jaccard_bp"]
-        for r in dd.minhash_lsh_pairs(docs).collect()
-    }
-    b_ids = spark.createDataFrame([Row(doc_id=4), Row(doc_id=5)])
-    restricted = {
-        (r["doc_a"], r["doc_b"]): r["jaccard_bp"]
-        for r in dd.minhash_lsh_pairs(docs, b_ids=b_ids).collect()
-    }
-    assert restricted == {p: j for p, j in full.items() if p[1] in (4, 5)}
-    assert any(b not in (4, 5) for _a, b in full)  # restriction is real
-
-
-def test_lsh_pairs_from_buckets_equals_full(spark):
+def test_lsh_pairs_from_buckets_equals_full(spark, monkeypatch):
     """The amortized band-index path (r10): given a materialized bucket
-    table equal to minhash_band_buckets(docs), the from_buckets operator
-    returns EXACTLY minhash_lsh_pairs' rows — unrestricted and with the
-    b_ids restriction — and duplicate index rows (crash-replayed
-    appends) change nothing."""
-    docs = spark.createDataFrame(
-        [
-            Row(doc_id=1, text="the quick brown fox jumps over the lazy dog today"),
-            Row(doc_id=2, text="the quick brown fox jumps over the lazy dog tonight"),
-            Row(doc_id=3, text="an entirely different document about spark pipelines"),
-            Row(doc_id=4, text="an entirely different document about spark pipelines"),
-            Row(doc_id=5, text="the quick brown fox jumps over the lazy dog today"),
-        ]
-    )
-    full = {
-        (r["doc_a"], r["doc_b"]): r["jaccard_bp"]
-        for r in dd.minhash_lsh_pairs(docs).collect()
-    }
-    buckets = dd.minhash_band_buckets(docs)
-    from_idx = {
-        (r["doc_a"], r["doc_b"]): r["jaccard_bp"]
-        for r in dd.minhash_lsh_pairs_from_buckets(docs, buckets).collect()
-    }
-    assert from_idx == full and full
+    table equal to band_buckets(minhash_signatures(docs)), the
+    from_buckets operator returns EXACTLY minhash_lsh_pairs' rows
+    filtered to doc_b ∈ b_ids — for every doc id and for a strict
+    subset — duplicate index rows (crash-replayed appends) change
+    nothing, and the shuffle fallback agrees with the broadcast path."""
+    docs = spark.createDataFrame(_LSH_DOCS)
+    full = _pairs(dd.minhash_lsh_pairs(docs))
+    buckets = dd.band_buckets(dd.minhash_signatures(docs))
+    all_ids = docs.select("doc_id")
+    assert _pairs(dd.minhash_lsh_pairs_from_buckets(docs, buckets, all_ids, 20)) == full and full
 
     b_ids = spark.createDataFrame([Row(doc_id=4), Row(doc_id=5)])
-    from_idx_b = {
-        (r["doc_a"], r["doc_b"]): r["jaccard_bp"]
-        for r in dd.minhash_lsh_pairs_from_buckets(docs, buckets, b_ids=b_ids).collect()
-    }
-    assert from_idx_b == {p: j for p, j in full.items() if p[1] in (4, 5)}
+    restricted = _pairs(dd.minhash_lsh_pairs_from_buckets(docs, buckets, b_ids, 8))
+    assert restricted == {p: j for p, j in full.items() if p[1] in (4, 5)}
+    assert any(b not in (4, 5) for _a, b in full)  # the restriction is real
 
     # duplicated rows (replayed append) are absorbed by the pair distinct
-    dup = {
-        (r["doc_a"], r["doc_b"]): r["jaccard_bp"]
-        for r in dd.minhash_lsh_pairs_from_buckets(
-            docs, buckets.unionByName(buckets)
-        ).collect()
-    }
-    assert dup == full
+    dup = buckets.unionByName(buckets)
+    assert _pairs(dd.minhash_lsh_pairs_from_buckets(docs, dup, all_ids, 40)) == full
 
-    # the tiny-probe broadcast guard and the shuffle fallback agree
-    no_bc = {
-        (r["doc_a"], r["doc_b"]): r["jaccard_bp"]
-        for r in dd.minhash_lsh_pairs_from_buckets(
-            docs, buckets, b_ids=b_ids, max_broadcast_probe=0
-        ).collect()
-    }
-    assert no_bc == from_idx_b
-
-    # caller-supplied probe size (skips the sizing count job) agrees too
-    sized = {
-        (r["doc_a"], r["doc_b"]): r["jaccard_bp"]
-        for r in dd.minhash_lsh_pairs_from_buckets(
-            docs, buckets, b_ids=b_ids, probe_rows=8
-        ).collect()
-    }
-    assert sized == from_idx_b
+    # the shuffle fallback (probe and pair joins unhinted) agrees
+    monkeypatch.setattr(dd, "MAX_BROADCAST_ROWS", 0)
+    assert _pairs(dd.minhash_lsh_pairs_from_buckets(docs, buckets, b_ids, 8)) == restricted
 
 
 def test_shingle_count_exact(spark):
@@ -858,8 +799,8 @@ def test_decode_stats_survive_corrupt_payloads(spark):
     assert aud == {1: False, 2: False, 3: False, 4: False}
 
 
-def test_minhash_lsh_broadcast_guard_fallback_matches(spark):
-    """Above max_broadcast_pairs the pair joins drop their broadcast
+def test_minhash_lsh_broadcast_guard_fallback_matches(spark, monkeypatch):
+    """Above MAX_BROADCAST_ROWS the pair joins drop their broadcast
     hints (AQE shuffle joins complete instead of OOMing the driver on a
     degenerate all-near-identical corpus) — and the rows must be
     IDENTICAL to the broadcast path."""
@@ -868,5 +809,6 @@ def test_minhash_lsh_broadcast_guard_fallback_matches(spark):
          for i in range(40)]
     )
     fast = sorted(map(tuple, dd.minhash_lsh_pairs(docs).collect()))
-    degraded = sorted(map(tuple, dd.minhash_lsh_pairs(docs, max_broadcast_pairs=1).collect()))
+    monkeypatch.setattr(dd, "MAX_BROADCAST_ROWS", 1)
+    degraded = sorted(map(tuple, dd.minhash_lsh_pairs(docs).collect()))
     assert fast == degraded and len(fast) > 100  # templated docs: dense pair set
