@@ -26,6 +26,7 @@ from ..operators import dedup as dd
 from ..operators import text as tx
 from ..session import configure
 from ..sources import fs
+from ..streaming.bounded import run_bounded
 from .tasks import task
 
 
@@ -650,8 +651,6 @@ def llm_stream_ingest_dedup(
     append-back is visible. Admitted docs land as parquet (text and
     all); the lake-compaction task owns the small-file debt both sinks
     accrue."""
-    import os  # noqa: PLC0415
-
     configure(spark)
 
     src = in_dir or f"{base_dir}/ingest"
@@ -683,10 +682,7 @@ def llm_stream_ingest_dedup(
             batch.sparkSession.sparkContext.defaultParallelism
         ).localCheckpoint(eager=True)  # two consumers below
         buckets = dd.band_buckets(dd.minhash_signatures(batch))
-        have_index = any(
-            f.startswith("batch=") for f in os.listdir(idx_dir)
-        ) if os.path.isdir(idx_dir) else False
-        if have_index:
+        if any(f.startswith("batch=") for f in fs.listdir(idx_dir, spark)):
             # Crash-replay guard: foreachBatch re-delivers the in-flight
             # batch, whose OWN batch=<id> index partition may already
             # exist from the crashed attempt. Probing it would make the
@@ -715,20 +711,7 @@ def llm_stream_ingest_dedup(
         totals["n_novel"] += novel.count()
         totals["n_batches"] += 1
 
-    q = (
-        stream.writeStream.foreachBatch(_admit)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("llm-stream-ingest-dedup did not finish within 600s")
-    finally:
-        from .q_streaming import _unload_state_stores  # noqa: PLC0415
-
-        _unload_state_stores(spark)
+    run_bounded(stream, _admit, ckpt)
 
     return {
         "n_batches": totals["n_batches"],

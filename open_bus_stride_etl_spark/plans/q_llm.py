@@ -2057,7 +2057,6 @@ def ingest_replay_idempotence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.hashing import hex_to_long, row_md5  # noqa: PLC0415
     from . import llm_tasks  # noqa: PLC0415,F401 - registers the task
-    from .q_streaming import _unload_state_stores  # noqa: PLC0415
     from .tasks import run_task  # noqa: PLC0415
 
     base = tempfile.mkdtemp(prefix="ingest_replay_")
@@ -2130,7 +2129,6 @@ def ingest_replay_idempotence(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(base, ignore_errors=True)
-        _unload_state_stores(spark)
 
 
 @query(

@@ -3,11 +3,14 @@
 The reference has no streaming runtime (SURVEY.md §2.9) — these queries
 prove the engine's streaming variants compute EXACTLY the batch answer:
 each runs a real Structured Streaming job (readStream -> watermarked
-transformation -> availableNow -> memory sink for small aggregate
-results, parquet file sink for high-volume append passthroughs) and is
-hash-compared against a plain batch SQL oracle. Complete/append-mode
-output over a bounded source is the batch result, so the DuckDB
-comparison is exact.
+transformation -> one availableNow ``foreachBatch`` run through
+streaming/bounded.py:run_bounded) and is hash-compared against a plain
+batch SQL oracle. Every sink writes each micro-batch to a temp parquet
+dir — overwrite in complete mode, append in append/update mode, or a
+query-specific foreachBatch function (the keyed upsert, the LSH index
+probe) — which ``_run_stream`` reads back with the known schema.
+Complete/append-mode output over a bounded source is the batch result,
+so the DuckDB comparison is exact.
 """
 
 from __future__ import annotations
@@ -16,13 +19,14 @@ import contextlib
 import os
 import shutil
 import tempfile
-import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import configure
+from ..streaming.bounded import BatchFn, run_bounded, write_each_batch
 from .q_llm import _SQL_BUCKETS, _SQL_MINHASH, _SQL_SHINGLES
 from .registry import query
 
@@ -32,8 +36,8 @@ def _table_stream(
 ) -> tuple[DataFrame, str]:
     """readStream over a test table with the same nanos->timestamp
     normalization as sources/lake.py:load_table applied to ``ts_cols``.
-    Returns the stream and the symlink source dir (deleted by the
-    runner after the run)."""
+    Returns the stream and the symlink source dir (deleted by
+    ``_run_stream`` after the run)."""
     configure(spark)
     path = f"{sf_dir}/{table}.parquet"
     schema = spark.read.parquet(path).schema
@@ -76,15 +80,8 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
 # available rather than a box constant). Production streams size this
 # to the cluster (state-store count is fixed at first checkpoint); the
 # scope restores the caller's value in `finally`.
-#
-# `stride.streaming.widthCeiling` (runtime conf) overrides the
-# defaultParallelism ceiling — the production knob for sizing the
-# state-store count to PLANNED capacity rather than the cores present
-# at first checkpoint (state width cannot change after that), and the
-# lever the SCALE30 width-sensitivity probe uses.
 _STREAM_PART_BYTES = 8 << 20
 _STREAM_PART_MIN = 8
-_STREAM_CEILING_CONF = "stride.streaming.widthCeiling"
 
 
 def _stream_partitions(src_dir: str, spark: SparkSession) -> int:
@@ -95,112 +92,57 @@ def _stream_partitions(src_dir: str, spark: SparkSession) -> int:
         except OSError:
             pass
     ceiling = max(_STREAM_PART_MIN, spark.sparkContext.defaultParallelism)
-    override = spark.conf.get(_STREAM_CEILING_CONF, None)
-    if override:
-        ceiling = max(_STREAM_PART_MIN, int(override))
     return max(_STREAM_PART_MIN, min(ceiling, -(-size // _STREAM_PART_BYTES)))
 
 
-class _stream_shuffle_scope:
-    """Context manager: temporarily size spark.sql.shuffle.partitions to
-    the bounded source's volume, restoring the caller's value on exit."""
-
-    def __init__(self, spark: SparkSession, src_dir: str):
-        self.spark = spark
-        self.src_dir = src_dir
-
-    def __enter__(self):
-        self.saved = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set(
-            "spark.sql.shuffle.partitions", str(_stream_partitions(self.src_dir, self.spark))
-        )
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.saved)
-        return False
+@contextlib.contextmanager
+def _stream_shuffle_scope(spark: SparkSession, src_dir: str):
+    """Temporarily size spark.sql.shuffle.partitions to the bounded
+    source's volume, restoring the caller's value on exit."""
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(_stream_partitions(src_dir, spark)))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
 
 
-def _await_or_raise(q, seconds: int = 300) -> None:
-    """awaitTermination returns False on timeout with the query STILL
-    RUNNING; ignoring that (as this harness originally did) would read a
-    partial sink, delete the checkpoint out from under the live query,
-    and return silently wrong rows. Stop the straggler and raise."""
-    if not q.awaitTermination(seconds):
-        q.stop()
-        raise TimeoutError(
-            f"streaming query {q.name or q.id} did not finish within "
-            f"{seconds}s; refusing to read a partial sink"
-        )
-
-
-def _unload_state_stores(spark: SparkSession) -> None:
-    """Deterministically unload every state-store provider held by this
-    JVM once a bounded run has finished with its state.
-
-    Why this exists (r7): after a streaming query terminates, each
-    executor still holds its ``HDFSBackedStateStoreProvider`` instances
-    — including the in-memory ``loadedMaps`` version cache of the
-    stream-stream join / aggregation state — until the state-store
-    MAINTENANCE tick (default 60 s) notices the query's run id is
-    deactivated and unloads them. Harness patterns run bounded
-    streaming queries back-to-back (bench min-of-N, scale_probe's
-    warm+2, ab_probe rounds), each run under a fresh checkpoint dir =
-    a fresh provider set, so provider sets accumulate faster than the
-    tick retires them. Measured at sf30 (870 MB of events through the
-    click->purchase stream-stream join, local[32], 8 GiB driver): the
-    r7 width A/B OOM'd the JVM on its 3rd round (~5th run), and a
-    scale_probe session running three streaming queries at two scale
-    factors cascaded into STREAM_FAILED with missing shuffle/broadcast
-    blocks — the executor side of the same heap exhaustion (this is
-    also the likely mechanism of r5's one unreproducible STREAM_FAILED,
-    SCALE30.md). ``StateStore.stop()`` unloads all providers and stops
-    the maintenance thread; Spark restarts maintenance lazily on the
-    next state-store load, so subsequent queries are unaffected (pinned
-    by the pytest streaming suite, which runs many queries through one
-    session). On a real cluster this call reaches only the driver's own
-    JVM — executors unload via the normal maintenance path — which is
-    the right scope anyway: local[n] is exactly the topology where
-    driver == executor makes the leak fatal, and production clusters
-    run long-lived streams rather than churning bounded ones."""
-    with contextlib.suppress(Exception):
-        spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-
-
-def _run_complete(
-    df: DataFrame, spark: SparkSession, src_dir: str, mode: str = "complete"
+def _run_stream(
+    df: DataFrame,
+    spark: SparkSession,
+    src_dir: str,
+    mode: str = "append",
+    sink: Callable[[str], BatchFn] | None = None,
+    schema: T.StructType | None = None,
 ) -> DataFrame:
     """Run the bounded stream to completion and return a SELF-CONTAINED
-    result: the memory-sink rows are re-materialized as localCheckpoint
-    blocks (reclaimed by the ContextCleaner when the caller drops the
-    DataFrame), then the sink view, checkpoint dir, and symlink source
-    dir are deleted immediately. Without this every invocation leaked a
-    uniquely-named in-memory sink table (complete-mode rows pinned for
-    the session's lifetime) plus two /tmp directories — a bench sweep
-    runs each streaming query 2-3 times and a long-lived scheduler
-    session would accumulate them without bound."""
-    name = f"q_stream_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
+    result. Each micro-batch goes to a parquet dir under one temp root
+    — ``write_each_batch`` by default, or ``sink(out_dir)``'s
+    foreachBatch function — which is read back with the KNOWN schema
+    (``schema``, default the stream's) and re-materialized as
+    localCheckpoint blocks (executor memory, spillable; reclaimed by the
+    ContextCleaner when the caller drops the DataFrame). The temp root
+    (checkpoint + output) and the source dir are deleted before
+    returning, on every exit path: a bench sweep runs each streaming
+    query 2-3 times and a long-lived scheduler session would otherwise
+    accumulate them without bound. A run with no batches writes nothing;
+    reading the empty out dir with the known schema returns the correct
+    empty DataFrame, where schema inference would throw."""
+    root = tempfile.mkdtemp(prefix="stream_run_")
+    out_dir = os.path.join(root, "out")
     try:
         with _stream_shuffle_scope(spark, src_dir):
-            q = (
-                df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(mode)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
+            run_bounded(
+                df,
+                sink(out_dir) if sink else write_each_batch(out_dir, mode),
+                os.path.join(root, "ckpt"),
+                mode,
             )
-            _await_or_raise(q)
-        out = spark.table(name).localCheckpoint(eager=True)
+        os.makedirs(out_dir, exist_ok=True)
+        return spark.read.schema(schema or df.schema).parquet(out_dir).localCheckpoint(eager=True)
     finally:
-        # in finally: a TimeoutError from _await_or_raise must not leave
-        # the memory-sink view pinning its rows for the session lifetime
-        with contextlib.suppress(Exception):
-            spark.catalog.dropTempView(name)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
         shutil.rmtree(src_dir, ignore_errors=True)
-        _unload_state_stores(spark)
-    return out
 
 
 @query(
@@ -220,7 +162,7 @@ def streaming_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream, src_dir = _events_stream(spark, sf_dir)
     agg = stream_hourly_stats(stream, ts_col="ts")
-    return _run_complete(agg, spark, src_dir)
+    return _run_stream(agg, spark, src_dir, mode="complete")
 
 
 @query(
@@ -264,7 +206,7 @@ def streaming_user_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("siri_ride_id")
         .agg(*first_last_aggs("recorded_at_time", "id"))
     )
-    out = _run_complete(agg, spark, src_dir)
+    out = _run_stream(agg, spark, src_dir, mode="complete")
     return out.select(
         F.col("siri_ride_id").alias("user_id"),
         F.col("first_vehicle_location_id").alias("first_event_id"),
@@ -312,7 +254,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    out = _run_complete(agg, spark, src_dir)
+    out = _run_stream(agg, spark, src_dir, mode="complete")
     return out.select(
         "user_id",
         F.col("w.start").alias("session_start"),
@@ -385,7 +327,7 @@ def streaming_ride_tracker(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("id"),
         F.col("ts").alias("recorded_at_time"),
     )
-    out = _run_complete(
+    out = _run_stream(
         stream_ride_tracker(stream, watermark=f"{wm_days} days", settle_hours=6),
         spark,
         src_dir,
@@ -401,42 +343,6 @@ def streaming_ride_tracker(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("finalized"),
         F.col("duration_minutes"),
     )
-
-
-def _run_to_parquet(df: DataFrame, spark: SparkSession, src_dir: str) -> DataFrame:
-    """Append-mode runner for HIGH-VOLUME streams: a parquet file sink
-    instead of the memory sink. The memory sink stores every row on the
-    driver — fine for the small aggregate results the other queries
-    emit, a driver-OOM at 10M-row passthrough volume (observed at sf10).
-    Rows land as parquet files, are read back and re-materialized as
-    localCheckpoint blocks (executor memory, spillable), then all three
-    temp dirs are deleted — the same self-contained-result contract as
-    ``_run_complete``."""
-    name = f"q_stream_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    out_dir = tempfile.mkdtemp(prefix=f"out_{name}_")
-    try:
-        with _stream_shuffle_scope(spark, src_dir):
-            q = (
-                df.writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await_or_raise(q)
-        # Read back with the KNOWN schema: a zero-row run writes only
-        # _spark_metadata, and schema inference would throw instead of
-        # returning the correct empty DataFrame (plausible for the
-        # click->purchase join on data with no in-window pairs).
-        out = spark.read.schema(df.schema).parquet(out_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _unload_state_stores(spark)
-    return out
 
 
 @query(
@@ -471,7 +377,7 @@ def streaming_enriched_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_name").alias("customer_name"),
         F.col("c_mktsegment").alias("mktsegment"),
     )
-    return _run_to_parquet(joined, spark, src_dir)
+    return _run_stream(joined, spark, src_dir)
 
 
 @query(
@@ -520,7 +426,7 @@ def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame
         & (F.col("purchase_ts") >= F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
     ).select("click_id", "purchase_id", "user_id", "click_ts", "purchase_ts")
-    return _run_to_parquet(joined, spark, src_dir)
+    return _run_stream(joined, spark, src_dir)
 
 
 @query(
@@ -576,7 +482,7 @@ def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["fingerprint"])
         .select("fingerprint")
     )
-    return _run_to_parquet(deduped, spark, src_dir)
+    return _run_stream(deduped, spark, src_dir)
 
 
 @query(
@@ -612,7 +518,7 @@ def streaming_hourly_distinct_users(spark: SparkSession, sf_dir: str) -> DataFra
             F.count(F.lit(1)).alias("n_events"),
         )
     )
-    out = _run_complete(agg, spark, src_dir)
+    out = _run_stream(agg, spark, src_dir, mode="complete")
     return out.select(
         F.col("w.start").alias("hour_start"), "n_users", "n_events"
     )
@@ -649,8 +555,6 @@ def streaming_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_upsert_sink.py). The snapshot is read back and
     localCheckpoint-ed so the temp dirs can be deleted immediately
     (self-contained-results rule)."""
-    import tempfile as _tf  # noqa: PLC0415
-
     from ..streaming.upsert_sink import parquet_upsert_sink  # noqa: PLC0415
 
     stream, src_dir = _events_stream(spark, sf_dir)
@@ -660,76 +564,15 @@ def streaming_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = stream.where(F.col("ts").isNotNull()).select(
         "user_id", "event_id", "ts", ver.alias("ver")
     )
-    root = _tf.mkdtemp(prefix="upsert_root_")
-    snap = os.path.join(root, "snap")
-    ckpt = os.path.join(root, "ckpt")
-    try:
-        with _stream_shuffle_scope(spark, src_dir):
-            q = (
-                v.writeStream.foreachBatch(
-                    parquet_upsert_sink(snap, ["user_id"], "ver")
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await_or_raise(q)
-        out = (
-            spark.read.parquet(snap)
-            .select(
-                "user_id",
-                F.col("event_id").alias("last_event_id"),
-                F.col("ts").alias("last_ts"),
-                "ver",
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _unload_state_stores(spark)
-    return out
-
-
-def _run_foreach_batch(
-    stream_df: DataFrame,
-    batch_fn,
-    out_schema,
-    spark: SparkSession,
-    src_dir: str,
-) -> DataFrame:
-    """availableNow ``foreachBatch`` runner: ``batch_fn(batch_df)`` maps
-    each micro-batch to a result DataFrame, appended to a parquet out
-    dir; the union of all batches is read back with the KNOWN schema
-    (zero-row safe) and re-materialized as localCheckpoint blocks —
-    the same self-contained-result contract as ``_run_to_parquet``.
-    ``foreachBatch`` is the production sink for per-batch logic the
-    declarative stream operators can't express (joins against persisted
-    index artifacts, multi-step batch plans) without tripping the
-    chained-stateful-operator restrictions."""
-    name = f"q_stream_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    out_dir = tempfile.mkdtemp(prefix=f"out_{name}_")
-
-    def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_fn(batch_df).write.mode("append").parquet(out_dir)
-
-    try:
-        with _stream_shuffle_scope(spark, src_dir):
-            q = (
-                stream_df.writeStream.foreachBatch(_sink)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            _await_or_raise(q)
-        out = spark.read.schema(out_schema).parquet(out_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _unload_state_stores(spark)
-    return out
+    out = _run_stream(
+        v, spark, src_dir, sink=lambda snap: parquet_upsert_sink(snap, ["user_id"], "ver")
+    )
+    return out.select(
+        "user_id",
+        F.col("event_id").alias("last_event_id"),
+        F.col("ts").alias("last_ts"),
+        "ver",
+    )
 
 
 @query(
@@ -798,13 +641,18 @@ def streaming_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         # a respread A/B at sf30 was sign-mixed noise). The r8 rule's real
         # trigger is ROW GROUPS per batch file: a coalesce(1)-staged file
         # has ~128MB groups = 1 working task (llm_tasks._admit's case).
-        def _score(batch: DataFrame) -> DataFrame:
-            buckets = dd.band_buckets(dd.minhash_signatures(batch))
-            return (
-                buckets.join(idx, on="bucket", how="left")
-                .groupBy("doc_id")
-                .agg(F.count("_hit").cast("long").alias("n_bands_hit"))
-            )
+        def _score(out_dir: str) -> BatchFn:
+            def _write(batch: DataFrame, _batch_id: int) -> None:
+                (
+                    dd.band_buckets(dd.minhash_signatures(batch))
+                    .join(idx, on="bucket", how="left")
+                    .groupBy("doc_id")
+                    .agg(F.count("_hit").cast("long").alias("n_bands_hit"))
+                    .write.mode("append")
+                    .parquet(out_dir)
+                )
+
+            return _write
 
         out_schema = T.StructType(
             [
@@ -812,7 +660,7 @@ def streaming_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
                 T.StructField("n_bands_hit", T.LongType()),
             ]
         )
-        return _run_foreach_batch(stream, _score, out_schema, spark, src_dir)
+        return _run_stream(stream, spark, src_dir, sink=_score, schema=out_schema)
     finally:
         shutil.rmtree(idx_dir, ignore_errors=True)
 
@@ -991,7 +839,7 @@ def streaming_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame
                 F.sum("event_id").alias("sum_ids"),
             )
         )
-        out = _run_complete(agg, spark, src, mode="append")
+        out = _run_stream(agg, spark, src)
         return out.select(
             F.col("w.start").alias("window_start"), "n_rows", "sum_ids"
         )

@@ -98,6 +98,15 @@ def exists(path: str, spark: SparkSession | None = None) -> bool:
     return fs.exists(jp)
 
 
+def listdir(path: str, spark: SparkSession | None = None) -> list[str]:
+    """Names of the entries directly under directory ``path``; empty when
+    it does not exist."""
+    if not is_uri(path):
+        return os.listdir(path) if os.path.isdir(path) else []
+    fs, jp = _hadoop(_active_spark(spark), path)
+    return [st.getPath().getName() for st in fs.listStatus(jp)] if fs.exists(jp) else []
+
+
 def mkdirs(path: str, spark: SparkSession | None = None) -> None:
     if not is_uri(path):
         os.makedirs(path, exist_ok=True)

@@ -23,7 +23,6 @@ PRODUCTION = [
 # Kept without a production caller: each carries a SURVEY.md §2 row (or
 # is the reference a test compares the production path against).
 ALLOWED = {
-    "plans/legacy.py:legacy_import": "UD2 legacy row-map UDF",
     "sources/lake.py:load_table_jdbc": "S1 Postgres table scan (JDBC branch)",
     "sources/lake.py:write_partitioned": "J8 partition-overwrite join-update",
     "sources/artifacts.py:latest_artifact": "O4 latest artifact (top-k by recency)",

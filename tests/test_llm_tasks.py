@@ -267,6 +267,38 @@ def test_stream_ingest_dedup_appends_index(spark, tmp_path):
     assert sorted(r["doc_id"] for r in spark.read.parquet(m["out_dir"]).collect()) == [10, 21]
 
 
+def test_stream_ingest_dedup_uri_index(spark, tmp_path, monkeypatch):
+    """A URI ``base_dir``/``index_dir`` (``file:/…`` here, ``s3a://…`` in
+    a deployment) is a real index: the second run's near-dup is
+    suppressed by the buckets the first run appended, and nothing is
+    created under the working directory."""
+    import os
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    src = tmp_path / "base" / "ingest"
+    src.mkdir(parents=True)
+    base = "file:" + str(tmp_path / "base")
+    idx = "file:" + str(tmp_path / "index")
+
+    def stage(i, rows):
+        staged = str(tmp_path / f"s{i}")
+        spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(staged)
+        part = [f for f in os.listdir(staged) if f.startswith("part-")][0]
+        os.rename(os.path.join(staged, part), str(src / f"{i:02d}.parquet"))
+
+    stage(0, [Row(doc_id=10, text=GOOD)])
+    m1 = run_task(spark, "llm-stream-ingest-dedup", base_dir=base, index_dir=idx)
+    assert m1["n_batches"] == 1 and m1["n_novel"] == 1
+
+    stage(1, [Row(doc_id=20, text=GOOD + " one extra tail")])  # near-dup of 10
+    m2 = run_task(spark, "llm-stream-ingest-dedup", base_dir=base, index_dir=idx)
+    assert m2["n_batches"] == 1 and m2["n_suppressed"] == 1
+    assert [r["doc_id"] for r in spark.read.parquet(m2["out_dir"]).collect()] == [10]
+    assert os.listdir(cwd) == []
+
+
 def test_stream_ingest_dedup_replay_excludes_own_partition(spark, tmp_path):
     """Crash-replay: foreachBatch re-delivers batch 0 after its own
     batch=0 index partition was already written by the crashed attempt.

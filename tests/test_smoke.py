@@ -31,7 +31,9 @@ def test_query_and_oracle_column_names_match(spark, sf_dir):
     a Spark result aliased differently from its oracle SQL hash-mismatches
     even with identical values. Guard the contract suite-side: for every
     query, the Spark schema's sorted column names must equal the DuckDB
-    oracle's. Schemas only — nothing executes on the Spark side."""
+    oracle's. Only schemas are compared, but building a query is not
+    free: the streaming and stride-DAG queries run their Spark jobs when
+    they are constructed."""
     import duckdb
 
     con = duckdb.connect()

@@ -5,13 +5,12 @@ finalize rides via event-time timeout (the settle guard)."""
 
 import datetime
 import os
-import shutil
-import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from open_bus_stride_etl_spark.streaming import incremental as si
+from open_bus_stride_etl_spark.streaming.bounded import run_bounded, write_each_batch
 from tests import stride_fixtures
 
 LOC_SCHEMA = (
@@ -33,33 +32,16 @@ def loc_stream_dir(spark, tables, tmp_path_factory):
     return d
 
 
-def _run_to_memory(df, name, mode, spark):
-    ckpt = f"/tmp/ckpt_{name}_{time.time_ns()}"
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        # awaitTermination returns False on timeout (no raise): stop the
-        # query before the finally rmtree's its checkpoint, or a slow
-        # run turns into a confusing mid-stream failure instead of a
-        # clean assertion here.
-        terminated = q.awaitTermination(120)
-        if not terminated:
-            q.stop()
-        assert terminated, f"stream {name} did not finish within 120s"
-        return spark.table(name)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)  # don't leak /tmp dirs per run
+def _run(df, mode, tmp_path):
+    """Bounded run through the library runner; returns the sink's rows."""
+    out = str(tmp_path / "out")
+    run_bounded(df, write_each_batch(out, mode), str(tmp_path / "ckpt"), mode)
+    return df.sparkSession.read.parquet(out)
 
 
-def test_stream_hourly_stats_matches_batch(spark, tables, loc_stream_dir):
+def test_stream_hourly_stats_matches_batch(spark, tables, loc_stream_dir, tmp_path):
     stream = spark.readStream.schema(LOC_SCHEMA).parquet(loc_stream_dir)
-    out = _run_to_memory(si.stream_hourly_stats(stream), "hourly", "complete", spark)
+    out = _run(si.stream_hourly_stats(stream), "complete", tmp_path)
     got = {r["hour_start"]: (r["min_ts"], r["max_ts"], r["n_rows"]) for r in out.collect()}
     batch = (
         tables["siri_vehicle_location"]
@@ -100,9 +82,9 @@ def test_stream_ride_tracker_state_and_finalize(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(d)
     )
-    out = _run_to_memory(
+    out = _run(
         si.stream_ride_tracker(stream, watermark="10 minutes", settle_hours=1),
-        "tracker", "update", spark,
+        "update", tmp_path,
     )
     rows = out.collect()
     snaps = [r for r in rows if r["siri_ride_id"] == 1 and not r["finalized"]]
@@ -135,7 +117,7 @@ def test_run_task_error_capture(spark, capsys):
     assert rec["task"] == "t-fails" and rec["error"] == "ValueError: nope"
 
 
-def test_stream_session_windows_match_batch(spark, tables, loc_stream_dir):
+def test_stream_session_windows_match_batch(spark, tables, loc_stream_dir, tmp_path):
     """Native session windows work identically under readStream: the
     complete-mode streaming result equals the batch sessionization."""
     gap = "30 minutes"
@@ -154,9 +136,8 @@ def test_stream_session_windows_match_batch(spark, tables, loc_stream_dir):
             )
         )
 
-    got = _run_to_memory(
-        sessions(stream.withWatermark("recorded_at_time", "1 hour")),
-        "sess_stream", "complete", spark,
+    got = _run(
+        sessions(stream.withWatermark("recorded_at_time", "1 hour")), "complete", tmp_path
     )
     want = sessions(tables["siri_vehicle_location"])
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
@@ -166,14 +147,8 @@ def test_stream_session_windows_match_batch(spark, tables, loc_stream_dir):
 def test_stream_partitions_sizing(spark, tmp_path):
     """State-shuffle width follows the bounded source's byte volume:
     min-clamped for toy inputs, one partition per ~8 MB in between,
-    ceiling-clamped at defaultParallelism — and the
-    `stride.streaming.widthCeiling` runtime conf (the production knob
-    for sizing state-store count to planned capacity) raises that
-    ceiling without touching the data-sized width below it."""
-    from open_bus_stride_etl_spark.plans.q_streaming import (
-        _STREAM_CEILING_CONF,
-        _stream_partitions,
-    )
+    ceiling-clamped at defaultParallelism."""
+    from open_bus_stride_etl_spark.plans.q_streaming import _stream_partitions
 
     d = tmp_path / "src"
     d.mkdir()
@@ -187,13 +162,45 @@ def test_stream_partitions_sizing(spark, tmp_path):
     (d / "big.parquet").write_bytes(b"x" * (900 << 20))
     assert _stream_partitions(str(d), spark) == par  # ceiling binds (125 > cores)
 
-    spark.conf.set(_STREAM_CEILING_CONF, "120")
-    try:
-        assert _stream_partitions(str(d), spark) == 120  # raised ceiling, width still data-bound
-        spark.conf.set(_STREAM_CEILING_CONF, "4")
-        assert _stream_partitions(str(d), spark) == 8  # override never drops below the min
-    finally:
-        spark.conf.unset(_STREAM_CEILING_CONF)
+
+def test_bounded_run_contract(spark, monkeypatch):
+    """The harness's zero-row and cleanup contract: a run over an empty
+    source returns an empty frame with the declared schema in complete
+    and in append mode, and a run that times out raises. After every
+    run no checkpoint, output or source temp dir is left under the temp
+    root and no streaming query is still active."""
+    import tempfile
+
+    from open_bus_stride_etl_spark.plans.q_streaming import _run_stream
+    from open_bus_stride_etl_spark.streaming import bounded
+
+    def stream_over(rows):
+        src = tempfile.mkdtemp(prefix="contract_src_")
+        if rows:
+            spark.createDataFrame(rows, "k long, v string").write.mode("overwrite").parquet(src)
+        return spark.readStream.schema("k long, v string").parquet(src), src
+
+    before = set(os.listdir(tempfile.gettempdir()))
+    for mode, shape in (
+        ("complete", lambda s: s.groupBy("k").agg(F.count(F.lit(1)).alias("n"))),
+        ("append", lambda s: s.select("k", F.upper("v").alias("v"))),
+    ):
+        stream, src = stream_over([])
+        df = shape(stream)
+        out = _run_stream(df, spark, src, mode=mode)
+        assert out.count() == 0
+        assert [(f.name, f.dataType) for f in out.schema] == [
+            (f.name, f.dataType) for f in df.schema
+        ]
+        assert set(os.listdir(tempfile.gettempdir())) == before, mode
+        assert not spark.streams.active
+
+    monkeypatch.setattr(bounded, "TIMEOUT_S", 0.001)
+    stream, src = stream_over([(1, "a"), (2, "b")])
+    with pytest.raises(TimeoutError):
+        _run_stream(stream, spark, src)
+    assert set(os.listdir(tempfile.gettempdir())) == before
+    assert not spark.streams.active
 
 
 def test_streaming_dedup_lsh_verdicts(spark, tmp_path):

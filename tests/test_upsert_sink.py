@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from open_bus_stride_etl_spark.streaming.bounded import run_bounded
 from open_bus_stride_etl_spark.streaming.upsert_sink import (
     parquet_upsert_sink,
     upsert_merge,
@@ -56,13 +57,7 @@ def test_streaming_upsert_multi_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/all")
     )
-    q = (
-        stream.writeStream.foreachBatch(parquet_upsert_sink(snap, ["k"], "ver"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
+    run_bounded(stream, parquet_upsert_sink(snap, ["k"], "ver"), str(tmp_path / "ckpt"))
     got = {r["k"]: (r["v"], r["ver"]) for r in spark.read.parquet(snap).collect()}
     assert got == {1: ("a2", 2), 2: ("b", 1), 3: ("c", 1)}
 

@@ -35,7 +35,6 @@ def probe(spark, sf_dir: str) -> dict:
     from open_bus_stride_etl_spark.operators.util import release_cached
     from open_bus_stride_etl_spark.plans import llm_tasks  # noqa: F401
     from open_bus_stride_etl_spark.plans.q_llm import _docs
-    from open_bus_stride_etl_spark.plans.q_streaming import _unload_state_stores
     from open_bus_stride_etl_spark.plans.tasks import run_task
 
     base = tempfile.mkdtemp(prefix="ingest_split_")
@@ -85,7 +84,6 @@ def probe(spark, sf_dir: str) -> dict:
         }
     finally:
         shutil.rmtree(base, ignore_errors=True)
-        _unload_state_stores(spark)
         release_cached()
 
 
