@@ -36,7 +36,6 @@ def banded_priority_join(
     left_id: str,
     right_id: str,
     extra_eq_keys: list[str] | None = None,
-    broadcast_right: bool = False,
 ) -> DataFrame:
     """For each left row, the single best right row: smallest tier whose
     band contains it, then smallest |Δt|, then smallest right id.
@@ -67,8 +66,6 @@ def banded_priority_join(
         .withColumn("_bin", F.explode(F.array(F.col("_b0") - 1, F.col("_b0"), F.col("_b0") + 1)))
         .drop("_b0")
     )
-    if broadcast_right:
-        r_binned = F.broadcast(r_binned)
 
     dt = F.abs(F.unix_timestamp(lt) - F.unix_timestamp(rt))
     cond = (F.col("l._bin") == F.col("r._bin")) & (dt <= F.lit(widest_s))

@@ -83,11 +83,7 @@ def _shingled_pos(
 
 
 def shared_span_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    candidates: DataFrame | None = None,
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
 ) -> DataFrame:
     """Exact shared-span detection between candidate document pairs —
     the substring-level dedup signal (public result: verbatim repeated
@@ -100,8 +96,9 @@ def shared_span_pairs(
     ``(doc_a, doc_b, max_run_shingles, max_run_words, n_matches)``
     where ``max_run_words = max_run_shingles + k - 1``.
 
-    Without ``candidates`` the MinHash-LSH banding generates them (same
-    contract as ``minhash_lsh_pairs``). Matching is defined over the
+    The MinHash-LSH banding generates the candidates (same contract as
+    ``minhash_lsh_pairs``); ``_span_runs`` is the span core over any
+    candidate pair table. Matching is defined over the
     40-bit shingle hash (collisions conflate spans; the oracle hashes
     identically so both engines agree by construction).
 
@@ -125,10 +122,19 @@ def shared_span_pairs(
     when it measures small, shuffled on (doc_b, h) otherwise (measured
     identical at bench scale; a hint there would force a driver collect
     that can exceed the broadcast limit on a large candidate set)."""
-    if candidates is None:
-        candidates = lsh_candidate_pairs(
-            minhash_signatures(docs, id_col, text_col, k), id_col=id_col
-        )
+    candidates = lsh_candidate_pairs(minhash_signatures(docs, id_col, text_col, k), id_col=id_col)
+    return _span_runs(docs, candidates, id_col, text_col, k)
+
+
+def _span_runs(
+    docs: DataFrame,
+    candidates: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k: int = 3,
+) -> DataFrame:
+    """``shared_span_pairs`` over the given ``(doc_a, doc_b)`` candidate
+    pairs."""
     cands = track_persist(candidates)
     members = (
         cands.select(F.col("doc_a").alias(id_col))

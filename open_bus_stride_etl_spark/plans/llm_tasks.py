@@ -222,9 +222,8 @@ def llm_curate_corpus(
         )
     else:
         # Non-incremental mode never branches on the counts, so they
-        # ride the artifact write as observed metrics (guide §1.4 /
-        # stride_lake.overwrite_table_observed's pattern) — ONE scoring
-        # pass instead of two.
+        # ride the artifact write as observed metrics (guide §1.4, the
+        # fs.publish_parquet pattern) — ONE scoring pass instead of two.
         obs_flags = Observation()
         scored = scored.observe(obs_flags, *flag_aggs)
         n_remaining = None
@@ -292,14 +291,8 @@ def llm_curate_corpus(
             "_quality_bp", "_lang", "_fp", "_min_id"
         )
     out = out_dir or f"{base_dir}/curated_documents"
-    # n_final rides the write job via the Observation API (the
-    # stride_lake.overwrite_table_observed pattern) instead of a
-    # read-back count.
-    obs = Observation()
-    survivors.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-        "overwrite"
-    ).parquet(out)
-    n_final = obs.get["n"]
+    # n_final is counted in the write job itself (no read-back count)
+    n_final = fs.publish_parquet(survivors, out)["rows"]
     if history_dir is not None and n_final > 0:
         # (an empty run appends nothing — skip the no-op job; the index
         # CONTENT is identical either way)
@@ -349,8 +342,8 @@ def llm_build_ann_index(
     emb = spark.read.parquet(f"{base_dir}/embeddings.parquet")
     assign, cents = kmeans_fit(emb, k=k, iters=iters)
     out = out_dir or f"{base_dir}/ann_index"
-    cents.write.mode("overwrite").parquet(f"{out}/centroids.parquet")
-    assign.write.mode("overwrite").parquet(f"{out}/assignments.parquet")
+    fs.publish_parquet(cents, f"{out}/centroids.parquet")
+    fs.publish_parquet(assign, f"{out}/assignments.parquet")
     occ = (
         spark.read.parquet(f"{out}/assignments.parquet")
         .groupBy("cluster")
@@ -476,15 +469,7 @@ def llm_ann_query(
         spark, emb, idx, n_queries=n_queries, k_top=k_top, n_probe=n_probe
     )
     out = out_dir or f"{base_dir}/ann_results"
-    # n_result_rows rides the write job (Observation API — the
-    # overwrite_table_observed pattern; was a read-back count job, r9)
-    from pyspark.sql import Observation  # noqa: PLC0415
-
-    obs = Observation()
-    result.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-        "overwrite"
-    ).parquet(out)
-    n_rows = obs.get["n"]
+    n_rows = fs.publish_parquet(result, out)["rows"]
     metrics = {
         "n_queries": probe_meta["n_queries"],
         "k_top": k_top,
@@ -583,14 +568,12 @@ def llm_export_training_shards(
     (one output file per shard partition at real scale). Reads
     ``in_dir`` (default: the llm-curate-corpus output if present, else
     the raw documents table)."""
-    import os  # noqa: PLC0415
-
     configure(spark)
 
     src = in_dir
     if src is None:
         cur = f"{base_dir}/curated_documents"
-        src = cur if os.path.isdir(cur) else f"{base_dir}/documents.parquet"
+        src = cur if fs.exists(cur, spark) else f"{base_dir}/documents.parquet"
     docs = spark.read.parquet(src)
     sharded = build_training_shards(docs, vocab_size=vocab_size, n_shards=n_shards, seed=seed)
     out = out_dir or f"{base_dir}/training_shards/{seed}"

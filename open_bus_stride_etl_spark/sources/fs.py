@@ -16,6 +16,9 @@ surfaces). This module re-expresses that storage edge Spark-first:
   conf exactly as they do for the data plane).
 - ``with_retries`` wraps any flaky storage call with the reference's
   bounded policy.
+- ``publish_parquet`` is the one way a parquet directory (table
+  snapshot or task artifact) is replaced: staged write, then
+  ``swap_dir``.
 """
 
 from __future__ import annotations
@@ -27,7 +30,8 @@ import time
 from collections.abc import Callable
 from typing import TypeVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 T = TypeVar("T")
 
@@ -196,6 +200,31 @@ def swap_dir(staged: str, final: str, spark: SparkSession | None = None) -> None
     delete(old, spark)
 
 
+def publish_parquet(
+    df: DataFrame, final: str, metrics: dict[str, Column] | None = None
+) -> dict:
+    """Replace the parquet directory ``final`` with ``df`` — the one way
+    the engine publishes a snapshot or artifact. ``df`` is written to the
+    sibling ``<final>.staging`` in overwrite mode (a retry after a crash
+    overwrites the leftover), then published with ``swap_dir``. Staging
+    also lets ``df`` read ``final`` itself: Spark cannot overwrite a path
+    its plan is reading.
+
+    The row count, and any extra aggregate ``metrics``, are computed via
+    the Observation API IN the write job — one plan execution, no
+    read-back count. Returns ``{"rows": n, **metrics}``."""
+    staging = f"{final.rstrip('/')}.staging"
+    obs = Observation()
+    aggs = [F.count(F.lit(1)).alias("_rows")] + [
+        c.alias(k) for k, c in (metrics or {}).items()
+    ]
+    df.observe(obs, *aggs).write.mode("overwrite").parquet(staging)
+    vals = dict(obs.get)
+    n = vals.pop("_rows")
+    swap_dir(staging, final, df.sparkSession)
+    return {"rows": n, **vals}
+
+
 def exists_restoring(final: str, spark: SparkSession | None = None) -> bool:
     """``exists(final)``, after first moving back the ``<final>.old`` a
     ``swap_dir`` crashed between its renames left behind."""
@@ -227,13 +256,11 @@ def compact_parquet(
     dataset is somehow under-split), optionally sorting rows into the
     new files by ``sort_cols`` so parquet row-group min/max stats stay
     tight for range pruning (a shuffle-range-sort; skip it for pure
-    bin-packing). The rewrite goes through a staging dir and
-    ``swap_dir``.
+    bin-packing). The rewrite is published with ``publish_parquet``.
 
     Returns {files_before, files_after, bytes_total}. Local-FS and
     Hadoop-FS paths both work."""
     import math  # noqa: PLC0415
-    import uuid as _uuid  # noqa: PLC0415
 
     def _data_files(fs, p):
         out = []
@@ -257,8 +284,6 @@ def compact_parquet(
         out = df.coalesce(n_target)
     else:
         out = df.repartition(n_target)
-    staging = f"{path.rstrip('/')}__compact_{_uuid.uuid4().hex[:8]}"
-    out.write.mode("overwrite").parquet(staging)
-    swap_dir(staging, path, spark)
+    publish_parquet(out, path)
     n_after = len(_data_files(jfs, _hadoop(spark, path)[1]))
     return {"files_before": n_before, "files_after": n_after, "bytes_total": total}

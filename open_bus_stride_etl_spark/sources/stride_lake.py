@@ -3,9 +3,11 @@
 The reference keeps these tables in PostgreSQL and mutates them with
 UPDATEs (SURVEY.md §1.1). Here each table is a parquet directory under a
 base dir; enrichment tasks read a table, recompute the enrichment
-columns, and atomically replace the table snapshot (write-new + swap).
-Re-running a window converges to the same state — the reference's
-``IS NULL`` todo-marker contract — so the swap is safe to repeat.
+columns, and replace the table snapshot through the engine's one
+directory publisher, ``fs.publish_parquet`` (write ``<table>.staging``,
+then swap it in). Re-running a window converges to the same state — the
+reference's ``IS NULL`` todo-marker contract — so the publish is safe to
+repeat, and a rerun after a crash overwrites the leftover staging dir.
 
 On a real cluster with date-partitioned facts the swap narrows to
 ``INSERT OVERWRITE`` of the affected date partitions
@@ -15,10 +17,7 @@ local-mode equivalent that keeps tests hermetic.
 
 from __future__ import annotations
 
-import time
-
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from . import fs
 
@@ -43,9 +42,9 @@ def read_table(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
 
 
 def overwrite_table(df: DataFrame, base_dir: str, name: str) -> int:
-    """Replace the table snapshot. Spark cannot overwrite a path it is
-    concurrently reading (self-join of source and sink), so: write to a
-    temp sibling, then swap directories driver-side. Returns row count.
+    """Replace the table snapshot (``fs.publish_parquet``: staged write,
+    then a driver-side directory swap, so ``df`` may read the table it
+    replaces). Returns the row count.
 
     Single-writer semantics (one scheduler per task), like the reference's
     per-task Airflow DAGs.
@@ -57,21 +56,7 @@ def overwrite_table_observed(
     df: DataFrame, base_dir: str, name: str, metrics: dict[str, Column] | None = None
 ) -> dict:
     """``overwrite_table`` with the row count — and any extra aggregate
-    ``metrics`` — computed via the Observation API IN the write job
-    itself, instead of re-reading the written files. One plan execution
-    per snapshot swap; the pre-r9 read-back count was a whole extra scan per task write,
-    and task metrics like "rows newly set" paid yet another
-    (`stride_tasks._write_and_count`). Returns ``{"rows": n, **metrics}``.
-    """
-    spark = df.sparkSession
-    final = table_path(base_dir, name)
-    tmp = f"{final}.tmp-{int(time.time() * 1000)}"
-    obs = Observation()
-    aggs = [F.count(F.lit(1)).alias("_rows")] + [
-        c.alias(k) for k, c in (metrics or {}).items()
-    ]
-    df.observe(obs, *aggs).write.mode("overwrite").parquet(tmp)
-    vals = dict(obs.get)
-    n = vals.pop("_rows")
-    fs.swap_dir(tmp, final, spark)
-    return {"rows": n, **vals}
+    ``metrics`` — computed IN the write job (``fs.publish_parquet``):
+    one plan execution per snapshot swap, no read-back count. Returns
+    ``{"rows": n, **metrics}``."""
+    return fs.publish_parquet(df, table_path(base_dir, name), metrics)

@@ -15,23 +15,17 @@ swap.
 
 Scale + correctness notes:
 - The merge is one window over snapshot ∪ batch, shuffled by key — the
-  snapshot is re-shuffled each batch, which is the known cost of
-  plain-parquet upserts; production bounds it by PARTITIONING the
-  snapshot (``partition_cols``, e.g. by date): only partitions the
-  batch touches are read-merged and rewritten, via dynamic partition
-  overwrite — untouched partitions are never read, shuffled, or
-  rewritten, so per-batch cost follows the batch's partition spread,
-  not snapshot size.
-- Atomicity: the unpartitioned form writes to ``<dir>.staging-<epoch>``
-  and publishes it with ``fs.swap_dir`` (two checked renames; readers
-  never see a torn mix). A crash between the renames leaves no
-  snapshot, only ``<dir>.old``: the replayed epoch moves it back
+  snapshot is re-read and re-shuffled each batch, the known cost of
+  plain-parquet upserts. Production bounds it by partitioning the
+  snapshot and rewriting only the partitions a batch touches; that
+  partition-set publish is not built yet.
+- Atomicity: each merge is published with ``fs.publish_parquet`` (write
+  ``<dir>.staging``, then two checked renames; readers never see a torn
+  mix). A crash between the renames leaves no snapshot, only
+  ``<dir>.old``: the replayed epoch moves it back
   (``fs.exists_restoring``) before merging, so the replay sees the
-  previous snapshot. The partitioned form relies on Spark's per-
-  partition commit protocol (the standard plain-parquet trade — a
-  transactional table format upgrades this without changing the merge).
-  foreachBatch re-runs an epoch on restart and the merge is idempotent
-  (replaying a batch rewrites identical rows).
+  previous snapshot. foreachBatch re-runs an epoch on restart and the
+  merge is idempotent (replaying a batch rewrites identical rows).
 - The foreachBatch body runs on the driver but all data movement is
   executor-side DataFrame work; nothing collects.
 """
@@ -69,48 +63,15 @@ def upsert_merge(
     )
 
 
-def parquet_upsert_sink(
-    snapshot_dir: str,
-    key_cols: list[str],
-    version_col: str,
-    partition_cols: list[str] | None = None,
-):
+def parquet_upsert_sink(snapshot_dir: str, key_cols: list[str], version_col: str):
     """Return a ``foreachBatch`` function merging each micro-batch into
-    the parquet snapshot at ``snapshot_dir`` with an atomic swap."""
+    the parquet snapshot at ``snapshot_dir`` and publishing the result."""
 
-    def sink(batch: DataFrame, epoch_id: int) -> None:
+    def sink(batch: DataFrame, _epoch_id: int) -> None:
         spark = batch.sparkSession
-        exists = fs.exists_restoring(snapshot_dir, spark)
-        if partition_cols and exists:
-            # read-merge-rewrite ONLY the partitions this batch touches:
-            # dynamic partition overwrite replaces exactly those
-            # directories; everything else is never read or written.
-            # The touched-partition filter is an IN over the batch's
-            # distinct partition values -> partition pruning on the
-            # snapshot scan (small by construction: a micro-batch spans
-            # few partitions).
+        prev = None
+        if fs.exists_restoring(snapshot_dir, spark):
             prev = spark.read.parquet(snapshot_dir)
-            touched = batch.select(*partition_cols).distinct()
-            prev_touched = prev.join(
-                F.broadcast(touched), on=partition_cols, how="left_semi"
-            )
-            merged = upsert_merge(prev_touched, batch, key_cols, version_col)
-            saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(
-                    snapshot_dir
-                )
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
-            return
-        prev = spark.read.parquet(snapshot_dir) if exists else None
-        merged = upsert_merge(prev, batch, key_cols, version_col)
-        staging = f"{snapshot_dir}.staging-{epoch_id}"
-        writer = merged.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(staging)
-        fs.swap_dir(staging, snapshot_dir, spark)
+        fs.publish_parquet(upsert_merge(prev, batch, key_cols, version_col), snapshot_dir)
 
     return sink

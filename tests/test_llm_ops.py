@@ -639,7 +639,7 @@ def test_shared_span_pairs_planted_run(spark):
     cands = spark.createDataFrame([Row(doc_a=1, doc_b=2), Row(doc_a=1, doc_b=3)])
     out = {
         (r["doc_a"], r["doc_b"]): r
-        for r in dd.shared_span_pairs(docs, candidates=cands).collect()
+        for r in dd._span_runs(docs, cands).collect()
     }
     # pair (1,3): no shared shingle -> absent
     assert set(out) == {(1, 2)}
@@ -660,7 +660,7 @@ def test_shared_span_two_disjoint_runs_and_repeats(spark):
         ]
     )
     cands = spark.createDataFrame([Row(doc_a=1, doc_b=2)])
-    r = dd.shared_span_pairs(docs, candidates=cands).collect()[0]
+    r = dd._span_runs(docs, cands).collect()[0]
     assert r["max_run_shingles"] == 2
     assert r["max_run_words"] == 4
     # alignments: run1 at two diagonals (2 cells each) + "x y z" (1 cell)

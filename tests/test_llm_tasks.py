@@ -226,6 +226,53 @@ def test_export_training_shards(spark, lake, tmp_path):
     assert c != a  # different epoch seed permutes shard/pos assignment
 
 
+def test_export_training_shards_reads_curated_output_at_uri_base(
+    spark, lake, tmp_path, monkeypatch
+):
+    """With a URI ``base_dir`` (``file:/…`` here, ``s3a://…`` in a
+    deployment) the export reads the curated output when it exists, not
+    the raw documents table, and creates nothing under the working
+    directory."""
+    import os
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    base = "file:" + lake
+    curated = run_task(spark, "llm-curate-corpus", base_dir=base)
+    assert curated["n_final"] == 1
+    m = run_task(
+        spark, "llm-export-training-shards", base_dir=base,
+        vocab_size=10, n_shards=2, out_dir=str(tmp_path / "shards"),
+    )
+    assert m["n_docs"] == curated["n_final"]
+    got = {r["doc_id"] for r in spark.read.parquet(m["out_dir"]).collect()}
+    assert got == {r["doc_id"] for r in spark.read.parquet(curated["out_dir"]).collect()}
+    assert os.listdir(cwd) == []
+
+
+def test_curate_artifact_survives_a_failed_rewrite(spark, lake, monkeypatch):
+    """A curate run whose artifact write fails after Spark has started it
+    (an overwrite deletes its target first) leaves the previous run's
+    artifact in place, with the same rows."""
+    from pyspark.sql import DataFrameWriter
+
+    from open_bus_stride_etl_spark.sources import fs
+
+    first = run_task(spark, "llm-curate-corpus", base_dir=lake)
+    before = sorted(map(tuple, spark.read.parquet(first["out_dir"]).collect()))
+
+    def fail_mid_write(self, path, *a, **kw):
+        fs.delete(path)
+        raise OSError("executor lost mid-write")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", fail_mid_write)
+    with pytest.raises(OSError, match="executor lost mid-write"):
+        run_task(spark, "llm-curate-corpus", base_dir=lake)
+    monkeypatch.undo()
+    assert sorted(map(tuple, spark.read.parquet(first["out_dir"]).collect())) == before
+
+
 def test_stream_ingest_dedup_appends_index(spark, tmp_path):
     """The production ingest loop: batch 2's near-dup of a doc admitted
     in batch 1 is suppressed BECAUSE the index grew (the static-index

@@ -208,12 +208,12 @@ def _ref_shared_spans(ta, tb, k=3):
 @given(doc_pairs())
 @settings(**SETTINGS)
 def test_shared_span_pairs_matches_bruteforce(spark, pair):
-    from open_bus_stride_etl_spark.operators.dedup import shared_span_pairs
+    from open_bus_stride_etl_spark.operators.dedup import _span_runs
 
     ta, tb = pair
     docs = spark.createDataFrame([Row(doc_id=1, text=ta), Row(doc_id=2, text=tb)])
     cands = spark.createDataFrame([Row(doc_a=1, doc_b=2)])
-    got = shared_span_pairs(docs, candidates=cands).collect()
+    got = _span_runs(docs, cands).collect()
     want = _ref_shared_spans(ta, tb)
     if want is None:
         assert got == []

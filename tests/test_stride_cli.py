@@ -349,3 +349,27 @@ def test_enrichment_rerun_heals_crash_mid_swap(spark, tmp_path, monkeypatch):
 
     run_task(spark, "siri-update-rides-gtfs", base_dir=crashed, **WINDOW)
     assert row_set(crashed) == row_set(clean)
+
+
+def test_enrichment_rerun_after_crash_before_swap_leaks_no_staging(spark, tmp_path, monkeypatch):
+    """A crash after the staging write but before the swap, then a
+    rerun: the rerun overwrites the leftover staging dir and publishes
+    it, so ``siri_ride.parquet`` is the table's only directory."""
+    import os
+
+    from open_bus_stride_etl_spark.sources import fs
+
+    base = str(tmp_path / "lake")
+    for t, df in stride_fixtures.build(spark).items():
+        lake.overwrite_table(df, base, t)
+
+    def crash(*a, **kw):
+        raise OSError("crash before swap")
+
+    monkeypatch.setattr(fs, "swap_dir", crash)
+    with pytest.raises(OSError, match="crash before swap"):
+        run_task(spark, "siri-update-rides-gtfs", base_dir=base, **WINDOW)
+    monkeypatch.undo()
+
+    run_task(spark, "siri-update-rides-gtfs", base_dir=base, **WINDOW)
+    assert [n for n in os.listdir(base) if n.startswith("siri_ride.")] == ["siri_ride.parquet"]

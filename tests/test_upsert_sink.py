@@ -1,7 +1,7 @@
 """Keyed-upsert parquet sink (streaming/upsert_sink.py): latest-wins
 merge semantics, idempotent replay, a real multi-micro-batch streaming
-run, the partitioned form's untouched-partition guarantee, and the
-replay of an epoch that crashed between the two snapshot-swap renames."""
+run, and the replay of an epoch that crashed between the two
+snapshot-swap renames."""
 
 import os
 
@@ -60,35 +60,6 @@ def test_streaming_upsert_multi_batch(spark, tmp_path):
     run_bounded(stream, parquet_upsert_sink(snap, ["k"], "ver"), str(tmp_path / "ckpt"))
     got = {r["k"]: (r["v"], r["ver"]) for r in spark.read.parquet(snap).collect()}
     assert got == {1: ("a2", 2), 2: ("b", 1), 3: ("c", 1)}
-
-
-def test_partitioned_upsert_leaves_untouched_partitions_alone(spark, tmp_path):
-    snap = str(tmp_path / "snap")
-    sink = parquet_upsert_sink(snap, ["k"], "ver", partition_cols=["day"])
-    b1 = spark.createDataFrame(
-        [Row(day=1, k=1, v="d1", ver=1), Row(day=2, k=2, v="d2", ver=1)],
-        "day int, k long, v string, ver long",
-    )
-    sink(b1, 0)
-    day1_files = {
-        (f, os.path.getmtime(os.path.join(snap, "day=1", f)))
-        for f in os.listdir(os.path.join(snap, "day=1"))
-        if f.endswith(".parquet")
-    }
-    # batch 2 touches ONLY day=2
-    b2 = spark.createDataFrame(
-        [Row(day=2, k=2, v="d2-new", ver=5), Row(day=2, k=9, v="ins", ver=1)],
-        "day int, k long, v string, ver long",
-    )
-    sink(b2, 1)
-    day1_after = {
-        (f, os.path.getmtime(os.path.join(snap, "day=1", f)))
-        for f in os.listdir(os.path.join(snap, "day=1"))
-        if f.endswith(".parquet")
-    }
-    assert day1_after == day1_files, "untouched partition was rewritten"
-    got = {r["k"]: (r["day"], r["v"], r["ver"]) for r in spark.read.parquet(snap).collect()}
-    assert got == {1: (1, "d1", 1), 2: (2, "d2-new", 5), 9: (2, "ins", 1)}
 
 
 def test_sink_idempotent_replay(spark, tmp_path):
