@@ -395,12 +395,13 @@ def minhash_lsh_pairs_from_buckets(
 
     Probe shape: the b-side is the bucket rows of ``b_ids`` docs
     (fetched FROM the index via a semi-join — never recomputed from
-    text: ``b_ids`` carries every never-seen doc, incl. all prior LSH
-    losers, so re-shingling it would be O(non-survivors), not
-    O(batch)). ``probe_rows`` is the caller's exact (or upper-bound)
-    b-side row count — the curate task reads the unseen doc count off
-    the flags aggregation it runs anyway, and the b-side is 4 band rows
-    per unseen doc — so no sizing job runs here. When it is within
+    text). The curate task passes its admissible remainder: the unseen
+    docs that pass quality and language and keep their exact-dup group,
+    i.e. this run's would-be survivors plus every prior near-dup loser
+    still in the corpus. ``probe_rows`` is the caller's exact (or
+    upper-bound) b-side row count — the curate task observes the
+    remainder's size in the scoring pass it runs anyway, and the b-side
+    is 4 band rows per doc — so no sizing job runs here. When it is within
     ``MAX_BROADCAST_ROWS`` the b-side broadcasts into the probe join, so
     the corpus-sized index is SCANNED but never SHUFFLED — the
     steady-state incremental run's only full-corpus touch is one slim

@@ -16,10 +16,12 @@ from pyspark.sql import DataFrame
 # release_cached() at stage boundaries (bench does per measured run,
 # run_task per task). GC-tied cleanup was rejected: the caller composes
 # the returned frame into larger plans, and the intermediate's Python
-# ref dies long before the final action runs.
+# ref dies long before the final action runs. Task-local checkpoints
+# (track_checkpoint) ride the same list: a localCheckpoint's blocks are
+# likewise kept until a driver GC happens to collect its RDD.
 # ---------------------------------------------------------------------------
 
-_TRACKED: list[DataFrame] = []
+_TRACKED: list = []  # persisted DataFrames and checkpointed JVM RDDs
 
 
 def track_persist(df: DataFrame) -> DataFrame:
@@ -29,16 +31,27 @@ def track_persist(df: DataFrame) -> DataFrame:
     return df
 
 
+def track_checkpoint(df: DataFrame) -> DataFrame:
+    """Eagerly ``localCheckpoint`` ``df`` and register its blocks for
+    release_cached(). Unlike a persist, a released checkpoint cannot
+    recompute from lineage: use it only for frames a task body consumes
+    before it returns (run_task releases at the task boundary)."""
+    df = df.localCheckpoint(eager=True)
+    _TRACKED.append(df._jdf.queryExecution().analyzed().rdd())
+    return df
+
+
 def release_cached() -> int:
-    """Unpersist every operator-internal cache registered since the last
-    call; returns how many were released. Safe to call with a stopped
-    session (errors are swallowed — the JVM cache died with the session).
+    """Unpersist every operator-internal cache and task checkpoint
+    registered since the last call; returns how many were released. Safe
+    to call with a stopped session (errors are swallowed — the JVM cache
+    died with the session).
     """
     n = 0
     while _TRACKED:
         df = _TRACKED.pop()
         try:
-            df.unpersist()
+            df.unpersist(False)  # DataFrame or JVM RDD: both take blocking
             n += 1
         except Exception:  # noqa: BLE001 — session already stopped
             pass

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup as dd
 from ..operators import text as tx
+from ..operators.util import track_checkpoint, track_persist
 from ..session import configure
 from ..sources import fs
 from ..streaming.bounded import run_bounded
@@ -61,8 +62,6 @@ def _indexed_lsh_pairs(
     rows, which the candidate ``distinct()`` absorbs); compaction of
     stale rows is the deployment's lake-compaction concern, like every
     other append artifact here."""
-    from ..operators.util import track_persist  # noqa: PLC0415
-
     idx_path = f"{history_dir}/lsh_band_index.parquet"
     if fs.exists(idx_path, spark):
         existing = spark.read.parquet(idx_path)
@@ -86,11 +85,10 @@ def _indexed_lsh_pairs(
     # the index append writes from the checkpoint and the probe union
     # reads it — no re-read of the just-written files, no second
     # signature pass over the batch.
-    new_buckets = (
+    new_buckets = track_checkpoint(
         dd.band_buckets(dd.minhash_signatures(new_docs))
         .join(cur, on="doc_id")
         .select("doc_id", F.col("_fp").alias("fp"), "bucket")
-        .localCheckpoint(eager=True)
     )
     new_buckets.write.mode("append").parquet(idx_path)
     nb = new_buckets.select("doc_id", "bucket")
@@ -135,15 +133,17 @@ def llm_curate_corpus(
     holds the seen-fingerprint index and the LSH band index; with it,
     each run admits only documents whose fingerprint it has not seen.
 
-    Scale notes: the flag aggregation is one map-combined pass over the
-    scored scan; the only full-corpus shuffles are the exact-dup
-    fingerprint window and the LSH pipeline's signature aggregate (the
-    flattened `minhash_lsh_pairs` plan) — and on INCREMENTAL runs even
-    that disappears: signatures are read from the amortized persisted
-    band-bucket index in ``history_dir`` (see ``_indexed_lsh_pairs``;
-    each doc is signed exactly once across the task's lifetime). The
-    final write streams the survivor rows — nothing collects to the
-    driver but the metric scalars."""
+    Scale notes: the counters ride the one scoring pass as observed
+    metrics (an incremental run's pass also materializes the admissible
+    remainder, which everything after it reads); the only full-corpus
+    shuffles are the exact-dup fingerprint window and the LSH
+    pipeline's signature aggregate (the flattened `minhash_lsh_pairs`
+    plan) — and on INCREMENTAL runs even that disappears: signatures
+    are read from the amortized persisted band-bucket index in
+    ``history_dir`` (see ``_indexed_lsh_pairs``; each doc is signed
+    exactly once across the task's lifetime). The final write streams
+    the survivor rows — nothing collects to the driver but the metric
+    scalars."""
     allow = [s.strip() for s in langs.split(",") if s.strip()]
     docs = _load_docs(spark, base_dir, input_format)
     t = F.col("text")
@@ -160,7 +160,7 @@ def llm_curate_corpus(
 
     # Incremental mode (the daily-crawl shape, same contract as the
     # dedup_incremental query): drop any document whose fingerprint is
-    # already in the history index — an anti-join against an 8-byte-key
+    # already in the history index — a join against an 8-byte-key
     # table — and, after the write, append the NEW survivors'
     # fingerprints so the next run sees them. The index append is
     # distinct fingerprints only: it grows with unique content, not
@@ -174,90 +174,66 @@ def llm_curate_corpus(
         if fs.exists(seen_path, spark):
             seen = spark.read.parquet(seen_path)
 
-    # ONE aggregation pass computes every pre-LSH metric (r9; the
-    # pre-change shape ran the scoring scan + fingerprint window once
-    # for the counters and AGAIN for the seen-survivor count). The seen
-    # verdict joins as a nullable flag (left join on DISTINCT index
-    # fingerprints — distinct because appends may repeat a fingerprint
-    # across runs, and a duplicate-key left join would duplicate rows;
-    # a whole fp-group drops together, so keeper semantics stay
-    # consistent either way).
     from pyspark.sql import Observation  # noqa: PLC0415
 
+    admissible = ok_quality & ok_lang & keeper
+    obs = Observation()
     flag_aggs = [
         F.count(F.lit(1)).alias("n_total"),
         F.count(F.when(ok_quality & ok_lang, 1)).alias("n_quality_lang"),
-        F.count(F.when(ok_quality & ok_lang & keeper, 1)).alias("n_after_exact"),
+        F.count(F.when(admissible, 1)).alias("n_after_exact"),
     ]
-    obs_flags = None
-    if seen is not None:
-        # Persisting ``scored`` so this pass and the write share one
-        # scoring scan was measured in r10 (+1.38 s sf10) and left off: a
-        # corpus-sized cache.
-        fl = scored.join(
-            seen.select(F.col("fingerprint").alias("_fp")).distinct().withColumn(
-                "_seen", F.lit(1)
-            ),
-            on="_fp",
-            how="left",
-        )
-        seen_flag = F.col("_seen").isNotNull()
-        # The counts must be known BEFORE the no-op branch decision, so
-        # incremental mode keeps the standalone aggregation pass.
-        flags = fl.agg(
-            *flag_aggs,
-            F.count(F.when(ok_quality & ok_lang & keeper & ~seen_flag, 1)).alias(
-                "n_remaining"
-            ),
-            # unseen-doc count rides the same pass: it sizes the band
-            # index probe's broadcast decision (4 band rows per unseen
-            # doc), sparing _indexed_lsh_pairs its own count job (r10)
-            F.count(F.when(~seen_flag, 1)).alias("n_unseen"),
-        ).collect()[0]
-        n_remaining = flags["n_remaining"]
-        n_unseen = flags["n_unseen"]
-        n_seen_dropped = flags["n_after_exact"] - n_remaining
-        scored = scored.join(
-            seen.select(F.col("fingerprint").alias("_fp")), on="_fp", how="left_anti"
-        )
-    else:
+    if seen is None:
         # Non-incremental mode never branches on the counts, so they
         # ride the artifact write as observed metrics (guide §1.4, the
         # fs.publish_parquet pattern) — ONE scoring pass instead of two.
-        obs_flags = Observation()
-        scored = scored.observe(obs_flags, *flag_aggs)
-        n_remaining = None
-        n_seen_dropped = 0
-
-    kept = scored.where(ok_quality & ok_lang & keeper)
-    if n_remaining == 0:
-        # Incremental no-op fast path (r9): the seen-index anti-join left
-        # ZERO would-be survivors, so near-dup loser pruning — the whole
-        # MinHash-LSH pipeline, the task's most expensive stage — cannot
-        # change the (empty) result: an anti-join FROM an empty left side
-        # is empty by definition. Skip building it — and write the empty
-        # artifact as a LITERAL empty frame (the emptiness is already
-        # proven by the aggregation above; re-executing the scoring scan
-        # + window + anti-join just to produce 0 rows was the pre-change
-        # cost). The steady-state daily re-crawl run costs ONE scoring
-        # pass instead of three-plus-LSH.
-        survivors = spark.createDataFrame(
-            [], kept.drop("_quality_bp", "_lang", "_fp", "_min_id").schema
+        # Checkpointing here would be a corpus-sized cache (r10).
+        kept = (
+            scored.observe(obs, *flag_aggs)
+            .where(admissible)
+            .drop("_quality_bp", "_lang", "_fp", "_min_id")
         )
+        n_remaining = None
     else:
-        # Incremental runs only need to know whether a REMAINING doc
-        # loses an LSH pair — restrict the pair b-side to the
-        # new-content docs (guide §3.2 selective semi-join; the a-side
-        # stays the full corpus): candidates, the member re-shingle and
-        # the Jaccard verify shrink to the batch's bucket-mates instead
-        # of re-pairing the whole corpus to re-drop the same losers
-        # every run. The set is the fingerprint-only anti-join (NOT the
-        # scored `kept` frame): a strict superset of every possible
-        # survivor — kept ⊆ {fp ∉ seen} by construction — whose build
-        # costs one md5 pass, not the quality/lang regex kernels plus
-        # the fingerprint window. Losers outside the kept set never
-        # survive the anti-join below anyway, so survivors are
-        # identical either way.
+        # ONE scoring pass, materialized as an eager local checkpoint:
+        # every doc's (doc_id, fingerprint) — the band index's view of
+        # the current corpus — plus, for the ADMISSIBLE REMAINDER only
+        # (docs that pass quality and language, are their exact-dup
+        # group's keeper and carry a fingerprint the history has not
+        # seen), the document itself. Every counter rides that job as
+        # observed metrics (the no-op branch needs them before it
+        # decides). The seen verdict joins as a nullable flag on
+        # DISTINCT index fingerprints (appends may repeat one across
+        # runs; a duplicate-key left join would duplicate rows); the
+        # keeper window runs before it, so a whole fp-group drops
+        # together. The index validity filter, the LSH probe's b-side,
+        # its size and the artifact write all read the checkpoint,
+        # never the corpus text again.
+        remainder = admissible & F.col("_seen").isNull()
+        ck = track_checkpoint(
+            scored.join(
+                seen.select(F.col("fingerprint").alias("_fp"))
+                .distinct()
+                .withColumn("_seen", F.lit(1)),
+                on="_fp",
+                how="left",
+            )
+            .observe(obs, *flag_aggs, F.count(F.when(remainder, 1)).alias("n_remaining"))
+            .select("doc_id", "_fp", F.when(remainder, F.struct(*docs.columns)).alias("_doc"))
+        )
+        kept = ck.where(F.col("_doc").isNotNull()).select("_doc.*")
+        n_remaining = obs.get["n_remaining"]
+
+    if n_remaining != 0:
+        # An empty remainder (the steady-state daily re-crawl) skips the
+        # whole MinHash-LSH pipeline: pruning losers from nothing leaves
+        # nothing. Otherwise the pair b-side is the remainder itself
+        # (guide §3.2 selective semi-join): a near-dup loser only
+        # matters if the anti-join below can drop it from `kept`, so
+        # probing any other doc is wasted verify work. The a-side — the
+        # candidate winners — stays the whole validity-filtered index,
+        # so a winner that fails quality or was seen still suppresses
+        # its near-dups.
         #
         # The candidate a-side comes from the persisted band-bucket
         # index in history_dir (_indexed_lsh_pairs) instead of a fresh
@@ -267,18 +243,9 @@ def llm_curate_corpus(
         # FIRST incremental run, which must sign the backlog once either
         # way).
         if seen is not None:
-            from ..operators.util import track_persist  # noqa: PLC0415
-
-            cur = track_persist(
-                docs.select("doc_id", tx.doc_fingerprint(F.col("text")).alias("_fp"))
-            )
-            b_ids = cur.join(
-                seen.select(F.col("fingerprint").alias("_fp")),
-                on="_fp",
-                how="left_anti",
-            ).select("doc_id")
             pairs_src = _indexed_lsh_pairs(
-                spark, docs, history_dir, b_ids, cur, probe_rows=4 * n_unseen
+                spark, docs, history_dir, kept.select("doc_id"), ck.select("doc_id", "_fp"),
+                probe_rows=4 * n_remaining,
             )
         else:
             pairs_src = dd.minhash_lsh_pairs(docs)
@@ -287,12 +254,10 @@ def llm_curate_corpus(
             .select(F.col("doc_b").alias("doc_id"))
             .distinct()
         )
-        survivors = kept.join(near_dup_losers, on="doc_id", how="left_anti").drop(
-            "_quality_bp", "_lang", "_fp", "_min_id"
-        )
+        kept = kept.join(near_dup_losers, on="doc_id", how="left_anti")
     out = out_dir or f"{base_dir}/curated_documents"
     # n_final is counted in the write job itself (no read-back count)
-    n_final = fs.publish_parquet(survivors, out)["rows"]
+    n_final = fs.publish_parquet(kept, out)["rows"]
     if history_dir is not None and n_final > 0:
         # (an empty run appends nothing — skip the no-op job; the index
         # CONTENT is identical either way)
@@ -303,7 +268,8 @@ def llm_curate_corpus(
             .write.mode("append")
             .parquet(seen_path)
         )
-    fv = obs_flags.get if obs_flags is not None else flags  # post-write either way
+    fv = obs.get
+    n_seen_dropped = 0 if n_remaining is None else fv["n_after_exact"] - n_remaining
     return {
         "n_total": fv["n_total"],
         "n_quality_lang": fv["n_quality_lang"],
@@ -661,9 +627,9 @@ def llm_stream_ingest_dedup(
         # hash-membership semantics are partitioning-invariant. Sources
         # with small row groups don't need this (streaming_dedup_lsh's
         # respread A/B at sf30 was sign-mixed noise — left alone).
-        batch = batch.repartition(
-            batch.sparkSession.sparkContext.defaultParallelism
-        ).localCheckpoint(eager=True)  # two consumers below
+        batch = track_checkpoint(  # two consumers below
+            batch.repartition(batch.sparkSession.sparkContext.defaultParallelism)
+        )
         buckets = dd.band_buckets(dd.minhash_signatures(batch))
         if any(f.startswith("batch=") for f in fs.listdir(idx_dir, spark)):
             # Crash-replay guard: foreachBatch re-delivers the in-flight
@@ -679,7 +645,7 @@ def llm_stream_ingest_dedup(
                 .where(F.col("batch") != F.lit(int(batch_id)))
             )
             hit_docs = buckets.join(idx, on="bucket", how="left_semi").select("doc_id").distinct()
-            novel = batch.join(hit_docs, on="doc_id", how="left_anti").localCheckpoint(eager=True)
+            novel = track_checkpoint(batch.join(hit_docs, on="doc_id", how="left_anti"))
         else:
             novel = batch
         novel.write.mode("overwrite").parquet(f"{dst}/batch={batch_id}")

@@ -273,6 +273,11 @@ def test_curate_artifact_survives_a_failed_rewrite(spark, lake, monkeypatch):
     assert sorted(map(tuple, spark.read.parquet(first["out_dir"]).collect())) == before
 
 
+def _stored_rdds(spark):
+    """Ids of the RDDs holding blocks in the session's storage."""
+    return {info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
 def test_stream_ingest_dedup_appends_index(spark, tmp_path):
     """The production ingest loop: batch 2's near-dup of a doc admitted
     in batch 1 is suppressed BECAUSE the index grew (the static-index
@@ -298,7 +303,9 @@ def test_stream_ingest_dedup_appends_index(spark, tmp_path):
         os.rename(os.path.join(staged, part), dstf)
         os.utime(dstf, (1700000000 + i * 100, 1700000000 + i * 100))
 
+    stored = _stored_rdds(spark)
     m = run_task(spark, "llm-stream-ingest-dedup", base_dir=base, max_files_per_trigger=1)
+    assert _stored_rdds(spark) <= stored  # per-batch checkpoints released
     assert m["n_batches"] == 2
     assert m["n_ingested"] == 3
     assert m["n_novel"] == 2 and m["n_suppressed"] == 1
@@ -381,49 +388,62 @@ def test_stream_ingest_dedup_replay_excludes_own_partition(spark, tmp_path):
     assert [r["doc_id"] for r in out.collect()] == [10]
 
 
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _incremental_vs_full(spark, hist, base, out_prefix, **params):
+    """One incremental run against ``hist`` and one history-free run of
+    the same generation with the same ``params``. Asserts the
+    incremental artifact is the full one restricted to fingerprints the
+    history had not seen; returns (incremental metrics, admitted ids,
+    the full run's admitted ids)."""
+    from open_bus_stride_etl_spark.operators import text as tx
+
+    seen = [r[0] for r in spark.read.parquet(f"{hist}/seen_fingerprints.parquet").collect()]
+    m = run_task(
+        spark, "llm-curate-corpus", base_dir=base,
+        out_dir=f"{out_prefix}_inc", history_dir=hist, **params,
+    )
+    ref = run_task(
+        spark, "llm-curate-corpus", base_dir=base, out_dir=f"{out_prefix}_full", **params
+    )
+    ref_out = spark.read.parquet(ref["out_dir"])
+    want = _rows(ref_out.where(~tx.doc_fingerprint(F.col("text")).isin(seen)))
+    assert _rows(spark.read.parquet(m["out_dir"])) == want
+    for key in ("n_total", "n_quality_lang", "n_after_exact"):
+        assert m[key] == ref[key], key
+    assert m["n_final"] == len(want)
+    return m, {r[0] for r in want}, {r["doc_id"] for r in ref_out.collect()}
+
+
+def _with_docs(spark, lake, base, rows):
+    """Write ``lake``'s documents plus ``rows`` as a new generation."""
+    spark.read.parquet(f"{lake}/documents.parquet").unionByName(
+        spark.createDataFrame(rows)
+    ).write.parquet(f"{base}/documents.parquet")
+    return base
+
+
 def test_curate_band_index_matches_recompute_path(spark, lake, tmp_path):
     """The amortized persisted band-bucket index (r10, VERDICT r9 #1)
     admits exactly what a full non-incremental recompute of the same
     generation admits, restricted to documents whose fingerprint the
     history had not seen — across incremental generations that ADD,
     REMOVE and REWRITE documents (the mutation cases the index's
-    fingerprint validity filter exists for) and a later near-dup
-    arrival. The restriction is exact: the exact-dup keeper window runs
-    before the seen anti-join, and the incremental pair b-side only
-    drops losers among unseen docs. Also pins the amortization
+    fingerprint validity filter exists for), a later near-dup arrival
+    and a lowered quality floor. The restriction is exact: the exact-dup
+    keeper window runs before the seen join, and the incremental pair
+    b-side only drops losers among the admissible remainder, which a
+    changed floor re-derives every run. Also pins the amortization
     contract: once a doc is validly indexed its signature is never
     recomputed (the index is topped up, not rebuilt)."""
     import os
 
     from pyspark.sql import Row as R
 
-    from open_bus_stride_etl_spark.operators import text as tx
-
     hist = str(tmp_path / "hist")
     idx_path = f"{hist}/lsh_band_index.parquet"
-
-    def rows(df):
-        return sorted(map(tuple, df.collect()))
-
-    def incremental_vs_full(base, tag):
-        """One incremental run against ``hist`` and one history-free run
-        of the same generation; returns (incremental metrics, admitted
-        ids, the full run's admitted ids)."""
-        seen = [r[0] for r in spark.read.parquet(f"{hist}/seen_fingerprints.parquet").collect()]
-        m = run_task(
-            spark, "llm-curate-corpus", base_dir=base,
-            out_dir=str(tmp_path / f"{tag}_inc"), history_dir=hist,
-        )
-        ref = run_task(
-            spark, "llm-curate-corpus", base_dir=base, out_dir=str(tmp_path / f"{tag}_full")
-        )
-        ref_out = spark.read.parquet(ref["out_dir"])
-        want = rows(ref_out.where(~tx.doc_fingerprint(F.col("text")).isin(seen)))
-        assert rows(spark.read.parquet(m["out_dir"])) == want
-        for key in ("n_total", "n_quality_lang", "n_after_exact"):
-            assert m[key] == ref[key], key
-        assert m["n_final"] == len(want)
-        return m, {r[0] for r in want}, {r["doc_id"] for r in ref_out.collect()}
 
     m1 = run_task(
         spark, "llm-curate-corpus", base_dir=lake,
@@ -457,7 +477,8 @@ def test_curate_band_index_matches_recompute_path(spark, lake, tmp_path):
         )
     )
     g2.write.parquet(f"{base2}/documents.parquet")
-    _m2, got2, full2 = incremental_vs_full(base2, "g2")  # index path (bootstrap)
+    # index path (bootstrap)
+    _m2, got2, full2 = _incremental_vs_full(spark, hist, base2, str(tmp_path / "g2"))
     # the rewritten doc 5 and the fresh doc 7 are admitted, as the full
     # run says; doc 1 is admitted by the full run but already seen
     assert got2 == {5, 7} and full2 == {1, 5, 7}
@@ -474,10 +495,106 @@ def test_curate_band_index_matches_recompute_path(spark, lake, tmp_path):
         )
     )
     g3.write.parquet(f"{base3}/documents.parquet")
-    m3, _got3, _full3 = incremental_vs_full(base3, "g3")  # steady-state probe
+    # steady-state probe
+    m3, _got3, _full3 = _incremental_vs_full(spark, hist, base3, str(tmp_path / "g3"))
     assert m3["n_near_dup_dropped"] > 0  # docs 6 and 8 lose to doc 1
     # amortization: only the ONE genuinely new doc was signed this run
     # (doc 7's stale rows remain on disk, invisible behind the validity
     # filter; nothing was re-signed)
     assert spark.read.parquet(idx_path).count() == n_idx_g2 + 4
 
+    # the same generation under a lowered quality floor: the unseen
+    # low-quality doc 4, inadmissible in every run so far, enters the
+    # remainder and is admitted, as the full run at that floor says
+    m4, got4, _full4 = _incremental_vs_full(
+        spark, hist, base3, str(tmp_path / "g4"), quality_min_bp=0
+    )
+    assert got4 == {4} and m4["n_near_dup_dropped"] > 0
+
+
+@pytest.fixture
+def probe_calls(monkeypatch):
+    """Records ``(distinct b-side docs, probe_rows)`` of every band-index
+    probe the curate task makes."""
+    from open_bus_stride_etl_spark.operators import dedup as dd
+
+    calls = []
+    probe = dd.minhash_lsh_pairs_from_buckets
+
+    def spy(docs, buckets, b_ids, probe_rows, **kw):
+        calls.append((b_ids.select("doc_id").distinct().count(), probe_rows))
+        return probe(docs, buckets, b_ids, probe_rows, **kw)
+
+    monkeypatch.setattr(dd, "minhash_lsh_pairs_from_buckets", spy)
+    return calls
+
+
+def test_curate_probe_b_side_is_the_admissible_remainder(spark, lake, tmp_path, probe_calls):
+    """With history present the band-index probe's b-side is exactly the
+    unseen docs that pass quality and language and keep their exact-dup
+    group (n_after_exact - n_seen_dropped of them), not every unseen
+    doc, and ``probe_rows`` is its 4 band rows per doc."""
+    from pyspark.sql import Row as R
+
+    hist = str(tmp_path / "hist")
+    run_task(spark, "llm-curate-corpus", base_dir=lake, history_dir=hist,
+             out_dir=str(tmp_path / "o1"))
+    assert probe_calls == []  # the first run has no index to probe
+    base = _with_docs(spark, lake, str(tmp_path / "lake2"), [
+        R(doc_id=97, source="web", lang="de",
+          text="die katze schläft auf dem warmen dach und der hund bellt laut"),
+        R(doc_id=98, source="web", lang="en", text="??? !!! ;;; :::"),
+        R(doc_id=99, source="web", lang="en",
+          text="completely fresh sentence about rivers and mountains flowing "
+               "under the bright morning sun while travelers walk the long road"),
+    ])
+    m = run_task(spark, "llm-curate-corpus", base_dir=base, history_dir=hist,
+                 out_dir=str(tmp_path / "o2"))
+    [(n_b, probe_rows)] = probe_calls
+    # docs 3 (last run's near-dup loser) and 99; the unseen docs 4, 5,
+    # 97 and 98 fail quality or language and are not probed
+    assert n_b == m["n_after_exact"] - m["n_seen_dropped"] == 2
+    assert probe_rows == 4 * n_b
+    assert m["n_final"] == 1 and m["n_near_dup_dropped"] == 1
+
+
+def test_curate_inadmissible_near_dup_winner_still_drops_the_new_doc(spark, lake, tmp_path):
+    """The probe's a-side stays the whole validity-filtered index: a
+    lower-id unseen doc that FAILS the quality floor still wins the
+    near-dup pair against a new doc that passes it, so the new doc is
+    dropped, exactly as the history-free run restricted to unseen
+    fingerprints drops it."""
+    from pyspark.sql import Row as R
+
+    from open_bus_stride_etl_spark.operators import text as tx
+
+    words = "it is the end of the day and the sun sets in the west over the sea"
+    loser, winner = words + " today", words + " " + "!" * 60
+    q = spark.createDataFrame([(winner,), (loser,)], "text string").select(
+        tx.quality_score_bp(F.col("text"))
+    ).collect()
+    assert q[0][0] < 2000 <= q[1][0]  # the winner fails the floor, the loser passes
+
+    hist = str(tmp_path / "hist")
+    run_task(spark, "llm-curate-corpus", base_dir=lake, history_dir=hist,
+             out_dir=str(tmp_path / "o1"))
+    base = _with_docs(spark, lake, str(tmp_path / "lake2"), [
+        R(doc_id=40, source="web", lang="en", text=winner),
+        R(doc_id=41, source="web", lang="en", text=loser),
+    ])
+    m, got, full = _incremental_vs_full(spark, hist, base, str(tmp_path / "g2"))
+    assert 41 not in got and 41 not in full
+    assert m["n_near_dup_dropped"] == 2  # doc 3 loses to doc 1, doc 41 to doc 40
+
+
+def test_task_checkpoints_are_released_at_the_task_boundary(spark, lake, tmp_path):
+    """Repeated tasks in one session leave no storage behind: the local
+    checkpoints an incremental curate run takes (its scoring pass, the
+    band-index top-up) are released when run_task returns, not whenever
+    a driver GC happens to collect them."""
+    before = _stored_rdds(spark)
+    hist = str(tmp_path / "hist")
+    for i in range(3):
+        run_task(spark, "llm-curate-corpus", base_dir=lake, history_dir=hist,
+                 out_dir=str(tmp_path / f"o{i}"))
+        assert _stored_rdds(spark) <= before, f"run {i + 1} left storage behind"

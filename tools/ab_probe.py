@@ -12,6 +12,14 @@ Usage:
     AB_CONF="spark.sql.shuffle.partitions=64" python tools/ab_probe.py QUERY QUERY [rounds]
         # same query, variant B runs under the given session conf(s) —
         # a config A/B (conf restored between runs)
+    python tools/ab_probe.py --commits A B WORKLOAD SEED [pairs] [seconds] [trace]
+        # perfbench/run.py from two checkouts (a directory, or a git
+        # revision exported into a temporary directory), in interleaved
+        # pairs that alternate which side runs first (defaults: 10 pairs,
+        # 5 s, trace 0); per metric it prints each side's median and
+        # quartiles, B's win count, and whether B's gain passes the
+        # rule: wins in >= 9/10 of all pairs run (a failed run is no
+        # win), medians further apart than A's interquartile range
 
 Each round times A then B (cold operator caches: release_cached after
 every run, the bench.py convention), prints the pair, and at the end
@@ -27,15 +35,79 @@ same protocol instead of eyeballing two bench runs.
 
 from __future__ import annotations
 
+import json
 import os
 import statistics
+import subprocess
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def checkout(rev: str, tmp: str) -> str:
+    """A checkout directory as given, or ``rev`` exported from this
+    repository's git history into ``tmp``."""
+    if os.path.isdir(rev):
+        return os.path.abspath(rev)
+    dst = os.path.join(tmp, rev.replace("/", "_"))
+    os.makedirs(dst)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    archive = subprocess.run(["git", "-C", repo, "archive", rev], check=True, capture_output=True)
+    subprocess.run(["tar", "-x", "-C", dst], input=archive.stdout, check=True)
+    return dst
+
+
+def perfbench(root: str, workload: str, seed: str, seconds: str, trace: str) -> dict:
+    """One perfbench run in ``root``; its metric values, or {} if it failed."""
+    res = subprocess.run(
+        [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", seed,
+         "--seconds", seconds, "--trace", trace],
+        cwd=root, capture_output=True, text=True,
+    )
+    lines = res.stdout.strip().splitlines()
+    out = json.loads(lines[-1]) if lines and lines[-1].startswith("{") else {}
+    if not out.get("correct"):
+        print(f"  FAILED in {root}: {res.stderr.strip().splitlines()[-3:]}", flush=True)
+        return {}
+    return {k: v["value"] for k, v in out["metrics"].items()}
+
+
+def commit_pairs(a: str, b: str, workload: str, seed: str, pairs: int = 10,
+                 seconds: str = "5", trace: str = "0") -> None:
+    with tempfile.TemporaryDirectory(prefix="ab_probe_") as tmp:
+        roots = {"A": checkout(a, tmp), "B": checkout(b, tmp)}
+        with open(os.path.join(roots["A"], "BENCHMARK.json")) as fh:
+            bench = json.load(fh)
+        better = {m["name"]: m["better"] for m in bench["end_to_end"] + bench["per_layer"]}
+        runs = {"A": [], "B": []}
+        for i in range(pairs):
+            for side in ("AB" if i % 2 == 0 else "BA"):
+                runs[side].append(perfbench(roots[side], workload, seed, seconds, trace))
+            for side in "AB":
+                print(f"pair {i + 1} {side}: " + " ".join(
+                    f"{m}={v:.4g}" for m, v in runs[side][-1].items()), flush=True)
+        ok = [(ra, rb) for ra, rb in zip(runs["A"], runs["B"]) if ra and rb]
+        print(f"{workload} seed {seed}: {len(ok)}/{pairs} pairs complete; "
+              "metric: A median [q1, q3] | B median [q1, q3] | B wins | gain")
+        for m in ok[0][0] if ok else {}:
+            xa, xb = [ra[m] for ra, _ in ok], [rb[m] for _, rb in ok]
+            qa, qb = (statistics.quantiles(x, n=4) if len(x) > 1 else [x[0]] * 3 for x in (xa, xb))
+            sign = -1 if better.get(m, "lower") == "lower" else 1
+            wins = sum(1 for va, vb in zip(xa, xb) if sign * (vb - va) > 0)
+            gain = wins >= 0.9 * pairs and sign * (qb[1] - qa[1]) > qa[2] - qa[0]
+            print(f"  {m}: {qa[1]:.4g} [{qa[0]:.4g}, {qa[2]:.4g}] | "
+                  f"{qb[1]:.4g} [{qb[0]:.4g}, {qb[2]:.4g}] | {wins}/{len(ok)} | "
+                  f"{'yes' if gain else 'no'}")
+
+
 def main() -> None:
+    if len(sys.argv) > 1 and sys.argv[1] == "--commits":
+        if len(sys.argv) < 6:
+            raise SystemExit(__doc__)
+        a, b, workload, seed, *rest = sys.argv[2:]
+        return commit_pairs(a, b, workload, seed, int(rest[0]) if rest else 10, *rest[1:])
     if len(sys.argv) < 3:
         raise SystemExit(__doc__)
     qa, qb = sys.argv[1], sys.argv[2]
