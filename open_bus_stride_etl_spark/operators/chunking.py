@@ -22,33 +22,30 @@ from pyspark.sql import functions as F
 
 from .text import ws_token_count
 
+# Characters consecutive chunk_fixed windows share.
+CHUNK_OVERLAP = 20
 
-def chunk_fixed(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    chunk_chars: int = 120,
-    overlap: int = 20,
-) -> DataFrame:
-    """Overlapping character windows: starts at 0, step (chunk-overlap),
-    until the text is consumed; short docs yield one chunk. Output:
+
+def chunk_fixed(docs: DataFrame, chunk_chars: int = 120) -> DataFrame:
+    """Overlapping character windows: starts at 0, step
+    (chunk_chars - CHUNK_OVERLAP), until the text is consumed; short docs yield one chunk. Output:
     id, chunk_no, chunk_start (0-based), chunk_text."""
-    step = chunk_chars - overlap
+    step = chunk_chars - CHUNK_OVERLAP
     if step <= 0:
-        raise ValueError("overlap must be smaller than chunk_chars")
+        raise ValueError("chunk_chars must exceed CHUNK_OVERLAP")
     n_chunks = F.greatest(
         F.lit(1),
-        F.ceil((F.length(F.col(text_col)) - F.lit(overlap)) / F.lit(step)).cast("int"),
+        F.ceil((F.length(F.col("text")) - F.lit(CHUNK_OVERLAP)) / F.lit(step)).cast("int"),
     )
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_no", "_i"),
-        F.col(text_col),
+        F.col("text"),
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("chunk_no"),
         (F.col("_i") * step).alias("chunk_start"),
-        F.substring(F.col(text_col), F.col("_i") * step + 1, chunk_chars).alias(
+        F.substring(F.col("text"), F.col("_i") * step + 1, chunk_chars).alias(
             "chunk_text"
         ),
     )
@@ -58,8 +55,6 @@ def pack_greedy(
     docs: DataFrame,
     budget_tokens: int,
     n_shards: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Assign each document to a (shard, bin) so each bin's token total
     stays near ``budget_tokens``. Shard = deterministic md5 bucket of
@@ -70,21 +65,21 @@ def pack_greedy(
 
     from .sampling import hash_bucket
 
-    toks = ws_token_count(F.col(text_col))
+    toks = ws_token_count(F.col("text"))
     w = (
         Window.partitionBy("shard")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
         docs.select(
-            F.col(id_col),
-            hash_bucket(F.col(id_col), n_shards).cast("int").alias("shard"),
+            F.col("doc_id"),
+            hash_bucket(F.col("doc_id"), n_shards).cast("int").alias("shard"),
             toks.alias("n_tokens"),
         )
         .withColumn("_cum", F.sum("n_tokens").over(w))
         .select(
-            id_col,
+            "doc_id",
             "shard",
             F.floor((F.col("_cum") - F.col("n_tokens")) / budget_tokens)
             .cast("long")

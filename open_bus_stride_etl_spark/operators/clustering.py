@@ -50,19 +50,15 @@ def _q_bound(dim: int) -> float:
 
 def kmeans_assignments(
     embs: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 8,
     iters: int = 3,
 ) -> DataFrame:
     """``(id, cluster)`` assignment only — see ``kmeans_fit``."""
-    return kmeans_fit(embs, id_col=id_col, vec_col=vec_col, k=k, iters=iters)[0]
+    return kmeans_fit(embs, k=k, iters=iters)[0]
 
 
 def kmeans_fit(
     embs: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 8,
     iters: int = 3,
 ) -> tuple[DataFrame, DataFrame]:
@@ -102,12 +98,12 @@ def kmeans_fit(
 
     spark = embs.sparkSession
     pts = track_persist(
-        embs.select(F.col(id_col).alias("id"), quantized_vec(vec_col).alias("q"))
+        embs.select(F.col("vec_id").alias("id"), quantized_vec().alias("q"))
     )
 
     seed_rows = pts.orderBy("id").limit(k).collect()
     if not seed_rows:
-        empty_a = spark.createDataFrame([], f"{id_col} long, cluster long")
+        empty_a = spark.createDataFrame([], "vec_id long, cluster long")
         empty_c = spark.createDataFrame([], "cluster long, pos int, cq long")
         return empty_a, empty_c
     c_mat = np.array([r["q"] for r in seed_rows], dtype=np.float64)
@@ -183,7 +179,7 @@ def kmeans_fit(
         for r in upd:
             c_mat[r["cluster"], r["pos"] - 1] = r["cq"]
 
-    a = _scan(c_mat, with_sums=False).select(F.col("id").alias(id_col), "cluster")
+    a = _scan(c_mat, with_sums=False).select(F.col("id").alias("vec_id"), "cluster")
     cdf = spark.createDataFrame(
         [
             (cl, pos + 1, int(c_mat[cl, pos]))

@@ -16,10 +16,11 @@ from pyspark.sql import functions as F
 from .dedup import _shingled
 from .text import normalize_text, shingle_array
 
+# A shingle in at least this many documents is boilerplate.
+BOILER_MIN_DF = 2
 
-def bigram_repetition(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+
+def bigram_repetition(docs: DataFrame) -> DataFrame:
     """Per-document repetition signals (the Gopher-style quality
     filters): ``dup_word_ratio_bp`` (fraction of word occurrences that
     repeat an earlier word) and ``top_bigram_ratio_bp`` (fraction of all
@@ -34,25 +35,25 @@ def bigram_repetition(
     hot key, partitions scale with documents. Docs with < 2 words get
     ratio 0 via the left join back to the id spine.
     """
-    words = F.split(normalize_text(F.col(text_col)), " ")
+    words = F.split(normalize_text(F.col("text")), " ")
     base = docs.withColumn("_w", words).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("_w").alias("n_words"),
         F.size(F.array_distinct("_w")).alias("n_distinct_words"),
         shingle_array("_w", 2).alias("_bg"),
     )
     per_doc_bg = (
-        base.select(id_col, F.explode("_bg").alias("bg"))
-        .groupBy(id_col, "bg")
+        base.select("doc_id", F.explode("_bg").alias("bg"))
+        .groupBy("doc_id", "bg")
         .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.max("c").alias("top_bigram_n"), F.sum("c").alias("n_bigrams"))
     )
     return (
-        base.select(id_col, "n_words", "n_distinct_words")
-        .join(per_doc_bg, on=id_col, how="left")
+        base.select("doc_id", "n_words", "n_distinct_words")
+        .join(per_doc_bg, on="doc_id", how="left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.when(F.col("n_words") > 0,
                    F.round(10000.0 * (F.col("n_words") - F.col("n_distinct_words"))
                            / F.col("n_words")).cast("long"))
@@ -65,9 +66,7 @@ def bigram_repetition(
     )
 
 
-def term_document_frequency(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def term_document_frequency(docs: DataFrame) -> DataFrame:
     """Global document frequency per term: ``(term, df)`` where df =
     number of documents containing the term at least once. The IDF table
     of a corpus — the broadcastable dimension that TF-IDF scoring,
@@ -80,7 +79,7 @@ def term_document_frequency(
     count has perfect map-side combine — each partition emits one row
     per term, so the reduce side sees partitions x |vocab-head| rows,
     not token volume."""
-    words = F.split(normalize_text(F.col(text_col)), " ")
+    words = F.split(normalize_text(F.col("text")), " ")
     return (
         docs.select(F.explode(F.array_distinct(words)).alias("term"))
         .where(F.col("term") != "")
@@ -89,18 +88,12 @@ def term_document_frequency(
     )
 
 
-def boilerplate_stats(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    min_df: int = 2,
-) -> DataFrame:
-    """Boilerplate detection via repeated word-k-grams (the
+def boilerplate_stats(docs: DataFrame) -> DataFrame:
+    """Boilerplate detection via repeated word-3-grams (the
     repeated-span curation stage of a training-data pipeline: headers,
     footers, license blocks, and templated text appear verbatim across
     many documents). A shingle is *boilerplate* when it occurs in >=
-    ``min_df`` distinct documents; per document we report how much of it
+    ``BOILER_MIN_DF`` distinct documents; per document we report how much of it
     is built from such shingles: ``(doc_id, n_shingles, n_boiler,
     boiler_ratio_bp)``. Callers threshold the ratio to drop templated
     documents, or use the hot-shingle table itself to cut spans.
@@ -109,31 +102,31 @@ def boilerplate_stats(
     (hashes are 40-bit ints BEFORE any shuffle, operators/dedup.py
     ``_shingled``), one count keyed by hash (perfect map-side combine:
     the reduce side sees |vocab| rows, not token volume), one equi-join
-    back on the hash, one count keyed by doc. In production ``min_df``
+    back on the hash, one count keyed by doc. In production the threshold
     is large (thousands of documents), so the hot set is a small
-    broadcastable head; at ``min_df=2`` the join stays a shuffle
+    broadcastable head; at 2 the join stays a shuffle
     equi-join and AQE decides. No corpus-wide hot key: Zipf skew lands
     on the hash-keyed count, which combines map-side."""
-    sh = _shingled(docs, id_col, text_col, k, distinct=True)
+    sh = _shingled(docs)
     df_tab = (
         sh.groupBy("h")
         .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") >= min_df)
+        .where(F.col("df") >= BOILER_MIN_DF)
         .select("h", F.lit(1).alias("_hot"))
     )
     per_doc = (
         sh.join(df_tab, on="h", how="left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),
             F.count("_hot").alias("n_boiler"),
         )
     )
     return (
-        docs.select(id_col)
-        .join(per_doc, on=id_col, how="left")
+        docs.select("doc_id")
+        .join(per_doc, on="doc_id", how="left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.coalesce(F.col("n_shingles"), F.lit(0)).cast("long").alias("n_shingles"),
             F.coalesce(F.col("n_boiler"), F.lit(0)).cast("long").alias("n_boiler"),
             F.when(
@@ -149,12 +142,9 @@ def boilerplate_stats(
 def contamination_overlap(
     docs: DataFrame,
     eval_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
 ) -> DataFrame:
     """Eval-set decontamination: for every training document sharing at
-    least one word-k-gram with ANY eval document, the count of distinct
+    least one word-3-gram with ANY eval document, the count of distinct
     shared shingle hashes — ``(doc_id, n_overlap)``. Callers anti-join
     the flagged ids to decontaminate, or threshold n_overlap for a
     softer policy.
@@ -166,15 +156,15 @@ def contamination_overlap(
     the final doc-keyed count. The shingle hash is the shared 40-bit
     md5 prefix from operators/dedup.py, so the DuckDB oracle reproduces
     it exactly."""
-    train_sh = _shingled(docs, id_col, text_col, k, distinct=True)
+    train_sh = _shingled(docs)
     eval_sh = (
-        _shingled(eval_docs, id_col, text_col, k, distinct=True)
+        _shingled(eval_docs)
         .select("h")
         .distinct()
     )
     return (
         train_sh.join(F.broadcast(eval_sh), on="h")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_overlap"))
     )
 
@@ -182,8 +172,6 @@ def contamination_overlap(
 def tokenize_with_vocab(
     docs: DataFrame,
     vocab: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Materialize token-id sequences against a fixed vocabulary — the
     step after token COUNTING that an actual training-data writer runs:
@@ -197,16 +185,16 @@ def tokenize_with_vocab(
     that reassembles order via array_sort over (pos, id) structs.
     Per-doc state is bounded by document length; nothing corpus-wide
     shuffles except the doc-keyed reassembly."""
-    words = F.split(normalize_text(F.col(text_col)), " ")
+    words = F.split(normalize_text(F.col("text")), " ")
     exploded = docs.withColumn("_w", words).select(
-        F.col(id_col), F.posexplode("_w").alias("pos", "term")
+        F.col("doc_id"), F.posexplode("_w").alias("pos", "term")
     )
     joined = exploded.join(F.broadcast(vocab), on="term", how="left").select(
-        id_col,
+        "doc_id",
         "pos",
         F.coalesce(F.col("token_id"), F.lit(0)).cast("long").alias("tid"),
     )
-    return joined.groupBy(id_col).agg(
+    return joined.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.count(F.when(F.col("tid") == 0, 1)).alias("n_oov"),
         F.array_join(

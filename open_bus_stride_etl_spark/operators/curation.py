@@ -28,22 +28,24 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import hex_to_long
 
+# quantile_threshold_filter keeps the top KEEP_NUM/KEEP_DEN of each group.
+KEEP_NUM, KEEP_DEN = 1, 5
+# Per-stage md5 salts (hash_bucket_bp): distinct so the stages' keep and
+# duplicate decisions never correlate.
+MIX_SEED = "mix"
+SPLIT_SEED = "split"
 
-def quantile_threshold_filter(
-    scored: DataFrame,
-    group_col: str,
-    score_col: str,
-    keep_top_n_of: tuple[int, int] = (1, 5),
-) -> DataFrame:
-    """Keep the top ``num/den`` fraction of rows per group by integer
-    score, tie-inclusive: threshold t = the k-th highest score where
-    k = ceil(n * num / den), keep rows with score >= t (ties at the
-    threshold are all kept — deterministic, unlike an arbitrary tiebreak).
+
+def quantile_threshold_filter(scored: DataFrame, group_col: str, score_col: str) -> DataFrame:
+    """Keep the top ``KEEP_NUM/KEEP_DEN`` fraction of rows per group by
+    integer score, tie-inclusive: threshold t = the k-th highest score
+    where k = ceil(n * KEEP_NUM / KEEP_DEN), keep rows with score >= t
+    (ties at the threshold are all kept — deterministic, unlike an
+    arbitrary tiebreak).
 
     Adds ``thr_<score_col>`` (the group's threshold) to the output.
     ``score_col`` must be integral and bounded (basis points) — that is
     what makes the histogram formulation exact and tiny."""
-    num, den = keep_top_n_of
     hist = scored.groupBy(group_col, score_col).agg(F.count(F.lit(1)).alias("_c"))
     w_desc = (
         Window.partitionBy(group_col)
@@ -57,7 +59,8 @@ def quantile_threshold_filter(
         F.sum("_c").over(w_desc).alias("_n_ge"),
         F.sum("_c").over(w_all).alias("_n"),
     )
-    k = F.expr(f"div(_n * {num} + {den} - 1, {den})")  # ceil(n*num/den), pure integers
+    # ceil(n * KEEP_NUM / KEEP_DEN), pure integers
+    k = F.expr(f"div(_n * {KEEP_NUM} + {KEEP_DEN} - 1, {KEEP_DEN})")
     thr = (
         cum.where(F.col("_n_ge") >= k)
         .groupBy(group_col)
@@ -81,42 +84,31 @@ def hash_bucket_bp(key: Column, seed: str = "") -> Column:
     )
 
 
-def source_rates(
-    docs: DataFrame,
-    source_col: str = "source",
-) -> DataFrame:
+def source_rates(docs: DataFrame) -> DataFrame:
     """Per-source keep-rate table for uniform source mixing:
     ``(source, n_docs, rate_bp)`` with rate_bp =
     floor(min_n * 10000 / n_source) — one tiny aggregation, meant to be
     broadcast into the membership filter."""
-    counts = docs.groupBy(source_col).agg(F.count(F.lit(1)).alias("n_docs"))
+    counts = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
     min_n = counts.agg(F.min("n_docs").alias("_min_n"))
     return counts.crossJoin(F.broadcast(min_n)).select(
-        source_col,
+        "source",
         "n_docs",
         F.expr("div(_min_n * 10000, n_docs)").cast("long").alias("rate_bp"),
     )
 
 
-def balanced_docs(
-    docs: DataFrame,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    rates: DataFrame | None = None,
-) -> DataFrame:
+def balanced_docs(docs: DataFrame) -> DataFrame:
     """The balanced corpus itself: every ``docs`` column, restricted to
     the rows that survive source balancing (md5-bucket membership under
     the per-source rate). This is the composable pipeline stage.
 
     Membership depends only on the doc id and the broadcast rate table:
-    map-local, reproducible across engines, reruns and repartitionings.
-    Pass a precomputed ``rates`` (from ``source_rates``) to share one
-    rate table across the stats and corpus outputs."""
-    if rates is None:
-        rates = source_rates(docs, source_col)
+    map-local, reproducible across engines, reruns and repartitionings."""
+    rates = source_rates(docs)
     return (
-        docs.join(F.broadcast(rates.select(source_col, "rate_bp")), on=source_col)
-        .where(hash_bucket_bp(F.col(id_col)) < F.col("rate_bp"))
+        docs.join(F.broadcast(rates.select("source", "rate_bp")), on="source")
+        .where(hash_bucket_bp(F.col("doc_id")) < F.col("rate_bp"))
         .drop("rate_bp")
     )
 
@@ -124,9 +116,6 @@ def balanced_docs(
 def epoch_upsample(
     docs: DataFrame,
     weights: DataFrame,
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    seed: str = "mix",
 ) -> DataFrame:
     """Fractional-epoch data mixing: materialize each document
     ``weight`` times, where per-source weights are fractional (the
@@ -145,10 +134,10 @@ def epoch_upsample(
     (doc_id, copy_idx) to interleave the copies through the training
     order instead of clustering them."""
     n = F.expr("weight_bp div 10000") + F.when(
-        hash_bucket_bp(F.col(id_col), seed) < F.col("weight_bp") % 10000, 1
+        hash_bucket_bp(F.col("doc_id"), MIX_SEED) < F.col("weight_bp") % 10000, 1
     ).otherwise(0)
     return (
-        docs.join(F.broadcast(weights), on=source_col)
+        docs.join(F.broadcast(weights), on="source")
         .withColumn("_n", n)
         # guard: sequence(1, 0) DESCENDS in Spark — empty array instead
         .withColumn(
@@ -157,9 +146,9 @@ def epoch_upsample(
                 F.array()
             ),
         )
-        .select(F.col(id_col), F.col(source_col), F.explode("_copies").alias("copy_idx"))
+        .select(F.col("doc_id"), F.col("source"), F.explode("_copies").alias("copy_idx"))
         .select(
-            F.col(id_col), F.col(source_col), F.col("copy_idx").cast("long").alias("copy_idx")
+            F.col("doc_id"), F.col("source"), F.col("copy_idx").cast("long").alias("copy_idx")
         )
     )
 
@@ -168,8 +157,6 @@ def leakage_safe_split(
     docs: DataFrame,
     components: DataFrame | None = None,
     weights_bp: dict[str, int] | None = None,
-    id_col: str = "doc_id",
-    seed: str = "split",
 ) -> DataFrame:
     """Train/val/test assignment with a DUPLICATE-LEAKAGE guard: the
     split key is the document's near-dup COMPONENT id (``components`` =
@@ -180,11 +167,11 @@ def leakage_safe_split(
     naive 90/5/5 split puts ~9.5% of test docs' near-copies in train.
 
     Membership is the engine's deterministic md5-bucket rule
-    (reproducible across engines/reruns/partitionings; salt with
-    ``seed`` so this decision stream is independent of every other
+    (reproducible across engines/reruns/partitionings; salted with
+    ``SPLIT_SEED`` so this decision stream is independent of every other
     hash-membership stage — curation.py:hash_bucket_bp doctrine).
     ``weights_bp`` maps split name -> basis points, must sum to 10000;
-    cut points follow dict order. Output: ``(id_col, split)``.
+    cut points follow dict order. Output: ``(doc_id, split)``.
 
     Scale shape: one left join against the slim component table (the
     dedup pipeline already materialized it) + a map-side bucket compare;
@@ -193,19 +180,17 @@ def leakage_safe_split(
     if sum(weights_bp.values()) != 10000:
         raise ValueError("weights_bp must sum to 10000")
     if components is not None:
-        comp = components.select(
-            F.col("doc_id").alias(id_col), F.col("component_id").alias("_comp")
-        )
-        keyed = docs.select(id_col).join(comp, on=id_col, how="left")
-        key = F.coalesce(F.col("_comp"), F.col(id_col))
+        comp = components.select("doc_id", F.col("component_id").alias("_comp"))
+        keyed = docs.select("doc_id").join(comp, on="doc_id", how="left")
+        key = F.coalesce(F.col("_comp"), F.col("doc_id"))
     else:
-        keyed = docs.select(id_col)
-        key = F.col(id_col)
-    bucket = hash_bucket_bp(key, seed)
+        keyed = docs.select("doc_id")
+        key = F.col("doc_id")
+    bucket = hash_bucket_bp(key, SPLIT_SEED)
     expr = None
     lo = 0
     for name, w in weights_bp.items():
         cond = (bucket >= lo) & (bucket < lo + w)
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
         lo += w
-    return keyed.select(F.col(id_col), expr.alias("split"))
+    return keyed.select(F.col("doc_id"), expr.alias("split"))

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hex_to_long
-from .text import normalize_text, shingle_array
+from .text import SHINGLE_K, normalize_text, shingle_array
 from .util import track_persist
 
 # (a*h + b) mod P permutation constants. P = 2^61 - 1 (Mersenne prime);
@@ -36,11 +36,15 @@ N_BANDS = 4  # 8 signatures = 4 bands x 2 rows
 # minhash_lsh_pairs): above this many candidate pairs / probe rows the
 # hints drop and AQE shuffle joins take over. Read at call time.
 MAX_BROADCAST_ROWS = 5_000_000
+# Star rounds connected_components runs before it gives up.
+CC_MAX_ROUNDS = 25
+# SimHash pair contract: hamming distance <= SIMHASH_THRESHOLD over
+# SIMHASH_BANDS equal-width bands (pigeonhole-exact: threshold < bands).
+SIMHASH_THRESHOLD = 3
+SIMHASH_BANDS = 4
 
 
-def _shingled(
-    docs: DataFrame, id_col: str, text_col: str, k: int, distinct: bool = True
-) -> DataFrame:
+def _shingled(docs: DataFrame, distinct: bool = True) -> DataFrame:
     """One row per (doc, DISTINCT shingle-hash). The shingle string is
     hashed to 40 bits BEFORE the distinct so every downstream shuffle
     (dedup, set-size counts, intersection joins) moves 8-byte keys
@@ -54,37 +58,33 @@ def _shingled(
     insensitive (MIN for minhash) or dedupe inside the aggregate
     (count_distinct), which removes the full-corpus distinct shuffle
     entirely."""
-    words = F.split(normalize_text(F.col(text_col)), " ")
+    words = F.split(normalize_text(F.col("text")), " ")
     out = (
         docs.withColumn("_words", words)
-        .select(F.col(id_col), F.explode(shingle_array("_words", k)).alias("shingle"))
-        .select(F.col(id_col), hex_to_long(F.substring(F.md5("shingle"), 1, 10)).alias("h"))
+        .select(F.col("doc_id"), F.explode(shingle_array("_words")).alias("shingle"))
+        .select(F.col("doc_id"), hex_to_long(F.substring(F.md5("shingle"), 1, 10)).alias("h"))
     )
     return out.distinct() if distinct else out
 
 
-def _shingled_pos(
-    docs: DataFrame, id_col: str, text_col: str, k: int
-) -> DataFrame:
+def _shingled_pos(docs: DataFrame) -> DataFrame:
     """One row per (doc, position, shingle-hash): the POSITIONAL shingle
     stream (1-based position of the k-gram's first word). Duplicates
     within a doc are kept — position IS the identity here. Same 40-bit
     md5 hash as ``_shingled`` so the two streams join consistently."""
-    words = F.split(normalize_text(F.col(text_col)), " ")
+    words = F.split(normalize_text(F.col("text")), " ")
     return (
         docs.withColumn("_words", words)
-        .select(F.col(id_col), F.posexplode(shingle_array("_words", k)))
+        .select(F.col("doc_id"), F.posexplode(shingle_array("_words")))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             (F.col("pos") + 1).alias("pos"),
             hex_to_long(F.substring(F.md5("col"), 1, 10)).alias("h"),
         )
     )
 
 
-def shared_span_pairs(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
-) -> DataFrame:
+def shared_span_pairs(docs: DataFrame) -> DataFrame:
     """Exact shared-span detection between candidate document pairs —
     the substring-level dedup signal (public result: verbatim repeated
     spans across training documents hurt model quality more than
@@ -94,7 +94,7 @@ def shared_span_pairs(
     CONSECUTIVE shared word-k-gram shingles, i.e. the longest common
     word-substring, plus the total matched-alignment count:
     ``(doc_a, doc_b, max_run_shingles, max_run_words, n_matches)``
-    where ``max_run_words = max_run_shingles + k - 1``.
+    where ``max_run_words = max_run_shingles + SHINGLE_K - 1``.
 
     The MinHash-LSH banding generates the candidates (same contract as
     ``minhash_lsh_pairs``); ``_span_runs`` is the span core over any
@@ -122,35 +122,29 @@ def shared_span_pairs(
     when it measures small, shuffled on (doc_b, h) otherwise (measured
     identical at bench scale; a hint there would force a driver collect
     that can exceed the broadcast limit on a large candidate set)."""
-    candidates = lsh_candidate_pairs(minhash_signatures(docs, id_col, text_col, k), id_col=id_col)
-    return _span_runs(docs, candidates, id_col, text_col, k)
+    candidates = lsh_candidate_pairs(minhash_signatures(docs))
+    return _span_runs(docs, candidates)
 
 
-def _span_runs(
-    docs: DataFrame,
-    candidates: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-) -> DataFrame:
+def _span_runs(docs: DataFrame, candidates: DataFrame) -> DataFrame:
     """``shared_span_pairs`` over the given ``(doc_a, doc_b)`` candidate
     pairs."""
     cands = track_persist(candidates)
     members = (
-        cands.select(F.col("doc_a").alias(id_col))
-        .union(cands.select(F.col("doc_b").alias(id_col)))
+        cands.select(F.col("doc_a").alias("doc_id"))
+        .union(cands.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    m_docs = docs.join(F.broadcast(members), on=id_col, how="left_semi")
-    pos_sh = track_persist(_shingled_pos(m_docs, id_col, text_col, k))
+    m_docs = docs.join(F.broadcast(members), on="doc_id", how="left_semi")
+    pos_sh = track_persist(_shingled_pos(m_docs))
     cells = (
         F.broadcast(cands)
         .join(
-            pos_sh.select(F.col(id_col).alias("doc_a"), F.col("pos").alias("pa"), "h"),
+            pos_sh.select(F.col("doc_id").alias("doc_a"), F.col("pos").alias("pa"), "h"),
             on="doc_a",
         )
         .join(
-            pos_sh.select(F.col(id_col).alias("doc_b"), F.col("pos").alias("pb"), "h"),
+            pos_sh.select(F.col("doc_id").alias("doc_b"), F.col("pos").alias("pb"), "h"),
             on=["doc_b", "h"],
         )
         .select("doc_a", "doc_b", "pa", "pb")
@@ -167,14 +161,12 @@ def _span_runs(
     )
     return runs.groupBy("doc_a", "doc_b").agg(
         F.max("rl").cast("long").alias("max_run_shingles"),
-        (F.max("rl") + F.lit(k - 1)).cast("long").alias("max_run_words"),
+        (F.max("rl") + F.lit(SHINGLE_K - 1)).cast("long").alias("max_run_words"),
         F.sum("rl").cast("long").alias("n_matches"),
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """Per doc: 8 MinHash values m0..m7 over word-k-gram shingles — the
     one signature aggregation every LSH consumer (pair pipeline, span
     candidates, curate band index, streaming probes) goes through.
@@ -183,15 +175,15 @@ def minhash_signatures(
     duplicate-insensitive, so the values are those of the distinct
     shingle set while the only full-corpus shuffle is this one
     groupBy(doc) — no corpus-wide distinct in front of it."""
-    raw = _shingled(docs, id_col, text_col, k, distinct=False)
+    raw = _shingled(docs, distinct=False)
     aggs = [
         F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"m{i}")
         for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
     ]
-    return raw.groupBy(id_col).agg(*aggs)
+    return raw.groupBy("doc_id").agg(*aggs)
 
 
-def band_buckets(signatures: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def band_buckets(signatures: DataFrame) -> DataFrame:
     """(id, bucket): one row per LSH band (bands of 2 rows over m0..m7,
     band index baked into the bucket key so bands never cross-match).
     This is the join key space for every LSH consumer — candidate
@@ -203,10 +195,10 @@ def band_buckets(signatures: DataFrame, id_col: str = "doc_id") -> DataFrame:
             for i in range(N_BANDS)
         ]
     )
-    return signatures.select(F.col(id_col), F.explode(bands).alias("bucket"))
+    return signatures.select(F.col("doc_id"), F.explode(bands).alias("bucket"))
 
 
-def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
     """Docs sharing any LSH band bucket (bands of 2 rows over m0..m7).
     Equi-join on (band, bucket) — the scale path: candidates are linear
     in bucket occupancy, not quadratic in corpus size. The two sides are
@@ -214,22 +206,16 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id") -> DataFr
     runtime — do NOT filter one side here (a per-side filter breaks the
     reuse and runs the signature aggregation twice; measured r9, the
     first b-side-restriction draft cost ~1 s at sf0.1)."""
-    keyed = band_buckets(signatures, id_col)
+    keyed = band_buckets(signatures)
     a, b = keyed.alias("a"), keyed.alias("b")
     return (
-        a.join(b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"))
+        a.join(b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
 
 
-def jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    shingled: DataFrame | None = None,
-) -> DataFrame:
+def jaccard_pairs(docs: DataFrame, shingled: DataFrame | None = None) -> DataFrame:
     """Exact shingle-set Jaccard (basis points) for every doc pair
     sharing >= 1 shingle — the shingle itself is the blocker, so this
     is only sane at small scale. ``shingled`` lets a caller pass a
@@ -239,20 +225,20 @@ def jaccard_pairs(
     The end-to-end LSH dedup should use ``minhash_lsh_pairs``, which
     scores only candidate pairs and never runs a corpus-wide distinct
     or set-size pass."""
-    sh = shingled if shingled is not None else _shingled(docs, id_col, text_col, k)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
+    sh = shingled if shingled is not None else _shingled(docs)
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
         a.join(
             b,
             (F.col("a.h") == F.col("b.h"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .groupBy(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"))
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    na = sizes.select(F.col(id_col).alias("doc_a"), F.col("n").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n").alias("n_b"))
+    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
+    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
     return (
         inter.join(na, "doc_a")
         .join(nb, "doc_b")
@@ -268,9 +254,7 @@ def jaccard_pairs(
     )
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
-) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     """Full MinHash → LSH-banding → exact-Jaccard pipeline as ONE
     plan-tuned operator: ``(doc_a, doc_b, jaccard_bp)`` for every LSH
     candidate pair (callers filter on the basis-point threshold).
@@ -313,13 +297,11 @@ def minhash_lsh_pairs(
       in one job before any eager broadcast build can re-derive the
       candidate subtree.
     """
-    pairs = lsh_candidate_pairs(minhash_signatures(docs, id_col, text_col, k), id_col=id_col)
-    return _verified_jaccard(docs, pairs, id_col, text_col, k)
+    pairs = lsh_candidate_pairs(minhash_signatures(docs))
+    return _verified_jaccard(docs, pairs)
 
 
-def _verified_jaccard(
-    docs: DataFrame, pairs: DataFrame, id_col: str, text_col: str, k: int
-) -> DataFrame:
+def _verified_jaccard(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """The exact-Jaccard verify tail shared by ``minhash_lsh_pairs`` and
     ``minhash_lsh_pairs_from_buckets``: candidate pairs → member prune →
     member re-shingle → intersection/size joins → jaccard_bp. Factored
@@ -331,8 +313,8 @@ def _verified_jaccard(
     n_cands = cands.count()  # materializes the persist its consumers reuse
     bc = F.broadcast if n_cands <= MAX_BROADCAST_ROWS else (lambda df: df)
     members = (
-        cands.select(F.col("doc_a").alias(id_col))
-        .union(cands.select(F.col("doc_b").alias(id_col)))
+        cands.select(F.col("doc_a").alias("doc_id"))
+        .union(cands.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
     # Re-shingle only the member DOCS (pre-explosion semi-join) rather
@@ -342,20 +324,20 @@ def _verified_jaccard(
     # (for the signature aggregate); everything pair-level re-derives
     # from the pruned doc set. distinct() here is per-member-doc shingle
     # sets, needed for exact Jaccard set sizes.
-    m_docs = docs.join(bc(members), on=id_col, how="left_semi")
+    m_docs = docs.join(bc(members), on="doc_id", how="left_semi")
     m_sh = track_persist(
-        _shingled(m_docs, id_col, text_col, k, distinct=True).select(id_col, "h")
+        _shingled(m_docs).select("doc_id", "h")
     )
     inter = (
         bc(cands)
-        .join(m_sh.select(F.col(id_col).alias("doc_a"), "h"), on="doc_a")
-        .join(bc(m_sh.select(F.col(id_col).alias("doc_b"), "h")), on=["doc_b", "h"])
+        .join(m_sh.select(F.col("doc_id").alias("doc_a"), "h"), on="doc_a")
+        .join(bc(m_sh.select(F.col("doc_id").alias("doc_b"), "h")), on=["doc_b", "h"])
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    sizes = m_sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    na = sizes.select(F.col(id_col).alias("doc_a"), F.col("n").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n").alias("n_b"))
+    sizes = m_sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
+    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
     return (
         bc(bc(inter).join(na, "doc_a"))
         .join(nb, "doc_b")
@@ -376,9 +358,6 @@ def minhash_lsh_pairs_from_buckets(
     buckets: DataFrame,
     b_ids: DataFrame,
     probe_rows: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
 ) -> DataFrame:
     """``minhash_lsh_pairs`` computed from a PRE-MATERIALIZED
     ``(id, bucket)`` table covering the whole corpus (r10, VERDICT r9
@@ -407,9 +386,9 @@ def minhash_lsh_pairs_from_buckets(
     steady-state incremental run's only full-corpus touch is one slim
     columnar scan. A degenerate (huge-batch / bootstrap-sized) b-side
     drops the hint and AQE falls back to a shuffle join, same rows."""
-    a = buckets.select(F.col(id_col).alias("doc_a"), "bucket")
-    probe = buckets.join(b_ids.select(id_col).distinct(), on=id_col, how="left_semi").select(
-        F.col(id_col).alias("doc_b"), "bucket"
+    a = buckets.select(F.col("doc_id").alias("doc_a"), "bucket")
+    probe = buckets.join(b_ids.select("doc_id").distinct(), on="doc_id", how="left_semi").select(
+        F.col("doc_id").alias("doc_b"), "bucket"
     )
     pb = F.broadcast if probe_rows <= MAX_BROADCAST_ROWS else (lambda df: df)
     pairs = (
@@ -418,7 +397,7 @@ def minhash_lsh_pairs_from_buckets(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    return _verified_jaccard(docs, pairs, id_col, text_col, k)
+    return _verified_jaccard(docs, pairs)
 
 
 def _local_cc_finish(edges: DataFrame) -> DataFrame:
@@ -537,9 +516,6 @@ def _derived_finish_bound(spark) -> int:
 
 def connected_components(
     pairs: DataFrame,
-    id_a: str = "doc_a",
-    id_b: str = "doc_b",
-    max_iter: int = 25,
     input_simple: bool = False,
     local_finish_edges: int | None = None,
 ) -> DataFrame:
@@ -625,7 +601,7 @@ def connected_components(
         while ``count()`` returned exactly 20M every time; task-end
         events lag/drop under load, with or without AQE). A wrong n
         both mis-gates the local-finish bound and makes the fingerprint
-        never stabilize — the loop then burns max_iter rounds on an
+        never stabilize — the loop then burns CC_MAX_ROUNDS rounds on an
         ALREADY-CONVERGED graph and raises. The direct agg is one extra
         scan of checkpointed blocks per round (~sub-second at 20M
         edges), exact by the same guarantee as any action — and it
@@ -649,11 +625,11 @@ def connected_components(
         ).first()
         return ck, (m["n"], m["su"], m["sv"], m["sh"])
 
-    e = pairs.select(F.col(id_a).cast("long").alias("u"), F.col(id_b).cast("long").alias("v"))
+    e = pairs.select(F.col("doc_a").cast("long").alias("u"), F.col("doc_b").cast("long").alias("v"))
     if not input_simple:
         e = e.where(F.col("u") != F.col("v")).distinct()
     edges, fp = _checkpoint_with_fingerprint(e)
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         if fp[0] <= local_finish_edges:
             return _local_cc_finish(edges)
         # large-star over the undirected neighborhood view
@@ -690,7 +666,7 @@ def connected_components(
             break
         fp = new_fp
     else:
-        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+        raise RuntimeError(f"connected_components did not converge in {CC_MAX_ROUNDS} rounds")
     members = edges.select(F.col("u").alias("doc_id"), F.col("v").alias("component_id"))
     roots = (
         edges.select(F.col("v").alias("doc_id"))
@@ -700,9 +676,7 @@ def connected_components(
     return members.union(roots)
 
 
-def simhash(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 32
-) -> DataFrame:
+def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
     """``bits``-wide SimHash over whitespace tokens (with multiplicity):
     bit j is the sign of the per-bit majority vote. One explode + one
     aggregate with ``bits`` conditional sums (map-side combinable).
@@ -715,38 +689,31 @@ def simhash(
     ``simhash_hamming_pairs``'s scale note)."""
     if bits % 4 or not 4 <= bits <= 60:
         raise ValueError("bits must be a multiple of 4 in [4, 60]")
-    words = F.split(normalize_text(F.col(text_col)), " ")
-    toks = docs.select(F.col(id_col), F.explode(words).alias("tok")).withColumn(
+    words = F.split(normalize_text(F.col("text")), " ")
+    toks = docs.select(F.col("doc_id"), F.explode(words).alias("tok")).withColumn(
         "h", hex_to_long(F.substring(F.md5("tok"), 1, bits // 4))
     )
     votes = [
         F.sum(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"v{j}")
         for j in range(bits)
     ]
-    per_doc = toks.groupBy(id_col).agg(*votes)
+    per_doc = toks.groupBy("doc_id").agg(*votes)
     sim = None
     for j in range(bits):
         bit = F.when(F.col(f"v{j}") > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
         term = bit * F.lit(1 << j).cast("long")
         sim = term if sim is None else sim + term
-    return per_doc.select(F.col(id_col), sim.alias("simhash"))
+    return per_doc.select(F.col("doc_id"), sim.alias("simhash"))
 
 
-def simhash_hamming_pairs(
-    docs: DataFrame,
-    threshold: int = 3,
-    n_bands: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sim_bits: int = 32,
-) -> DataFrame:
+def simhash_hamming_pairs(docs: DataFrame, sim_bits: int = 32) -> DataFrame:
     """SimHash near-duplicate pairs: ``(doc_a, doc_b, hamming)`` for every
-    pair whose signatures differ in <= ``threshold`` bits.
+    pair whose signatures differ in <= ``SIMHASH_THRESHOLD`` bits.
 
-    EXACT under the pigeonhole guarantee: with ``n_bands`` equal-width
-    bands, any pair within hamming distance ``n_bands - 1`` shares at
-    least one band verbatim, so the banded equi-join enumerates every
-    qualifying pair (``threshold`` must stay < ``n_bands``) and the
+    EXACT under the pigeonhole guarantee: with ``SIMHASH_BANDS``
+    equal-width bands, any pair within hamming distance
+    ``SIMHASH_BANDS - 1`` shares at least one band verbatim, so the
+    banded equi-join enumerates every qualifying pair and the
     popcount-of-xor verify drops false candidates. Candidate generation
     shuffles on (band, value) — an equi-join, never all-pairs.
 
@@ -761,29 +728,27 @@ def simhash_hamming_pairs(
     through the verify (max bucket 58,314 docs; 229.4 s end-to-end, the
     one superlinear row of the 1000x probe) vs 60-bit's 2.07B
     candidates (110x fewer; max bucket 1,216; 27.3 s end-to-end,
-    8.4x) — see SCALE30.md's 1000x notes. Same ``threshold=3`` on a
+    8.4x) — see SCALE30.md's 1000x notes. Same threshold 3 on a
     wider fingerprint is the published production operating point
     (Manku et al., WWW'07: f=64, k=3), a strictly finer near-dup
     notion than 3-of-32.
     """
-    if threshold >= n_bands:
-        raise ValueError("pigeonhole exactness needs threshold < n_bands")
-    band_width = sim_bits // n_bands
+    band_width = sim_bits // SIMHASH_BANDS
     mask = (1 << band_width) - 1
-    sims = simhash(docs, id_col, text_col, bits=sim_bits)
+    sims = simhash(docs, bits=sim_bits)
     band_vals = F.array(
         *[
             F.shiftright(F.col("simhash"), band_width * j).bitwiseAND(F.lit(mask))
-            for j in range(n_bands)
+            for j in range(SIMHASH_BANDS)
         ]
     )
     bands = sims.select(
-        F.col(id_col), F.col("simhash"), F.posexplode(band_vals).alias("band", "bv")
+        F.col("doc_id"), F.col("simhash"), F.posexplode(band_vals).alias("band", "bv")
     )
     hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).cast("long")
     # hamming filter BEFORE the pair distinct: the xor-popcount is free
     # (JVM expression on join output), and filtering first keeps the
-    # up-to-n_bands duplicate candidates of NON-qualifying pairs out of
+    # up-to-SIMHASH_BANDS duplicate candidates of NON-qualifying pairs out of
     # the distinct's shuffle (measured ~2x fewer rows shuffled here).
     return (
         bands.alias("a")
@@ -792,14 +757,14 @@ def simhash_hamming_pairs(
             [
                 F.col("a.band") == F.col("b.band"),
                 F.col("a.bv") == F.col("b.bv"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
+                F.col("a.doc_id") < F.col("b.doc_id"),
             ],
         )
         .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
             hamming.alias("hamming"),
         )
-        .where(F.col("hamming") <= threshold)
+        .where(F.col("hamming") <= SIMHASH_THRESHOLD)
         .distinct()
     )

@@ -20,14 +20,13 @@ def enrich_update(
     updates: DataFrame,
     key: str,
     set_cols: dict[str, str],
-    only_if_null: bool = True,
 ) -> DataFrame:
     """Left-join ``updates`` onto ``base`` by ``key`` and set each
     ``base[target] = updates[source]``.
 
-    ``only_if_null=True`` reproduces the reference's guarded UPDATEs
-    (later tiers only touch still-unmatched rows): an existing non-null
-    value wins over the update. Column order and non-targeted columns are
+    Reproduces the reference's guarded UPDATEs (later tiers only touch
+    still-unmatched rows): an existing non-null value wins over the
+    update. Column order and non-targeted columns are
     preserved, so the output is a drop-in new snapshot of ``base``.
     """
     upd = updates.select(
@@ -38,10 +37,7 @@ def enrich_update(
     out_cols = []
     for c in base.columns:
         if c in set_cols:
-            new = F.col(f"_new_{c}")
-            old = F.col(c)
-            merged = F.coalesce(old, new) if only_if_null else F.coalesce(new, old)
-            out_cols.append(merged.alias(c))
+            out_cols.append(F.coalesce(F.col(c), F.col(f"_new_{c}")).alias(c))
         else:
             out_cols.append(F.col(c))
     return joined.select(*out_cols)

@@ -23,6 +23,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# add_ride_durations.py:68-84: a duration is final once the last point is
+# SETTLE_HOURS old; a ride still unfinalized after STALE_DAYS gets 0.
+SETTLE_HOURS = 6
+STALE_DAYS = 2
+
 
 def first_last_by(
     df: DataFrame,
@@ -59,35 +64,30 @@ def first_last_by(
 
 def ride_durations(
     locations: DataFrame,
-    ride_col: str = "siri_ride_id",
-    ts_col: str = "recorded_at_time",
-    id_col: str = "id",
     now: Column | None = None,
-    settle_hours: int = 6,
-    stale_days: int = 2,
 ) -> DataFrame:
     """The add-ride-durations task semantics on a locations DataFrame.
 
     Mirrors add_ride_durations.py:68-84: duration is only *finalized*
-    when the last point settled (older than ``settle_hours``); a ride
-    seen but unfinalized for more than ``stale_days`` gets duration 0.
+    when the last point settled (older than ``SETTLE_HOURS``); a ride
+    seen but unfinalized for more than ``STALE_DAYS`` gets duration 0.
 
     Returns: ride id, first/last location id, first/last ts,
     duration_minutes (int, NULL when not yet finalizable).
     """
     now = now if now is not None else F.current_timestamp()
-    fl = first_last_by(locations, ride_col, ts_col, [id_col], tie_cols=id_col)
-    first_ts = F.col(f"min_{ts_col}")
-    last_ts = F.col(f"max_{ts_col}")
-    settled = last_ts < (now - F.expr(f"INTERVAL {settle_hours} HOURS"))
-    stale = first_ts < (now - F.expr(f"INTERVAL {stale_days} DAYS"))
+    fl = first_last_by(locations, "siri_ride_id", "recorded_at_time", ["id"], tie_cols="id")
+    first_ts = F.col("min_recorded_at_time")
+    last_ts = F.col("max_recorded_at_time")
+    settled = last_ts < (now - F.expr(f"INTERVAL {SETTLE_HOURS} HOURS"))
+    stale = first_ts < (now - F.expr(f"INTERVAL {STALE_DAYS} DAYS"))
     duration = F.round(
         (F.unix_timestamp(last_ts) - F.unix_timestamp(first_ts)) / 60.0
     ).cast("int")
     return fl.select(
-        F.col(ride_col),
-        F.col(f"first_{id_col}").alias("first_vehicle_location_id"),
-        F.col(f"last_{id_col}").alias("last_vehicle_location_id"),
+        F.col("siri_ride_id"),
+        F.col("first_id").alias("first_vehicle_location_id"),
+        F.col("last_id").alias("last_vehicle_location_id"),
         first_ts.alias("first_ts"),
         last_ts.alias("last_ts"),
         F.when(settled, duration)

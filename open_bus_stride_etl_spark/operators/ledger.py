@@ -16,12 +16,9 @@ from pyspark.sql import functions as F
 def missing_dates(
     all_units: DataFrame,
     ledger: DataFrame,
-    unit_col: str = "date",
-    task_col: str = "task_name",
-    success_col: str = "success",
     task_name: str | None = None,
 ) -> DataFrame:
-    """Units that need (re)processing for ``task_name``: never attempted,
+    """Dates that need (re)processing for ``task_name``: never attempted,
     or attempted without recorded success (tri-state: false OR null).
 
     One left join expresses the whole tri-state rule (the original
@@ -33,19 +30,19 @@ def missing_dates(
     final distinct collapses duplicate ledger attempts."""
     led = ledger
     if task_name is not None:
-        led = led.where(F.col(task_col) == F.lit(task_name))
-    j = all_units.select(unit_col).join(
-        led.select(unit_col, success_col).withColumn("_present", F.lit(True)),
-        on=unit_col,
+        led = led.where(F.col("task_name") == F.lit(task_name))
+    j = all_units.select("date").join(
+        led.select("date", "success").withColumn("_present", F.lit(True)),
+        on="date",
         how="left",
     )
     return (
         j.where(
             F.col("_present").isNull()
-            | F.col(success_col).isNull()
-            | (F.col(success_col) == F.lit(False))
+            | F.col("success").isNull()
+            | (F.col("success") == F.lit(False))
         )
-        .select(unit_col)
+        .select("date")
         .distinct()
-        .orderBy(F.col(unit_col).desc())
+        .orderBy(F.col("date").desc())
     )

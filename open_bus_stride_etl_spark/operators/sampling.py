@@ -28,7 +28,7 @@ def hash_bucket(key: Column, buckets: int = 100, seed: str = "") -> Column:
 
 
 def stratified_hash_sample(
-    df: DataFrame, key_col: str, strata_col: str, pcts: dict, seed: str = ""
+    df: DataFrame, key_col: str, strata_col: str, pcts: dict
 ) -> DataFrame:
     """Per-stratum deterministic sampling rates (e.g. downsample the
     dominant language, keep all of a rare one): ``pcts`` maps stratum
@@ -40,7 +40,7 @@ def stratified_hash_sample(
         rate = F.when(cond, F.lit(pct)) if rate is None else rate.when(cond, F.lit(pct))
     rate = rate.otherwise(F.lit(0))
     bucket = hash_bucket(
-        F.concat(F.col(key_col).cast("string"), F.lit("|"), F.col(strata_col)), 100, seed
+        F.concat(F.col(key_col).cast("string"), F.lit("|"), F.col(strata_col)), 100
     )
     return df.where(bucket < rate)
 
@@ -64,7 +64,7 @@ def reservoir_per_group(
 
 
 def shard_shuffle(
-    df: DataFrame, id_col: str = "doc_id", n_shards: int = 32, seed: str = ""
+    df: DataFrame, n_shards: int = 32, seed: str = ""
 ) -> DataFrame:
     """Deterministic global training order as ``(id, shard, pos)`` —
     the reproducible corpus shuffle every training run needs. Each row
@@ -81,15 +81,15 @@ def shard_shuffle(
     At real scale n_shards is thousands (one output file per shard) and
     the per-shard rank is a partitioned sort with no global barrier."""
     key = hex_to_long(
-        F.substring(F.md5(F.concat(F.lit(seed), F.col(id_col).cast("string"))), 1, 10)
+        F.substring(F.md5(F.concat(F.lit(seed), F.col("doc_id").cast("string"))), 1, 10)
     )
     from pyspark.sql import Window  # noqa: PLC0415
 
-    base = df.select(F.col(id_col), key.alias("_k"))
+    base = df.select(F.col("doc_id"), key.alias("_k"))
     shard = F.pmod(F.col("_k"), F.lit(n_shards))
-    w = Window.partitionBy(shard).orderBy("_k", id_col)
+    w = Window.partitionBy(shard).orderBy("_k", "doc_id")
     return base.select(
-        F.col(id_col),
+        F.col("doc_id"),
         shard.cast("long").alias("shard"),
         F.row_number().over(w).cast("long").alias("pos"),
     )

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 QUANT = 1_000_000
+# Sign-LSH bucket width: the leading dimensions whose signs key a bucket.
+LSH_BITS = 8
 
 
 from .util import fan_out as _fan_out
@@ -53,12 +55,12 @@ def _topk_per_column(cos, cand_ids, k):
         yield j, cand_sub[top], col_sub[top]
 
 
-def quantized_vec(vec_col: str) -> "F.Column":
-    """array<float> -> array<bigint> of micro-units. float32 -> double
-    BEFORE the multiply: both engines must quantize the same exact
+def quantized_vec() -> "F.Column":
+    """``embedding`` array<float> -> array<bigint> of micro-units.
+    float32 -> double BEFORE the multiply: both engines must quantize the same exact
     double value or dot products drift."""
     return F.transform(
-        F.col(vec_col), lambda x: F.round(x.cast("double") * QUANT).cast("long")
+        F.col("embedding"), lambda x: F.round(x.cast("double") * QUANT).cast("long")
     )
 
 
@@ -66,8 +68,6 @@ def cosine_topk(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_query_rows: int = 100_000,
 ) -> DataFrame:
     """Exact top-k nearest (by cosine) corpus vectors per query vector.
@@ -110,7 +110,7 @@ def cosine_topk(
             "large query sets use the ANN operators (ivf_topk, lsh_topk)."
         )
     q_rows = (
-        queries.select(F.col(id_col).alias("query_id"), quantized_vec(vec_col).alias("_qq"))
+        queries.select(F.col("vec_id").alias("query_id"), quantized_vec().alias("_qq"))
         .collect()
     )
     spark = emb.sparkSession
@@ -161,7 +161,7 @@ def cosine_topk(
             )
 
     cv = _fan_out(
-        emb.select(F.col(id_col).alias("cand_id"), quantized_vec(vec_col).alias("_cq"))
+        emb.select(F.col("vec_id").alias("cand_id"), quantized_vec().alias("_cq"))
     )
     scored = cv.mapInPandas(
         score_batches, schema="query_id long, cand_id long, cos double"
@@ -177,9 +177,7 @@ def cosine_topk(
 def embedding_near_dup_pairs(
     emb: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bits: int = 8,
+    bits: int = LSH_BITS,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (the semantic-dedup stage of
     an LLM data pipeline): pairs sharing a sign-LSH bucket whose cosine
@@ -198,9 +196,9 @@ def embedding_near_dup_pairs(
     halves expected occupancy); exactness is the same integer-in-float64
     contract as cosine_topk."""
     v = emb.select(
-        F.col(id_col).alias("_id"),
-        sign_lsh_bucket(vec_col, bits).alias("bucket"),
-        quantized_vec(vec_col).alias("_v"),
+        F.col("vec_id").alias("_id"),
+        sign_lsh_bucket(bits).alias("bucket"),
+        quantized_vec().alias("_v"),
     )
     return _pairs_within_bucket(v, threshold)
 
@@ -209,9 +207,6 @@ def clustered_near_dup_pairs(
     emb: DataFrame,
     clusters: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cluster_col: str = "cluster",
     max_occupancy: int = 65536,
 ) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023, public): score
@@ -248,7 +243,7 @@ def clustered_near_dup_pairs(
     # would be computed twice (measured +0.8 s at bench scale).
     clusters = track_persist(clusters)
     occ = (
-        clusters.groupBy(cluster_col)
+        clusters.groupBy("cluster")
         .count()
         .agg(F.max("count").alias("m"))
         .collect()[0]["m"]
@@ -261,10 +256,10 @@ def clustered_near_dup_pairs(
             "k proportional to N) so clusters stay bounded, or raise "
             "max_occupancy only if the executors can absorb the flops."
         )
-    v = emb.join(clusters, on=id_col).select(
-        F.col(id_col).alias("_id"),
-        F.col(cluster_col).alias("bucket"),
-        quantized_vec(vec_col).alias("_v"),
+    v = emb.join(clusters, on="vec_id").select(
+        F.col("vec_id").alias("_id"),
+        F.col("cluster").alias("bucket"),
+        quantized_vec().alias("_v"),
     )
     return _pairs_within_bucket(v, threshold)
 
@@ -316,8 +311,6 @@ def ann_ivf_topk(
     queries: DataFrame,
     k: int = 3,
     n_pivots: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-style approximate top-k: an inverted-file index with
     ``n_pivots`` deterministic pivots (the first vectors by id — a real
@@ -347,13 +340,13 @@ def ann_ivf_topk(
     from pyspark.sql import types as T
 
     piv_rows = (
-        emb.orderBy(id_col)
+        emb.orderBy("vec_id")
         .limit(n_pivots)
-        .select(F.col(id_col).alias("pivot_id"), quantized_vec(vec_col).alias("_pv"))
+        .select(F.col("vec_id").alias("pivot_id"), quantized_vec().alias("_pv"))
         .collect()
     )
     q_rows = (
-        queries.select(F.col(id_col).alias("query_id"), quantized_vec(vec_col).alias("_qq"))
+        queries.select(F.col("vec_id").alias("query_id"), quantized_vec().alias("_qq"))
         .collect()
     )
     spark = emb.sparkSession
@@ -387,7 +380,7 @@ def ann_ivf_topk(
     }
 
     cv = _fan_out(
-        emb.select(F.col(id_col).alias("cand_id"), quantized_vec(vec_col).alias("_cq"))
+        emb.select(F.col("vec_id").alias("cand_id"), quantized_vec().alias("_cq"))
     )
     return _partitioned_probe(cv, by_cell, k, key_of=cells_of)
 
@@ -454,12 +447,12 @@ def _partitioned_probe(cv, by_key, k, key_of=None):
     )
 
 
-def sign_lsh_bucket(vec_col: str = "embedding", bits: int = 8) -> "F.Column":
+def sign_lsh_bucket(bits: int = LSH_BITS) -> "F.Column":
     """Bucket id from the sign pattern of the first ``bits`` dimensions
     (axis-aligned hyperplane LSH — deterministic, engine-portable)."""
     out = F.lit(0).cast("long")
     for j in range(bits):
-        bit = F.when(F.element_at(F.col(vec_col), j + 1) > 0, F.lit(1).cast("long")).otherwise(
+        bit = F.when(F.element_at(F.col("embedding"), j + 1) > 0, F.lit(1).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
         out = out + bit * F.lit(1 << j).cast("long")
@@ -470,9 +463,6 @@ def ann_lsh_topk(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bits: int = 8,
     probes: int = 0,
 ) -> DataFrame:
     """Approximate top-k: only bucket-mates (same sign pattern) are
@@ -481,7 +471,7 @@ def ann_lsh_topk(
     ``probes=1`` enables multi-probe: each query additionally probes
     every single-bit-flip of its bucket (the standard recall booster —
     a near-neighbor differing in ONE borderline sign is recovered at
-    the cost of ``bits`` extra bucket lookups, NOT a bigger table).
+    the cost of ``LSH_BITS`` extra bucket lookups, NOT a bigger table).
     Implemented by registering the query under the flipped keys in the
     broadcast dict; the corpus-side pass is completely unchanged.
 
@@ -496,9 +486,9 @@ def ann_lsh_topk(
     from pyspark.sql import types as T
 
     q_rows = queries.select(
-        F.col(id_col).alias("query_id"),
-        sign_lsh_bucket(vec_col, bits).alias("bucket"),
-        quantized_vec(vec_col).alias("_qq"),
+        F.col("vec_id").alias("query_id"),
+        sign_lsh_bucket().alias("bucket"),
+        quantized_vec().alias("_qq"),
     ).collect()
     spark = emb.sparkSession
     if not q_rows:
@@ -519,7 +509,7 @@ def ann_lsh_topk(
     q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
     probe_keys = [q_bucket]
     if probes >= 1:
-        probe_keys += [q_bucket ^ (1 << j) for j in range(bits)]
+        probe_keys += [q_bucket ^ (1 << j) for j in range(LSH_BITS)]
     all_keys = np.concatenate(probe_keys)
     all_idx = np.tile(np.arange(len(q_ids)), len(probe_keys))
     by_bucket = {}
@@ -528,9 +518,9 @@ def ann_lsh_topk(
         by_bucket[int(b)] = (q_ids[idx], q_mat[idx], q_norm[idx])
     cv = _fan_out(
         emb.select(
-            F.col(id_col).alias("cand_id"),
-            sign_lsh_bucket(vec_col, bits).alias("_key"),
-            quantized_vec(vec_col).alias("_cq"),
+            F.col("vec_id").alias("cand_id"),
+            sign_lsh_bucket().alias("_key"),
+            quantized_vec().alias("_cq"),
         )
     )
     return _partitioned_probe(cv, by_bucket, k)

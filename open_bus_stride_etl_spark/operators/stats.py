@@ -11,8 +11,13 @@ from __future__ import annotations
 
 import datetime
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+# update_ride_aggregations.py:58-74: a date is complete when at least this
+# share of its rides has both a start and an end time.
+COMPLETE_PCT = 90.0
 
 
 class FreshnessError(RuntimeError):
@@ -20,10 +25,10 @@ class FreshnessError(RuntimeError):
 
 
 def latest_snapshot_age_seconds(
-    snapshots: DataFrame, ts_col: str = "etl_start_time", now: datetime.datetime | None = None
+    snapshots: DataFrame, now: datetime.datetime | None = None
 ) -> float | None:
     """Age of the newest snapshot; None when the table is empty."""
-    row = snapshots.agg(F.max(ts_col).alias("latest")).collect()[0]
+    row = snapshots.agg(F.max("etl_start_time").alias("latest")).collect()[0]
     if row["latest"] is None:
         return None
     # naive-UTC to match the tz-naive instants Spark rows collect as
@@ -38,12 +43,11 @@ def latest_snapshot_age_seconds(
 def validate_freshness(
     snapshots: DataFrame,
     max_age_seconds: int = 3600,
-    ts_col: str = "etl_start_time",
     now: datetime.datetime | None = None,
 ) -> float:
     """Raise FreshnessError when the newest snapshot is older than the
     threshold (stats/api.py:102-112's exit-1 contract)."""
-    age = latest_snapshot_age_seconds(snapshots, ts_col, now)
+    age = latest_snapshot_age_seconds(snapshots, now)
     if age is None or age > max_age_seconds:
         raise FreshnessError(
             f"latest snapshot age {age}s exceeds {max_age_seconds}s (or table empty)"
@@ -51,32 +55,25 @@ def validate_freshness(
     return age
 
 
-def status_counts(df: DataFrame, status_col: str, window: Column | None = None) -> dict[str, int]:
-    """Counts by status within an optional predicate window
-    (stats/api.py:48-78's per-filter counts, one pass)."""
-    base = df.where(window) if window is not None else df
+def status_counts(df: DataFrame, status_col: str) -> dict[str, int]:
+    """Counts by status (stats/api.py:48-78's per-filter counts, one
+    pass; callers filter ``df`` to the window)."""
     return {
         r[status_col]: r["n"]
-        for r in base.groupBy(status_col).agg(F.count(F.lit(1)).alias("n")).collect()
+        for r in df.groupBy(status_col).agg(F.count(F.lit(1)).alias("n")).collect()
     }
 
 
-def incomplete_dates(
-    rides: DataFrame,
-    date_col: str = "date",
-    start_col: str = "start_time",
-    end_col: str = "end_time",
-    threshold_pct: float = 90.0,
-) -> DataFrame:
+def incomplete_dates(rides: DataFrame) -> DataFrame:
     """Dates whose completeness (rides with both start & end non-null)
-    falls below the threshold -> need reprocessing. One aggregation:
+    falls below ``COMPLETE_PCT`` -> need reprocessing. One aggregation:
     avg(when(complete,100,0)) per date."""
-    complete = F.when(F.col(start_col).isNotNull() & F.col(end_col).isNotNull(), 100.0).otherwise(
+    complete = F.when(F.col("start_time").isNotNull() & F.col("end_time").isNotNull(), 100.0).otherwise(
         0.0
     )
     return (
-        rides.groupBy(date_col)
+        rides.groupBy("date")
         .agg(F.avg(complete).alias("pct_complete"), F.count(F.lit(1)).alias("n_rides"))
-        .where(F.col("pct_complete") < threshold_pct)
-        .orderBy(F.col(date_col).desc())
+        .where(F.col("pct_complete") < COMPLETE_PCT)
+        .orderBy(F.col("date").desc())
     )

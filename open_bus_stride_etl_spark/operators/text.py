@@ -18,6 +18,10 @@ from ..functions.hashing import hex_to_long
 # Deterministic "BPE-ish" token regex: word pieces or single punctuation.
 BPE_TOKEN_RE = r"\w+|[^\w\s]"
 PUNCT_RE = r"[^\w\s]"
+# Every shingle operator reads word 3-grams (the oracles' _SQL_SHINGLES).
+SHINGLE_K = 3
+# prefix_fingerprint's normalized-prefix length.
+PREFIX_CHARS = 60
 STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "it")
 
 # Marker-word profiles for the n-gram language-ID heuristic. Tiny on
@@ -100,10 +104,10 @@ def doc_fingerprint(text: Column) -> Column:
     return F.md5(normalize_text(text))
 
 
-def prefix_fingerprint(text: Column, n_chars: int = 60) -> Column:
+def prefix_fingerprint(text: Column) -> Column:
     """Weak fingerprint over the normalized prefix — catches documents
     that share a head (boilerplate, near-copies with appended tails)."""
-    return F.md5(F.substring(normalize_text(text), 1, n_chars))
+    return F.md5(F.substring(normalize_text(text), 1, PREFIX_CHARS))
 
 
 
@@ -131,7 +135,7 @@ def redact_pii(text: Column) -> Column:
     return F.regexp_replace(out, PHONE_RE, "<PHONE>")
 
 
-def shingle_array(words_col: str, k: int = 3) -> Column:
+def shingle_array(words_col: str, k: int = SHINGLE_K) -> Column:
     """Word k-gram shingles of an array<string> column (by name):
     ['a','b','c','d'] -> ['a b c', 'b c d']. Empty when fewer than k
     words."""
@@ -145,10 +149,10 @@ def shingle_array(words_col: str, k: int = 3) -> Column:
     )
 
 
-def rolling_min_shingle_hash(words_col: str, k: int = 3) -> Column:
-    """Winnowing-lite: min over word-k-gram hashes (a cheap content
+def rolling_min_shingle_hash(words_col: str) -> Column:
+    """Winnowing-lite: min over word-3-gram hashes (a cheap content
     anchor that survives small edits). NULL when no shingles."""
     hashes = F.transform(
-        shingle_array(words_col, k), lambda s: hex_to_long(F.substring(F.md5(s), 1, 10))
+        shingle_array(words_col), lambda s: hex_to_long(F.substring(F.md5(s), 1, 10))
     )
     return F.array_min(hashes)

@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 from ..operators import dedup as dd
 from ..operators import text as tx
 from ..operators.util import track_checkpoint, track_persist
-from ..session import configure
 from ..sources import fs
 from ..streaming.bounded import run_bounded
 from .tasks import task
@@ -97,7 +96,6 @@ def _indexed_lsh_pairs(
 
 
 def _load_docs(spark: SparkSession, base_dir: str, input_format: str) -> DataFrame:
-    configure(spark)
     if input_format == "jsonl":
         from ..sources.jsonl import load_documents_jsonl  # noqa: PLC0415
 
@@ -105,14 +103,7 @@ def _load_docs(spark: SparkSession, base_dir: str, input_format: str) -> DataFra
     return spark.read.parquet(f"{base_dir}/documents.parquet")
 
 
-@task(
-    "llm-curate-corpus",
-    cadence="daily",
-    quality_min_bp=2000,
-    jaccard_min_bp=5000,
-    langs="en,und",
-    input_format="parquet",
-)
+@task("llm-curate-corpus", cadence="daily")
 def llm_curate_corpus(
     spark: SparkSession,
     base_dir: str,
@@ -281,7 +272,7 @@ def llm_curate_corpus(
     }
 
 
-@task("llm-build-ann-index", cadence="daily", k=8, iters=3)
+@task("llm-build-ann-index", cadence="daily")
 def llm_build_ann_index(
     spark: SparkSession,
     base_dir: str,
@@ -302,7 +293,6 @@ def llm_build_ann_index(
     Lloyd round = one scan of the persisted long-format points; only
     k x dim ints ever reach the driver); the index write shuffles
     (id, cluster) pairs, never vectors."""
-    configure(spark)
     from ..operators.clustering import kmeans_fit  # noqa: PLC0415
 
     emb = spark.read.parquet(f"{base_dir}/embeddings.parquet")
@@ -371,7 +361,7 @@ def ivf_probe_persisted(
     q_rows = (
         emb.orderBy("vec_id")
         .limit(n_queries)
-        .select(F.col("vec_id").alias("query_id"), quantized_vec("embedding").alias("_qq"))
+        .select(F.col("vec_id").alias("query_id"), quantized_vec().alias("_qq"))
         .collect()
     )
     q_ids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
@@ -392,7 +382,7 @@ def ivf_probe_persisted(
 
     assign = spark.read.parquet(f"{idx_dir}/assignments.parquet")
     cv = (
-        emb.select(F.col("vec_id").alias("cand_id"), quantized_vec("embedding").alias("_cq"))
+        emb.select(F.col("vec_id").alias("cand_id"), quantized_vec().alias("_cq"))
         .join(
             assign.select(F.col("vec_id").alias("cand_id"), F.col("cluster").alias("_key")),
             on="cand_id",
@@ -403,7 +393,7 @@ def ivf_probe_persisted(
     return _partitioned_probe(cv, by_cell, k_top), meta
 
 
-@task("llm-ann-query", cadence="daily", k_top=5, n_probe=2, n_queries=16)
+@task("llm-ann-query", cadence="daily")
 def llm_ann_query(
     spark: SparkSession,
     base_dir: str,
@@ -428,7 +418,6 @@ def llm_ann_query(
     nothing shuffles vectors except the one corpus scan's Arrow
     batches; raising n_probe trades recall for the number of cell
     blocks each batch matmuls against."""
-    configure(spark)
     idx = index_dir or f"{base_dir}/ann_index"
     emb = spark.read.parquet(f"{base_dir}/embeddings.parquet")
     result, probe_meta = ivf_probe_persisted(
@@ -495,13 +484,7 @@ def build_training_shards(
 
 
 
-@task(
-    "llm-export-training-shards",
-    cadence="daily",
-    vocab_size=100,
-    n_shards=8,
-    seed="ep0",
-)
+@task("llm-export-training-shards", cadence="daily")
 def llm_export_training_shards(
     spark: SparkSession,
     base_dir: str,
@@ -534,8 +517,6 @@ def llm_export_training_shards(
     (one output file per shard partition at real scale). Reads
     ``in_dir`` (default: the llm-curate-corpus output if present, else
     the raw documents table)."""
-    configure(spark)
-
     src = in_dir
     if src is None:
         cur = f"{base_dir}/curated_documents"
@@ -563,7 +544,7 @@ def llm_export_training_shards(
     }
 
 
-@task("llm-stream-ingest-dedup", cadence="hourly", max_files_per_trigger=0)
+@task("llm-stream-ingest-dedup", cadence="hourly")
 def llm_stream_ingest_dedup(
     spark: SparkSession,
     base_dir: str,
@@ -600,8 +581,6 @@ def llm_stream_ingest_dedup(
     append-back is visible. Admitted docs land as parquet (text and
     all); the lake-compaction task owns the small-file debt both sinks
     accrue."""
-    configure(spark)
-
     src = in_dir or f"{base_dir}/ingest"
     idx_dir = index_dir or f"{base_dir}/lsh_band_index"
     dst = out_dir or f"{base_dir}/ingested_documents"

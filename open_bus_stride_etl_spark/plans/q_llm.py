@@ -89,7 +89,7 @@ def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep-first semantics (min doc_id is the keeper). Full-text md5 is
     `doc_fingerprints`; the prefix variant produces non-trivial groups
     on this corpus."""
-    d = _docs(spark, sf_dir).withColumn("fingerprint", tx.prefix_fingerprint(F.col("text"), 60))
+    d = _docs(spark, sf_dir).withColumn("fingerprint", tx.prefix_fingerprint(F.col("text")))
     return (
         d.groupBy("fingerprint")
         .agg(
@@ -148,7 +148,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the co-shingle self-join + the set-size aggregate) and, unlike the
     # LSH variant's plan, gets no exchange reuse across them — persist
     # wins ~20% at sf0.1 AND sf1 (measured both ways at both scales)
-    sh = track_persist(dd._shingled(d, "doc_id", "text", 3))
+    sh = track_persist(dd._shingled(d))
     return dd.jaccard_pairs(d, shingled=sh).where(F.col("jaccard_bp") >= 5000)
 
 
@@ -178,10 +178,10 @@ def _sql_simhash_sims(bits: int) -> str:
 
 
 # ... and of simhash_hamming_pairs' banded candidate generation.
-def _sql_simhash_cand(bits: int, n_bands: int = 4) -> str:
-    width = bits // n_bands
+def _sql_simhash_cand(bits: int) -> str:
+    width = bits // dd.SIMHASH_BANDS
     mask = (1 << width) - 1
-    band_list = ", ".join(str(b) for b in range(n_bands))
+    band_list = ", ".join(str(b) for b in range(dd.SIMHASH_BANDS))
     return f"""
     bands AS (
       SELECT doc_id, simhash, j.band, (simhash >> ({width} * j.band)) & {mask} AS bv
@@ -215,7 +215,7 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     hamming <= 3 at 4 bands), popcount(xor) verify. Complements
     MinHash-LSH (set similarity) with bit-level cosine-ish similarity at
     a fraction of the shuffle (4 rows/doc vs one row per shingle)."""
-    return dd.simhash_hamming_pairs(_docs(spark, sf_dir), threshold=3, n_bands=4)
+    return dd.simhash_hamming_pairs(_docs(spark, sf_dir))
 
 
 @query(
@@ -237,9 +237,7 @@ def dedup_simhash60(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries its own driver verdict instead of riding the 32-bit oracle
     chain; the 32-bit twin stays registered (tail) for the historical
     verdict chain and as dedup_groups_cc's upstream."""
-    return dd.simhash_hamming_pairs(
-        _docs(spark, sf_dir), threshold=3, n_bands=4, sim_bits=60
-    )
+    return dd.simhash_hamming_pairs(_docs(spark, sf_dir), sim_bits=60)
 
 
 # ---------------------------------------------------------------------------
@@ -274,7 +272,7 @@ def dedup_groups_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact but quadratic-in-component; the Spark side is the
     O(log^2 n)-round large-star/small-star operator
     (operators/dedup.py:connected_components), the corpus-scale path."""
-    pairs = dd.simhash_hamming_pairs(_docs(spark, sf_dir), threshold=3, n_bands=4)
+    pairs = dd.simhash_hamming_pairs(_docs(spark, sf_dir))
     # simhash pairs are distinct with doc_a < doc_b by construction, so
     # the CC operator's defensive dedup shuffle is skipped
     return dd.connected_components(pairs, input_simple=True)
@@ -313,9 +311,7 @@ def dedup_groups_cc60(spark: SparkSession, sf_dir: str) -> DataFrame:
     the measured production pipeline carries its own driver verdict
     (VERDICT r7 ask #2); the 32-bit dedup_groups_cc moves to the tail
     as the historical oracle-chain twin."""
-    pairs = dd.simhash_hamming_pairs(
-        _docs(spark, sf_dir), threshold=3, n_bands=4, sim_bits=60
-    )
+    pairs = dd.simhash_hamming_pairs(_docs(spark, sf_dir), sim_bits=60)
     # simhash pairs are distinct with doc_a < doc_b by construction, so
     # the CC operator's defensive dedup shuffle is skipped
     return dd.connected_components(pairs, input_simple=True)
@@ -602,7 +598,7 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         tx.doc_fingerprint(F.col("text")).alias("fingerprint"),
-        tx.prefix_fingerprint(F.col("text"), 60).alias("prefix_fingerprint"),
+        tx.prefix_fingerprint(F.col("text")).alias("prefix_fingerprint"),
         tx.rolling_min_shingle_hash("_words").alias("min_shingle_hash"),
     )
 
@@ -1103,9 +1099,7 @@ def quantile_quality_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = d.select(
         "doc_id", "lang", tx.quality_score_bp(F.col("text")).alias("quality_bp")
     )
-    return cu.quantile_threshold_filter(
-        scored, "lang", "quality_bp", keep_top_n_of=(1, 5)
-    ).select("doc_id", "lang", "quality_bp", "thr_quality_bp")
+    return cu.quantile_threshold_filter(scored, "lang", "quality_bp").select("doc_id", "lang", "quality_bp", "thr_quality_bp")
 
 
 @query(
@@ -1259,11 +1253,11 @@ def split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.util import track_persist  # noqa: PLC0415
 
     d = _docs(spark, sf_dir)
-    fp = d.select("doc_id", tx.prefix_fingerprint(F.col("text"), 60).alias("_f"))
+    fp = d.select("doc_id", tx.prefix_fingerprint(F.col("text")).alias("_f"))
     comp = fp.select(
         "doc_id", F.min("doc_id").over(Window.partitionBy("_f")).alias("component_id")
     )
-    split = cu.leakage_safe_split(d, components=comp, seed="split")
+    split = cu.leakage_safe_split(d, components=comp)
     g = track_persist(
         split.join(comp, on="doc_id")
         .groupBy("component_id", "split")
@@ -1315,10 +1309,9 @@ def training_shard_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 # unlike RNG sampling — oracle-checkable). operators/sampling.py.
 # ---------------------------------------------------------------------------
 
-def _bucket_sql(key_expr: str, seed: str = "") -> str:
-    return (
-        f"CAST(('0x' || substr(md5({key_expr} || '{seed}'), 1, 10)) AS BIGINT) % 100"
-    )
+def _bucket_sql(key_expr: str) -> str:
+    # sampling.hash_bucket(key, 100): md5 of the key and the empty salt
+    return f"CAST(('0x' || substr(md5({key_expr} || ''), 1, 10)) AS BIGINT) % 100"
 
 
 _STRATA = {"click": 5, "view": 20, "purchase": 100}
@@ -1458,7 +1451,7 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     posexplode, no shuffle; the shape of every context-window splitter."""
     from ..operators import chunking as ck
 
-    return ck.chunk_fixed(_docs(spark, sf_dir), chunk_chars=120, overlap=20)
+    return ck.chunk_fixed(_docs(spark, sf_dir))
 
 
 @query(
@@ -1644,12 +1637,12 @@ def shared_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Repeated-span boilerplate detection: the share of each document's
     word-3-gram shingles that also occur in at least one OTHER document
-    (min_df=2 on this small corpus; production uses a large min_df so
+    (BOILER_MIN_DF = 2 on this small corpus; production uses a large one so
     the hot set is a broadcastable head). Templated docs score near
     10000 bp; unique prose near 0."""
     from ..operators import corpus_stats as cs  # noqa: PLC0415
 
-    return cs.boilerplate_stats(_docs(spark, sf_dir), min_df=2)
+    return cs.boilerplate_stats(_docs(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -1979,7 +1972,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     PRE-MATERIALIZED index (the llm-curate-corpus shape) it was 12x
     slower than the plain AQE anti-join too."""
     d = _docs(spark, sf_dir).withColumn(
-        "fingerprint", tx.prefix_fingerprint(F.col("text"), 60)
+        "fingerprint", tx.prefix_fingerprint(F.col("text"))
     )
     hist = (
         d.where(F.col("doc_id") % 4 != 3)

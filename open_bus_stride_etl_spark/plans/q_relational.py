@@ -362,7 +362,7 @@ def ledger_missing_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("task_name", F.lit("t"))
     )
-    return missing_dates(all_days, ledger, unit_col="date", task_name="t")
+    return missing_dates(all_days, ledger, task_name="t")
 
 
 # ---------------------------------------------------------------------------

@@ -302,7 +302,7 @@ def enrich_update_guarded(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", F.concat(F.lit("upd-"), F.col("o_orderpriority")).alias("new_val")
     )
     return enrich_update(
-        base, updates, key="o_orderkey", set_cols={"enrichment": "new_val"}, only_if_null=True
+        base, updates, key="o_orderkey", set_cols={"enrichment": "new_val"}
     )
 
 

@@ -474,7 +474,7 @@ def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     raw, src_dir = _table_stream(spark, sf_dir, "documents")
     d = raw.select(
-        prefix_fingerprint(F.col("text"), 60).alias("fingerprint"),
+        prefix_fingerprint(F.col("text")).alias("fingerprint"),
         F.timestamp_seconds(F.lit(1700000000) + F.col("doc_id")).alias("ingest_ts"),
     )
     deduped = (

@@ -61,9 +61,7 @@ def add_ride_durations(
         )
         .join(todo.withColumnRenamed("id", "siri_ride_id"), on="siri_ride_id", how="left_semi")
     )
-    durs = ride_durations(
-        ride_locs, ride_col="siri_ride_id", ts_col="recorded_at_time", id_col="id", now=now
-    ).withColumnRenamed("siri_ride_id", "id")
+    durs = ride_durations(ride_locs, now=now).withColumnRenamed("siri_ride_id", "id")
     updated = enrich_update(
         rides,
         durs.withColumn("upd_marker", now),
@@ -75,7 +73,6 @@ def add_ride_durations(
             "updated_first_last_vehicle_locations": "upd_marker",
             "updated_duration_minutes": "upd_marker",
         },
-        only_if_null=True,
     )
     return updated
 

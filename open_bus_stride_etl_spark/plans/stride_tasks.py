@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..operators.ledger import missing_dates
 from ..operators.stats import incomplete_dates, status_counts, validate_freshness
-from ..sources import parquet_stats, stride_lake as lake
+from ..sources import fs, parquet_stats, stride_lake as lake
 from ..sources.artifacts import register_artifact
 from ..sources.csv_package import partitioned_csv, publish_packages, read_manifest
 from . import stride
@@ -269,7 +269,7 @@ def _flat_export_hourly(
     )
 
 
-@task("siri-hourly-update-packages", cadence="daily", force_days=5, chunk_hours=168)
+@task("siri-hourly-update-packages", cadence="daily")
 def siri_hourly_update_packages(
     spark: SparkSession,
     base_dir: str,
@@ -310,7 +310,7 @@ def siri_hourly_update_packages(
     only — their created/updated/skipped/empty outcomes are simply not
     decided this run, matching the reference's stop-where-you-are
     contract."""
-    out_dir = out_dir or os.path.join(base_dir, "packages")
+    out_dir = fs.local_path(out_dir or os.path.join(base_dir, "packages"))
     locations = lake.read_table(spark, base_dir, "siri_vehicle_location")
 
     bounds = locations.agg(
@@ -370,7 +370,7 @@ def siri_packages_backfill(
     incremental path; this is the catch-up path, where per-hour loop
     latency (2 jobs x N hours) would dominate at scale. Both go through
     ``csv_package.publish_packages``."""
-    out_dir = out_dir or os.path.join(base_dir, "packages")
+    out_dir = fs.local_path(out_dir or os.path.join(base_dir, "packages"))
     wide = _flat_export_hourly(spark, base_dir, "1970-01-01", "9999-01-01")
     verdicts = publish_packages(wide, "_hour", out_dir)
     written = len(verdicts["created"]) + len(verdicts["updated"])
@@ -527,7 +527,7 @@ def _load_areas(areas_file: str | None) -> dict:
         return _json.loads(text)
 
 
-@task("siri-storage-backup-cleanup", cadence="daily", older_than_days=7)
+@task("siri-storage-backup-cleanup", cadence="daily")
 def siri_storage_backup_cleanup(
     spark: SparkSession, base_dir: str, storage_root: str | None = None,
     backup_dir: str | None = None, older_than_days: int = 7,
@@ -536,8 +536,8 @@ def siri_storage_backup_cleanup(
     older than the retention window to the backup store, prune locals."""
     from ..sources.artifacts import backup_and_cleanup  # noqa: PLC0415
 
-    storage_root = storage_root or os.path.join(base_dir, "siri-storage")
-    backup_dir = backup_dir or os.path.join(base_dir, "siri-storage-backup")
+    storage_root = fs.local_path(storage_root or os.path.join(base_dir, "siri-storage"))
+    backup_dir = fs.local_path(backup_dir or os.path.join(base_dir, "siri-storage-backup"))
     if not os.path.isdir(storage_root):
         return {"archived_days": 0, "pruned_dirs": 0}
     return backup_and_cleanup(storage_root, backup_dir, older_than_days=older_than_days)
@@ -552,7 +552,7 @@ def db_copy_backup(spark: SparkSession, base_dir: str, src_path: str):
     return {"url": r["url"], "file_size": r["file_size"]}
 
 
-@task("stats-collect", cadence="daily", validate=False)
+@task("stats-collect", cadence="daily")
 def stats_collect(spark: SparkSession, base_dir: str, validate: bool = False):
     """stats/api.py:18-117 — snapshot status counts + freshness; with
     ``validate`` the task raises (exit 1) when the newest snapshot is
@@ -565,7 +565,7 @@ def stats_collect(spark: SparkSession, base_dir: str, validate: bool = False):
     return metrics
 
 
-@task("lake-compact", cadence="daily", target_mb=128)
+@task("lake-compact", cadence="daily")
 def lake_compact(
     spark: SparkSession,
     base_dir: str,

@@ -4,22 +4,25 @@ Airflow-YAML DAG declarations (SURVEY.md §3.2).
 Reference: airflow.yaml lists dags.yaml files whose tasks are "invoke
 this module function with these kwargs" (siri/dags.yaml:12-19); the
 external pipelines repo renders them. Here: a plain registry mapping
-task name -> (callable, default params, cadence), runnable by any
-scheduler through ``run_task``. Each task returns a metrics dict (the
+task name -> (callable, cadence, default date window), runnable by any
+scheduler through ``run_task``; every other parameter default lives in
+the task function's signature. Each task returns a metrics dict (the
 reference's defaultdict counters, printed as JSON — SURVEY.md §2.4 A8).
 """
 
 from __future__ import annotations
 
+import inspect
 import json
 import time
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
 from ..functions.timeutil import parse_window
 from ..operators.util import release_cached
+from ..session import configure
 
 
 @dataclass
@@ -27,15 +30,24 @@ class Task:
     name: str
     fn: Callable[..., dict]
     cadence: str = "hourly"  # metadata only; any scheduler can call run_task
-    defaults: dict = field(default_factory=dict)
+    num_days: int | None = None  # default date window; None: no window
+
+    @property
+    def defaults(self) -> dict:
+        """The window default plus every defaulted signature parameter."""
+        out = {} if self.num_days is None else {"num_days": self.num_days}
+        for p in inspect.signature(self.fn).parameters.values():
+            if p.default is not inspect.Parameter.empty:
+                out[p.name] = p.default
+        return out
 
 
 REGISTRY: dict[str, Task] = {}
 
 
-def task(name: str, cadence: str = "hourly", **defaults):
+def task(name: str, cadence: str = "hourly", num_days: int | None = None):
     def deco(fn):
-        REGISTRY[name] = Task(name=name, fn=fn, cadence=cadence, defaults=defaults)
+        REGISTRY[name] = Task(name=name, fn=fn, cadence=cadence, num_days=num_days)
         return fn
 
     return deco
@@ -44,9 +56,15 @@ def task(name: str, cadence: str = "hourly", **defaults):
 def run_task(spark: SparkSession, name: str, **params) -> dict:
     """Run one registered task; resolve the date window exactly like the
     reference CLI (common.py:37-55 incl. the 'None' literal quirk) and
-    emit a metrics JSON line."""
+    emit a metrics JSON line. The session gets the runtime confs
+    (``session.configure``) first, so a task reads and writes the same
+    way under any session: UTC, INT64 timestamps with footer statistics,
+    nanosecond parquet readable."""
     t = REGISTRY[name]
-    merged = {**t.defaults, **params}
+    configure(spark)
+    merged = dict(params)
+    if t.num_days is not None:
+        merged.setdefault("num_days", t.num_days)
     if "num_days" in merged or "min_date" in merged or "max_date" in merged:
         min_d, max_d = parse_window(
             merged.pop("min_date", None),

@@ -37,6 +37,8 @@ ARTIFACT_SCHEMA = (
     "file_prefix string, status string, metadata_json string, error string, "
     "url string, created_at timestamp, file_size long"
 )
+# Destination names probe_free_name tries before giving up.
+NAME_TRIES = 30
 
 
 def _registry_path(base_dir: str) -> str:
@@ -50,17 +52,15 @@ def read_registry(spark: SparkSession, base_dir: str) -> DataFrame:
     return spark.read.parquet(p)
 
 
-def probe_free_name(
-    storage_dir: str, name: str, max_tries: int = 30, spark: SparkSession | None = None
-) -> str:
+def probe_free_name(storage_dir: str, name: str, spark: SparkSession | None = None) -> str:
     """First free destination: ``name``, else ``name__1``..; the
     reference's 30-try suffix probe (artifacts/common.py:50-74)."""
     stem, dot, ext = name.partition(".")
-    for i in range(max_tries):
+    for i in range(NAME_TRIES):
         cand = name if i == 0 else f"{stem}__{i}{dot}{ext}"
         if not fs.exists(fs.join_path(storage_dir, cand), spark):
             return cand
-    raise RuntimeError(f"no free artifact slot for {name} after {max_tries} tries")
+    raise RuntimeError(f"no free artifact slot for {name} after {NAME_TRIES} tries")
 
 
 def register_artifact(
@@ -70,7 +70,6 @@ def register_artifact(
     src_path: str,
     metadata: dict | None = None,
     now: datetime.datetime | None = None,
-    retries: int = 3,
 ) -> Row:
     """Copy ``src_path`` into the artifact store under a collision-free
     name and append a registry row (status=uploaded). The store may be a
@@ -80,7 +79,7 @@ def register_artifact(
     fs.mkdirs(storage, spark)
     dest_name = probe_free_name(storage, os.path.basename(src_path), spark=spark)
     dest = fs.join_path(storage, dest_name)
-    fs.with_retries(lambda: fs.copy_from_local(src_path, dest, spark), retries=retries)
+    fs.with_retries(lambda: fs.copy_from_local(src_path, dest, spark))
     now = now or datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
     row = (
         file_prefix,
@@ -114,7 +113,6 @@ def backup_and_cleanup(
     backup_dir: str,
     older_than_days: int = 7,
     today: datetime.date | None = None,
-    archive_format: str = "bztar",
 ) -> dict:
     """Retention walk over ``root/YYYY/MM/DD`` directories: archive each
     dated dir older than the cutoff into ``backup_dir`` (same dated
@@ -142,7 +140,7 @@ def backup_and_cleanup(
                     continue
                 os.makedirs(os.path.join(backup_dir, y, m), exist_ok=True)
                 shutil.make_archive(
-                    os.path.join(backup_dir, y, m, d), archive_format, ddir
+                    os.path.join(backup_dir, y, m, d), "bztar", ddir
                 )
                 shutil.rmtree(ddir)
                 archived += 1

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hex_to_long, row_md5
+from . import fs
 
 # Spark simpleString -> frictionless datapackage field type
 # (https://specs.frictionlessdata.io/table-schema/ — public spec).
@@ -160,7 +161,7 @@ def load_package(spark, out_dir: str, base_name: str) -> "DataFrame":
 
 
 def read_manifest(out_dir: str, base_name: str) -> dict | None:
-    path = os.path.join(out_dir, f"{base_name}-metadata.json")
+    path = os.path.join(fs.local_path(out_dir), f"{base_name}-metadata.json")
     if not os.path.exists(path):
         return None
     with open(path) as fh:
@@ -218,7 +219,8 @@ def publish_packages(
     manifests (packagers/siri.py:194-202): no manifest and no rows ->
     empty (nothing published), no manifest -> created, same hash ->
     skipped, else updated. Returns the keys per verdict, in ``keys``
-    order.
+    order. ``out_dir`` is a local path or a ``file:`` URI
+    (``fs.local_path``).
 
     Two Spark jobs: ``key_hashes``, then one ``partitioned_csv`` write
     of the created and updated keys, whose shards the driver stitches.
@@ -228,6 +230,7 @@ def publish_packages(
     file, the zip is built from it, and it is published last with
     ``os.replace``: a crash anywhere before leaves the key with no
     manifest or its old one, so the next run rewrites it."""
+    out_dir = fs.local_path(out_dir)
     if keys is not None:
         df = df.where(F.col(key_col).isin(keys))
     hashes = key_hashes(df, key_col)

@@ -49,6 +49,20 @@ def is_uri(path: str) -> bool:
     return _SCHEME_RE.match(path) is not None
 
 
+def local_path(path: str) -> str:
+    """``path`` on the driver's own disk: a ``file:`` URI loses its
+    scheme, a plain path passes through. Any other scheme raises
+    ``ValueError``: packages and backups are assembled with the os
+    module, which would read ``file:/x`` as a relative directory."""
+    if path.startswith("file://"):
+        return path[7:]
+    if path.startswith("file:"):
+        return path[5:]
+    if is_uri(path):
+        raise ValueError(f"not a local path: {path}")
+    return path
+
+
 def join_path(base: str, *parts: str) -> str:
     if is_uri(base):
         return "/".join([base.rstrip("/"), *[p.strip("/") for p in parts]])
@@ -59,7 +73,6 @@ def with_retries(
     fn: Callable[[], T],
     retries: int = 3,
     sleep: Callable[[float], None] = time.sleep,
-    on_error: Callable[[int, Exception], None] | None = None,
 ) -> T:
     """Run ``fn`` up to ``retries`` TOTAL attempts (retries=3 is one try
     plus two retries, matching the reference's loop) with quadratic
@@ -75,8 +88,6 @@ def with_retries(
             return fn()
         except Exception as e:  # noqa: BLE001 — storage edge, retry anything
             last = e
-            if on_error is not None:
-                on_error(i, e)
     assert last is not None
     raise last
 

@@ -22,15 +22,15 @@ from __future__ import annotations
 
 import os
 
+from . import fs
+
 
 def _local_dir(path: str) -> str | None:
     """Local filesystem directory for ``path``, or None for any other
     scheme (s3a://…, hdfs://…) — those take the Spark fallback."""
-    if path.startswith("file://"):
-        path = path[7:]
-    elif path.startswith("file:"):
-        path = path[5:]
-    if "://" in path:
+    try:
+        path = fs.local_path(path)
+    except ValueError:
         return None
     return path if os.path.isdir(path) else None
 

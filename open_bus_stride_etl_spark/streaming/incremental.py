@@ -46,11 +46,7 @@ def first_last_aggs(ts_col: str, id_col: str) -> list[Column]:
     ]
 
 
-def stream_hourly_stats(
-    locations: DataFrame,
-    ts_col: str = "recorded_at_time",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def stream_hourly_stats(locations: DataFrame, ts_col: str = "recorded_at_time") -> DataFrame:
     """Per-hour min/max/count of telemetry — the packager's per-hour
     bookkeeping (packagers/siri.py:460-482, SURVEY.md §2.4 A9) as a
     tumbling-window aggregation. In append mode an hour emits exactly
@@ -58,7 +54,7 @@ def stream_hourly_stats(
     'package the hour once it has settled' (the reference's 6h guard)."""
     return (
         locations.where(F.col(ts_col).isNotNull())
-        .withWatermark(ts_col, watermark)
+        .withWatermark(ts_col, "2 hours")
         .groupBy(F.window(ts_col, "1 hour").alias("hour_window"))
         .agg(
             F.min(ts_col).alias("min_ts"),
@@ -91,7 +87,6 @@ def _track_ride(
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
     settle_hours: int = 6,
-    stale_days: int = 2,
 ) -> Iterator[pd.DataFrame]:
     """Per-ride state machine (the reference's add_ride_durations guards,
     siri/add_ride_durations.py:68-84, as explicit streaming state):
@@ -167,7 +162,6 @@ def _track_ride(
 
 def stream_ride_tracker(
     locations_with_ride: DataFrame,
-    ts_col: str = "recorded_at_time",
     watermark: str = "4 days",
     settle_hours: int = 6,
 ) -> DataFrame:
@@ -179,7 +173,7 @@ def stream_ride_tracker(
         return _track_ride(key, pdfs, state, settle_hours=settle_hours)
 
     return (
-        locations_with_ride.withWatermark(ts_col, watermark)
+        locations_with_ride.withWatermark("recorded_at_time", watermark)
         .groupBy("siri_ride_id")
         .applyInPandasWithState(
             fn,

@@ -117,7 +117,7 @@ def test_boilerplate_stats_planted_template(spark):
             (4, "too short"),
         ],
     )
-    out = {r["doc_id"]: r for r in cs.boilerplate_stats(d, min_df=2).collect()}
+    out = {r["doc_id"]: r for r in cs.boilerplate_stats(d).collect()}
     assert len(out) == 4
     # doc 1: 5 shingles ("terms of service"... "here alpha beta"), 3 hot
     assert out[1]["n_shingles"] == 5 and out[1]["n_boiler"] == 3

@@ -92,3 +92,102 @@ def test_every_public_definition_has_a_production_caller():
 def test_allowlist_has_no_stale_entries():
     stale = sorted(set(ALLOWED) - set(unreferenced()))
     assert not stale, f"ALLOWED entries that are gone or now called: {stale}"
+
+
+# --- options guard -----------------------------------------------------------
+# An optional parameter of an operator-layer function is an option only if
+# some call site sets it: production code or a test passes it something other
+# than its literal default. A variable, a different literal, a ``*args`` or
+# ``**kwargs`` forward, a ``functools.partial`` binding and a call through an
+# import alias all count as setting it, so this guard, like the one above,
+# errs towards passing.
+OPTION_ROOTS = [PACKAGE / d for d in ("operators", "functions", "sources", "streaming")]
+CALLERS = PRODUCTION + [ROOT / "tests"]
+
+OPTIONS_ALLOWED = {
+    "functions/timeutil.py:parse_window.today": "clock seam: the date every window resolves against",
+    "sources/lake.py:write_partitioned.partition_cols": "J8 carrier (ALLOWED above)",
+    "sources/lake.py:write_partitioned.mode": "J8 carrier (ALLOWED above)",
+}
+
+
+def _optional_params(fn: ast.FunctionDef):
+    """(name, positional index or None, default node) per defaulted parameter."""
+    positional = fn.args.posonlyargs + fn.args.args
+    first = len(positional) - len(fn.args.defaults)
+    for i, (arg, default) in enumerate(zip(positional[first:], fn.args.defaults), first):
+        yield arg.arg, i, default
+    for arg, default in zip(fn.args.kwonlyargs, fn.args.kw_defaults):
+        if default is not None:
+            yield arg.arg, None, default
+
+
+def _callee(node: ast.AST) -> str | None:
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    return None
+
+
+def _set_by(call_args, keywords, params) -> set[str]:
+    """The parameters in ``params`` one call sets to a non-default value."""
+    out = set()
+    for j, a in enumerate(call_args):
+        if isinstance(a, ast.Starred):  # *args forward: every later positional
+            out |= {name for name, i, _ in params if i is not None and i >= j}
+            break
+        out |= {name for name, i, d in params if i == j and ast.dump(a) != ast.dump(d)}
+    for kw in keywords:
+        if kw.arg is None:  # **kwargs forward
+            return {name for name, _, _ in params}
+        out |= {name for name, _, d in params if kw.arg == name and ast.dump(kw.value) != ast.dump(d)}
+    return out
+
+
+@functools.cache
+def never_set_options() -> tuple[str, ...]:
+    defs = defaultdict(list)  # function name -> [(key prefix, params)]
+    for root in OPTION_ROOTS:
+        for path in _py_files(root):
+            tree = ast.parse(path.read_text(), filename=str(path))
+            for node in ast.walk(tree):
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    params = list(_optional_params(node))
+                    if params:
+                        prefix = f"{path.relative_to(PACKAGE).as_posix()}:{node.name}"
+                        defs[node.name].append((prefix, params))
+    trees = [ast.parse(p.read_text(), filename=str(p)) for r in CALLERS for p in _py_files(r)]
+    aliases = defaultdict(set)  # local name -> imported names
+    for tree in trees:
+        for node in ast.walk(tree):
+            if isinstance(node, ast.alias) and node.asname:
+                aliases[node.asname].add(node.name.rsplit(".", 1)[-1])
+    set_ = set()
+    for tree in trees:
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            callee, args = _callee(node.func), node.args
+            if callee == "partial" and args:
+                callee, args = _callee(args[0]), args[1:]
+            for name in {callee} | aliases.get(callee, set()):
+                for prefix, params in defs.get(name, ()):
+                    set_ |= {f"{prefix}.{p}" for p in _set_by(args, node.keywords, params)}
+    every = {f"{prefix}.{name}" for entries in defs.values() for prefix, params in entries
+             for name, _, _ in params}
+    return tuple(sorted(every - set_))
+
+
+def test_every_operator_option_has_a_caller_that_sets_it():
+    unset = [k for k in never_set_options() if k not in OPTIONS_ALLOWED]
+    assert not unset, (
+        "optional parameters that no call site (production or tests) sets to "
+        "anything but the default — fix them to the one schema/constant and "
+        f"delete the option, or set it where it matters: {unset}"
+    )
+
+
+def test_options_allowlist_has_no_stale_entries():
+    stale = sorted(set(OPTIONS_ALLOWED) - set(never_set_options()))
+    assert not stale, f"OPTIONS_ALLOWED entries that are gone or now set: {stale}"

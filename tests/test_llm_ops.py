@@ -144,7 +144,7 @@ def test_simhash_wide_pigeonhole_exact(spark):
     assert expect  # the planted corpus must actually exercise the join
     got = {
         (r["doc_a"], r["doc_b"])
-        for r in dd.simhash_hamming_pairs(docs, threshold=3, n_bands=4, sim_bits=60).collect()
+        for r in dd.simhash_hamming_pairs(docs, sim_bits=60).collect()
     }
     assert got == expect
 
@@ -475,7 +475,7 @@ def test_chunk_fixed_overlap_and_short_docs(spark):
         [Row(doc_id=1, text="a" * 250), Row(doc_id=2, text="short")]
     )
     out = {(r["doc_id"], r["chunk_no"]): r for r in ck.chunk_fixed(
-        docs, chunk_chars=100, overlap=20).collect()}
+        docs, chunk_chars=100).collect()}
     # 250 chars, step 80: starts 0/80/160 — last window still has >=20 new chars
     assert sorted(k[1] for k in out if k[0] == 1) == [0, 1, 2]
     assert out[(1, 1)]["chunk_start"] == 80
@@ -617,7 +617,7 @@ def test_quantile_threshold_filter_tie_inclusive(spark):
     # group h: all ties (n=5, k=1 -> t=7, everything kept)
     rows += [Row(g="h", id=100 + i, s=7) for i in range(5)]
     df = spark.createDataFrame(rows, "g string, id long, s long")
-    out = cu.quantile_threshold_filter(df, "g", "s", keep_top_n_of=(1, 5)).collect()
+    out = cu.quantile_threshold_filter(df, "g", "s").collect()
     got = {(r["g"], r["id"]): r["thr_s"] for r in out}
     assert {k for k in got if k[0] == "g"} == {("g", 0), ("g", 1)}  # 10 and 9
     assert all(v == 9 for k, v in got.items() if k[0] == "g")

@@ -86,7 +86,7 @@ def test_enrich_update_guarded(spark):
     upd = spark.createDataFrame([Row(id=1, nv="clobber"), Row(id=2, nv="set")])
     out = {
         r["id"]: r["v"]
-        for r in enrich_update(base, upd, "id", {"v": "nv"}, only_if_null=True).collect()
+        for r in enrich_update(base, upd, "id", {"v": "nv"}).collect()
     }
     assert out == {1: "keep", 2: "set", 3: None}
 

@@ -3,12 +3,16 @@ the registered tasks through the CLI/registry in DAG order, and check the
 enrichment lands in the lake — the Spark analog of the reference's
 Airflow pipeline (siri/dags.yaml task chain)."""
 
+import ast
+import inspect
+
 import pytest
 from pyspark.sql import functions as F
 
 from open_bus_stride_etl_spark.__main__ import main as cli_main
 from open_bus_stride_etl_spark.plans import stride_tasks  # noqa: F401 — registers tasks
 from open_bus_stride_etl_spark.plans.tasks import REGISTRY, run_task
+from open_bus_stride_etl_spark.sources import parquet_stats
 from open_bus_stride_etl_spark.sources import stride_lake as lake
 from tests import stride_fixtures
 
@@ -106,8 +110,22 @@ def test_stats_collect(spark, lake_dir):
     assert m["snapshot_status_counts"] == {"loaded": 9, "error": 3}
 
 
-def test_cli_list_and_registry():
+def test_cli_list_and_registry(capsys):
     assert cli_main(["list"]) == 0
+    # `list` prints each task's signature defaults (plus its window default):
+    # a default lives in one place, the task function.
+    listed = {}
+    for line in capsys.readouterr().out.splitlines():
+        listed[line.split()[0]] = ast.literal_eval(line.split("defaults=", 1)[1])
+    assert set(listed) == set(REGISTRY)
+    for t in REGISTRY.values():
+        sig = {
+            p.name: p.default
+            for p in inspect.signature(t.fn).parameters.values()
+            if p.default is not inspect.Parameter.empty
+        }
+        window = {} if t.num_days is None else {"num_days": t.num_days}
+        assert listed[t.name] == {**window, **sig}, t.name
     expected = {
         "siri-add-ride-durations",
         "siri-update-ride-stops-gtfs",
@@ -143,6 +161,58 @@ def test_backup_tasks(spark, lake_dir, tmp_path):
     dump.write_text("select 1;")
     m2 = run_task(spark, "db-copy-backup", base_dir=lake_dir, src_path=str(dump))
     assert os.path.exists(m2["url"]) and m2["file_size"] == 9
+
+
+def test_file_uri_base_dir_packages_and_backups(spark, lake_dir, tmp_path, monkeypatch):
+    """A ``file:`` base_dir: the sweep's default out_dir is <lake>/packages
+    and the backup task walks <lake>/siri-storage; nothing lands in the
+    working directory (os-module code reading ``file:/x`` as a relative
+    path would create a stray ``./file:`` tree there)."""
+    import pathlib
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    base = f"file:{lake_dir}"
+    m1 = run_task(spark, "siri-hourly-update-packages", base_dir=base, max_hours=3)
+    m2 = run_task(spark, "siri-hourly-update-packages", base_dir=base, max_hours=3)
+    assert m1["created"] >= 1 and m2["created"] == 0 and m2["skipped"] == m1["created"]
+    packages = pathlib.Path(lake_dir) / "packages"
+    assert len(list(packages.glob("*-metadata.json"))) == m1["created"]
+
+    days = ["2024/04/01", "2024/04/02"]
+    for day in days:
+        d = pathlib.Path(lake_dir, "siri-storage", day)
+        d.mkdir(parents=True)
+        (d / "x.json").write_text("{}")
+    m3 = run_task(spark, "siri-storage-backup-cleanup", base_dir=base, older_than_days=7)
+    assert m3["archived_days"] == len(days)
+    backup = pathlib.Path(lake_dir, "siri-storage-backup")
+    assert sorted(p.relative_to(backup).as_posix() for p in backup.rglob("*.tar.bz2")) == [
+        f"{day}.tar.bz2" for day in days
+    ]
+    assert not any(cwd.iterdir())
+
+
+def test_run_task_configures_the_session(spark, tmp_path):
+    """``run_task`` applies the runtime confs to any session: a session
+    writing INT96 timestamps in a non-UTC zone still gets INT64 markers
+    with footer statistics and UTC window arithmetic."""
+    base = str(tmp_path / "lake")
+    for name, df in stride_fixtures.build(spark).items():
+        lake.overwrite_table(df, base, name)
+    keys = ("spark.sql.parquet.outputTimestampType", "spark.sql.session.timeZone")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+        spark.conf.set("spark.sql.session.timeZone", "Asia/Jerusalem")
+        run_task(spark, "siri-add-ride-durations", base_dir=base, **WINDOW)
+        path = lake.table_path(base, "siri_ride")
+        assert parquet_stats.nonnull_count(path, "updated_duration_minutes") is not None
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 def test_cli_run(spark, lake_dir):
