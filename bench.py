@@ -1,21 +1,37 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints two
+JSON lines: the full {"metric": ..., "value": total_sec, "unit": "sec",
+"queries": {name: sec}, "sf": ...} map, then a short summary
+(``summary_payload``).
 
-Each query is forced to full execution with a count-style noop write
+Each query is forced to full execution with a noop write
 (``df.write.format("noop")``), which executes the whole plan without
 driver-side materialization — the honest way to time a distributed plan.
+``run_query``/``time_query`` are the one query timer: tools/scale_probe.py
+and tools/ab_probe.py time queries through them too. Never force a query
+with ``.count()``: the optimizer prunes every output column, so most of
+the plan (Python UDF columns included) never runs.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from open_bus_stride_etl_spark.operators.util import release_cached  # noqa: E402
+from perfbench.proc import box_speed  # noqa: E402
+
+# Box-speed reference: perfbench/boxspeed.py read 0.12-0.18 s on a quiet
+# box and 0.23-0.43 s with busy neighbours (perfbench/README.md); the
+# reference sits between the two ranges. The probe runs one worker per
+# core with a fixed work unit each, so the quiet reading does not depend
+# on the core count.
+FAST_REF_S = 0.2
 
 HEADLINE = [
     "flat_export",
@@ -63,21 +79,51 @@ def summary_payload(
     }
 
 
+def run_query(spark, fn, sf_dir: str) -> float:
+    """Seconds for one full execution of query ``fn`` (a noop write),
+    then ``release_cached()``: operator-internal persists (e.g. the LSH
+    candidate cache) left resident would let the next run reuse this
+    one's cache and bleed storage memory into later queries."""
+    t0 = time.perf_counter()
+    try:
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
+    finally:
+        release_cached()
+
+
+def time_query(spark, fn, sf_dir: str) -> float:
+    """Min of two ``run_query`` runs, three when the best is under 1.5 s.
+    The minimum is the low-noise estimator of the plan's cost on a shared
+    box; at sub-1.5 s one scheduling hiccup is a 20%+ phantom regression,
+    and the extra sample is cheap exactly when the query is."""
+    best = min(run_query(spark, fn, sf_dir) for _ in range(2))
+    if best < 1.5:
+        best = min(best, run_query(spark, fn, sf_dir))
+    return best
+
+
+def canary_block(pre: float, post: float) -> dict:
+    """Box-speed readings taken before and after the sweep. Both at or
+    under ``FAST_REF_S`` means the window was clean; either above means
+    the timings are contention-inflated upper bounds, not regressions."""
+    return {
+        "pre": pre,
+        "post": post,
+        "fast_ref": FAST_REF_S,
+        "clean": pre <= FAST_REF_S and post <= FAST_REF_S,
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
-    # Box-speed brackets (BENCHNOTES.md): this box suffers hypervisor
-    # contention invisible to load average/vmstat/steal — r6 measured two
-    # idle-looking bench runs disagreeing by ±40% per query while the
-    # pure-CPU canary kernel read 5.9-13.5 s vs its 4.3 s idle
-    # reference. Embedding a pre- and post-sweep canary reading in the
-    # emitted JSON makes an unattended bench artifact interpretable on
-    # its own: both brackets ≤ fast_ref ⇒ the window was clean; either
-    # above ⇒ treat the numbers as upper bounds, not regressions.
-    from tools.box_canary import FAST_S, probe  # noqa: PLC0415
-
-    canary_pre = round(probe(), 2)
+    # Box-speed brackets (BENCHNOTES.md): contention on this box can be
+    # invisible to load average/vmstat/steal, so the emitted JSON carries
+    # a reading before and after the sweep (``canary_block``).
+    cores = len(os.sched_getaffinity(0))
+    canary_pre = round(box_speed(cores), 3)
 
     from open_bus_stride_etl_spark.plans import registry
     from open_bus_stride_etl_spark.session import build_session
@@ -107,45 +153,11 @@ def main() -> None:
         .save()
     )
 
-    # Min of N executions per query: local[32] on a shared box sees
-    # multi-second load spikes; the minimum is the standard low-noise
-    # estimator of the plan's actual cost. Sub-1.5s queries get a third
-    # run — at that duration a single scheduling hiccup is a 20%+
-    # phantom regression (round 2 burned review time on +20% noise for
-    # rollup_revenue / ledger_missing_dates), and the extra sample is
-    # cheap exactly when the query is.
-    # Operator-internal persists (e.g. the LSH candidate cache) are
-    # released after EVERY timed run: leaving them resident would (a) let
-    # run 2 reuse run 1's cache — min-of-N would then measure warm-cache
-    # cost, not the query's — and (b) accumulate dead cache across the
-    # 65-query sweep, bleeding storage memory into later queries'
-    # measurements (observed: corpus_clean_keep 6.0s in-sweep vs 2.2s
-    # isolated before this hook existed).
-    from open_bus_stride_etl_spark.operators.util import release_cached  # noqa: PLC0415
-
-    timings: dict[str, float] = {}
-    for name in names:
-        best = None
-        runs = 2
-        done = 0
-        while done < runs:
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            release_cached()
-            best = dt if best is None or dt < best else best
-            done += 1
-            if done == 2 and best < 1.5:
-                runs = 3
-        timings[name] = round(best, 3)
-
-    canary_post = round(probe(), 2)
-    canary = {
-        "pre": canary_pre,
-        "post": canary_post,
-        "fast_ref": FAST_S,
-        "clean": canary_pre <= FAST_S and canary_post <= FAST_S,
-    }
+    # stdout carries only the two JSON lines below: the task queries'
+    # run-ledger lines go to stderr
+    with contextlib.redirect_stdout(sys.stderr):
+        timings = {name: round(time_query(spark, qs[name], sf_dir), 3) for name in names}
+    canary = canary_block(canary_pre, round(box_speed(cores), 3))
 
     total = round(sum(timings.values()), 3)
     # Two lines, full map FIRST and a SHORT summary LAST: the driver's

@@ -520,7 +520,7 @@ def llm_export_training_shards(
     src = in_dir
     if src is None:
         cur = f"{base_dir}/curated_documents"
-        src = cur if fs.exists(cur, spark) else f"{base_dir}/documents.parquet"
+        src = cur if fs.exists_restoring(cur, spark) else f"{base_dir}/documents.parquet"
     docs = spark.read.parquet(src)
     sharded = build_training_shards(docs, vocab_size=vocab_size, n_shards=n_shards, seed=seed)
     out = out_dir or f"{base_dir}/training_shards/{seed}"

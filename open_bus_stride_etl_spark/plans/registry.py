@@ -20,6 +20,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import ship_package
 from ..sources.lake import load_table
 from .flat_join import flat_export
 
@@ -45,6 +46,7 @@ def query(name: str, oracle: str | None = None):
             from ..operators.util import release_cached  # noqa: PLC0415
 
             release_cached()
+            ship_package(spark)
             return fn(spark, sf_dir)
 
         wrapped.__name__ = fn.__name__

@@ -10,8 +10,14 @@ converts to Asia/Jerusalem only at export boundaries — see
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
+import zipfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Runtime-settable SQL confs applied even to externally-created sessions
@@ -56,8 +62,41 @@ RUNTIME_CONFS = {
 }
 
 
+@functools.cache
+def _package_zip() -> str:
+    """This package's ``.py`` files, zipped once per process into a
+    temporary directory that is removed at interpreter exit."""
+    tmp = tempfile.mkdtemp(prefix="stride-pkg-")
+    atexit.register(shutil.rmtree, tmp, True)
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    out = os.path.join(tmp, f"{__package__}.zip")
+    with zipfile.ZipFile(out, "w") as z:
+        for d, _, files in os.walk(pkg):
+            for f in files:
+                if f.endswith(".py"):
+                    path = os.path.join(d, f)
+                    z.write(path, os.path.relpath(path, os.path.dirname(pkg)))
+    return out
+
+
+_shipped_to: SparkContext | None = None
+
+
+def ship_package(spark: SparkSession) -> None:
+    """Ship this package to the Python workers, once per SparkContext.
+    Queries with UDFs, pandas UDFs or ``mapInPandas`` import it on the
+    executors, where a host that put the package on its own ``sys.path``
+    (from another working directory, no ``PYTHONPATH``) has not."""
+    global _shipped_to
+    if spark.sparkContext is not _shipped_to:
+        spark.sparkContext.addPyFile(_package_zip())
+        _shipped_to = spark.sparkContext
+
+
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an existing session (idempotent)."""
+    """Apply runtime-settable confs to an existing session (idempotent)
+    and ship the package to its Python workers."""
+    ship_package(spark)
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)

@@ -251,6 +251,23 @@ def test_export_training_shards_reads_curated_output_at_uri_base(
     assert os.listdir(cwd) == []
 
 
+def test_export_restores_curated_output_parked_by_a_crashed_swap(spark, lake, tmp_path):
+    """A crash between ``swap_dir``'s two renames leaves only
+    ``curated_documents.old``. The export puts it back and exports the
+    curated docs, not the raw documents table."""
+    import os
+
+    curated = run_task(spark, "llm-curate-corpus", base_dir=lake)
+    final = f"{lake}/curated_documents"
+    os.rename(final, f"{final}.old")
+    m = run_task(
+        spark, "llm-export-training-shards", base_dir=lake,
+        vocab_size=10, n_shards=2, out_dir=str(tmp_path / "shards"),
+    )
+    assert m["n_docs"] == curated["n_final"] == 1
+    assert os.path.isdir(final) and not os.path.exists(f"{final}.old")
+
+
 def test_curate_artifact_survives_a_failed_rewrite(spark, lake, monkeypatch):
     """A curate run whose artifact write fails after Spark has started it
     (an overwrite deletes its target first) leaves the previous run's

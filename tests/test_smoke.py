@@ -116,7 +116,7 @@ def test_bench_summary_line_under_400b():
         # canary readings CAN exceed 100 s under real contention (r7 saw
         # 27.88 s on an idle-box stretch; model a decade of slack) — the
         # modeled widths must be at least as wide as any real artifact
-        canary={"pre": 999.99, "post": 999.99, "fast_ref": 4.6, "clean": False},
+        canary=bench.canary_block(999.99, 999.99),
     )
     line = json.dumps(payload, separators=(",", ":"))
     assert len(line.encode()) < 400, f"{len(line.encode())} bytes: {line}"
@@ -134,3 +134,65 @@ def test_bench_summary_line_under_400b():
     }
     # contract fields all present on the summary line
     assert {"metric", "value", "unit", "sf", "n_queries", "queries", "canary"} <= set(payload)
+    # the canary block keeps exactly its four keys
+    assert set(payload["canary"]) == {"pre", "post", "fast_ref", "clean"}
+    assert payload["canary"]["clean"] is False
+
+
+def test_bench_timer_runs_every_output_column(spark):
+    """bench.run_query/time_query execute the whole plan: a Python UDF
+    that is the stub query's only column runs on every row of every run.
+    ``.count()`` on the same query runs it on no row — the optimizer
+    prunes the column — which is why no tool forces a query that way."""
+    from pyspark.sql import functions as F
+
+    import bench
+
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        acc.add(1)
+        return x
+
+    rows, calls = 200, []
+
+    def stub(spark_, sf_dir):
+        calls.append(sf_dir)
+        return spark_.range(rows).select(F.udf(tick, "long")("id").alias("x"))
+
+    bench.run_query(spark, stub, "-")
+    assert acc.value == rows
+    bench.time_query(spark, stub, "-")
+    assert len(calls) in (3, 4) and acc.value == rows * len(calls)
+    before = acc.value
+    stub(spark, "-").count()
+    assert acc.value == before
+
+
+def test_entry_queries_run_python_on_executors_from_another_cwd(tmp_path, sf_dir):
+    """The external driver imports ``__spark_entry__`` through a
+    ``sys.path`` insert from its own working directory, without
+    ``PYTHONPATH``: a query that runs Python on the executors must still
+    find the package there."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {root!r})
+from pyspark.sql import SparkSession
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+import __spark_entry__ as m
+print("rows", len(m.queries()["geodesic_agreement"](spark, {sf_dir!r}).collect()))
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    res = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    assert "rows 10" in res.stdout.splitlines()

@@ -21,11 +21,11 @@ Usage:
         # rule: wins in >= 9/10 of all pairs run (a failed run is no
         # win), medians further apart than A's interquartile range
 
-Each round times A then B (cold operator caches: release_cached after
-every run, the bench.py convention), prints the pair, and at the end
-reports median paired delta and the sign counts — if the deltas don't
-agree in sign across most rounds, the difference is inside this box's
-noise and should be reported as such.
+Each round times one bench.py ``run_query`` of A, then of B (noop-write
+forcing, operator caches released after every run), prints the pair,
+and at the end reports median paired delta and the sign counts — if the
+deltas don't agree in sign across most rounds, the difference is inside
+this box's noise and should be reported as such.
 
 This is the harness the r5 BLAS-thread-pinning decision used (killed:
 2-4% paired delta, structurally capped by the MAX_THREADS=2 OpenBLAS
@@ -41,9 +41,10 @@ import statistics
 import subprocess
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import bench  # noqa: E402
 
 
 def checkout(rev: str, tmp: str) -> str:
@@ -119,7 +120,6 @@ def main() -> None:
         if "=" in kv
     ]
 
-    from open_bus_stride_etl_spark.operators.util import release_cached
     from open_bus_stride_etl_spark.session import build_session
 
     import __spark_entry__ as entry
@@ -137,11 +137,8 @@ def main() -> None:
                 saved[k] = spark.conf.get(k, None)
                 spark.conf.set(k, v)
         try:
-            t0 = time.time()
-            qs[name](spark, sf_dir).count()
-            return time.time() - t0
+            return bench.run_query(spark, qs[name], sf_dir)
         finally:
-            release_cached()
             for k, v in saved.items():
                 if v is None:
                     spark.conf.unset(k)
