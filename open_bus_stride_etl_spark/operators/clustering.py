@@ -96,6 +96,8 @@ def kmeans_fit(
     """
     import numpy as np  # noqa: PLC0415
 
+    from ..sources.stride_lake import schema  # noqa: PLC0415 — the IVF index tables
+
     spark = embs.sparkSession
     pts = track_persist(
         embs.select(F.col("vec_id").alias("id"), quantized_vec().alias("q"))
@@ -103,9 +105,10 @@ def kmeans_fit(
 
     seed_rows = pts.orderBy("id").limit(k).collect()
     if not seed_rows:
-        empty_a = spark.createDataFrame([], "vec_id long, cluster long")
-        empty_c = spark.createDataFrame([], "cluster long, pos int, cq long")
-        return empty_a, empty_c
+        return (
+            spark.createDataFrame([], schema("assignments")),
+            spark.createDataFrame([], schema("centroids")),
+        )
     c_mat = np.array([r["q"] for r in seed_rows], dtype=np.float64)
     dim = c_mat.shape[1]
 
@@ -186,6 +189,6 @@ def kmeans_fit(
             for cl in range(c_mat.shape[0])
             for pos in range(dim)
         ],
-        "cluster long, pos int, cq long",
+        schema("centroids"),
     )
     return a, cdf

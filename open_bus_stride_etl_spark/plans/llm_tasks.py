@@ -26,6 +26,7 @@ from ..operators import dedup as dd
 from ..operators import text as tx
 from ..operators.util import track_checkpoint, track_persist
 from ..sources import fs
+from ..sources import stride_lake as lake
 from ..streaming.bounded import run_bounded
 from .tasks import task
 
@@ -61,9 +62,8 @@ def _indexed_lsh_pairs(
     rows, which the candidate ``distinct()`` absorbs); compaction of
     stale rows is the deployment's lake-compaction concern, like every
     other append artifact here."""
-    idx_path = f"{history_dir}/lsh_band_index.parquet"
-    if fs.exists(idx_path, spark):
-        existing = spark.read.parquet(idx_path)
+    if lake.table_exists(history_dir, "lsh_band_index"):
+        existing = lake.read_table(spark, history_dir, "lsh_band_index")
         # ONE corpus-scale validity join per run (the first cut ran it
         # per consumer — three corpus-sized joins; measured the whole
         # win away at sf10): the valid row set is persisted, and the
@@ -89,7 +89,7 @@ def _indexed_lsh_pairs(
         .join(cur, on="doc_id")
         .select("doc_id", F.col("_fp").alias("fp"), "bucket")
     )
-    new_buckets.write.mode("append").parquet(idx_path)
+    lake.append_table(new_buckets, history_dir, "lsh_band_index")
     nb = new_buckets.select("doc_id", "bucket")
     buckets_now = nb if valid is None else valid.unionByName(nb)
     return dd.minhash_lsh_pairs_from_buckets(docs, buckets_now, b_ids, probe_rows)
@@ -160,10 +160,8 @@ def llm_curate_corpus(
     # 5M-row batch the per-run bitset build made it 12x slower than
     # Spark's native AQE anti-join (2.4 s vs 29 s, interleaved A/B x3).
     seen = None
-    if history_dir is not None:
-        seen_path = f"{history_dir}/seen_fingerprints.parquet"
-        if fs.exists(seen_path, spark):
-            seen = spark.read.parquet(seen_path)
+    if history_dir is not None and lake.table_exists(history_dir, "seen_fingerprints"):
+        seen = lake.read_table(spark, history_dir, "seen_fingerprints")
 
     from pyspark.sql import Observation  # noqa: PLC0415
 
@@ -252,12 +250,13 @@ def llm_curate_corpus(
     if history_dir is not None and n_final > 0:
         # (an empty run appends nothing — skip the no-op job; the index
         # CONTENT is identical either way)
-        (
-            spark.read.parquet(out)
+        lake.append_table(
+            spark.read.schema(kept.schema)
+            .parquet(out)
             .select(tx.doc_fingerprint(F.col("text")).alias("fingerprint"))
-            .distinct()
-            .write.mode("append")
-            .parquet(seen_path)
+            .distinct(),
+            history_dir,
+            "seen_fingerprints",
         )
     fv = obs.get
     n_seen_dropped = 0 if n_remaining is None else fv["n_after_exact"] - n_remaining
@@ -298,10 +297,10 @@ def llm_build_ann_index(
     emb = spark.read.parquet(f"{base_dir}/embeddings.parquet")
     assign, cents = kmeans_fit(emb, k=k, iters=iters)
     out = out_dir or f"{base_dir}/ann_index"
-    fs.publish_parquet(cents, f"{out}/centroids.parquet")
-    fs.publish_parquet(assign, f"{out}/assignments.parquet")
+    lake.overwrite_table(cents, out, "centroids")
+    lake.overwrite_table(assign, out, "assignments")
     occ = (
-        spark.read.parquet(f"{out}/assignments.parquet")
+        lake.read_table(spark, out, "assignments")
         .groupBy("cluster")
         .count()
         .agg(
@@ -349,7 +348,7 @@ def ivf_probe_persisted(
 
     from ..operators.similarity import _partitioned_probe, quantized_vec  # noqa: PLC0415
 
-    cent_rows = spark.read.parquet(f"{idx_dir}/centroids.parquet").collect()
+    cent_rows = lake.read_table(spark, idx_dir, "centroids").collect()
     k = 1 + max(r["cluster"] for r in cent_rows)
     dim = max(r["pos"] for r in cent_rows)
     c_mat = np.zeros((k, dim), dtype=np.float64)
@@ -380,7 +379,7 @@ def ivf_probe_persisted(
         sel = (probe == cell).any(axis=1)
         by_cell[int(cell)] = (q_ids[sel], q_mat[sel], q_norm[sel])
 
-    assign = spark.read.parquet(f"{idx_dir}/assignments.parquet")
+    assign = lake.read_table(spark, idx_dir, "assignments")
     cv = (
         emb.select(F.col("vec_id").alias("cand_id"), quantized_vec().alias("_cq"))
         .join(
@@ -444,7 +443,7 @@ def llm_ann_query(
         queries_df = emb.orderBy("vec_id").limit(n_queries)
         exact = cosine_topk(emb, queries_df, k=k_top)
         rec = (
-            ann_recall_at_k(exact, spark.read.parquet(out))
+            ann_recall_at_k(exact, spark.read.schema(result.schema).parquet(out))
             .agg(
                 F.sum("n_true").alias("t"),
                 F.sum("n_hit").alias("h"),

@@ -1788,14 +1788,15 @@ def ann_ivf_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile  # noqa: PLC0415
 
     from ..operators import clustering as cl  # noqa: PLC0415
+    from ..sources import stride_lake as lake  # noqa: PLC0415
     from .llm_tasks import ivf_probe_persisted  # noqa: PLC0415
 
     emb = load_table(spark, sf_dir, "embeddings")
     tmp = tempfile.mkdtemp(prefix="ivf_index_")
     try:
         assign, cents = cl.kmeans_fit(emb, k=8, iters=3)
-        cents.write.mode("overwrite").parquet(f"{tmp}/centroids.parquet")
-        assign.write.mode("overwrite").parquet(f"{tmp}/assignments.parquet")
+        lake.overwrite_table(cents, tmp, "centroids")
+        lake.overwrite_table(assign, tmp, "assignments")
         res, _meta = ivf_probe_persisted(
             spark, emb, tmp, n_queries=100, k_top=5, n_probe=2
         )
@@ -2305,11 +2306,11 @@ def curate_incremental_noop(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exact row count from the parquet footers (no Spark job; falls
         # back to the scan when footers can't answer — r9)
         from ..sources import parquet_stats  # noqa: PLC0415
+        from ..sources import stride_lake as lake  # noqa: PLC0415
 
-        idx_path = f"{hist}/seen_fingerprints.parquet"
-        n_index = parquet_stats.row_count(idx_path)
+        n_index = parquet_stats.row_count(lake.table_path(hist, "seen_fingerprints"))
         if n_index is None:
-            n_index = spark.read.parquet(idx_path).count()
+            n_index = lake.read_table(spark, hist, "seen_fingerprints").count()
         out1 = spark.read.parquet(f"{base}/out1")
         h = hex_to_long(F.substring(row_md5(F.col("doc_id"), F.col("text")), 1, 10))
         return (

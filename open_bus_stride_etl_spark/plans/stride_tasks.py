@@ -155,10 +155,7 @@ def siri_update_ride_stops_vehicle_locations(
 def _ledger(spark: SparkSession, base_dir: str) -> DataFrame:
     if lake.table_exists(base_dir, "gtfs_data_task"):
         return lake.read_table(spark, base_dir, "gtfs_data_task")
-    return spark.createDataFrame(
-        [], "date date, task_name string, started_at timestamp, completed_at timestamp, "
-        "error string, success boolean"
-    )
+    return spark.createDataFrame([], lake.schema("gtfs_data_task"))
 
 
 def _record_ledger(
@@ -173,12 +170,9 @@ def _record_ledger(
         return
     now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
     rows = [(d, task_name, now, now, error, success) for d, success, error in outcomes]
-    df = spark.createDataFrame(
-        rows,
-        "date date, task_name string, started_at timestamp, completed_at timestamp, "
-        "error string, success boolean",
+    lake.append_table(
+        spark.createDataFrame(rows, lake.schema("gtfs_data_task")), base_dir, "gtfs_data_task"
     )
-    df.write.mode("append").parquet(lake.table_path(base_dir, "gtfs_data_task"))
 
 
 @task("gtfs-update-ride-aggregations", cadence="daily")

@@ -12,8 +12,9 @@ Reference behaviors re-expressed:
   removed locally, and empty parents pruned (S11).
 
 These are driver-side control-plane utilities (file counts are small);
-the data plane stays in Spark. The registry itself is a parquet table so
-its queries (latest per prefix, failures, sizes) run as DataFrames.
+the data plane stays in Spark. The registry itself is the ``artifact``
+lake table (declared in sources/stride_lake.py), so its queries (latest
+per prefix, failures, sizes) run as DataFrames.
 
 Storage paths may be plain local paths OR any Hadoop-FS URI (s3a://…):
 object-store access goes through sources/fs.py — the cluster's own
@@ -32,24 +33,17 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from . import fs
+from . import stride_lake as lake
 
-ARTIFACT_SCHEMA = (
-    "file_prefix string, status string, metadata_json string, error string, "
-    "url string, created_at timestamp, file_size long"
-)
 # Destination names probe_free_name tries before giving up.
 NAME_TRIES = 30
 
 
-def _registry_path(base_dir: str) -> str:
-    return fs.join_path(base_dir, "artifact.parquet")
-
-
 def read_registry(spark: SparkSession, base_dir: str) -> DataFrame:
-    p = _registry_path(base_dir)
-    if not fs.exists(p, spark):
-        return spark.createDataFrame([], ARTIFACT_SCHEMA)
-    return spark.read.parquet(p)
+    """The ``artifact`` lake table; empty before the first registration."""
+    if not lake.table_exists(base_dir, "artifact"):
+        return spark.createDataFrame([], lake.schema("artifact"))
+    return lake.read_table(spark, base_dir, "artifact")
 
 
 def probe_free_name(storage_dir: str, name: str, spark: SparkSession | None = None) -> str:
@@ -90,9 +84,7 @@ def register_artifact(
         now,
         fs.file_size(dest, spark),
     )
-    spark.createDataFrame([row], ARTIFACT_SCHEMA).write.mode("append").parquet(
-        _registry_path(base_dir)
-    )
+    lake.append_table(spark.createDataFrame([row], lake.schema("artifact")), base_dir, "artifact")
     return Row(file_prefix=file_prefix, url=dest, file_size=row[6])
 
 

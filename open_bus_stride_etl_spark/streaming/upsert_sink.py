@@ -71,7 +71,8 @@ def parquet_upsert_sink(snapshot_dir: str, key_cols: list[str], version_col: str
         spark = batch.sparkSession
         prev = None
         if fs.exists_restoring(snapshot_dir, spark):
-            prev = spark.read.parquet(snapshot_dir)
+            # every snapshot is an earlier merge of this stream's batches
+            prev = spark.read.schema(batch.schema).parquet(snapshot_dir)
         fs.publish_parquet(upsert_merge(prev, batch, key_cols, version_col), snapshot_dir)
 
     return sink

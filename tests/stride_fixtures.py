@@ -1,12 +1,15 @@
 """Deterministic stride-shaped fixtures (FIXTURES.md §B): small tables
 mirroring the reference's logical schema, with the edge cases the golden
 semantics need (nulls-last, settle/stale, tier priority, date-versioned
-dims, empty groups, precondition gating)."""
+dims, empty groups, precondition gating). Every frame takes its schema
+from the table's declaration in sources/stride_lake.py."""
 
 import datetime
 import random
 
 from pyspark.sql import Row
+
+from open_bus_stride_etl_spark.sources.stride_lake import schema
 
 D = datetime.datetime
 NOW = D(2024, 5, 10, 12, 0, 0)
@@ -16,10 +19,11 @@ def build(spark):
     rng = random.Random(42)
 
     siri_routes = spark.createDataFrame(
-        [Row(id=i, operator_ref=f"op{i % 3}", line_ref=f"line{i % 5}") for i in range(1, 11)]
+        [Row(id=i, operator_ref=f"op{i % 3}", line_ref=f"line{i % 5}") for i in range(1, 11)],
+        schema("siri_route"),
     )
     siri_stops = spark.createDataFrame(
-        [Row(id=i, code=f"S{i:03d}") for i in range(1, 21)]
+        [Row(id=i, code=f"S{i:03d}") for i in range(1, 21)], schema("siri_stop")
     )
 
     rides = []
@@ -45,16 +49,7 @@ def build(spark):
                 scheduled_time_gtfs_ride_id=None,
             )
         )
-    siri_rides = spark.createDataFrame(
-        rides,
-        "id long, siri_route_id long, journey_ref string, vehicle_ref string, "
-        "scheduled_start_time timestamp, duration_minutes int, "
-        "first_vehicle_location_id long, last_vehicle_location_id long, "
-        "updated_first_last_vehicle_locations timestamp, "
-        "updated_duration_minutes timestamp, gtfs_ride_id long, "
-        "route_gtfs_ride_id long, journey_gtfs_ride_id long, "
-        "scheduled_time_gtfs_ride_id long",
-    )
+    siri_rides = spark.createDataFrame(rides, schema("siri_ride"))
 
     ride_stops = []
     rsid = 0
@@ -71,11 +66,7 @@ def build(spark):
                     nearest_siri_vehicle_location_id=None,
                 )
             )
-    siri_ride_stops = spark.createDataFrame(
-        ride_stops,
-        "id long, siri_ride_id long, siri_stop_id long, `order` int, "
-        "gtfs_stop_id long, nearest_siri_vehicle_location_id long",
-    )
+    siri_ride_stops = spark.createDataFrame(ride_stops, schema("siri_ride_stop"))
 
     locs = []
     lid = 0
@@ -99,13 +90,7 @@ def build(spark):
                     distance_from_siri_ride_stop_meters=None,
                 )
             )
-    siri_vehicle_locations = spark.createDataFrame(
-        locs,
-        "id long, siri_ride_stop_id long, siri_snapshot_id long, "
-        "recorded_at_time timestamp, lat double, lon double, bearing int, "
-        "velocity int, distance_from_journey_start int, "
-        "distance_from_siri_ride_stop_meters double",
-    )
+    siri_vehicle_locations = spark.createDataFrame(locs, schema("siri_vehicle_location"))
 
     # date-versioned gtfs stops: same code on two dates, different coords
     gtfs_stops = []
@@ -124,7 +109,7 @@ def build(spark):
                     name=f"stop {i}",
                 )
             )
-    gtfs_stops = spark.createDataFrame(gtfs_stops)
+    gtfs_stops = spark.createDataFrame(gtfs_stops, schema("gtfs_stop"))
 
     gtfs_routes = []
     grid = 0
@@ -146,7 +131,7 @@ def build(spark):
                     route_mkt=f"mkt{i}",
                 )
             )
-    gtfs_routes = spark.createDataFrame(gtfs_routes)
+    gtfs_routes = spark.createDataFrame(gtfs_routes, schema("gtfs_route"))
 
     # gtfs rides: for ride i, one gtfs ride at +30s (tier 1) and one at
     # +4min (tier 5) on the SAME route/date -> tier priority check; the
@@ -172,11 +157,7 @@ def build(spark):
                 start_time=sched + datetime.timedelta(minutes=4),
                 end_time=None, first_gtfs_ride_stop_id=None, last_gtfs_ride_stop_id=None)
         )
-    gtfs_rides = spark.createDataFrame(
-        g_rides,
-        "id long, gtfs_route_id long, journey_ref string, start_time timestamp, "
-        "end_time timestamp, first_gtfs_ride_stop_id long, last_gtfs_ride_stop_id long",
-    )
+    gtfs_rides = spark.createDataFrame(g_rides, schema("gtfs_ride"))
 
     # gtfs ride stops; gtfs ride 6 left empty (empty-group edge case)
     grs = []
@@ -199,7 +180,7 @@ def build(spark):
                     shape_dist_traveled=float(seq) * 700.0,
                 )
             )
-    gtfs_ride_stops = spark.createDataFrame(grs)
+    gtfs_ride_stops = spark.createDataFrame(grs, schema("gtfs_ride_stop"))
 
     snaps = []
     for i in range(1, 13):
@@ -216,12 +197,7 @@ def build(spark):
                 num_failed_parse_vehicle_locations=i % 3,
             )
         )
-    siri_snapshots = spark.createDataFrame(
-        snaps,
-        "id long, snapshot_id string, etl_status string, etl_start_time timestamp, "
-        "etl_end_time timestamp, error string, "
-        "num_successful_parse_vehicle_locations int, num_failed_parse_vehicle_locations int",
-    )
+    siri_snapshots = spark.createDataFrame(snaps, schema("siri_snapshot"))
 
     return {
         "siri_snapshot": siri_snapshots,

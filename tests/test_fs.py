@@ -7,13 +7,13 @@ the same code path an `s3a://` store takes on a cluster, minus the
 network."""
 
 import pytest
-from pyspark.sql import Row
 
 from open_bus_stride_etl_spark.sources import fs
 from open_bus_stride_etl_spark.sources.artifacts import latest_artifact, register_artifact
 from open_bus_stride_etl_spark.sources.stride_lake import (
     overwrite_table,
     read_table,
+    schema,
     table_exists,
 )
 
@@ -58,14 +58,20 @@ def test_with_retries_exhaustion_raises():
     assert len(sleeps) == 2
 
 
+def _rides(spark, *ids):
+    """``siri_ride`` rows with only ``id`` set."""
+    width = len(schema("siri_ride"))
+    return spark.createDataFrame([(i,) + (None,) * (width - 1) for i in ids], schema("siri_ride"))
+
+
 def test_stride_lake_accepts_fs_uri(spark, tmp_path):
     """table snapshot swap through the Hadoop FileSystem API."""
     base = f"file:{tmp_path}"
-    df1 = spark.createDataFrame([Row(id=1, v="a"), Row(id=2, v="b")])
+    df1 = _rides(spark, 1, 2)
     assert not table_exists(base, "siri_ride")
     assert overwrite_table(df1, base, "siri_ride") == 2
     assert table_exists(base, "siri_ride")
-    df2 = spark.createDataFrame([Row(id=3, v="c")])
+    df2 = _rides(spark, 3)
     assert overwrite_table(df2, base, "siri_ride") == 1  # swap over existing
     assert [r["id"] for r in read_table(spark, base, "siri_ride").collect()] == [3]
 

@@ -125,6 +125,41 @@ def test_ann_index_build_and_query(spark, emb_lake, tmp_path):
     assert a == b
 
 
+def test_ann_query_after_a_crash_in_the_index_rebuild(spark, emb_lake, tmp_path, monkeypatch):
+    """A crash between the two renames of a rebuild's centroid swap
+    leaves only ``centroids.parquet.old``. The query restores it and
+    answers exactly as after a build that never crashed."""
+    import os
+
+    from open_bus_stride_etl_spark.sources import fs
+
+    idx = str(tmp_path / "idx")
+    build = {"base_dir": emb_lake, "k": 3, "iters": 3, "out_dir": idx}
+    query = {"base_dir": emb_lake, "index_dir": idx, "k_top": 3, "n_probe": 2, "n_queries": 6}
+    run_task(spark, "llm-build-ann-index", **build)
+    run_task(spark, "llm-ann-query", out_dir=str(tmp_path / "clean"), **query)
+
+    real_rename = fs.rename
+    calls = {"n": 0}
+
+    def crash_on_second(src, dest, spark=None):
+        calls["n"] += 1
+        if calls["n"] == 2:  # old centroids parked, new ones not yet in place
+            raise OSError("crash between renames")
+        return real_rename(src, dest, spark)
+
+    monkeypatch.setattr(fs, "rename", crash_on_second)
+    with pytest.raises(OSError, match="crash between renames"):
+        run_task(spark, "llm-build-ann-index", **build)
+    monkeypatch.undo()
+    assert not os.path.exists(f"{idx}/centroids.parquet")
+    assert os.path.isdir(f"{idx}/centroids.parquet.old")
+
+    run_task(spark, "llm-ann-query", out_dir=str(tmp_path / "healed"), **query)
+    a = sorted(map(tuple, spark.read.parquet(str(tmp_path / "clean")).collect()))
+    assert sorted(map(tuple, spark.read.parquet(str(tmp_path / "healed")).collect())) == a
+
+
 def test_curate_corpus_incremental_history(spark, lake, tmp_path, monkeypatch):
     """Daily-crawl incremental mode: run 1 seeds the fingerprint
     history; run 2 over the same corpus drops every already-seen

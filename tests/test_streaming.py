@@ -9,15 +9,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from open_bus_stride_etl_spark.sources.stride_lake import schema
 from open_bus_stride_etl_spark.streaming import incremental as si
 from open_bus_stride_etl_spark.streaming.bounded import run_bounded, write_each_batch
 from tests import stride_fixtures
-
-LOC_SCHEMA = (
-    "id long, siri_ride_stop_id long, siri_snapshot_id long, recorded_at_time timestamp, "
-    "lat double, lon double, bearing int, velocity int, distance_from_journey_start int, "
-    "distance_from_siri_ride_stop_meters double"
-)
 
 
 @pytest.fixture(scope="module")
@@ -40,7 +35,7 @@ def _run(df, mode, tmp_path):
 
 
 def test_stream_hourly_stats_matches_batch(spark, tables, loc_stream_dir, tmp_path):
-    stream = spark.readStream.schema(LOC_SCHEMA).parquet(loc_stream_dir)
+    stream = spark.readStream.schema(schema("siri_vehicle_location")).parquet(loc_stream_dir)
     out = _run(si.stream_hourly_stats(stream), "complete", tmp_path)
     got = {r["hour_start"]: (r["min_ts"], r["max_ts"], r["n_rows"]) for r in out.collect()}
     batch = (
@@ -121,7 +116,7 @@ def test_stream_session_windows_match_batch(spark, tables, loc_stream_dir, tmp_p
     """Native session windows work identically under readStream: the
     complete-mode streaming result equals the batch sessionization."""
     gap = "30 minutes"
-    stream = spark.readStream.schema(LOC_SCHEMA).parquet(loc_stream_dir)
+    stream = spark.readStream.schema(schema("siri_vehicle_location")).parquet(loc_stream_dir)
 
     def sessions(df):
         return (

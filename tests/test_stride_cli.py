@@ -443,3 +443,28 @@ def test_enrichment_rerun_after_crash_before_swap_leaks_no_staging(spark, tmp_pa
 
     run_task(spark, "siri-update-rides-gtfs", base_dir=base, **WINDOW)
     assert [n for n in os.listdir(base) if n.startswith("siri_ride.")] == ["siri_ride.parquet"]
+
+
+def test_drifted_task_output_is_refused_before_staging(spark, tmp_path, monkeypatch):
+    """A task whose output retypes one column (``duration_minutes`` as
+    long) fails before anything is staged, and the previous snapshot
+    reads back unchanged: a declared read would otherwise return the
+    retyped column as NULL."""
+    import os
+
+    base = str(tmp_path / "lake")
+    for t, df in stride_fixtures.build(spark).items():
+        lake.overwrite_table(df, base, t)
+    before = sorted(map(tuple, lake.read_table(spark, base, "siri_ride").collect()))
+
+    real = stride_tasks.stride.add_ride_durations
+    monkeypatch.setattr(
+        stride_tasks.stride, "add_ride_durations",
+        lambda *a, **kw: real(*a, **kw).withColumn(
+            "duration_minutes", F.col("duration_minutes").cast("long")
+        ),
+    )
+    with pytest.raises(ValueError, match="duration_minutes:bigint"):
+        run_task(spark, "siri-add-ride-durations", base_dir=base, **WINDOW)
+    assert not os.path.exists(lake.table_path(base, "siri_ride") + ".staging")
+    assert sorted(map(tuple, lake.read_table(spark, base, "siri_ride").collect())) == before

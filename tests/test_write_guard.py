@@ -61,28 +61,34 @@ def _replace_mode(call: ast.Call) -> bool:
     return False
 
 
-def _walk(node: ast.AST, scope: list[str], found: set[str], rel: str) -> None:
+def _walk(node: ast.AST, scope: list[str], found: set[str], rel: str, hit) -> None:
     for child in ast.iter_child_nodes(node):
         if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-            _walk(child, [*scope, child.name], found, rel)
+            _walk(child, [*scope, child.name], found, rel, hit)
             continue
         if (
             isinstance(child, ast.Call)
             and isinstance(child.func, ast.Attribute)
             and child.func.attr == "parquet"
-            and _replace_mode(child)
+            and hit(child)
         ):
             found.add(f"{rel}:{'.'.join(scope) or '<module>'}")
-        _walk(child, scope, found, rel)
+        _walk(child, scope, found, rel, hit)
 
 
 @functools.cache
-def replace_writers() -> frozenset[str]:
+def parquet_sites(hit) -> frozenset[str]:
+    """``module:scope`` of every scanned ``.parquet(...)`` call for
+    which ``hit(call)`` holds."""
     found: set[str] = set()
     for path in SCANNED:
         rel = path.relative_to(PACKAGE).as_posix()
-        _walk(ast.parse(path.read_text(), filename=str(path)), [], found, rel)
+        _walk(ast.parse(path.read_text(), filename=str(path)), [], found, rel, hit)
     return frozenset(found)
+
+
+def replace_writers() -> frozenset[str]:
+    return parquet_sites(_replace_mode)
 
 
 def test_directory_replaces_go_through_the_publisher():
