@@ -128,16 +128,6 @@ def vincenty_meters_np(p1lat, p1lon, p2lat, p2lon):
     return np.where(sin_sig == 0, 0.0, s)
 
 
-def distance_meters(
-    lat1: Column, lon1: Column, lat2: Column, lon2: Column, exact: bool = False
-) -> Column:
-    """F8 dispatcher: haversine (default — JVM codegen, <0.5% drift vs
-    the reference's geodesic) or the geodesic-exact Arrow path."""
-    if exact:
-        return geodesic_meters(lat1, lon1, lat2, lon2)
-    return haversine_meters(lat1, lon1, lat2, lon2)
-
-
 # The same formula as ANSI SQL, for oracle-side parity checks. Column
 # references are interpolated by name.
 def haversine_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:

@@ -48,15 +48,6 @@ def _q_bound(dim: int) -> float:
     return float((float(1 << 51) / max(dim, 1)) ** 0.5)
 
 
-def kmeans_assignments(
-    embs: DataFrame,
-    k: int = 8,
-    iters: int = 3,
-) -> DataFrame:
-    """``(id, cluster)`` assignment only — see ``kmeans_fit``."""
-    return kmeans_fit(embs, k=k, iters=iters)[0]
-
-
 def kmeans_fit(
     embs: DataFrame,
     k: int = 8,

@@ -217,6 +217,41 @@ DECODED_STATS_SCHEMA = T.StructType(
 )
 
 
+def _decode_stage(media: DataFrame, stats_of, schema: T.StructType) -> DataFrame:
+    """One Arrow-batched ``mapInPandas`` pass over ``(media_id,
+    payload)``: ``stats_of(payload)`` returns the values of ``schema``'s
+    columns after ``media_id, decode_ok``; a payload it raises on
+    becomes a ``decode_ok = false`` row with NULL stats."""
+    stats = schema.fields[2:]
+    dtypes = ["Int32" if f.dataType == T.IntegerType() else "Int64" for f in stats]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            oks, cols = [], [[] for _ in stats]
+            for b in pdf["payload"]:
+                try:
+                    vals, ok = stats_of(b), True
+                except Exception:  # noqa: BLE001 - ValueError from the
+                    # decoder plus zlib.error / struct.error from
+                    # truncated payloads: all are "this row didn't decode"
+                    vals, ok = [None] * len(stats), False
+                oks.append(ok)
+                for col, v in zip(cols, vals):
+                    col.append(v)
+            yield pd.DataFrame(
+                {
+                    "media_id": list(pdf["media_id"]),
+                    "decode_ok": oks,
+                    **{
+                        f.name: pd.array(col, dtype=d)
+                        for f, col, d in zip(stats, cols, dtypes)
+                    },
+                }
+            )
+
+    return fan_out(media.select("media_id", "payload")).mapInPandas(batches, schema)
+
+
 def decode_image_stats(media: DataFrame) -> DataFrame:
     """The REAL decode stage: run ``decode_image`` over every payload in
     the same Arrow-batched ``mapInPandas`` shape as ``fake_decode_stats``
@@ -227,42 +262,12 @@ def decode_image_stats(media: DataFrame) -> DataFrame:
     or quarantines them downstream instead of dying mid-job."""
     import numpy as np  # noqa: PLC0415
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, oks, ws, hs, cs, means = [], [], [], [], [], []
-            for mid, b in zip(pdf["media_id"], pdf["payload"]):
-                ids.append(mid)
-                try:
-                    px = decode_image(b)
-                    oks.append(True)
-                    hs.append(px.shape[0])
-                    ws.append(px.shape[1])
-                    cs.append(px.shape[2])
-                    means.append(
-                        int(round(float(np.mean(px.astype(np.float64))) * 1000.0))
-                    )
-                except Exception:  # noqa: BLE001 - ValueError from the
-                    # decoder plus zlib.error / struct.error from
-                    # truncated payloads: all are "this row didn't decode"
-                    oks.append(False)
-                    ws.append(None)
-                    hs.append(None)
-                    cs.append(None)
-                    means.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "decode_ok": oks,
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "n_channels": pd.array(cs, dtype="Int32"),
-                    "mean_pixel_milli": pd.array(means, dtype="Int64"),
-                }
-            )
+    def stats(payload):
+        px = decode_image(payload)
+        h, w, c = px.shape
+        return w, h, c, int(round(float(np.mean(px.astype(np.float64))) * 1000.0))
 
-    return fan_out(media.select("media_id", "payload")).mapInPandas(
-        batches, DECODED_STATS_SCHEMA
-    )
+    return _decode_stage(media, stats, DECODED_STATS_SCHEMA)
 
 
 def fake_decode_stats(media: DataFrame) -> DataFrame:
@@ -390,39 +395,14 @@ def decode_audio_stats(media: DataFrame) -> DataFrame:
     ``decode_ok = false`` rows."""
     import numpy as np  # noqa: PLC0415
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, oks, srs, ns, cs, means = [], [], [], [], [], []
-            for mid, b in zip(pdf["media_id"], pdf["payload"]):
-                ids.append(mid)
-                try:
-                    samples, sr = decode_audio(b)
-                    oks.append(True)
-                    srs.append(sr)
-                    ns.append(samples.shape[0])
-                    cs.append(samples.shape[1])
-                    means.append(
-                        int(round(float(np.mean(np.abs(samples.astype(np.float64)))) * 1000.0))
-                        if samples.size
-                        else 0
-                    )
-                except Exception:  # noqa: BLE001 - any parse error = bad row
-                    oks.append(False)
-                    srs.append(None)
-                    ns.append(None)
-                    cs.append(None)
-                    means.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "decode_ok": oks,
-                    "sample_rate": pd.array(srs, dtype="Int32"),
-                    "n_samples": pd.array(ns, dtype="Int64"),
-                    "n_audio_channels": pd.array(cs, dtype="Int32"),
-                    "mean_abs_milli": pd.array(means, dtype="Int64"),
-                }
-            )
+    def stats(payload):
+        samples, sr = decode_audio(payload)
+        n, c = samples.shape
+        mean = (
+            int(round(float(np.mean(np.abs(samples.astype(np.float64)))) * 1000.0))
+            if samples.size
+            else 0
+        )
+        return sr, n, c, mean
 
-    return fan_out(media.select("media_id", "payload")).mapInPandas(
-        batches, AUDIO_STATS_SCHEMA
-    )
+    return _decode_stage(media, stats, AUDIO_STATS_SCHEMA)

@@ -20,13 +20,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from .util import fan_out as _fan_out
 
 QUANT = 1_000_000
 # Sign-LSH bucket width: the leading dimensions whose signs key a bucket.
 LSH_BITS = 8
-
-
-from .util import fan_out as _fan_out
 
 
 def _topk_per_column(cos, cand_ids, k):
@@ -64,6 +64,31 @@ def quantized_vec() -> "F.Column":
     )
 
 
+# What every top-k operator returns: one row per (query, rank <= k).
+TOPK_SCHEMA = T.StructType(
+    [
+        T.StructField("query_id", T.LongType()),
+        T.StructField("cand_id", T.LongType()),
+        T.StructField("rank", T.IntegerType()),
+        T.StructField("cos", T.DoubleType()),
+    ]
+)
+
+
+def _empty_topk(emb: DataFrame) -> DataFrame:
+    return emb.sparkSession.createDataFrame([], TOPK_SCHEMA)
+
+
+def _query_block(rows):
+    """``(ids, matrix, norms)`` of collected ``(id, quantized vector)``
+    rows (non-empty) — the block a probe scores candidates against."""
+    import numpy as np
+
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    mat = np.array([r[1] for r in rows], dtype=np.float64)
+    return ids, mat, np.sqrt((mat * mat).sum(axis=1))
+
+
 def cosine_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -97,9 +122,6 @@ def cosine_topk(
     the driver at scale — point oversized query sets at the ANN
     operators (ivf_topk / lsh_topk), which never collect them."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
 
     probe = queries.select(F.lit(1)).limit(max_query_rows + 1).count()
     if probe > max_query_rows:
@@ -109,68 +131,15 @@ def cosine_topk(
             "Raise max_query_rows only if the driver can hold the set; for "
             "large query sets use the ANN operators (ivf_topk, lsh_topk)."
         )
-    q_rows = (
-        queries.select(F.col("vec_id").alias("query_id"), quantized_vec().alias("_qq"))
-        .collect()
-    )
-    spark = emb.sparkSession
+    q_rows = queries.select("vec_id", quantized_vec()).collect()
     if not q_rows:
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("query_id", T.LongType()),
-                    T.StructField("cand_id", T.LongType()),
-                    T.StructField("rank", T.IntegerType()),
-                    T.StructField("cos", T.DoubleType()),
-                ]
-            ),
-        )
-    q_ids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r["_qq"] for r in q_rows], dtype=np.float64)
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-    bc = spark.sparkContext.broadcast((q_ids, q_mat, q_norm))
-
-    def score_batches(batches):
-        ids_q, mat_q, norm_q = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            cand_ids = pdf["cand_id"].to_numpy(dtype=np.int64)
-            c_mat = np.vstack(pdf["_cq"].to_numpy()).astype(np.float64)
-            dots = c_mat @ mat_q.T  # exact: integer-valued floats < 2^53
-            c_norm = np.sqrt((c_mat * c_mat).sum(axis=1))
-            cos = dots / (norm_q[None, :] * c_norm[:, None])
-            # self-match sentinel: a query also present in this batch
-            row_of = {int(c): i for i, c in enumerate(cand_ids)}
-            for j, qid in enumerate(ids_q):
-                i = row_of.get(int(qid))
-                if i is not None:
-                    cos[i, j] = -np.inf
-            out_q, out_c, out_s = [], [], []
-            for j, cand_top, col_top in _topk_per_column(cos, cand_ids, k):
-                out_q.append(np.full(len(cand_top), ids_q[j]))
-                out_c.append(cand_top)
-                out_s.append(col_top)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "cand_id": np.concatenate(out_c),
-                    "cos": np.concatenate(out_s),
-                }
-            )
-
+        return _empty_topk(emb)
     cv = _fan_out(
         emb.select(F.col("vec_id").alias("cand_id"), quantized_vec().alias("_cq"))
     )
-    scored = cv.mapInPandas(
-        score_batches, schema="query_id long, cand_id long, cos double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cand_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "cand_id", "rank", "cos")
+    # one partition: every corpus row scores against the whole query block
+    return _partitioned_probe(
+        cv, {0: _query_block(q_rows)}, k, key_of=lambda m: np.zeros(len(m), dtype=np.int64)
     )
 
 
@@ -212,8 +181,8 @@ def clustered_near_dup_pairs(
     """SemDeDup-style semantic dedup (Abbas et al. 2023, public): score
     cosine pairs only WITHIN a k-means cluster — the trained-partition
     alternative to sign-LSH bucketing for near-dup candidate generation.
-    ``clusters`` is an ``(id, cluster)`` assignment (e.g.
-    operators/clustering.py:kmeans_assignments — the same partition an
+    ``clusters`` is an ``(id, cluster)`` assignment (e.g. the first
+    result of operators/clustering.py:kmeans_fit — the same partition an
     IVF index already maintains, so the dedup pass rides an existing
     artifact). Output: ``(doc_a < doc_b, cos)`` for pairs with cos >=
     threshold; feed into connected_components + keep-min-id for pruning.
@@ -335,45 +304,20 @@ def ann_ivf_topk(
     ordered by id; float64 math on quantized integers is bit-identical
     to the SQL (see cosine_topk)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
 
-    piv_rows = (
-        emb.orderBy("vec_id")
-        .limit(n_pivots)
-        .select(F.col("vec_id").alias("pivot_id"), quantized_vec().alias("_pv"))
-        .collect()
-    )
-    q_rows = (
-        queries.select(F.col("vec_id").alias("query_id"), quantized_vec().alias("_qq"))
-        .collect()
-    )
-    spark = emb.sparkSession
+    piv_rows = emb.orderBy("vec_id").limit(n_pivots).select("vec_id", quantized_vec()).collect()
+    q_rows = queries.select("vec_id", quantized_vec()).collect()
     if not q_rows or not piv_rows:
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("query_id", T.LongType()),
-                    T.StructField("cand_id", T.LongType()),
-                    T.StructField("rank", T.IntegerType()),
-                    T.StructField("cos", T.DoubleType()),
-                ]
-            ),
-        )
-    p_mat = np.array([r["_pv"] for r in piv_rows], dtype=np.float64)
-    p_norm = np.sqrt((p_mat * p_mat).sum(axis=1))
+        return _empty_topk(emb)
+    _, p_mat, p_norm = _query_block(piv_rows)
 
     def cells_of(mat: "np.ndarray") -> "np.ndarray":
         norm = np.sqrt((mat * mat).sum(axis=1))
         cos = (mat @ p_mat.T) / (norm[:, None] * p_norm[None, :])
         return np.argmax(cos, axis=1)  # first max == smallest pivot_id
 
-    q_ids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r["_qq"] for r in q_rows], dtype=np.float64)
+    q_ids, q_mat, q_norm = _query_block(q_rows)
     q_cell = cells_of(q_mat)
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
     by_cell = {
         int(c): (q_ids[q_cell == c], q_mat[q_cell == c], q_norm[q_cell == c])
         for c in np.unique(q_cell)
@@ -385,8 +329,70 @@ def ann_ivf_topk(
     return _partitioned_probe(cv, by_cell, k, key_of=cells_of)
 
 
+def ivf_probe_persisted(
+    emb: DataFrame,
+    centroids: DataFrame,
+    assignments: DataFrame,
+    n_queries: int = 16,
+    k_top: int = 5,
+    n_probe: int = 2,
+) -> tuple[DataFrame, dict]:
+    """Top-k against a PERSISTED IVF index — the trained
+    ``(cluster, pos, cq)`` ``centroids`` and the ``(vec_id, cluster)``
+    ``assignments`` of operators/clustering.py:kmeans_fit, as
+    llm-build-ann-index writes them. The ``n_queries`` lowest-id vectors
+    are coarse-quantized against the centroids driver-side (k x dim
+    ints); each probes its ``n_probe`` nearest cells by cosine (ties to
+    the lowest cluster id — stable argsort == row_number ORDER BY cos
+    DESC, cluster ASC), and the corpus is scored in ONE mapInPandas pass
+    keyed by its STORED cell assignment (``_partitioned_probe``).
+
+    Returns ``(result_df, meta)`` with ``meta = {"n_queries",
+    "n_probed_cells"}`` (the actual sample/probe sizes, for task
+    metrics)."""
+    import numpy as np
+
+    cent_rows = centroids.collect()
+    q_rows = emb.orderBy("vec_id").limit(n_queries).select("vec_id", quantized_vec()).collect()
+    if not q_rows or not cent_rows:
+        return _empty_topk(emb), {"n_queries": len(q_rows), "n_probed_cells": 0}
+    k = 1 + max(r["cluster"] for r in cent_rows)
+    dim = max(r["pos"] for r in cent_rows)
+    c_mat = np.zeros((k, dim), dtype=np.float64)
+    for r in cent_rows:
+        c_mat[r["cluster"], r["pos"] - 1] = r["cq"]
+    c_norm = np.sqrt((c_mat * c_mat).sum(axis=1))
+    c_norm[c_norm == 0] = 1.0
+
+    q_ids, q_mat, q_norm = _query_block(q_rows)
+    # same zero-norm guard as c_norm: a zero query embedding would make
+    # cos_qc a NaN row and the argsort probe-cell selection arbitrary;
+    # with norm pinned to 1 the row is all-zero cos -> deterministic
+    # lowest-cluster-id probes (stable argsort)
+    q_norm[q_norm == 0] = 1.0
+    cos_qc = (q_mat @ c_mat.T) / (q_norm[:, None] * c_norm[None, :])
+    # n_probe nearest cells per query, ties to the lowest cluster id
+    probe = np.argsort(-cos_qc, axis=1, kind="stable")[:, :n_probe]
+    by_cell: dict[int, tuple] = {}
+    for cell in np.unique(probe):
+        sel = (probe == cell).any(axis=1)
+        by_cell[int(cell)] = (q_ids[sel], q_mat[sel], q_norm[sel])
+
+    cv = (
+        emb.select(F.col("vec_id").alias("cand_id"), quantized_vec().alias("_cq"))
+        .join(
+            assignments.select(F.col("vec_id").alias("cand_id"), F.col("cluster").alias("_key")),
+            on="cand_id",
+        )
+        .where(F.col("_key").isin([int(c) for c in by_cell]))
+    )
+    meta = {"n_queries": len(q_rows), "n_probed_cells": len(by_cell)}
+    return _partitioned_probe(cv, by_cell, k_top), meta
+
+
 def _partitioned_probe(cv, by_key, k, key_of=None):
-    """Shared partitioned-ANN probe: one mapInPandas pass over the
+    """The one top-k scoring loop every top-k operator runs
+    (cosine_topk as a single partition): one mapInPandas pass over the
     corpus; each Arrow batch computes its rows' partition keys (via
     ``key_of`` over the quantized matrix, or a precomputed ``_key``
     column) and scores each key-group against that key's query block
@@ -419,6 +425,7 @@ def _partitioned_probe(cv, by_key, k, key_of=None):
                 sel = keys == key
                 ids_sub, mat_sub, norm_sub = cand_ids[sel], c_mat[sel], c_norm[sel]
                 cos = (mat_sub @ mat_q.T) / (norm_q[None, :] * norm_sub[:, None])
+                # self-match sentinel: a query also present in this group
                 row_of = {int(c): i for i, c in enumerate(ids_sub)}
                 for j, qid in enumerate(ids_q):
                     i = row_of.get(int(qid))
@@ -483,30 +490,12 @@ def ann_lsh_topk(
     and shipped as a column; scoring is per-bucket matmul instead of
     the earlier per-pair interpreted array dots."""
     import numpy as np
-    from pyspark.sql import types as T
 
-    q_rows = queries.select(
-        F.col("vec_id").alias("query_id"),
-        sign_lsh_bucket().alias("bucket"),
-        quantized_vec().alias("_qq"),
-    ).collect()
-    spark = emb.sparkSession
+    q_rows = queries.select("vec_id", quantized_vec(), sign_lsh_bucket()).collect()
     if not q_rows:
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("query_id", T.LongType()),
-                    T.StructField("cand_id", T.LongType()),
-                    T.StructField("rank", T.IntegerType()),
-                    T.StructField("cos", T.DoubleType()),
-                ]
-            ),
-        )
-    q_ids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-    q_bucket = np.array([r["bucket"] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r["_qq"] for r in q_rows], dtype=np.float64)
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
+        return _empty_topk(emb)
+    q_ids, q_mat, q_norm = _query_block(q_rows)
+    q_bucket = np.array([r[2] for r in q_rows], dtype=np.int64)
     probe_keys = [q_bucket]
     if probes >= 1:
         probe_keys += [q_bucket ^ (1 << j) for j in range(LSH_BITS)]

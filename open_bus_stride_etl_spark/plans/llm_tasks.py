@@ -322,76 +322,6 @@ def llm_build_ann_index(
     }
 
 
-def ivf_probe_persisted(
-    spark: SparkSession,
-    emb,
-    idx_dir: str,
-    n_queries: int = 16,
-    k_top: int = 5,
-    n_probe: int = 2,
-):
-    """The load-and-probe core of llm_ann_query, reusable as a plain
-    DataFrame transform: read a PERSISTED IVF index (``centroids.parquet``
-    + ``assignments.parquet`` under ``idx_dir``), coarse-quantize the
-    ``n_queries`` lowest-id vectors against the loaded centroids
-    driver-side (k x dim ints), pick each query's ``n_probe`` nearest
-    cells by cosine (ties to the lowest cluster id — stable argsort ==
-    row_number ORDER BY cos DESC, cluster ASC), and score the corpus in
-    ONE mapInPandas pass keyed by its STORED cell assignment
-    (similarity.py:_partitioned_probe). Also exercised under the oracle
-    by plans/q_llm.py:ann_ivf_persisted_topk.
-
-    Returns ``(result_df, meta)`` with ``meta = {"n_queries",
-    "n_probed_cells"}`` (the actual sample/probe sizes, for task
-    metrics)."""
-    import numpy as np  # noqa: PLC0415
-
-    from ..operators.similarity import _partitioned_probe, quantized_vec  # noqa: PLC0415
-
-    cent_rows = lake.read_table(spark, idx_dir, "centroids").collect()
-    k = 1 + max(r["cluster"] for r in cent_rows)
-    dim = max(r["pos"] for r in cent_rows)
-    c_mat = np.zeros((k, dim), dtype=np.float64)
-    for r in cent_rows:
-        c_mat[r["cluster"], r["pos"] - 1] = r["cq"]
-    c_norm = np.sqrt((c_mat * c_mat).sum(axis=1))
-    c_norm[c_norm == 0] = 1.0
-
-    q_rows = (
-        emb.orderBy("vec_id")
-        .limit(n_queries)
-        .select(F.col("vec_id").alias("query_id"), quantized_vec().alias("_qq"))
-        .collect()
-    )
-    q_ids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r["_qq"] for r in q_rows], dtype=np.float64)
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-    # same zero-norm guard as c_norm: a zero query embedding would make
-    # cos_qc a NaN row and the argsort probe-cell selection arbitrary;
-    # with norm pinned to 1 the row is all-zero cos -> deterministic
-    # lowest-cluster-id probes (stable argsort)
-    q_norm[q_norm == 0] = 1.0
-    cos_qc = (q_mat @ c_mat.T) / (q_norm[:, None] * c_norm[None, :])
-    # n_probe nearest cells per query, ties to the lowest cluster id
-    probe = np.argsort(-cos_qc, axis=1, kind="stable")[:, :n_probe]
-    by_cell: dict[int, tuple] = {}
-    for cell in np.unique(probe):
-        sel = (probe == cell).any(axis=1)
-        by_cell[int(cell)] = (q_ids[sel], q_mat[sel], q_norm[sel])
-
-    assign = lake.read_table(spark, idx_dir, "assignments")
-    cv = (
-        emb.select(F.col("vec_id").alias("cand_id"), quantized_vec().alias("_cq"))
-        .join(
-            assign.select(F.col("vec_id").alias("cand_id"), F.col("cluster").alias("_key")),
-            on="cand_id",
-        )
-        .where(F.col("_key").isin([int(c) for c in by_cell]))
-    )
-    meta = {"n_queries": len(q_rows), "n_probed_cells": len(by_cell)}
-    return _partitioned_probe(cv, by_cell, k_top), meta
-
-
 @task("llm-ann-query", cadence="daily")
 def llm_ann_query(
     spark: SparkSession,
@@ -409,18 +339,29 @@ def llm_ann_query(
     each probing its ``n_probe`` nearest cells; the corpus makes ONE
     mapInPandas pass keyed by its stored cell assignment, scoring each
     Arrow batch's cell-groups against the probing queries' blocks
-    (similarity.py:_partitioned_probe — only per-batch top-k rows leave
-    the workers). The query set is the ``n_queries`` lowest-id vectors
-    (deterministic, like the oracle-checked ANN queries).
+    (operators/similarity.py:ivf_probe_persisted — only per-batch top-k
+    rows leave the workers). The query set is the ``n_queries`` lowest-id
+    vectors (deterministic, like the oracle-checked ANN queries).
 
     Scale shape: the assignment join is an equi-join on the 8-byte id;
     nothing shuffles vectors except the one corpus scan's Arrow
     batches; raising n_probe trades recall for the number of cell
     blocks each batch matmuls against."""
+    from ..operators.similarity import (  # noqa: PLC0415
+        ann_recall_at_k,
+        cosine_topk,
+        ivf_probe_persisted,
+    )
+
     idx = index_dir or f"{base_dir}/ann_index"
     emb = spark.read.parquet(f"{base_dir}/embeddings.parquet")
     result, probe_meta = ivf_probe_persisted(
-        spark, emb, idx, n_queries=n_queries, k_top=k_top, n_probe=n_probe
+        emb,
+        lake.read_table(spark, idx, "centroids"),
+        lake.read_table(spark, idx, "assignments"),
+        n_queries=n_queries,
+        k_top=k_top,
+        n_probe=n_probe,
     )
     out = out_dir or f"{base_dir}/ann_results"
     n_rows = fs.publish_parquet(result, out)["rows"]
@@ -438,8 +379,6 @@ def llm_ann_query(
         # baseline over the SAME query set (bounded by cosine_topk's
         # max_query_rows broadcast contract — query sets are small by
         # construction here).
-        from ..operators.similarity import ann_recall_at_k, cosine_topk  # noqa: PLC0415
-
         queries_df = emb.orderBy("vec_id").limit(n_queries)
         exact = cosine_topk(emb, queries_df, k=k_top)
         rec = (
@@ -618,7 +557,8 @@ def llm_stream_ingest_dedup(
             # basePath read surfaces the `batch` partition column, so
             # exclude the in-flight id before the semi-join.
             idx = (
-                spark.read.option("basePath", idx_dir)
+                spark.read.schema("bucket string, batch long")
+                .option("basePath", idx_dir)
                 .parquet(f"{idx_dir}/batch=*")
                 .where(F.col("batch") != F.lit(int(batch_id)))
             )

@@ -1715,9 +1715,7 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle reproduces every round bit-for-bit."""
     from ..operators import clustering as cl  # noqa: PLC0415
 
-    return cl.kmeans_assignments(
-        load_table(spark, sf_dir, "embeddings"), k=8, iters=3
-    )
+    return cl.kmeans_fit(load_table(spark, sf_dir, "embeddings"), k=8, iters=3)[0]
 
 
 # ---------------------------------------------------------------------------
@@ -1776,7 +1774,7 @@ def ann_ivf_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/clustering.py:kmeans_fit, same integer-exact contract as
     kmeans_assign), WRITE centroids + assignments as parquet, RELOAD
     them from disk, and answer the 100 lowest-id queries via
-    plans/llm_tasks.py:ivf_probe_persisted (n_probe=2 nearest cells by
+    operators/similarity.py:ivf_probe_persisted (n_probe=2 nearest cells by
     cosine, one mapInPandas corpus pass keyed by the STORED
     assignment). The oracle unrolls the same Lloyd rounds (shared
     _sql_kmeans_ctes) and replays the cosine probe-cell ranking and
@@ -1789,7 +1787,6 @@ def ann_ivf_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators import clustering as cl  # noqa: PLC0415
     from ..sources import stride_lake as lake  # noqa: PLC0415
-    from .llm_tasks import ivf_probe_persisted  # noqa: PLC0415
 
     emb = load_table(spark, sf_dir, "embeddings")
     tmp = tempfile.mkdtemp(prefix="ivf_index_")
@@ -1797,8 +1794,13 @@ def ann_ivf_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign, cents = cl.kmeans_fit(emb, k=8, iters=3)
         lake.overwrite_table(cents, tmp, "centroids")
         lake.overwrite_table(assign, tmp, "assignments")
-        res, _meta = ivf_probe_persisted(
-            spark, emb, tmp, n_queries=100, k_top=5, n_probe=2
+        res, _meta = sim.ivf_probe_persisted(
+            emb,
+            lake.read_table(spark, tmp, "centroids"),
+            lake.read_table(spark, tmp, "assignments"),
+            n_queries=100,
+            k_top=5,
+            n_probe=2,
         )
         return res.localCheckpoint(eager=True)
     finally:
@@ -1846,7 +1848,7 @@ def semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import clustering as cl  # noqa: PLC0415
 
     emb = load_table(spark, sf_dir, "embeddings")
-    clusters = cl.kmeans_assignments(emb, k=32, iters=3)
+    clusters = cl.kmeans_fit(emb, k=32, iters=3)[0]
     return sim.clustered_near_dup_pairs(emb, clusters, threshold=0.25)
 
 
@@ -1879,7 +1881,7 @@ def semdedup_scaled_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
     k = math.isqrt(n - 1) + 1 if n > 0 else 1  # ceil(sqrt(n)), integer-exact
-    clusters = cl.kmeans_assignments(emb, k=k, iters=3)
+    clusters = cl.kmeans_fit(emb, k=k, iters=3)[0]
     return sim.clustered_near_dup_pairs(emb, clusters, threshold=0.25)
 
 

@@ -4,7 +4,7 @@ centroid retention."""
 
 from pyspark.sql import Row
 
-from open_bus_stride_etl_spark.operators.clustering import kmeans_assignments
+from open_bus_stride_etl_spark.operators.clustering import kmeans_fit
 
 
 def _embs(spark, rows):
@@ -23,7 +23,7 @@ def test_two_obvious_clusters(spark):
             (4, [0.95, 0.0]), (5, [-0.95, 0.05]),
         ],
     )
-    out = {r["vec_id"]: r["cluster"] for r in kmeans_assignments(d, k=2, iters=3).collect()}
+    out = {r["vec_id"]: r["cluster"] for r in kmeans_fit(d, k=2, iters=3)[0].collect()}
     assert out[0] == out[2] == out[4]
     assert out[1] == out[3] == out[5]
     assert out[0] != out[1]
@@ -40,7 +40,7 @@ def test_seeds_move_points_across_rounds(spark):
             (2, [1.0, 0.0]), (3, [1.1, 0.0]), (4, [0.9, 0.0]),
         ],
     )
-    out = {r["vec_id"]: r["cluster"] for r in kmeans_assignments(d, k=2, iters=3).collect()}
+    out = {r["vec_id"]: r["cluster"] for r in kmeans_fit(d, k=2, iters=3)[0].collect()}
     assert out[2] == out[3] == out[4]
 
 
@@ -48,8 +48,8 @@ def test_empty_cluster_keeps_centroid_and_stays_deterministic(spark):
     # 3 clusters over 3 points, two of which coincide: one cluster
     # inevitably empties; run must not fail and must stay stable
     d = _embs(spark, [(0, [0.0, 0.0]), (1, [0.0, 0.0]), (2, [5.0, 5.0])])
-    a = kmeans_assignments(d, k=3, iters=2).collect()
-    b = kmeans_assignments(d, k=3, iters=2).collect()
+    a = kmeans_fit(d, k=3, iters=2)[0].collect()
+    b = kmeans_fit(d, k=3, iters=2)[0].collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     out = dict(map(tuple, a))
     # coincident points share a cluster (tie-break to the lowest id)
@@ -71,7 +71,7 @@ def test_clustered_near_dup_pairs_scores_only_within_cluster(spark):
             (4, [0.0, 0.98, 0.0]),
         ],
     )
-    clusters = kmeans_assignments(d, k=2, iters=3)
+    clusters = kmeans_fit(d, k=2, iters=3)[0]
     pairs = {
         (r["doc_a"], r["doc_b"]): r["cos"]
         for r in clustered_near_dup_pairs(d, clusters, threshold=0.9).collect()

@@ -27,7 +27,6 @@ ALLOWED = {
     "sources/lake.py:write_partitioned": "J8 partition-overwrite join-update",
     "sources/artifacts.py:latest_artifact": "O4 latest artifact (top-k by recency)",
     "sources/csv_package.py:load_package": "S5 datapackage load",
-    "functions/geo.py:distance_meters": "F8 geodesic distance (exact dispatch)",
     "functions/timeutil.py:israel_iso_string": "F10 export datetime canonicalization",
 }
 

@@ -11,11 +11,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from open_bus_stride_etl_spark.functions.geo import (
-    distance_meters,
-    geodesic_meters,
-    haversine_meters,
-)
+from open_bus_stride_etl_spark.functions.geo import geodesic_meters, haversine_meters
 
 # (name, lat1, lon1, lat2, lon2, wgs84_meters) — reference distances from
 # the standard Vincenty/Karney test values (public geodesic literature):
@@ -58,14 +54,6 @@ def test_geodesic_vs_haversine_within_documented_tolerance(spark):
     for r in df.collect():
         drift = abs(r["hav"] - r["geo"]) / r["geo"]
         assert drift < 0.005, f"{r['name']}: drift {drift:.4%} exceeds the documented 0.5%"
-
-
-def test_distance_meters_dispatch(spark):
-    hav = _one(spark, lambda *c: distance_meters(*c), *ROUTES[0][1:])
-    geo = _one(spark, lambda *c: distance_meters(*c, exact=True), *ROUTES[0][1:])
-    hav_direct = _one(spark, haversine_meters, *ROUTES[0][1:])
-    assert hav == hav_direct
-    assert geo != hav and abs(geo - hav) / geo < 0.005
 
 
 def test_geodesic_zero_for_coincident_points(spark):

@@ -396,13 +396,29 @@ def test_topk_per_column_neginf_rows_never_emitted():
     assert got[0] == [10, 12] and got[1] == [11, 12]
 
 
-def test_cosine_topk_empty_query_set_returns_empty(spark):
+def _ivf_persisted_topk(emb, queries, k):
+    """The persisted-IVF probe draws its queries from the corpus itself,
+    so the empty query set is an empty corpus over a one-cell index."""
+    from open_bus_stride_etl_spark.sources.stride_lake import schema
+
+    spark = emb.sparkSession
+    cents = spark.createDataFrame([(0, p, 500_000) for p in range(1, 5)], schema("centroids"))
+    assign = spark.createDataFrame([(1, 0)], schema("assignments"))
+    return sim.ivf_probe_persisted(queries, cents, assign, k_top=k)[0]
+
+
+@pytest.mark.parametrize(
+    "topk",
+    [sim.cosine_topk, sim.ann_ivf_topk, sim.ann_lsh_topk, _ivf_persisted_topk],
+    ids=["cosine_topk", "ann_ivf_topk", "ann_lsh_topk", "ivf_probe_persisted"],
+)
+def test_topk_empty_query_set_returns_empty(spark, topk):
     emb = spark.createDataFrame(
         [Row(vec_id=1, embedding=[0.5] * 4)],
     )
-    out = sim.cosine_topk(emb, emb.where(F.col("vec_id") < 0), k=3)
+    out = topk(emb, emb.where(F.col("vec_id") < 0), k=3)
     assert out.count() == 0
-    assert out.columns == ["query_id", "cand_id", "rank", "cos"]
+    assert out.schema == sim.TOPK_SCHEMA
 
 
 def test_fan_out_rebalances_single_partition(spark):

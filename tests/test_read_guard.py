@@ -4,10 +4,9 @@ normally through ``sources/stride_lake.py:read_table`` and the table's
 declaration), never let Spark infer it. An inferred read starts one
 footer-scan job per read and accepts whatever columns a writer left.
 
-Scanned: ``sources/``, ``streaming/`` and ``plans/*_tasks.py``, like
-tests/test_write_guard.py. A read counts as inferring when its chain
-reaches ``.read`` and ends in ``.parquet(`` with no ``.schema(`` in
-between.
+Scanned: the modules tests/test_write_guard.py scans (its ``SCANNED``).
+A read counts as inferring when its chain reaches ``.read`` and ends in
+``.parquet(`` with no ``.schema(`` in between.
 """
 
 import ast
@@ -34,10 +33,6 @@ ALLOWED = {
     ),
     "plans/llm_tasks.py:llm_stream_ingest_dedup": (
         "the ingest source arrives from outside the engine"
-    ),
-    "plans/llm_tasks.py:llm_stream_ingest_dedup._admit": (
-        "the ingest index's batch=<id> directories; the batch column comes "
-        "from the directory names"
     ),
 }
 

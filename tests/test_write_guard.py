@@ -4,9 +4,9 @@ parquet directory must do it through ``sources/fs.py:publish_parquet``
 place — a crash in the middle of such a write destroys the previous
 snapshot or artifact.
 
-Scanned: ``sources/``, ``streaming/`` and ``plans/*_tasks.py``. The query
-harnesses in ``plans/q_*.py`` only build throwaway temp inputs and are
-not scanned. A write counts as a replace when its chain calls
+Scanned: ``sources/``, ``streaming/``, ``operators/``, ``functions/``
+and ``plans/*_tasks.py``. The query harnesses in ``plans/q_*.py`` only
+build throwaway temp inputs and are not scanned. A write counts as a replace when its chain calls
 ``.mode(m)`` with ``m`` anything but the literal ``"append"`` (a mode
 passed in a variable may be ``"overwrite"``) and ends in ``.parquet(``.
 """
@@ -19,6 +19,8 @@ PACKAGE = pathlib.Path(__file__).resolve().parents[1] / "open_bus_stride_etl_spa
 SCANNED = [
     *sorted((PACKAGE / "sources").glob("*.py")),
     *sorted((PACKAGE / "streaming").glob("*.py")),
+    *sorted((PACKAGE / "operators").glob("*.py")),
+    *sorted((PACKAGE / "functions").glob("*.py")),
     *sorted((PACKAGE / "plans").glob("*_tasks.py")),
 ]
 
