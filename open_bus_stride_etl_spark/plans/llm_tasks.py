@@ -548,19 +548,24 @@ def llm_stream_ingest_dedup(
             batch.repartition(batch.sparkSession.sparkContext.defaultParallelism)
         )
         buckets = dd.band_buckets(dd.minhash_signatures(batch))
-        if any(f.startswith("batch=") for f in fs.listdir(idx_dir, spark)):
-            # Crash-replay guard: foreachBatch re-delivers the in-flight
-            # batch, whose OWN batch=<id> index partition may already
-            # exist from the crashed attempt. Probing it would make the
-            # batch's docs hit their own buckets — novel goes empty and
-            # the overwrite erases the previously-admitted rows. The
-            # basePath read surfaces the `batch` partition column, so
-            # exclude the in-flight id before the semi-join.
+        # Crash-replay guard: foreachBatch re-delivers the in-flight
+        # batch, whose OWN batch=<id> index partition may already exist
+        # from the crashed attempt. Probing it would make the batch's
+        # docs hit their own buckets — novel goes empty and the
+        # overwrite erases the previously-admitted rows. So the probe
+        # reads every other batch=<id> directory, by name: a glob path
+        # makes Spark look for a streaming sink's metadata log under it
+        # and log a warning with a stack trace on every batch.
+        prior = [
+            fs.join_path(idx_dir, f)
+            for f in fs.listdir(idx_dir, spark)
+            if f.startswith("batch=") and f != f"batch={batch_id}"
+        ]
+        if prior:
             idx = (
                 spark.read.schema("bucket string, batch long")
                 .option("basePath", idx_dir)
-                .parquet(f"{idx_dir}/batch=*")
-                .where(F.col("batch") != F.lit(int(batch_id)))
+                .parquet(*prior)
             )
             hit_docs = buckets.join(idx, on="bucket", how="left_semi").select("doc_id").distinct()
             novel = track_checkpoint(batch.join(hit_docs, on="doc_id", how="left_anti"))

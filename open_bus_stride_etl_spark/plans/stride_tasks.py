@@ -24,6 +24,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from ..operators.ledger import missing_dates
 from ..operators.stats import incomplete_dates, status_counts, validate_freshness
@@ -240,6 +241,9 @@ def gtfs_update_ride_aggregations(spark: SparkSession, base_dir: str):
     return {"dates_processed": len(todo_dates), "dates_ok": len(ok), "dates_failed": len(bad)}
 
 
+_HOUR_US = 3_600_000_000
+
+
 def _hour_key(hour: datetime.datetime) -> str:
     return hour.strftime("%Y-%m-%d.%H")
 
@@ -263,6 +267,26 @@ def _flat_export_hourly(
     )
 
 
+def _hour_bounds(spark: SparkSession, base_dir: str) -> dict:
+    """{"lo", "hi"}: the first and last hour of ``recorded_at_time`` in
+    the vehicle locations, as ``date_trunc('hour', min/max(...))``
+    collects them (both None on an empty table). Answered from the
+    parquet footers' exact min/max when the lake is a local parquet dir
+    and the session time zone is UTC, where an hour starts at a
+    multiple of 3,600 s since the epoch; otherwise by a Spark
+    aggregation, so the bounds are exact either way (as ``_nonnull``)."""
+    mm = parquet_stats.min_max(
+        lake.table_path(base_dir, "siri_vehicle_location"), "recorded_at_time"
+    )
+    if mm is not None and spark.conf.get("spark.sql.session.timeZone") == "UTC":
+        lo, hi = (TimestampType().fromInternal(us - us % _HOUR_US) for us in mm)
+        return {"lo": lo, "hi": hi}
+    return lake.read_table(spark, base_dir, "siri_vehicle_location").agg(
+        F.date_trunc("hour", F.min("recorded_at_time")).alias("lo"),
+        F.date_trunc("hour", F.max("recorded_at_time")).alias("hi"),
+    ).collect()[0].asDict()
+
+
 @task("siri-hourly-update-packages", cadence="daily")
 def siri_hourly_update_packages(
     spark: SparkSession,
@@ -282,8 +306,10 @@ def siri_hourly_update_packages(
 
     Execution shape (r9; guide §2.4 — the loop's DECISIONS are per-hour
     and manifest-driven, exactly the reference's control flow, but its
-    Spark work is batched): the sweep first resolves every hour's
-    short-circuit verdict from the manifests alone (no Spark job), then
+    Spark work is batched): the sweep takes its hour range from the
+    location table's parquet footers (``_hour_bounds``), resolves every
+    hour's short-circuit verdict from the manifests alone (no Spark
+    job for either), then
     ``csv_package.publish_packages`` hashes every remaining hour in ONE
     aggregation (was: one hash/write job per hour — 11 created hours
     cost 11 serial jobs ≈ 0.9 s each at sf0.1), classifies each against
@@ -297,20 +323,15 @@ def siri_hourly_update_packages(
     reference's per-hour loop instead of running its whole enumerated
     window past the budget. Within one chunk the shape is unchanged
     (one hash aggregation + one partitioned write), so an in-budget
-    window no larger than ``chunk_hours`` pays exactly the r9 job
-    count; each chunk's flat export carries its own [lo, hi) range so
+    window no larger than ``chunk_hours`` runs exactly the r9 queries;
+    each chunk's flat export carries its own [lo, hi) range so
     parquet pushdown prunes per chunk. Hours enumerated but left
     unprocessed by an exhausted budget contribute to ``hours_scanned``
     only — their created/updated/skipped/empty outcomes are simply not
     decided this run, matching the reference's stop-where-you-are
     contract."""
     out_dir = fs.local_path(out_dir or os.path.join(base_dir, "packages"))
-    locations = lake.read_table(spark, base_dir, "siri_vehicle_location")
-
-    bounds = locations.agg(
-        F.date_trunc("hour", F.min("recorded_at_time")).alias("lo"),
-        F.date_trunc("hour", F.max("recorded_at_time")).alias("hi"),
-    ).collect()[0]
+    bounds = _hour_bounds(spark, base_dir)
     if bounds["lo"] is None:
         return {"hours_scanned": 0}
     force_cutoff = bounds["hi"] - datetime.timedelta(days=force_days)
@@ -353,16 +374,20 @@ def siri_packages_backfill(
 ):
     """The packager backfill as ONE distributed job instead of an hour
     loop (SURVEY.md §3.3: "the whole backfill can also run as one job
-    partitioned by hour"). Two Spark jobs total for ANY number of hours:
+    partitioned by hour"). Two Spark queries total for ANY number of
+    hours (under AQE each runs as about 7 jobs, one per query stage):
 
     1. one aggregation computes every hour's order-insensitive content
        hash;
     2. one partitioned write materializes ONLY the hours whose hash
-       differs from their existing manifest.
+       differs from their existing manifest, min(changed hours,
+       defaultParallelism) tasks wide.
 
-    The newest-first loop (siri-hourly-update-packages) remains the
-    incremental path; this is the catch-up path, where per-hour loop
-    latency (2 jobs x N hours) would dominate at scale. Both go through
+    The driver then stitches and zips the changed hours on a thread
+    pool, one worker per driver core. The newest-first loop
+    (siri-hourly-update-packages) remains the incremental path; this is
+    the catch-up path, where per-hour loop latency (2 queries x N
+    hours) would dominate at scale. Both go through
     ``csv_package.publish_packages``."""
     out_dir = fs.local_path(out_dir or os.path.join(base_dir, "packages"))
     wide = _flat_export_hourly(spark, base_dir, "1970-01-01", "9999-01-01")

@@ -12,8 +12,11 @@ Spark re-expression: one DataFrame carries many packages, told apart
 by a key column (the hour, for the SIRI packager). ``publish_packages``
 runs ONE aggregation that hashes every key, classifies each key against
 its manifest, and writes the changed keys in ONE partitioned CSV write
-(``partitioned_csv``) — two Spark jobs for any number of packages, where
-a per-package loop pays two per package. The manifest is shaped like the
+(``partitioned_csv``) — two queries for any number of packages (under
+AQE each runs as about 7 jobs, one per query stage), where a
+per-package loop pays two queries per package. The write's shuffle is
+min(changed keys, defaultParallelism) partitions wide, so the changed
+keys are written by that many tasks, not one. The manifest is shaped like the
 frictionless `datapackage.json` the reference's `dataflows` dump emits
 (top-level `hash`/`count_of_rows`, a `resources[0].schema.fields` list
 with datapackage types), so consumers of the reference's packages can
@@ -23,8 +26,9 @@ The hash is ORDER-INSENSITIVE (sum of per-row md5-longs —
 functions/hashing.py) because Spark row order is nondeterministic and
 the skip-if-unchanged contract must survive re-partitioning. The
 stitch/zip step is driver-side on the final small artifact, exactly like
-the reference; the manifest is published last, so it is the commit
-record of its package.
+the reference, on a thread pool with one worker per driver core; each
+key's manifest is published last, so it is the commit record of its
+package.
 """
 
 from __future__ import annotations
@@ -36,6 +40,7 @@ import shutil
 import tempfile
 import zipfile
 from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
@@ -186,17 +191,21 @@ def key_hashes(df: DataFrame, key_col: str) -> dict[str, tuple[int, int]]:
 def partitioned_csv(
     df: DataFrame, key_col: str, keys: list[str]
 ) -> Iterator[dict[str, list[str]]]:
-    """ONE Spark job writes the rows of every key in ``keys`` as CSV
-    shards with a header, one directory per key: `repartition(key)`
-    routes a key to exactly one shuffle partition and `partitionBy(key)`
-    gives it its own directory (the key column is not in the shards).
+    """ONE query writes the rows of every key in ``keys`` as CSV shards
+    with a header, one directory per key: `repartition(w, key)` routes a
+    key to exactly one shuffle partition and `partitionBy(key)` gives it
+    its own directory (the key column is not in the shards). The width
+    ``w`` is min(len(keys), defaultParallelism): AQE coalesces a
+    `repartition(key)` with no count into one partition, so every key
+    would be written by a single task, but it keeps an explicit count.
     Yields {key: sorted shard paths}; a key with no rows has none. The
     shards are deleted on exit."""
+    width = max(1, min(len(keys), df.sparkSession.sparkContext.defaultParallelism))
     tmp = tempfile.mkdtemp(prefix="csv_parts_")
     try:
         (
             df.where(F.col(key_col).isin(keys))
-            .repartition(key_col)
+            .repartition(width, key_col)
             .write.mode("overwrite")
             .option("header", True)
             .partitionBy(key_col)
@@ -208,6 +217,30 @@ def partitioned_csv(
         }
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _stitch_and_zip(
+    out_dir: str, key: str, header: bytes, shards: list[str], manifest: dict
+) -> None:
+    """Publish one package from its CSV shards: the stitched
+    `{key}.csv`, a staged manifest, the zip of both, and last the
+    manifest itself (``os.replace``), the commit record of the key."""
+    csv_path = os.path.join(out_dir, f"{key}.csv")
+    with open(csv_path, "wb") as out:
+        out.write(header)
+        for p in shards:
+            with open(p, "rb") as fh:
+                fh.readline()  # per-shard header
+                shutil.copyfileobj(fh, out)
+    mpath = os.path.join(out_dir, f"{key}-metadata.json")
+    staged = f"{mpath}.tmp"
+    with open(staged, "w") as fh:
+        json.dump(manifest, fh, indent=1, sort_keys=True)
+    zpath = os.path.join(out_dir, f"{key}.zip")
+    with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED, compresslevel=9) as zf:
+        zf.write(csv_path, f"{key}.csv")
+        zf.write(staged, f"{key}-metadata.json")
+    os.replace(staged, mpath)
 
 
 def publish_packages(
@@ -222,14 +255,19 @@ def publish_packages(
     order. ``out_dir`` is a local path or a ``file:`` URI
     (``fs.local_path``).
 
-    Two Spark jobs: ``key_hashes``, then one ``partitioned_csv`` write
-    of the created and updated keys, whose shards the driver stitches.
-    The manifest row count is the aggregation's exact count, never a
-    line count of the CSV: a string field holding a newline is quoted
-    and spans several physical lines (r10). Each manifest goes to a temp
-    file, the zip is built from it, and it is published last with
-    ``os.replace``: a crash anywhere before leaves the key with no
-    manifest or its old one, so the next run rewrites it."""
+    Two queries, whatever the number of keys (under AQE each runs as
+    several jobs, one per query stage): ``key_hashes``, then one
+    ``partitioned_csv`` write of the created and updated keys, whose
+    shards the driver stitches. The manifest row count is the
+    aggregation's exact count, never a line count of the CSV: a string
+    field holding a newline is quoted and spans several physical lines
+    (r10). The per-key stitch, manifest, level-9 zip and publish run on
+    a thread pool with one worker per driver core (zlib and file copies
+    release the GIL); the manifests are built on the calling thread
+    first. Each manifest goes to a temp file, the zip is built from it,
+    and it is published last with ``os.replace``: a crash anywhere
+    before leaves the key with no manifest or its old one, so the next
+    run rewrites it. A failure in any key is raised here."""
     out_dir = fs.local_path(out_dir)
     if keys is not None:
         df = df.where(F.col(key_col).isin(keys))
@@ -248,24 +286,17 @@ def publish_packages(
 
     cols = [c for c in df.columns if c != key_col]
     fields = [{"name": c, "type": df.schema[c].dataType.simpleString()} for c in cols]
+    header = (",".join(cols) + "\n").encode()
+    manifests = {}
+    for key in changed:
+        chash, n = hashes.get(key, (0, 0))
+        manifests[key] = build_manifest(key, fields, n, chash)
     os.makedirs(out_dir, exist_ok=True)
     with partitioned_csv(df, key_col, changed) as shards:
-        for key in changed:
-            csv_path = os.path.join(out_dir, f"{key}.csv")
-            with open(csv_path, "wb") as out:
-                out.write((",".join(cols) + "\n").encode())
-                for p in shards[key]:
-                    with open(p, "rb") as fh:
-                        fh.readline()  # per-shard header
-                        shutil.copyfileobj(fh, out)
-            chash, n = hashes.get(key, (0, 0))
-            mpath = os.path.join(out_dir, f"{key}-metadata.json")
-            staged = f"{mpath}.tmp"
-            with open(staged, "w") as fh:
-                json.dump(build_manifest(key, fields, n, chash), fh, indent=1, sort_keys=True)
-            zpath = os.path.join(out_dir, f"{key}.zip")
-            with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED, compresslevel=9) as zf:
-                zf.write(csv_path, f"{key}.csv")
-                zf.write(staged, f"{key}-metadata.json")
-            os.replace(staged, mpath)
+        workers = min(len(changed), os.cpu_count() or 1)
+        with ThreadPoolExecutor(workers) as pool:
+            list(pool.map(
+                lambda key: _stitch_and_zip(out_dir, key, header, shards[key], manifests[key]),
+                changed,
+            ))
     return verdicts

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from open_bus_stride_etl_spark.sources.csv_package import (
     load_package,
+    partitioned_csv,
     publish_packages,
     read_manifest,
 )
@@ -135,3 +136,27 @@ def test_hour_packages_manifest_exact_rows_with_newlines(spark, tmp_path):
         (2, "plain"),
     ]
     assert read_manifest(str(tmp_path), "2024-05-08.11")["count_of_rows"] == 1
+
+
+def test_partitioned_csv_writes_keys_at_session_width(spark):
+    """AQE coalesces a ``repartition(key)`` shuffle into one partition,
+    which wrote every key in one task; with an explicit width the final
+    write stage runs min(keys, defaultParallelism) tasks, and each key
+    still lands in one shard."""
+    keys = [f"k{i}" for i in range(6)]
+    df = spark.range(600).select(
+        F.col("id"), F.concat(F.lit("k"), (F.col("id") % 6).cast("string")).alias("_k")
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("partitioned-csv-width", "partitioned_csv width")
+    try:
+        with partitioned_csv(df, "_k", keys) as shards:
+            assert all(len(shards[k]) == 1 for k in keys)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    last_job = max(tracker.getJobIdsForGroup("partitioned-csv-width"))
+    stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(last_job).stageIds]
+    final = max((s for s in stages if s is not None), key=lambda s: s.stageId)
+    assert final.numTasks == min(6, sc.defaultParallelism)

@@ -351,14 +351,18 @@ def test_hourly_sweep_rebuilds_package_after_crash_before_manifest(
     the next sweep rebuilds it instead of skipping it, and every zip
     then holds exactly the CSV and manifest on disk."""
     import os
+    import threading
     import zipfile
 
     real_zipfile = zipfile.ZipFile
     calls = {"n": 0}
+    lock = threading.Lock()  # the packages are zipped on a thread pool
 
     def crash_once(*a, **kw):
-        calls["n"] += 1
-        if calls["n"] == 1:
+        with lock:
+            calls["n"] += 1
+            first = calls["n"] == 1
+        if first:
             raise OSError("crash while zipping")
         return real_zipfile(*a, **kw)
 
@@ -468,3 +472,21 @@ def test_drifted_task_output_is_refused_before_staging(spark, tmp_path, monkeypa
         run_task(spark, "siri-add-ride-durations", base_dir=base, **WINDOW)
     assert not os.path.exists(lake.table_path(base, "siri_ride") + ".staging")
     assert sorted(map(tuple, lake.read_table(spark, base, "siri_ride").collect())) == before
+
+
+def test_hourly_sweep_bounds_fall_back_to_spark(spark, lake_dir, tmp_path, monkeypatch):
+    """The sweep's hour bounds come from the footers' min/max; when the
+    footers cannot answer, the Spark aggregation gives the same bounds,
+    and the sweep the same counters."""
+    from open_bus_stride_etl_spark.plans import stride_tasks as st
+
+    locations = lake.table_path(lake_dir, "siri_vehicle_location")
+    assert parquet_stats.min_max(locations, "recorded_at_time") is not None
+    kw = dict(base_dir=lake_dir, max_hours=3)
+    footers = st._hour_bounds(spark, lake_dir)
+    m1 = run_task(spark, "siri-hourly-update-packages", out_dir=str(tmp_path / "p1"), **kw)
+    monkeypatch.setattr(parquet_stats, "min_max", lambda path, col: None)
+    assert st._hour_bounds(spark, lake_dir) == footers
+    m2 = run_task(spark, "siri-hourly-update-packages", out_dir=str(tmp_path / "p2"), **kw)
+    del m1["elapsed_sec"], m2["elapsed_sec"]
+    assert m1 == m2 and m1["created"] >= 1
