@@ -40,13 +40,11 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = p.parse_args(argv)
 
-    # import registers the tasks; deferred so `--help` stays JVM-free
-    from .plans import llm_tasks  # noqa: F401
-    from .plans import stride_tasks  # noqa: F401
-    from .plans.tasks import REGISTRY, run_task
+    # deferred so `--help` stays JVM-free
+    from .plans.tasks import run_task, tasks
 
     if args.cmd == "list":
-        for t in sorted(REGISTRY.values(), key=lambda t: t.name):
+        for t in sorted(tasks().values(), key=lambda t: t.name):
             print(f"{t.name:45s} [{t.cadence}] defaults={t.defaults}")
         return 0
 

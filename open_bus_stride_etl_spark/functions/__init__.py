@@ -5,4 +5,4 @@ from .timeutil import (  # noqa: F401
     israel_iso_string,
     parse_window,
 )
-from .hashing import row_md5, hex_to_long  # noqa: F401
+from .hashing import md5_long, md5_long_sql, row_hash, row_hash_sql  # noqa: F401

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing import hex_to_long
+from ..functions.hashing import md5_long
 
 # quantile_threshold_filter keeps the top KEEP_NUM/KEEP_DEN of each group.
 KEEP_NUM, KEEP_DEN = 1, 5
@@ -78,10 +78,7 @@ def hash_bucket_bp(key: Column, seed: str = "") -> Column:
     stages MUST use distinct seeds: two stages sharing the unsalted
     stream make correlated selections (e.g. the docs a balance stage
     keeps would be exactly the docs an upsample stage duplicates)."""
-    return (
-        hex_to_long(F.substring(F.md5(F.concat(F.lit(seed), key.cast("string"))), 1, 10))
-        % 10000
-    )
+    return md5_long(F.concat(F.lit(seed), key.cast("string"))) % 10000
 
 
 def source_rates(docs: DataFrame) -> DataFrame:

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import hex_to_long
+from ..functions.hashing import md5_long
 from .text import SHINGLE_K, normalize_text, shingle_array
 from .util import track_persist
 
@@ -62,7 +62,7 @@ def _shingled(docs: DataFrame, distinct: bool = True) -> DataFrame:
     out = (
         docs.withColumn("_words", words)
         .select(F.col("doc_id"), F.explode(shingle_array("_words")).alias("shingle"))
-        .select(F.col("doc_id"), hex_to_long(F.substring(F.md5("shingle"), 1, 10)).alias("h"))
+        .select(F.col("doc_id"), md5_long("shingle").alias("h"))
     )
     return out.distinct() if distinct else out
 
@@ -79,7 +79,7 @@ def _shingled_pos(docs: DataFrame) -> DataFrame:
         .select(
             F.col("doc_id"),
             (F.col("pos") + 1).alias("pos"),
-            hex_to_long(F.substring(F.md5("col"), 1, 10)).alias("h"),
+            md5_long("col").alias("h"),
         )
     )
 
@@ -691,7 +691,7 @@ def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
         raise ValueError("bits must be a multiple of 4 in [4, 60]")
     words = F.split(normalize_text(F.col("text")), " ")
     toks = docs.select(F.col("doc_id"), F.explode(words).alias("tok")).withColumn(
-        "h", hex_to_long(F.substring(F.md5("tok"), 1, bits // 4))
+        "h", md5_long("tok", n_hex=bits // 4)
     )
     votes = [
         F.sum(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"v{j}")

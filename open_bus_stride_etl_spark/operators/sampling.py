@@ -16,14 +16,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import hex_to_long
+from ..functions.hashing import md5_long
 
 
 def hash_bucket(key: Column, buckets: int = 100, seed: str = "") -> Column:
     """Deterministic bucket in [0, buckets) from an md5-derived integer
     of the key (+ optional seed salt). Same formula is expressible in
     any engine with md5 — the portability contract of the repo."""
-    h = hex_to_long(F.substring(F.md5(F.concat(key.cast("string"), F.lit(seed))), 1, 10))
+    h = md5_long(F.concat(key.cast("string"), F.lit(seed)))
     return F.pmod(h, F.lit(buckets))
 
 
@@ -80,9 +80,7 @@ def shard_shuffle(
     independent window partitions, each bounded at |corpus|/n_shards.
     At real scale n_shards is thousands (one output file per shard) and
     the per-shard rank is a partitioned sort with no global barrier."""
-    key = hex_to_long(
-        F.substring(F.md5(F.concat(F.lit(seed), F.col("doc_id").cast("string"))), 1, 10)
-    )
+    key = md5_long(F.concat(F.lit(seed), F.col("doc_id").cast("string")))
     from pyspark.sql import Window  # noqa: PLC0415
 
     base = df.select(F.col("doc_id"), key.alias("_k"))

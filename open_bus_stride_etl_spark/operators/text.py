@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..functions.hashing import hex_to_long
+from ..functions.hashing import md5_long
 
 # Deterministic "BPE-ish" token regex: word pieces or single punctuation.
 BPE_TOKEN_RE = r"\w+|[^\w\s]"
@@ -152,7 +152,4 @@ def shingle_array(words_col: str, k: int = SHINGLE_K) -> Column:
 def rolling_min_shingle_hash(words_col: str) -> Column:
     """Winnowing-lite: min over word-3-gram hashes (a cheap content
     anchor that survives small edits). NULL when no shingles."""
-    hashes = F.transform(
-        shingle_array(words_col), lambda s: hex_to_long(F.substring(F.md5(s), 1, 10))
-    )
-    return F.array_min(hashes)
+    return F.array_min(F.transform(shingle_array(words_col), lambda s: md5_long(s)))

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_long_sql, row_hash, row_hash_sql
 from ..operators import dedup as dd
 from ..operators import similarity as sim
 from ..operators import text as tx
@@ -24,7 +25,7 @@ from .registry import query
 # Shared DuckDB CTE fragments (the oracle-side twins of operators/dedup.py).
 # ---------------------------------------------------------------------------
 
-_SQL_SHINGLES = r"""
+_SQL_SHINGLES = rf"""
 norm AS (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t FROM documents),
 words AS (SELECT doc_id, string_split(t, ' ') AS w FROM norm),
 sh AS (
@@ -33,9 +34,7 @@ sh AS (
     SELECT unnest(list_transform(range(1, len(w) - 1),
                   i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingle) s
 ),
-hashed AS (SELECT DISTINCT doc_id,
-                  CAST(('0x' || substr(md5(shingle), 1, 10)) AS BIGINT) AS h
-           FROM sh)
+hashed AS (SELECT DISTINCT doc_id, {md5_long_sql("shingle")} AS h FROM sh)
 """
 
 _SQL_MINHASH = "mh AS (SELECT doc_id, " + ", ".join(
@@ -171,7 +170,7 @@ def _sql_simhash_sims(bits: int) -> str:
     return (
         r"""norm AS (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t FROM documents),
     toks AS (SELECT doc_id, unnest(string_split(t, ' ')) AS tok FROM norm),
-    hashed AS (SELECT doc_id, CAST(('0x' || substr(md5(tok), 1, """ + str(bits // 4) + """)) AS BIGINT) AS h FROM toks),
+    hashed AS (SELECT doc_id, """ + md5_long_sql("tok", bits // 4) + """ AS h FROM toks),
     votes AS (SELECT doc_id, """ + votes + """ FROM hashed GROUP BY doc_id),
     sims AS (SELECT doc_id, """ + bit_sum + """ AS simhash FROM votes)"""
     )
@@ -1104,7 +1103,7 @@ def quantile_quality_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "balanced_corpus",
-    """
+    f"""
     WITH d AS (
       SELECT doc_id,
              CASE WHEN doc_id % 2 = 0 THEN 'even' ELSE source END AS source,
@@ -1119,8 +1118,7 @@ def quantile_quality_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT d.doc_id, d.source, d.lang, CAST(d.n_chars AS BIGINT) AS n_chars
     FROM d JOIN rates r ON d.source = r.source
-    WHERE CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 10)) AS BIGINT) % 10000
-          < r.rate_bp
+    WHERE {md5_long_sql("CAST(d.doc_id AS VARCHAR)")} % 10000 < r.rate_bp
     """,
 )
 def balanced_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1151,16 +1149,16 @@ def balanced_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "epoch_upsample_mix",
-    """
+    f"""
     WITH w AS (
       SELECT source,
-             CAST(5000 + 2 * (CAST(('0x' || substr(md5(source), 1, 10)) AS BIGINT) % 10000) AS BIGINT) AS weight_bp
+             CAST(5000 + 2 * ({md5_long_sql("source")} % 10000) AS BIGINT) AS weight_bp
       FROM (SELECT DISTINCT source FROM documents)
     ),
     j AS (
       SELECT d.doc_id, d.source,
              w.weight_bp // 10000
-             + CASE WHEN CAST(('0x' || substr(md5('mix' || CAST(d.doc_id AS VARCHAR)), 1, 10)) AS BIGINT) % 10000
+             + CASE WHEN {md5_long_sql("'mix' || CAST(d.doc_id AS VARCHAR)")} % 10000
                          < w.weight_bp % 10000 THEN 1 ELSE 0 END AS n
       FROM documents d JOIN w ON w.source = d.source
     )
@@ -1193,7 +1191,7 @@ def epoch_upsample_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "split_leakage_check",
-    r"""
+    rf"""
     WITH fp AS (
       SELECT doc_id,
              md5(substr(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), 1, 60)) AS f
@@ -1209,7 +1207,7 @@ def epoch_upsample_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
                   ELSE 'test' END AS split
       FROM (
         SELECT doc_id, component_id,
-               CAST(('0x' || substr(md5('split' || CAST(component_id AS VARCHAR)), 1, 10)) AS BIGINT) % 10000 AS bp
+               {md5_long_sql("'split' || CAST(component_id AS VARCHAR)")} % 10000 AS bp
         FROM comp)
     ),
     leak AS (
@@ -1279,14 +1277,14 @@ def split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# sampling.shard_shuffle's rank key at seed 'ep0' (the seed is the prefix salt)
+_EP0_KEY_SQL = md5_long_sql("'ep0' || CAST(doc_id AS VARCHAR)")
+
+
 @query(
     "training_shard_order",
-    """
-    WITH k AS (
-      SELECT doc_id,
-             CAST(('0x' || substr(md5('ep0' || CAST(doc_id AS VARCHAR)), 1, 10)) AS BIGINT) AS _k
-      FROM documents
-    )
+    f"""
+    WITH k AS (SELECT doc_id, {_EP0_KEY_SQL} AS _k FROM documents)
     SELECT doc_id, CAST(_k % 16 AS BIGINT) AS shard,
            CAST(row_number() OVER (PARTITION BY _k % 16 ORDER BY _k, doc_id) AS BIGINT) AS pos
     FROM k
@@ -1309,11 +1307,6 @@ def training_shard_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 # unlike RNG sampling — oracle-checkable). operators/sampling.py.
 # ---------------------------------------------------------------------------
 
-def _bucket_sql(key_expr: str) -> str:
-    # sampling.hash_bucket(key, 100): md5 of the key and the empty salt
-    return f"CAST(('0x' || substr(md5({key_expr} || ''), 1, 10)) AS BIGINT) % 100"
-
-
 _STRATA = {"click": 5, "view": 20, "purchase": 100}
 _STRATA_CASE = "CASE event_type " + " ".join(
     f"WHEN '{k}' THEN {v}" for k, v in _STRATA.items()
@@ -1325,7 +1318,8 @@ _STRATA_CASE = "CASE event_type " + " ".join(
     f"""
     SELECT event_type, COUNT(*) AS n_rows
     FROM events
-    WHERE {_bucket_sql("CAST(event_id AS VARCHAR) || '|' || event_type")} < {_STRATA_CASE}
+    WHERE {md5_long_sql("CAST(event_id AS VARCHAR) || '|' || event_type || ''")} % 100
+          < {_STRATA_CASE}
     GROUP BY event_type
     """,
 )
@@ -1350,7 +1344,7 @@ def stratified_sample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT user_id, event_id,
              row_number() OVER (
                PARTITION BY user_id
-               ORDER BY CAST(('0x' || substr(md5(CAST(event_id AS VARCHAR) || 'rsv'), 1, 10)) AS BIGINT) ASC,
+               ORDER BY {md5_long_sql("CAST(event_id AS VARCHAR) || 'rsv'")} ASC,
                         event_id ASC) AS rn
       FROM events) t
     WHERE rn <= 3
@@ -1456,10 +1450,10 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "packed_batches",
-    r"""
+    rf"""
     WITH t AS (
       SELECT doc_id,
-             CAST(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ''), 1, 10)) AS BIGINT) % 8 AS INT) AS shard,
+             CAST({md5_long_sql("CAST(doc_id AS VARCHAR) || ''")} % 8 AS INT) AS shard,
              CAST(CASE WHEN length(trim(text)) = 0 THEN 0
                   ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS INT) AS n_tokens
       FROM documents
@@ -1580,14 +1574,14 @@ def decontam_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "shared_span_pairs",
     "WITH " + _SQL_SHINGLES + ", " + _SQL_MINHASH + ", " + _SQL_BUCKETS + ","
-    r"""
+    rf"""
     cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM buckets a JOIN buckets b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
     ),
     posh AS (
       SELECT doc_id, u.i AS pos,
-             CAST(('0x' || substr(md5(w[u.i] || ' ' || w[u.i+1] || ' ' || w[u.i+2]), 1, 10)) AS BIGINT) AS h
+             {md5_long_sql("w[u.i] || ' ' || w[u.i+1] || ' ' || w[u.i+2]")} AS h
       FROM words, LATERAL (SELECT unnest(range(1, len(w) - 1)) AS i) u
     ),
     cells AS (
@@ -1782,15 +1776,13 @@ def ann_ivf_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the production llm-build-ann-index / llm-ann-query task pair does.
     The result is localCheckpoint-ed so it stays valid after the temp
     index dir is deleted (self-contained-results rule)."""
-    import shutil  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
 
     from ..operators import clustering as cl  # noqa: PLC0415
     from ..sources import stride_lake as lake  # noqa: PLC0415
 
     emb = load_table(spark, sf_dir, "embeddings")
-    tmp = tempfile.mkdtemp(prefix="ivf_index_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="ivf_index_", ignore_cleanup_errors=True) as tmp:
         assign, cents = cl.kmeans_fit(emb, k=8, iters=3)
         lake.overwrite_table(cents, tmp, "centroids")
         lake.overwrite_table(assign, tmp, "assignments")
@@ -1803,8 +1795,6 @@ def ann_ivf_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_probe=2,
         )
         return res.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # Within-cluster pair scoring tail shared by the two SemDeDup oracles:
@@ -2013,10 +2003,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         AND NOT EXISTS (SELECT 1 FROM hit1 h WHERE h.doc_id = d.doc_id)
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n_admitted,
-           CAST(SUM(CAST(('0x' || substr(md5(
-             COALESCE(CAST(doc_id AS VARCHAR), chr(0) || 'NULL' || chr(0)) || '|' ||
-             COALESCE(text, chr(0) || 'NULL' || chr(0))
-           ), 1, 10)) AS BIGINT)) AS BIGINT) AS admit_hash,
+           CAST(SUM(""" + row_hash_sql("doc_id", "text") + """) AS BIGINT) AS admit_hash,
            (SELECT CAST(COUNT(*) AS BIGINT) FROM documents) AS n_ingested_run1,
            CAST(2 AS BIGINT) AS n_batches_run1,
            CAST(1 AS BIGINT) AS n_batches_replay
@@ -2051,12 +2038,9 @@ def ingest_replay_idempotence(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile  # noqa: PLC0415
     import time as _time  # noqa: PLC0415
 
-    from ..functions.hashing import hex_to_long, row_md5  # noqa: PLC0415
-    from . import llm_tasks  # noqa: PLC0415,F401 - registers the task
     from .tasks import run_task  # noqa: PLC0415
 
-    base = tempfile.mkdtemp(prefix="ingest_replay_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="ingest_replay_", ignore_cleanup_errors=True) as base:
         src = f"{base}/ingest"
         os.makedirs(src)
         docs = _docs(spark, sf_dir).select("doc_id", "text")
@@ -2109,9 +2093,7 @@ def ingest_replay_idempotence(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, "llm-stream-ingest-dedup", base_dir=base,
             in_dir=src, max_files_per_trigger=1,
         )
-        h = hex_to_long(
-            F.substring(row_md5(F.col("doc_id"), F.col("text")), 1, 10)
-        )
+        h = row_hash(F.col("doc_id"), F.col("text"))
         return (
             spark.read.parquet(f"{base}/ingested_documents")
             .agg(
@@ -2123,18 +2105,12 @@ def ingest_replay_idempotence(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("n_batches_replay", F.lit(int(m2["n_batches"])).cast("long"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
     "shard_export_invariance",
-    "WITH " + _SQL_TOKENIZE + """,
-    k AS (
-      SELECT doc_id,
-             CAST(('0x' || substr(md5('ep0' || CAST(doc_id AS VARCHAR)), 1, 10)) AS BIGINT) AS _k
-      FROM documents
-    ),
+    "WITH " + _SQL_TOKENIZE + f""",
+    k AS (SELECT doc_id, {_EP0_KEY_SQL} AS _k FROM documents),
     so AS (
       SELECT doc_id, CAST(_k % 8 AS BIGINT) AS shard,
              CAST(row_number() OVER (PARTITION BY _k % 8 ORDER BY _k, doc_id) AS BIGINT) AS pos
@@ -2145,13 +2121,8 @@ def ingest_replay_idempotence(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM tok t JOIN so ON t.doc_id = so.doc_id
     )
     SELECT shard, CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(CAST(('0x' || substr(md5(
-             COALESCE(CAST(doc_id AS VARCHAR), chr(0) || 'NULL' || chr(0)) || '|' ||
-             COALESCE(CAST(pos AS VARCHAR), chr(0) || 'NULL' || chr(0)) || '|' ||
-             COALESCE(CAST(n_tokens AS VARCHAR), chr(0) || 'NULL' || chr(0)) || '|' ||
-             COALESCE(CAST(n_oov AS VARCHAR), chr(0) || 'NULL' || chr(0)) || '|' ||
-             COALESCE(ids_csv, chr(0) || 'NULL' || chr(0))
-           ), 1, 10)) AS BIGINT)) AS BIGINT) AS content_hash
+           CAST(SUM({row_hash_sql("doc_id", "pos", "n_tokens", "n_oov", "ids_csv")}) AS BIGINT)
+             AS content_hash
     FROM j GROUP BY shard
     """,
 )
@@ -2172,15 +2143,11 @@ def shard_export_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-keyed reassembly, n_shards bounded window partitions, one final
     repartition by shard. Self-contained: temp dir removed before
     returning."""
-    import shutil  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
 
-    from ..functions.hashing import hex_to_long, row_md5  # noqa: PLC0415
-    from . import llm_tasks  # noqa: PLC0415,F401 - registers the task
     from .tasks import run_task  # noqa: PLC0415
 
-    base = tempfile.mkdtemp(prefix="shard_export_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="shard_export_", ignore_cleanup_errors=True) as base:
         _docs(spark, sf_dir).select("doc_id", "text").write.mode("overwrite").parquet(
             f"{base}/documents.parquet"
         )
@@ -2189,15 +2156,8 @@ def shard_export_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
             vocab_size=100, n_shards=8, seed="ep0",
         )
         out = spark.read.parquet(f"{base}/training_shards/ep0")
-        h = hex_to_long(
-            F.substring(
-                row_md5(
-                    F.col("doc_id"), F.col("pos"), F.col("n_tokens"),
-                    F.col("n_oov"), F.col("ids_csv"),
-                ),
-                1,
-                10,
-            )
+        h = row_hash(
+            F.col("doc_id"), F.col("pos"), F.col("n_tokens"), F.col("n_oov"), F.col("ids_csv")
         )
         return (
             out.groupBy(F.col("shard").cast("long").alias("shard"))
@@ -2207,8 +2167,6 @@ def shard_export_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -2237,10 +2195,7 @@ def shard_export_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         AND doc_id = min_id AND doc_id NOT IN (SELECT doc_b FROM nd)
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n_final_run1,
-           CAST(SUM(CAST(('0x' || substr(md5(
-             COALESCE(CAST(s.doc_id AS VARCHAR), chr(0) || 'NULL' || chr(0)) || '|' ||
-             COALESCE(d.text, chr(0) || 'NULL' || chr(0))
-           ), 1, 10)) AS BIGINT)) AS BIGINT) AS survivor_hash,
+           CAST(SUM({row_hash_sql("s.doc_id", "d.text")}) AS BIGINT) AS survivor_hash,
            CAST(0 AS BIGINT) AS n_final_run2,
            CAST(COUNT(*) AS BIGINT) AS n_seen_dropped_run2,
            CAST(COUNT(*) AS BIGINT) AS n_index_fps
@@ -2267,15 +2222,11 @@ def curate_incremental_noop(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a Bloom pre-filter was measured 12x slower there and deleted).
     The index grows with unique content, not crawl volume.
     Self-contained: temp base removed before returning."""
-    import shutil  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
 
-    from ..functions.hashing import hex_to_long, row_md5  # noqa: PLC0415
-    from . import llm_tasks  # noqa: PLC0415,F401 - registers the task
     from .tasks import run_task  # noqa: PLC0415
 
-    base = tempfile.mkdtemp(prefix="curate_inc_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="curate_inc_", ignore_cleanup_errors=True) as base:
         # Stage documents PLUS deterministic full-text clones (docs with
         # doc_id % 50 == 1, re-keyed above max_id) so the exact-dup
         # keeper branch does real work: the shared corpus plants only
@@ -2314,7 +2265,7 @@ def curate_incremental_noop(spark: SparkSession, sf_dir: str) -> DataFrame:
         if n_index is None:
             n_index = lake.read_table(spark, hist, "seen_fingerprints").count()
         out1 = spark.read.parquet(f"{base}/out1")
-        h = hex_to_long(F.substring(row_md5(F.col("doc_id"), F.col("text")), 1, 10))
+        h = row_hash(F.col("doc_id"), F.col("text"))
         return (
             out1.agg(
                 F.count(F.lit(1)).alias("n_final_run1"),
@@ -2327,5 +2278,3 @@ def curate_incremental_noop(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("n_index_fps", F.lit(int(n_index)).cast("long"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)

@@ -6,11 +6,11 @@ test tables with a DuckDB oracle twin.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geo import haversine_meters, haversine_sql
-from ..functions.hashing import hex_to_long, row_md5
+from ..functions.hashing import row_hash, row_hash_sql
 from ..operators.argmin_join import nearest_by_distance
 from ..operators.banded_join import banded_priority_join
 from ..operators.enrich import enrich_update
@@ -356,33 +356,30 @@ def json_extract_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     skip-if-unchanged publishing). Sum of bounded per-row md5-longs is
 #     commutative, so Spark's row order doesn't matter. --------------------
 
+# The F14 row hash over (event_id, event_type, value in cents), both engines.
+_EVENT_HASH_SQL = row_hash_sql("event_id", "event_type", "CAST(ROUND(value * 100) AS BIGINT)")
+
+
+def _event_hash() -> Column:
+    return row_hash(
+        F.col("event_id"),
+        F.col("event_type"),
+        F.round(F.col("value") * 100).cast("long"),
+    )
+
+
 @query(
     "content_hash",
-    """
+    f"""
     SELECT COUNT(*) AS n_rows,
-           CAST(SUM(CAST(('0x' || substr(md5(
-             COALESCE(CAST(event_id AS VARCHAR), chr(0) || 'NULL' || chr(0)) || '|' ||
-             COALESCE(event_type, chr(0) || 'NULL' || chr(0)) || '|' ||
-             COALESCE(CAST(CAST(ROUND(value * 100) AS BIGINT) AS VARCHAR), chr(0) || 'NULL' || chr(0))
-           ), 1, 10)) AS BIGINT)) AS BIGINT) AS content_hash
+           CAST(SUM({_EVENT_HASH_SQL}) AS BIGINT) AS content_hash
     FROM events
     """,
 )
 def content_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    h = hex_to_long(
-        F.substring(
-            row_md5(
-                F.col("event_id"),
-                F.col("event_type"),
-                F.round(F.col("value") * 100).cast("long"),
-            ),
-            1,
-            10,
-        )
-    )
     return ev.agg(
-        F.count(F.lit(1)).alias("n_rows"), F.sum(h).alias("content_hash")
+        F.count(F.lit(1)).alias("n_rows"), F.sum(_event_hash()).alias("content_hash")
     )
 
 
@@ -405,14 +402,8 @@ def content_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "compact_roundtrip_hash",
-    """
-    WITH h AS (
-      SELECT CAST(('0x' || substr(md5(
-        COALESCE(CAST(event_id AS VARCHAR), chr(0) || 'NULL' || chr(0)) || '|' ||
-        COALESCE(event_type, chr(0) || 'NULL' || chr(0)) || '|' ||
-        COALESCE(CAST(CAST(ROUND(value * 100) AS BIGINT) AS VARCHAR), chr(0) || 'NULL' || chr(0))
-      ), 1, 10)) AS BIGINT) AS hv
-      FROM events)
+    f"""
+    WITH h AS (SELECT {_EVENT_HASH_SQL} AS hv FROM events)
     SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
            CAST(SUM(hv) AS BIGINT) AS hash_before,
            CAST(SUM(hv) AS BIGINT) AS hash_after,
@@ -422,31 +413,17 @@ def content_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def compact_roundtrip_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
 
     from .tasks import run_task  # noqa: PLC0415
-    from . import stride_tasks  # noqa: PLC0415,F401 - registers lake-compact
 
     def _hash_agg(df: DataFrame, alias: str) -> DataFrame:
-        h = hex_to_long(
-            F.substring(
-                row_md5(
-                    F.col("event_id"),
-                    F.col("event_type"),
-                    F.round(F.col("value") * 100).cast("long"),
-                ),
-                1,
-                10,
-            )
-        )
-        aggs = [F.sum(h).alias(alias)]
+        aggs = [F.sum(_event_hash()).alias(alias)]
         if alias == "hash_before":
             aggs.insert(0, F.count(F.lit(1)).alias("n_rows"))
         return df.agg(*aggs)
 
-    base = tempfile.mkdtemp(prefix="compact_rt_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="compact_rt_", ignore_cleanup_errors=True) as base:
         ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
         ev.repartition(12).write.mode("overwrite").parquet(f"{base}/events")
         # materialize BEFORE the rewrite swaps the files out from under the plan
@@ -464,5 +441,3 @@ def compact_roundtrip_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("n_files_after", F.lit(int(m["files_after"])).cast("long"))
             .localCheckpoint(eager=True)  # self-contained: temp dir is removed below
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)

@@ -128,20 +128,20 @@ def _run_stream(
     accumulate them without bound. A run with no batches writes nothing;
     reading the empty out dir with the known schema returns the correct
     empty DataFrame, where schema inference would throw."""
-    root = tempfile.mkdtemp(prefix="stream_run_")
-    out_dir = os.path.join(root, "out")
     try:
-        with _stream_shuffle_scope(spark, src_dir):
-            run_bounded(
-                df,
-                sink(out_dir) if sink else write_each_batch(out_dir, mode),
-                os.path.join(root, "ckpt"),
-                mode,
-            )
-        os.makedirs(out_dir, exist_ok=True)
-        return spark.read.schema(schema or df.schema).parquet(out_dir).localCheckpoint(eager=True)
+        with tempfile.TemporaryDirectory(prefix="stream_run_", ignore_cleanup_errors=True) as root:
+            out_dir = os.path.join(root, "out")
+            with _stream_shuffle_scope(spark, src_dir):
+                run_bounded(
+                    df,
+                    sink(out_dir) if sink else write_each_batch(out_dir, mode),
+                    os.path.join(root, "ckpt"),
+                    mode,
+                )
+            os.makedirs(out_dir, exist_ok=True)
+            out = spark.read.schema(schema or df.schema).parquet(out_dir)
+            return out.localCheckpoint(eager=True)
     finally:
-        shutil.rmtree(root, ignore_errors=True)
         shutil.rmtree(src_dir, ignore_errors=True)
 
 
@@ -328,7 +328,7 @@ def streaming_ride_tracker(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").alias("recorded_at_time"),
     )
     out = _run_stream(
-        stream_ride_tracker(stream, watermark=f"{wm_days} days", settle_hours=6),
+        stream_ride_tracker(stream, watermark=f"{wm_days} days"),
         spark,
         src_dir,
         mode="update",
@@ -625,8 +625,7 @@ def streaming_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     seen = d.where(F.col("doc_id") % 5 == 0)
-    idx_dir = tempfile.mkdtemp(prefix="lsh_index_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="lsh_index_", ignore_cleanup_errors=True) as idx_dir:
         dd.band_buckets(dd.minhash_signatures(seen)).select(
             "bucket"
         ).distinct().write.mode("overwrite").parquet(idx_dir)
@@ -661,8 +660,6 @@ def streaming_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         )
         return _run_stream(stream, spark, src_dir, sink=_score, schema=out_schema)
-    finally:
-        shutil.rmtree(idx_dir, ignore_errors=True)
 
 
 @query(
@@ -791,10 +788,9 @@ def streaming_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     b2all = clones.unionByName(planted2)
 
-    base = tempfile.mkdtemp(prefix="wm_late_")
-    src = os.path.join(base, "src")
-    os.makedirs(src)
-    try:
+    with tempfile.TemporaryDirectory(prefix="wm_late_", ignore_cleanup_errors=True) as base:
+        src = os.path.join(base, "src")
+        os.makedirs(src)
         # ONE staging job for all three batch files (r9; guide §8): the
         # pre-change per-batch coalesce(1) writes single-threaded the
         # whole events scan TWICE (b0 and b2 both derive from it) and
@@ -843,5 +839,3 @@ def streaming_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame
         return out.select(
             F.col("w.start").alias("window_start"), "n_rows", "sum_ids"
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)

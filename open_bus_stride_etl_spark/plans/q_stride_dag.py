@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geo import haversine_sql
-from ..functions.hashing import hex_to_long, row_md5
+from ..functions.hashing import row_hash, row_hash_sql
 from ..sources import stride_lake as lake
 from ..sources.lake import load_table
 from .registry import query
@@ -286,13 +286,6 @@ def _build_lake(spark: SparkSession, sf_dir: str, base: str) -> None:
 
 
 
-_NULL = "chr(0) || 'NULL' || chr(0)"
-
-
-def _sql_s(expr: str) -> str:
-    return f"COALESCE(CAST({expr} AS VARCHAR), {_NULL})"
-
-
 _SQL_STRIDE_DAG = f"""
     WITH r0 AS (
       SELECT CAST(event_id // 20 AS BIGINT) AS rid
@@ -445,18 +438,12 @@ _SQL_STRIDE_DAG = f"""
              CAST(COUNT(duration) AS BIGINT) AS n_duration_set,
              CAST(COUNT(route_id) AS BIGINT) AS n_route_matched,
              CAST(COUNT(gtfs_id) AS BIGINT) AS n_gtfs_matched,
-             CAST(SUM(CAST(('0x' || substr(md5(
-               {_sql_s('rid')} || '|' ||
-               {_sql_s('first_id')} || '|' ||
-               {_sql_s('last_id')} || '|' ||
-               {_sql_s('duration')} || '|' ||
-               {_sql_s('route_id')} || '|' ||
-               {_sql_s('journey_id')} || '|' ||
-               {_sql_s('sched_id')} || '|' ||
-               {_sql_s('gtfs_id')} || '|' ||
-               {_sql_s("date_diff('second', TIMESTAMP '1970-01-01 00:00:00', upd_marker)")} || '|' ||
-               {_sql_s("date_diff('second', TIMESTAMP '1970-01-01 00:00:00', fl_marker)")}
-             ), 1, 10)) AS BIGINT)) AS BIGINT) AS ride_hash,
+             CAST(SUM({row_hash_sql(
+               'rid', 'first_id', 'last_id', 'duration', 'route_id',
+               'journey_id', 'sched_id', 'gtfs_id',
+               "date_diff('second', TIMESTAMP '1970-01-01 00:00:00', upd_marker)",
+               "date_diff('second', TIMESTAMP '1970-01-01 00:00:00', fl_marker)",
+             )}) AS BIGINT) AS ride_hash,
              CAST(0 AS BIGINT) AS upd2_duration,
              CAST(0 AS BIGINT) AS upd2_gtfs
       FROM final
@@ -464,14 +451,9 @@ _SQL_STRIDE_DAG = f"""
       SELECT CAST(COUNT(*) AS BIGINT) AS n_ride_stops,
              CAST(COUNT(g_stop) AS BIGINT) AS n_stops_matched,
              CAST(COUNT(nearest_id) AS BIGINT) AS n_nearest_set,
-             CAST(SUM(CAST(('0x' || substr(md5(
-               {_sql_s('rs_id')} || '|' ||
-               {_sql_s('rid')} || '|' ||
-               {_sql_s('sid')} || '|' ||
-               {_sql_s('k')} || '|' ||
-               {_sql_s('g_stop')} || '|' ||
-               {_sql_s('nearest_id')}
-             ), 1, 10)) AS BIGINT)) AS BIGINT) AS stop_hash,
+             CAST(SUM({row_hash_sql(
+               'rs_id', 'rid', 'sid', 'k', 'g_stop', 'nearest_id'
+             )}) AS BIGINT) AS stop_hash,
              CAST(0 AS BIGINT) AS upd2_stops,
              CAST(0 AS BIGINT) AS upd2_nearest
       FROM rsfinal
@@ -498,14 +480,11 @@ def stride_dag_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation over ride-keyed candidates; each lake swap is a
     write-new-and-rename, never read-overwrite. Self-contained: the
     temp lake is removed before returning."""
-    import shutil  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
 
-    from . import stride_tasks  # noqa: PLC0415,F401 - registers the tasks
     from .tasks import run_task  # noqa: PLC0415
 
-    base = tempfile.mkdtemp(prefix="stride_dag_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="stride_dag_", ignore_cleanup_errors=True) as base:
         _build_lake(spark, sf_dir, base)
         window = {"min_date": "2024-03-01", "max_date": "2024-03-15"}
 
@@ -534,23 +513,17 @@ def stride_dag_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         m2 = _chain()
 
         rides = lake.read_table(spark, base, "siri_ride")
-        h = hex_to_long(
-            F.substring(
-                row_md5(
-                    F.col("id"),
-                    F.col("first_vehicle_location_id"),
-                    F.col("last_vehicle_location_id"),
-                    F.col("duration_minutes"),
-                    F.col("route_gtfs_ride_id"),
-                    F.col("journey_gtfs_ride_id"),
-                    F.col("scheduled_time_gtfs_ride_id"),
-                    F.col("gtfs_ride_id"),
-                    F.unix_timestamp("updated_duration_minutes"),
-                    F.unix_timestamp("updated_first_last_vehicle_locations"),
-                ),
-                1,
-                10,
-            )
+        h = row_hash(
+            F.col("id"),
+            F.col("first_vehicle_location_id"),
+            F.col("last_vehicle_location_id"),
+            F.col("duration_minutes"),
+            F.col("route_gtfs_ride_id"),
+            F.col("journey_gtfs_ride_id"),
+            F.col("scheduled_time_gtfs_ride_id"),
+            F.col("gtfs_ride_id"),
+            F.unix_timestamp("updated_duration_minutes"),
+            F.unix_timestamp("updated_first_last_vehicle_locations"),
         )
         ride_agg = rides.agg(
             F.count(F.lit(1)).alias("n_rides"),
@@ -561,19 +534,13 @@ def stride_dag_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(h).alias("ride_hash"),
         )
         rstops = lake.read_table(spark, base, "siri_ride_stop")
-        h2 = hex_to_long(
-            F.substring(
-                row_md5(
-                    F.col("id"),
-                    F.col("siri_ride_id"),
-                    F.col("siri_stop_id"),
-                    F.col("order"),
-                    F.col("gtfs_stop_id"),
-                    F.col("nearest_siri_vehicle_location_id"),
-                ),
-                1,
-                10,
-            )
+        h2 = row_hash(
+            F.col("id"),
+            F.col("siri_ride_id"),
+            F.col("siri_stop_id"),
+            F.col("order"),
+            F.col("gtfs_stop_id"),
+            F.col("nearest_siri_vehicle_location_id"),
         )
         stop_agg = rstops.agg(
             F.count(F.lit(1)).alias("n_ride_stops"),
@@ -585,8 +552,6 @@ def stride_dag_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         for name, val in m2.items():
             out = out.withColumn(name, F.lit(val).cast("long"))
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -690,15 +655,6 @@ def _build_packager_lake(spark: SparkSession, sf_dir: str, base: str) -> None:
 
 
 
-_HASH_COLS_SQL = " || '|' || ".join(
-    _sql_s(c)
-    for c in (
-        "loc_id", "ts", "lat", "lon", "bearing", "velocity", "dist",
-        "rs_id", "k", "rid", "jref", "vref", "sched", "dur",
-        "op", "line", "scode", "glat", "glon", "gcity", "gname",
-    )
-)
-
 _SQL_PACKAGE_BACKFILL = f"""
     WITH r0 AS (
       SELECT CAST(event_id // 50 AS BIGINT) AS rid
@@ -749,7 +705,11 @@ _SQL_PACKAGE_BACKFILL = f"""
     ),
     h AS (
       SELECT date_trunc('hour', ts) AS hr,
-             CAST(('0x' || substr(md5({_HASH_COLS_SQL}), 1, 10)) AS BIGINT) AS hv
+             {row_hash_sql(
+               "loc_id", "ts", "lat", "lon", "bearing", "velocity", "dist",
+               "rs_id", "k", "rid", "jref", "vref", "sched", "dur",
+               "op", "line", "scode", "glat", "glon", "gcity", "gname",
+             )} AS hv
       FROM wide
     ),
     ph AS (SELECT hr, SUM(hv) + COUNT(*) AS mhash, COUNT(*) AS n FROM h GROUP BY hr)
@@ -790,15 +750,12 @@ def package_backfill_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     before returning."""
     import glob  # noqa: PLC0415
     import json  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
 
     from ..sources.csv_package import manifest_fields  # noqa: PLC0415
-    from . import stride_tasks  # noqa: PLC0415,F401 - registers the task
     from .tasks import run_task  # noqa: PLC0415
 
-    base = tempfile.mkdtemp(prefix="pkg_backfill_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="pkg_backfill_", ignore_cleanup_errors=True) as base:
         _build_packager_lake(spark, sf_dir, base)
         out = f"{base}/packages"
         m1 = run_task(spark, "siri-packages-backfill", base_dir=base, out_dir=out)
@@ -812,12 +769,10 @@ def package_backfill_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         typed = (
             spark.read.option("header", True)
             .schema(all_string)
-            .csv(f"{out}/*.csv")
+            .csv(sorted(glob.glob(f"{out}/*.csv")))
             .select(*[F.col(f["name"]).cast(f["type"]).alias(f["name"]) for f in fields])
         )
-        hv = hex_to_long(
-            F.substring(row_md5(*[F.col(f["name"]) for f in fields]), 1, 10)
-        )
+        hv = row_hash(*[F.col(f["name"]) for f in fields])
         csv_sum = typed.agg(
             (F.sum(hv) + F.count(F.lit(1))).alias("s")
         ).collect()[0]["s"]
@@ -834,8 +789,6 @@ def package_backfill_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
         schema = ", ".join(f"{k} long" for k in row)
         return spark.createDataFrame([tuple(row.values())], schema)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -950,14 +903,12 @@ _SQL_RIDE_AGG_LEDGER = f"""
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n_rides,
            CAST(COUNT(end_t) AS BIGINT) AS n_end_set,
-           CAST(SUM(CAST(('0x' || substr(md5(
-             {_sql_s('gid')} || '|' ||
-             {_sql_s('groute')} || '|' ||
-             {_sql_s("date_diff('second', TIMESTAMP '1970-01-01 00:00:00', start0)")} || '|' ||
-             {_sql_s("date_diff('second', TIMESTAMP '1970-01-01 00:00:00', end_t)")} || '|' ||
-             {_sql_s('first_id')} || '|' ||
-             {_sql_s('last_id')}
-           ), 1, 10)) AS BIGINT)) AS BIGINT) AS ride_agg_hash,
+           CAST(SUM({row_hash_sql(
+             'gid', 'groute',
+             "date_diff('second', TIMESTAMP '1970-01-01 00:00:00', start0)",
+             "date_diff('second', TIMESTAMP '1970-01-01 00:00:00', end_t)",
+             'first_id', 'last_id',
+           )}) AS BIGINT) AS ride_agg_hash,
            CAST(10 AS BIGINT) AS dates_run1,
            CAST(9 AS BIGINT) AS ok_run1,
            CAST(1 AS BIGINT) AS failed_run1,
@@ -990,32 +941,23 @@ def ride_aggregation_ledger_invariance(spark: SparkSession, sf_dir: str) -> Data
     dates in Python), ledger bookkeeping as parquet appends, aggregate
     tables refreshed per run. Self-contained: temp lake removed before
     returning."""
-    import shutil  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
 
-    from . import stride_tasks  # noqa: PLC0415,F401 - registers the task
     from .tasks import run_task  # noqa: PLC0415
 
-    base = tempfile.mkdtemp(prefix="gtfs_ledger_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="gtfs_ledger_", ignore_cleanup_errors=True) as base:
         _build_gtfs_lake(spark, sf_dir, base)
         m1 = run_task(spark, "gtfs-update-ride-aggregations", base_dir=base)
         m2 = run_task(spark, "gtfs-update-ride-aggregations", base_dir=base)
 
         rides = lake.read_table(spark, base, "gtfs_ride")
-        h = hex_to_long(
-            F.substring(
-                row_md5(
-                    F.col("id"),
-                    F.col("gtfs_route_id"),
-                    F.unix_timestamp("start_time"),
-                    F.unix_timestamp("end_time"),
-                    F.col("first_gtfs_ride_stop_id"),
-                    F.col("last_gtfs_ride_stop_id"),
-                ),
-                1,
-                10,
-            )
+        h = row_hash(
+            F.col("id"),
+            F.col("gtfs_route_id"),
+            F.unix_timestamp("start_time"),
+            F.unix_timestamp("end_time"),
+            F.col("first_gtfs_ride_stop_id"),
+            F.col("last_gtfs_ride_stop_id"),
         )
         ledger = lake.read_table(spark, base, "gtfs_data_task")
         # one aggregation job for both ledger counters (was two)
@@ -1038,8 +980,6 @@ def ride_aggregation_ledger_invariance(spark: SparkSession, sf_dir: str) -> Data
             .withColumn("n_ledger_ok", F.lit(int(n_ok)).cast("long"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 _SQL_HOURLY_LOOP = """
@@ -1101,14 +1041,11 @@ def package_hourly_loop_invariance(spark: SparkSession, sf_dir: str) -> DataFram
     (package_backfill_invariance — same lake, same manifests); this row
     pins the incremental CONTROL FLOW. Self-contained: temp dirs
     removed before returning."""
-    import shutil  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
 
-    from . import stride_tasks  # noqa: PLC0415,F401 - registers the task
     from .tasks import run_task  # noqa: PLC0415
 
-    base = tempfile.mkdtemp(prefix="pkg_hourly_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="pkg_hourly_", ignore_cleanup_errors=True) as base:
         _build_packager_lake(spark, sf_dir, base)
         out = f"{base}/packages"
         # max_hours bounds the sweep (the loop pays ~2 Spark jobs per
@@ -1131,5 +1068,3 @@ def package_hourly_loop_invariance(spark: SparkSession, sf_dir: str) -> DataFram
         }
         schema = ", ".join(f"{k} long" for k in row)
         return spark.createDataFrame([tuple(row.values())], schema)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)

@@ -433,7 +433,7 @@ COVERED_BY = {
     "code_date_dim_join": "computed_key_join",  # derived-key equi-join family
     "streaming_user_first_last": "streaming_ride_tracker",  # keyed stateful streaming tracker family
     # r8 stale-sweep demotions (reverse twin swaps with the six promotions):
-    "content_hash": "compact_roundtrip_hash",  # F14 order-insensitive content hash computed in-query there (same row_md5/hex_to_long kernel)
+    "content_hash": "compact_roundtrip_hash",  # F14 order-insensitive content hash computed in-query there (same functions/hashing.row_hash kernel)
     "reservoir_per_user": "balanced_corpus",  # md5-bucket membership core (repointed r9: stratified_sample_counts demoted)
     "packed_batches": "doc_chunks",  # chunking/packing family (posexplode map-local windows)
     "text_quality": "corpus_clean_verdicts",  # quality_score_bp + lang_id gate the in-window curation outcome ledger (repointed late-r9)

@@ -45,6 +45,14 @@ class Task:
 REGISTRY: dict[str, Task] = {}
 
 
+def tasks() -> dict[str, Task]:
+    """Every registered task. Imports the task modules first: they
+    register through ``@task`` and import this module, hence deferred."""
+    from . import llm_tasks, stride_tasks  # noqa: F401, PLC0415
+
+    return REGISTRY
+
+
 def task(name: str, cadence: str = "hourly", num_days: int | None = None):
     def deco(fn):
         REGISTRY[name] = Task(name=name, fn=fn, cadence=cadence, num_days=num_days)
@@ -60,7 +68,7 @@ def run_task(spark: SparkSession, name: str, **params) -> dict:
     (``session.configure``) first, so a task reads and writes the same
     way under any session: UTC, INT64 timestamps with footer statistics,
     nanosecond parquet readable."""
-    t = REGISTRY[name]
+    t = tasks()[name]
     configure(spark)
     merged = dict(params)
     if t.num_days is not None:

@@ -46,7 +46,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import hex_to_long, row_md5
+from ..functions.hashing import row_hash
 from . import fs
 
 # Spark simpleString -> frictionless datapackage field type
@@ -118,21 +118,16 @@ def build_manifest(base_name: str, fields: list[dict], row_count: int, chash: in
 
 
 def manifest_fields(manifest: dict) -> list[dict]:
-    """Normalize any supported manifest shape to [{"name", "type":
-    <spark type>}]. Accepts our frictionless shape, a reference-produced
-    datapackage.json (fields without spark_type), and the legacy flat
-    {"fields": [...]} form from earlier rounds."""
-    if "resources" in manifest:
-        raw = manifest["resources"][0]["schema"]["fields"]
-    else:  # legacy flat manifest
-        raw = manifest["fields"]
+    """Normalize a frictionless manifest to [{"name", "type": <spark
+    type>}]. Accepts our shape and a reference-produced datapackage.json
+    (fields without spark_type)."""
     out = []
-    for f in raw:
+    for f in manifest["resources"][0]["schema"]["fields"]:
         if "spark_type" in f:
             spark_type = f["spark_type"]
         elif f.get("type") in _DP_TO_SPARK:  # datapackage vocabulary
             spark_type = _DP_TO_SPARK[f["type"]]
-        else:  # legacy flat manifests stored spark simpleStrings directly
+        else:  # a reference type outside _DP_TO_SPARK passes through as is
             spark_type = f.get("type", "string")
         out.append({"name": f["name"], "type": spark_type})
     return out
@@ -178,7 +173,7 @@ def key_hashes(df: DataFrame, key_col: str) -> dict[str, tuple[int, int]]:
     key present in ``df``. The hash is the sum of per-row md5-longs over
     the data columns plus the row count."""
     cols = [c for c in df.columns if c != key_col]
-    h = hex_to_long(F.substring(row_md5(*[F.col(c) for c in cols]), 1, 10))
+    h = row_hash(*[F.col(c) for c in cols])
     return {
         r[key_col]: ((r["h"] or 0) + r["n"], r["n"])
         for r in df.groupBy(key_col)

@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators.first_last import SETTLE_HOURS
+
 # ---------------------------------------------------------------------------
 # Watermarked aggregations (declarative — same exprs as the batch path)
 # ---------------------------------------------------------------------------
@@ -86,7 +88,7 @@ def _track_ride(
     key: tuple,
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
-    settle_hours: int = 6,
+    settle_hours: int = SETTLE_HOURS,
 ) -> Iterator[pd.DataFrame]:
     """Per-ride state machine (the reference's add_ride_durations guards,
     siri/add_ride_durations.py:68-84, as explicit streaming state):
@@ -163,7 +165,7 @@ def _track_ride(
 def stream_ride_tracker(
     locations_with_ride: DataFrame,
     watermark: str = "4 days",
-    settle_hours: int = 6,
+    settle_hours: int = SETTLE_HOURS,
 ) -> DataFrame:
     """Custom stateful streaming operator: ``applyInPandasWithState``
     over rides, with event-time timeout implementing the settle guard.

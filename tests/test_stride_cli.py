@@ -142,6 +142,32 @@ def test_cli_list_and_registry(capsys):
     assert expected <= set(REGISTRY)
 
 
+def test_run_task_loads_the_task_modules(tmp_path):
+    """A scheduler that imports only ``plans.tasks`` can run any
+    registered task: ``run_task`` loads the task modules itself."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {root!r})
+from pyspark.sql import SparkSession
+from open_bus_stride_etl_spark.plans.tasks import run_task
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+run_task(spark, "siri-storage-backup-cleanup", base_dir={str(tmp_path)!r})
+spark.stop()
+"""
+    res = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, capture_output=True, text=True,
+        timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    assert '"archived_days": 0' in res.stdout
+
+
 def test_backup_tasks(spark, lake_dir, tmp_path):
     import datetime
     import os

@@ -15,6 +15,7 @@ and todo rides."""
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
@@ -221,7 +222,6 @@ def generate(spark: SparkSession, base_dir: str, n_rides: int) -> dict:
 
 
 def run_chain(spark: SparkSession, base_dir: str, min_date: str, max_date: str) -> dict:
-    from open_bus_stride_etl_spark.plans import stride_tasks  # noqa: F401, PLC0415
     from open_bus_stride_etl_spark.plans.tasks import run_task  # noqa: PLC0415
 
     timings = {}
@@ -232,18 +232,18 @@ def run_chain(spark: SparkSession, base_dir: str, min_date: str, max_date: str) 
         "siri-update-ride-stops-vehicle-locations",
         "gtfs-update-ride-aggregations",
     ):
-        kwargs = {"base_dir": base_dir}
-        if name.startswith("siri-"):
-            kwargs.update(min_date=min_date, max_date=max_date)
-        m = run_task(spark, name, **kwargs)
-        timings[name] = m["elapsed_sec"]
+        window = {"min_date": min_date, "max_date": max_date} if name.startswith("siri-") else {}
+        timings[name] = run_task(spark, name, base_dir=base_dir, **window)["elapsed_sec"]
     return timings
 
 
 if __name__ == "__main__":
-    base_dir = sys.argv[1]
-    n_rides = int(sys.argv[2]) if len(sys.argv) > 2 else 10000
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("lake_dir")
+    p.add_argument("n_rides", nargs="?", type=int, default=10000)
+    p.add_argument("--run", action="store_true", help="then run the enrichment DAG chain")
+    args = p.parse_args()
     spark = build_session("gen-stride-data")
-    print(generate(spark, base_dir, n_rides))
-    if "--run" in sys.argv:
-        print(run_chain(spark, base_dir, "2024-05-01", "2024-05-12"))
+    print(generate(spark, args.lake_dir, args.n_rides))
+    if args.run:
+        print(run_chain(spark, args.lake_dir, "2024-05-01", "2024-05-12"))

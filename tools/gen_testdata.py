@@ -49,30 +49,28 @@ def generate(
         # single file per table, like the shipped testdata (DuckDB's
         # read_parquet gets a plain file path)
         import glob as _glob  # noqa: PLC0415
-        import shutil as _shutil  # noqa: PLC0415
+        import tempfile  # noqa: PLC0415
 
-        tmp = os.path.join(out_dir, f"_tmp_{name}")
-        stage = os.path.join(out_dir, f"_stage_{name}")
-        # Two-phase write: the generator expressions (40 md5 words per
-        # document row, 64 hash components per embedding) are the
-        # expensive part, and a direct coalesce(1) write collapses the
-        # WHOLE plan into one task — sf100 documents ran a single core
-        # for the full 200M-md5 computation. Phase 1 computes and writes
-        # in parallel; phase 2 re-reads the finished bytes and rewrites
-        # them as one file (IO-bound, no expression work).
-        df.write.mode("overwrite").parquet(stage)
-        # small row groups: DuckDB (the oracle engine) parallelizes per
-        # row group, so a single maximal group would serialize its side
-        # of every heavy comparison at generated scales (block is the
-        # ENCODED group size — pass a smaller value for tables that
-        # compress well but explode downstream, e.g. embeddings)
-        df.sparkSession.read.parquet(stage).coalesce(1).write.mode("overwrite").option(
-            "parquet.block.size", block
-        ).parquet(tmp)
-        part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        os.replace(part, os.path.join(out_dir, f"{name}.parquet"))
-        _shutil.rmtree(tmp, ignore_errors=True)
-        _shutil.rmtree(stage, ignore_errors=True)
+        with tempfile.TemporaryDirectory(prefix=f"_{name}_", dir=out_dir) as scratch:
+            tmp, stage = os.path.join(scratch, "tmp"), os.path.join(scratch, "stage")
+            # Two-phase write: the generator expressions (40 md5 words per
+            # document row, 64 hash components per embedding) are the
+            # expensive part, and a direct coalesce(1) write collapses the
+            # WHOLE plan into one task — sf100 documents ran a single core
+            # for the full 200M-md5 computation. Phase 1 computes and writes
+            # in parallel; phase 2 re-reads the finished bytes and rewrites
+            # them as one file (IO-bound, no expression work).
+            df.write.mode("overwrite").parquet(stage)
+            # small row groups: DuckDB (the oracle engine) parallelizes per
+            # row group, so a single maximal group would serialize its side
+            # of every heavy comparison at generated scales (block is the
+            # ENCODED group size — pass a smaller value for tables that
+            # compress well but explode downstream, e.g. embeddings)
+            df.sparkSession.read.parquet(stage).coalesce(1).write.mode("overwrite").option(
+                "parquet.block.size", block
+            ).parquet(tmp)
+            part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+            os.replace(part, os.path.join(out_dir, f"{name}.parquet"))
 
     regions = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
     write(
