@@ -10,7 +10,7 @@ aggregate is integer-typed so the DuckDB oracles compare exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import _shingled
@@ -85,6 +85,19 @@ def term_document_frequency(docs: DataFrame) -> DataFrame:
         .where(F.col("term") != "")
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
+    )
+
+
+def top_df_vocab(docs: DataFrame, vocab_size: int) -> DataFrame:
+    """The corpus's own vocabulary ``(term, token_id)``: its top
+    ``vocab_size`` terms by document frequency, ranked 1.. by (df desc,
+    term asc) — the term tie-break makes the cut deterministic. A
+    distributed top-k (sort + limit -> TakeOrdered), then a
+    vocab_size-row window; never a global rank over the term table."""
+    order = [F.col("df").desc(), F.col("term").asc()]
+    head = term_document_frequency(docs).orderBy(*order).limit(vocab_size)
+    return head.select(
+        "term", F.row_number().over(Window.orderBy(*order)).cast("long").alias("token_id")
     )
 
 

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long
+from .text import doc_fingerprint, lang_id, quality_score_bp
 
 # quantile_threshold_filter keeps the top KEEP_NUM/KEEP_DEN of each group.
 KEEP_NUM, KEEP_DEN = 1, 5
@@ -34,6 +35,49 @@ KEEP_NUM, KEEP_DEN = 1, 5
 # duplicate decisions never correlate.
 MIX_SEED = "mix"
 SPLIT_SEED = "split"
+
+# The curate selection (llm-curate-corpus, corpus_clean_*; oracle twin
+# q_llm._sql_curate): a document survives at quality >= QUALITY_MIN_BP,
+# language in CURATE_LANGS, as its exact-dup group's min-id keeper, and
+# off the higher-id side of every near-dup pair at >= JACCARD_MIN_BP.
+QUALITY_MIN_BP = 2000
+CURATE_LANGS = ("en", "und")
+JACCARD_MIN_BP = 5000
+
+
+def curate_scores(docs: DataFrame) -> DataFrame:
+    """``docs`` plus the curate selection's per-document scores:
+    ``_quality_bp``, ``_lang``, ``_fp`` (the full-text fingerprint) and
+    ``_min_id`` (the keeper of the doc's exact-duplicate group). The
+    keeper window is the selection's one corpus shuffle."""
+    t = F.col("text")
+    return docs.select(
+        "*",
+        quality_score_bp(t).alias("_quality_bp"),
+        lang_id(t).alias("_lang"),
+        doc_fingerprint(t).alias("_fp"),
+    ).withColumn("_min_id", F.min("doc_id").over(Window.partitionBy("_fp")))
+
+
+def curate_checks(quality_min_bp: int = QUALITY_MIN_BP, langs=CURATE_LANGS) -> tuple[Column, ...]:
+    """The per-document checks over ``curate_scores``' columns, in
+    verdict order: quality floor, language allow-list, exact-dup keeper."""
+    return (
+        F.col("_quality_bp") >= quality_min_bp,
+        F.col("_lang").isin(*langs),
+        F.col("doc_id") == F.col("_min_id"),
+    )
+
+
+def near_dup_losers(pairs: DataFrame, jaccard_min_bp: int) -> DataFrame:
+    """The distinct ``doc_id``s that lose a near-dup pair: the ``doc_b``
+    (higher-id) side of every ``(doc_a, doc_b, jaccard_bp)`` pair at
+    ``jaccard_min_bp`` or more."""
+    return (
+        pairs.where(F.col("jaccard_bp") >= jaccard_min_bp)
+        .select(F.col("doc_b").alias("doc_id"))
+        .distinct()
+    )
 
 
 def quantile_threshold_filter(scored: DataFrame, group_col: str, score_col: str) -> DataFrame:

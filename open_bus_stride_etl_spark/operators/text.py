@@ -6,6 +6,10 @@ All pure column expressions (JVM codegen, no Python UDFs): at 100 TB the
 text columns stream through whole-stage codegen with nothing leaving the
 executor. Ratios are integer basis points so oracle comparisons are
 exact.
+
+Each text kernel comes twice, built from the same constants: the Spark
+``Column`` and its DuckDB twin (``*_sql``, over a VARCHAR expression).
+Oracles call the twins; no regex, cap or profile is spelled elsewhere.
 """
 
 from __future__ import annotations
@@ -18,15 +22,20 @@ from ..functions.hashing import md5_long
 # Deterministic "BPE-ish" token regex: word pieces or single punctuation.
 BPE_TOKEN_RE = r"\w+|[^\w\s]"
 PUNCT_RE = r"[^\w\s]"
-# Every shingle operator reads word 3-grams (the oracles' _SQL_SHINGLES).
+WS_RE = r"\s+"
+# Every shingle operator reads word 3-grams (the oracles' shingle CTE).
 SHINGLE_K = 3
 # prefix_fingerprint's normalized-prefix length.
 PREFIX_CHARS = 60
 STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "it")
+# quality_score_bp's caps: 10 bp per char up to LEN_CAP_CHARS chars;
+# RATIO_CAP_BP on the punctuation penalty and on the stopword bonus.
+LEN_CAP_CHARS = 400
+RATIO_CAP_BP = 3000
 
 # Marker-word profiles for the n-gram language-ID heuristic. Tiny on
 # purpose: the heuristic's job is deterministic scoring + argmax, the
-# profile lists are swappable.
+# profile lists are swappable. Insertion order is the tie preference.
 LANG_PROFILES: dict[str, tuple[str, ...]] = {
     "en": ("the", "and", "of", "is"),
     "es": ("el", "la", "de", "y"),
@@ -35,20 +44,39 @@ LANG_PROFILES: dict[str, tuple[str, ...]] = {
 }
 
 
+def _words_re(words: tuple[str, ...]) -> str:
+    return r"\b(" + "|".join(words) + r")\b"
+
+
 def normalize_text(text: Column) -> Column:
     """Lowercase + collapse whitespace — the canonical form every dedup/
     fingerprint operator hashes."""
-    return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
+    return F.trim(F.regexp_replace(F.lower(text), WS_RE, " "))
+
+
+def normalize_text_sql(expr: str) -> str:
+    return f"trim(regexp_replace(lower({expr}), '{WS_RE}', ' ', 'g'))"
 
 
 def ws_token_count(text: Column) -> Column:
     return F.when(F.length(F.trim(text)) == 0, F.lit(0)).otherwise(
-        F.size(F.split(F.trim(text), r"\s+"))
+        F.size(F.split(F.trim(text), WS_RE))
+    )
+
+
+def ws_token_count_sql(expr: str) -> str:
+    return (
+        f"CASE WHEN length(trim({expr})) = 0 THEN 0"
+        f" ELSE len(regexp_split_to_array(trim({expr}), '{WS_RE}')) END"
     )
 
 
 def bpe_token_count(text: Column) -> Column:
     return F.regexp_count(text, F.lit(BPE_TOKEN_RE))
+
+
+def bpe_token_count_sql(expr: str) -> str:
+    return f"len(regexp_extract_all({expr}, '{BPE_TOKEN_RE}'))"
 
 
 def punct_ratio_bp(text: Column) -> Column:
@@ -59,12 +87,28 @@ def punct_ratio_bp(text: Column) -> Column:
     )
 
 
+def punct_ratio_bp_sql(expr: str) -> str:
+    n_punct = f"(length({expr}) - length(regexp_replace({expr}, '{PUNCT_RE}', '', 'g')))"
+    return (
+        f"CASE WHEN length({expr}) = 0 THEN 0"
+        f" ELSE CAST(ROUND(10000.0 * {n_punct} / length({expr})) AS BIGINT) END"
+    )
+
+
 def stopword_ratio_bp(text: Column) -> Column:
-    pattern = r"\b(" + "|".join(STOPWORDS) + r")\b"
-    n_stop = F.regexp_count(F.lower(text), F.lit(pattern))
+    n_stop = F.regexp_count(F.lower(text), F.lit(_words_re(STOPWORDS)))
     n_tok = ws_token_count(text)
     return F.when(n_tok == 0, F.lit(0)).otherwise(
         F.round(10000.0 * n_stop / n_tok).cast("long")
+    )
+
+
+def stopword_ratio_bp_sql(expr: str) -> str:
+    n_stop = f"len(regexp_extract_all(lower({expr}), '{_words_re(STOPWORDS)}'))"
+    n_tok = f"len(regexp_split_to_array(trim({expr}), '{WS_RE}'))"
+    return (
+        f"CASE WHEN length(trim({expr})) = 0 THEN 0"
+        f" ELSE CAST(ROUND(10000.0 * {n_stop} / {n_tok}) AS BIGINT) END"
     )
 
 
@@ -72,18 +116,33 @@ def quality_score_bp(text: Column) -> Column:
     """Composite quality heuristic in [0, 10000]: long-enough documents
     with moderate punctuation and a natural stopword rate score high.
     Integer arithmetic end-to-end (exact across engines)."""
-    len_score = F.least(F.length(text), F.lit(400)) * 10  # ≤ 4000
-    punct_pen = F.least(punct_ratio_bp(text), F.lit(3000))
-    stop_score = F.least(stopword_ratio_bp(text), F.lit(3000))
+    len_score = F.least(F.length(text), F.lit(LEN_CAP_CHARS)) * 10
+    punct_pen = F.least(punct_ratio_bp(text), F.lit(RATIO_CAP_BP))
+    stop_score = F.least(stopword_ratio_bp(text), F.lit(RATIO_CAP_BP))
     return F.greatest(
         F.lit(0), F.least(F.lit(10000), len_score - punct_pen + stop_score)
     ).cast("long")
 
 
+def quality_score_bp_sql(expr: str) -> str:
+    return (
+        f"GREATEST(0, LEAST(10000, LEAST(length({expr}), {LEN_CAP_CHARS}) * 10"
+        f" - LEAST({punct_ratio_bp_sql(expr)}, {RATIO_CAP_BP})"
+        f" + LEAST({stopword_ratio_bp_sql(expr)}, {RATIO_CAP_BP})))"
+    )
+
+
 def lang_scores(text: Column) -> dict[str, Column]:
     low = F.lower(text)
     return {
-        lang: F.regexp_count(low, F.lit(r"\b(" + "|".join(words) + r")\b"))
+        lang: F.regexp_count(low, F.lit(_words_re(words)))
+        for lang, words in LANG_PROFILES.items()
+    }
+
+
+def lang_scores_sql(expr: str) -> dict[str, str]:
+    return {
+        lang: f"len(regexp_extract_all(lower({expr}), '{_words_re(words)}'))"
         for lang, words in LANG_PROFILES.items()
     }
 
@@ -99,9 +158,22 @@ def lang_id(text: Column) -> Column:
     return out
 
 
+def lang_id_sql(expr: str) -> str:
+    """The CASE walks LANG_PROFILES in preference order: a language wins
+    when its score is the greatest of its own and every later one's."""
+    s = list(lang_scores_sql(expr).items())
+    top = ["GREATEST(" + ", ".join(e for _, e in s[i:]) + ")" for i in range(len(s))]
+    whens = "".join(f" WHEN {e} = {top[i]} THEN '{lang}'" for i, (lang, e) in enumerate(s[:-1]))
+    return f"CASE WHEN {top[0]} = 0 THEN 'und'{whens} ELSE '{s[-1][0]}' END"
+
+
 def doc_fingerprint(text: Column) -> Column:
     """Exact-dedup fingerprint: md5 of the normalized text."""
     return F.md5(normalize_text(text))
+
+
+def doc_fingerprint_sql(expr: str) -> str:
+    return f"md5({normalize_text_sql(expr)})"
 
 
 def prefix_fingerprint(text: Column) -> Column:
@@ -109,6 +181,9 @@ def prefix_fingerprint(text: Column) -> Column:
     that share a head (boilerplate, near-copies with appended tails)."""
     return F.md5(F.substring(normalize_text(text), 1, PREFIX_CHARS))
 
+
+def prefix_fingerprint_sql(expr: str) -> str:
+    return f"md5(substr({normalize_text_sql(expr)}, 1, {PREFIX_CHARS}))"
 
 
 # PII patterns kept to the regex subset Java regex and RE2 interpret
@@ -126,6 +201,13 @@ def pii_counts(text: Column) -> dict[str, Column]:
     }
 
 
+def pii_counts_sql(expr: str) -> dict[str, str]:
+    return {
+        "n_emails": f"len(regexp_extract_all({expr}, '{EMAIL_RE}'))",
+        "n_phones": f"len(regexp_extract_all({expr}, '{PHONE_RE}'))",
+    }
+
+
 def redact_pii(text: Column) -> Column:
     """Replace emails then phone-number-shaped spans with fixed tags —
     the curation stage that runs before a corpus leaves the lake. Order
@@ -133,6 +215,11 @@ def redact_pii(text: Column) -> Column:
     half-eaten by the phone pattern."""
     out = F.regexp_replace(text, EMAIL_RE, "<EMAIL>")
     return F.regexp_replace(out, PHONE_RE, "<PHONE>")
+
+
+def redact_pii_sql(expr: str) -> str:
+    out = f"regexp_replace({expr}, '{EMAIL_RE}', '<EMAIL>', 'g')"
+    return f"regexp_replace({out}, '{PHONE_RE}', '<PHONE>', 'g')"
 
 
 def shingle_array(words_col: str, k: int = SHINGLE_K) -> Column:

@@ -9,19 +9,23 @@ lifecycle), and llm-export-training-shards (tokenize -> seeded shuffle
 -> sharded replay-ordered write — the artifact a training loader
 consumes).
 
-The selection logic is the oracle-pinned `corpus_clean_keep` query
-(plans/q_llm.py): quality >= threshold, language allow-list, exact-dup
-min-id keeper, MinHash-LSH near-dup loser pruning. This task adds what
-a query cannot carry: reading from parquet OR JSONL crawl dumps,
-writing the curated corpus (with text) as parquet, and per-stage
-survivor metrics for the run ledger.
+llm-curate-corpus and the oracle-pinned `corpus_clean_keep` and
+`corpus_clean_verdicts` queries (plans/q_llm.py) call the same selection
+kernel (operators/curation.py: curate_scores, curate_checks,
+near_dup_losers and the QUALITY_MIN_BP / CURATE_LANGS / JACCARD_MIN_BP
+defaults): quality floor, language allow-list, exact-dup min-id
+keeper, MinHash-LSH near-dup loser pruning. This task adds what a query
+cannot carry: reading from parquet OR JSONL crawl dumps, writing the
+curated corpus (with text) as parquet, and per-stage survivor metrics
+for the run ledger.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import curation as cu
 from ..operators import dedup as dd
 from ..operators import text as tx
 from ..operators.util import track_checkpoint, track_persist
@@ -107,9 +111,9 @@ def _load_docs(spark: SparkSession, base_dir: str, input_format: str) -> DataFra
 def llm_curate_corpus(
     spark: SparkSession,
     base_dir: str,
-    quality_min_bp: int = 2000,
-    jaccard_min_bp: int = 5000,
-    langs: str = "en,und",
+    quality_min_bp: int = cu.QUALITY_MIN_BP,
+    jaccard_min_bp: int = cu.JACCARD_MIN_BP,
+    langs: str = ",".join(cu.CURATE_LANGS),
     input_format: str = "parquet",
     out_dir: str | None = None,
     history_dir: str | None = None,
@@ -135,19 +139,10 @@ def llm_curate_corpus(
     exactly once across the task's lifetime). The final write streams
     the survivor rows — nothing collects to the driver but the metric
     scalars."""
-    allow = [s.strip() for s in langs.split(",") if s.strip()]
+    allow = tuple(s.strip() for s in langs.split(",") if s.strip())
     docs = _load_docs(spark, base_dir, input_format)
-    t = F.col("text")
-    scored = docs.select(
-        "*",
-        tx.quality_score_bp(t).alias("_quality_bp"),
-        tx.lang_id(t).alias("_lang"),
-        tx.doc_fingerprint(t).alias("_fp"),
-    ).withColumn("_min_id", F.min("doc_id").over(Window.partitionBy("_fp")))
-
-    ok_quality = F.col("_quality_bp") >= quality_min_bp
-    ok_lang = F.col("_lang").isin(allow)
-    keeper = F.col("doc_id") == F.col("_min_id")
+    scored = cu.curate_scores(docs)
+    ok_quality, ok_lang, keeper = cu.curate_checks(quality_min_bp, allow)
 
     # Incremental mode (the daily-crawl shape, same contract as the
     # dedup_incremental query): drop any document whose fingerprint is
@@ -238,12 +233,8 @@ def llm_curate_corpus(
             )
         else:
             pairs_src = dd.minhash_lsh_pairs(docs)
-        near_dup_losers = (
-            pairs_src.where(F.col("jaccard_bp") >= jaccard_min_bp)
-            .select(F.col("doc_b").alias("doc_id"))
-            .distinct()
-        )
-        kept = kept.join(near_dup_losers, on="doc_id", how="left_anti")
+        losers = cu.near_dup_losers(pairs_src, jaccard_min_bp)
+        kept = kept.join(losers, on="doc_id", how="left_anti")
     out = out_dir or f"{base_dir}/curated_documents"
     # n_final is counted in the write job itself (no read-back count)
     n_final = fs.publish_parquet(kept, out)["rows"]
@@ -397,21 +388,15 @@ def build_training_shards(
     docs: DataFrame, vocab_size: int = 100, n_shards: int = 8, seed: str = "ep0"
 ) -> DataFrame:
     """The export task's logical plan, pre-write (factored out r8 so
-    tests/test_partitioning.py can canary the plan shape): corpus-derived
-    top-``vocab_size`` DF vocabulary (distributed top-k then a
-    vocab_size-row window — bounded, never a global rank of the term
-    table), tokenize_with_vocab, seeded shard_shuffle (bucket-then-rank:
+    tests/test_partitioning.py can canary the plan shape): the corpus's
+    top-``vocab_size`` DF vocabulary (corpus_stats.top_df_vocab),
+    tokenize_with_vocab, seeded shard_shuffle (bucket-then-rank:
     n_shards window partitions, NEVER one global sort), one repartition
     by shard with partition-local ordering by pos."""
     from ..operators import corpus_stats as cs  # noqa: PLC0415
     from ..operators import sampling as sp  # noqa: PLC0415
 
-    order = [F.col("df").desc(), F.col("term").asc()]
-    head = cs.term_document_frequency(docs).orderBy(*order).limit(vocab_size)
-    vocab = head.select(
-        "term", F.row_number().over(Window.orderBy(*order)).cast("long").alias("token_id")
-    )
-    toks = cs.tokenize_with_vocab(docs, vocab)
+    toks = cs.tokenize_with_vocab(docs, cs.top_df_vocab(docs, vocab_size))
     order_df = sp.shard_shuffle(docs, n_shards=n_shards, seed=seed)
     return (
         toks.join(order_df, on="doc_id")

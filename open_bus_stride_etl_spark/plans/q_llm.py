@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long_sql, row_hash, row_hash_sql
+from ..operators import curation as cu
 from ..operators import dedup as dd
 from ..operators import similarity as sim
 from ..operators import text as tx
@@ -25,9 +26,18 @@ from .registry import query
 # Shared DuckDB CTE fragments (the oracle-side twins of operators/dedup.py).
 # ---------------------------------------------------------------------------
 
-_SQL_SHINGLES = rf"""
-norm AS (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t FROM documents),
-words AS (SELECT doc_id, string_split(t, ' ') AS w FROM norm),
+def _sql_words(src: str) -> str:
+    """Each ``src`` (doc_id, text) document's normalized text and word
+    list: CTEs norm (doc_id, t) and words (doc_id, w)."""
+    return f"""
+norm AS (SELECT doc_id, {tx.normalize_text_sql("text")} AS t FROM {src}),
+words AS (SELECT doc_id, string_split(t, ' ') AS w FROM norm)"""
+
+
+def _sql_shingles(src: str) -> str:
+    """``_sql_words`` plus the word 3-gram shingles (sh) and their
+    distinct hashes per document (hashed)."""
+    return _sql_words(src) + f""",
 sh AS (
   SELECT doc_id, s.shingle
   FROM words, LATERAL (
@@ -36,6 +46,7 @@ sh AS (
 ),
 hashed AS (SELECT DISTINCT doc_id, {md5_long_sql("shingle")} AS h FROM sh)
 """
+
 
 _SQL_MINHASH = "mh AS (SELECT doc_id, " + ", ".join(
     f"MIN(({a} * h + {b}) % {dd.MINHASH_P}) AS m{i}"
@@ -46,6 +57,12 @@ _SQL_BUCKETS = "buckets AS (" + " UNION ALL ".join(
     f"SELECT doc_id, CAST({i} AS VARCHAR) || '_' || CAST(m{2*i} AS VARCHAR) || '_' || CAST(m{2*i+1} AS VARCHAR) AS bucket FROM mh"
     for i in range(dd.N_BANDS)
 ) + ")"
+
+_SQL_LSH_CAND = """
+cand AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM buckets a JOIN buckets b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
+)"""
 
 _SQL_JACCARD = """
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM hashed GROUP BY doc_id),
@@ -62,6 +79,16 @@ jac AS (
 """
 
 
+def _sql_lsh_pairs(src: str) -> str:
+    """minhash_lsh_pairs over ``src`` (doc_id, text): the CTEs up to
+    ``lsh`` (doc_a, doc_b, jaccard_bp) — every LSH candidate pair with
+    its exact Jaccard."""
+    ctes = (_sql_shingles(src), _SQL_MINHASH, _SQL_BUCKETS, _SQL_LSH_CAND, _SQL_JACCARD)
+    return ", ".join(ctes) + """,
+    lsh AS (SELECT j.doc_a, j.doc_b, j.jaccard_bp FROM jac j
+            JOIN cand c ON c.doc_a = j.doc_a AND c.doc_b = j.doc_b)"""
+
+
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
 
@@ -72,11 +99,9 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_exact_groups",
-    """
+    f"""
     WITH fp AS (
-      SELECT doc_id,
-             md5(substr(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), 1, 60)) AS fingerprint
-      FROM documents
+      SELECT doc_id, {tx.prefix_fingerprint_sql("text")} AS fingerprint FROM documents
     )
     SELECT fingerprint, COUNT(*) AS n_docs, MIN(doc_id) AS keeper_doc_id,
            string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS members
@@ -109,19 +134,7 @@ def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_minhash_lsh",
-    "WITH " + _SQL_SHINGLES + ", " + _SQL_MINHASH + ", " + _SQL_BUCKETS + ","
-    """
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM buckets a JOIN buckets b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ),
-    """
-    + _SQL_JACCARD.replace("jac AS (", "jac AS (")
-    + """
-    SELECT j.doc_a, j.doc_b, j.jaccard_bp
-    FROM jac j JOIN cand c ON c.doc_a = j.doc_a AND c.doc_b = j.doc_b
-    WHERE j.jaccard_bp >= 5000
-    """,
+    "WITH " + _sql_lsh_pairs("documents") + " SELECT * FROM lsh WHERE jaccard_bp >= 5000",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(8) -> LSH(4 bands x 2) candidates -> exact Jaccard >= 0.5.
@@ -137,7 +150,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_ngram_jaccard",
-    "WITH " + _SQL_SHINGLES + "," + _SQL_JACCARD + """
+    "WITH " + _sql_shingles("documents") + "," + _SQL_JACCARD + """
     SELECT doc_a, doc_b, jaccard_bp FROM jac WHERE jaccard_bp >= 5000
     """,
 )
@@ -168,8 +181,8 @@ def _sql_simhash_sims(bits: int) -> str:
         f"(CASE WHEN v{j} > 0 THEN CAST(1 AS BIGINT) ELSE 0 END << {j})" for j in range(bits)
     )
     return (
-        r"""norm AS (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t FROM documents),
-    toks AS (SELECT doc_id, unnest(string_split(t, ' ')) AS tok FROM norm),
+        _sql_words("documents") + """,
+    toks AS (SELECT doc_id, unnest(w) AS tok FROM words),
     hashed AS (SELECT doc_id, """ + md5_long_sql("tok", bits // 4) + """ AS h FROM toks),
     votes AS (SELECT doc_id, """ + votes + """ FROM hashed GROUP BY doc_id),
     sims AS (SELECT doc_id, """ + bit_sum + """ AS simhash FROM votes)"""
@@ -194,8 +207,34 @@ def _sql_simhash_cand(bits: int) -> str:
     )"""
 
 
-_SQL_SIMHASH_SIMS = _sql_simhash_sims(32)
-_SQL_SIMHASH_CAND = _sql_simhash_cand(32)
+def _sql_simhash_pairs(bits: int) -> str:
+    """simhash_hamming_pairs at ``bits``: the CTEs up to ``pairs``
+    (doc_a, doc_b, hamming)."""
+    return _sql_simhash_sims(bits) + "," + _sql_simhash_cand(bits) + """,
+    pairs AS (
+      SELECT doc_a, doc_b, CAST(bit_count(xor(sim_a, sim_b)) AS BIGINT) AS hamming
+      FROM cand WHERE bit_count(xor(sim_a, sim_b)) <= 3
+    )"""
+
+
+def _sql_groups_cc(bits: int) -> str:
+    """Connected components of the ``bits`` SimHash pair graph: a
+    recursive-CTE transitive closure, component_id = MIN doc id."""
+    return "WITH RECURSIVE " + _sql_simhash_pairs(bits) + """,
+    edges AS (
+      SELECT doc_a AS u, doc_b AS v FROM pairs
+      UNION
+      SELECT doc_b, doc_a FROM pairs
+    ),
+    reach AS (
+      SELECT u, v FROM edges
+      UNION
+      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
+    )
+    SELECT CAST(u AS BIGINT) AS doc_id,
+           CAST(LEAST(u, MIN(v)) AS BIGINT) AS component_id
+    FROM reach GROUP BY u
+    """
 
 # ---------------------------------------------------------------------------
 # Dedup: SimHash near-dup pairs (banded hamming join)
@@ -203,10 +242,7 @@ _SQL_SIMHASH_CAND = _sql_simhash_cand(32)
 
 @query(
     "dedup_simhash_hamming",
-    "WITH " + _SQL_SIMHASH_SIMS + "," + _SQL_SIMHASH_CAND + """
-    SELECT doc_a, doc_b, CAST(bit_count(xor(sim_a, sim_b)) AS BIGINT) AS hamming
-    FROM cand WHERE bit_count(xor(sim_a, sim_b)) <= 3
-    """,
+    "WITH " + _sql_simhash_pairs(32) + " SELECT doc_a, doc_b, hamming FROM pairs",
 )
 def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup dedup, the scale path for boilerplate-heavy
@@ -219,10 +255,7 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_simhash60",
-    "WITH " + _sql_simhash_sims(60) + "," + _sql_simhash_cand(60) + """
-    SELECT doc_a, doc_b, CAST(bit_count(xor(sim_a, sim_b)) AS BIGINT) AS hamming
-    FROM cand WHERE bit_count(xor(sim_a, sim_b)) <= 3
-    """,
+    "WITH " + _sql_simhash_pairs(60) + " SELECT doc_a, doc_b, hamming FROM pairs",
 )
 def dedup_simhash60(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION SimHash operating point: sim_bits=60 (15-bit
@@ -245,24 +278,7 @@ def dedup_simhash60(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_groups_cc",
-    "WITH RECURSIVE " + _SQL_SIMHASH_SIMS + "," + _SQL_SIMHASH_CAND + """,
-    pairs AS (
-      SELECT doc_a, doc_b FROM cand WHERE bit_count(xor(sim_a, sim_b)) <= 3
-    ),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM pairs
-      UNION
-      SELECT doc_b, doc_a FROM pairs
-    ),
-    reach AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    )
-    SELECT CAST(u AS BIGINT) AS doc_id,
-           CAST(LEAST(u, MIN(v)) AS BIGINT) AS component_id
-    FROM reach GROUP BY u
-    """,
+    _sql_groups_cc(32),
 )
 def dedup_groups_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup GROUPS, not just pairs: connected components over the
@@ -279,24 +295,7 @@ def dedup_groups_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_groups_cc60",
-    "WITH RECURSIVE " + _sql_simhash_sims(60) + "," + _sql_simhash_cand(60) + """,
-    pairs AS (
-      SELECT doc_a, doc_b FROM cand WHERE bit_count(xor(sim_a, sim_b)) <= 3
-    ),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM pairs
-      UNION
-      SELECT doc_b, doc_a FROM pairs
-    ),
-    reach AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    )
-    SELECT CAST(u AS BIGINT) AS doc_id,
-           CAST(LEAST(u, MIN(v)) AS BIGINT) AS component_id
-    FROM reach GROUP BY u
-    """,
+    _sql_groups_cc(60),
 )
 def dedup_groups_cc60(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION dedup pipeline end-to-end: connected components
@@ -353,15 +352,16 @@ _SQL_BUCKET = " + ".join(
 # n_queries; the registered query mirrors it so the eval stays O(corpus).
 _RECALL_EVAL_QUERIES = 100
 
+# Oracle twin of corpus_stats.py:term_document_frequency (CTE dfreq).
+_SQL_DFREQ = _sql_words("documents") + """,
+    terms AS (SELECT doc_id, unnest(list_distinct(w)) AS term FROM words),
+    dfreq AS (SELECT term, COUNT(*) AS df FROM terms WHERE term <> '' GROUP BY term)"""
+
 # Oracle twin of corpus_stats.py:tokenize_with_vocab over the corpus's
 # own top-100 DF vocabulary — shared by tokenize_vocab_ids and the
 # shard-export invariance query so a tokenization tweak cannot
 # desynchronize them (the _sql_simhash_sims pattern).
-_SQL_TOKENIZE = r"""
-    norm AS (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t FROM documents),
-    words AS (SELECT doc_id, string_split(t, ' ') AS w FROM norm),
-    terms AS (SELECT doc_id, unnest(list_distinct(w)) AS term FROM words),
-    dfreq AS (SELECT term, COUNT(*) AS df FROM terms WHERE term <> '' GROUP BY term),
+_SQL_TOKENIZE = _SQL_DFREQ + """,
     vocab AS (
       SELECT term, CAST(rnk AS BIGINT) AS token_id FROM (
         SELECT term, row_number() OVER (ORDER BY df DESC, term ASC) AS rnk FROM dfreq)
@@ -394,18 +394,11 @@ def tokenize_vocab_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the cut is deterministic), every document's word sequence maps
     to ids with OOV = 0, emitted in document order. The vocab head is
     a distributed top-k (sort+limit -> TakeOrdered) then a 100-row
-    window — never a global rank over the full term table."""
-    from pyspark.sql import Window  # noqa: PLC0415
-
+    window (corpus_stats.top_df_vocab, the export task's vocabulary)."""
     from ..operators import corpus_stats as cs  # noqa: PLC0415
 
     d = _docs(spark, sf_dir)
-    order = [F.col("df").desc(), F.col("term").asc()]
-    head = cs.term_document_frequency(d).orderBy(*order).limit(100)
-    vocab = head.select(
-        "term", F.row_number().over(Window.orderBy(*order)).cast("long").alias("token_id")
-    )
-    return cs.tokenize_with_vocab(d, vocab)
+    return cs.tokenize_with_vocab(d, cs.top_df_vocab(d, 100))
 
 
 @query(
@@ -481,23 +474,13 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_quality",
-    r"""
+    f"""
     SELECT doc_id,
-           CASE WHEN length(trim(text)) = 0 THEN 0
-                ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_ws_tokens,
-           len(regexp_extract_all(text, '\w+|[^\w\s]')) AS n_bpe_tokens,
-           CASE WHEN length(text) = 0 THEN 0
-                ELSE CAST(ROUND(10000.0 * (length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g'))) / length(text)) AS BIGINT) END AS punct_bp,
-           CASE WHEN length(trim(text)) = 0 THEN 0
-                ELSE CAST(ROUND(10000.0 * len(regexp_extract_all(lower(text), '\b(the|a|and|of|to|in|is|it)\b'))
-                     / len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT) END AS stopword_bp,
-           GREATEST(0, LEAST(10000,
-             LEAST(length(text), 400) * 10
-             - LEAST(CASE WHEN length(text) = 0 THEN 0
-                          ELSE CAST(ROUND(10000.0 * (length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g'))) / length(text)) AS BIGINT) END, 3000)
-             + LEAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                          ELSE CAST(ROUND(10000.0 * len(regexp_extract_all(lower(text), '\b(the|a|and|of|to|in|is|it)\b'))
-                               / len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT) END, 3000))) AS quality_bp
+           {tx.ws_token_count_sql("text")} AS n_ws_tokens,
+           {tx.bpe_token_count_sql("text")} AS n_bpe_tokens,
+           {tx.punct_ratio_bp_sql("text")} AS punct_bp,
+           {tx.stopword_ratio_bp_sql("text")} AS stopword_bp,
+           {tx.quality_score_bp_sql("text")} AS quality_bp
     FROM documents
     """,
 )
@@ -518,11 +501,6 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Text analysis: language-ID heuristic
 # ---------------------------------------------------------------------------
 
-_SQL_LANG_SCORES = ", ".join(
-    f"len(regexp_extract_all(lower(text), '\\b({'|'.join(w)})\\b')) AS s_{lang}"
-    for lang, w in tx.LANG_PROFILES.items()
-)
-
 @query(
     "lang_id",
     f"""
@@ -535,15 +513,11 @@ _SQL_LANG_SCORES = ", ".join(
                             THEN repeat(' el y', 12) || repeat(' der ist', 12)
                           ELSE '' END AS text
       FROM documents
-    ),
-    s AS (SELECT doc_id, lang AS labeled_lang, {_SQL_LANG_SCORES} FROM src)
-    SELECT doc_id, labeled_lang, s_en, s_es, s_de, s_fr,
-           CASE WHEN GREATEST(s_en, s_es, s_de, s_fr) = 0 THEN 'und'
-                WHEN s_en = GREATEST(s_en, s_es, s_de, s_fr) THEN 'en'
-                WHEN s_es = GREATEST(s_es, s_de, s_fr) THEN 'es'
-                WHEN s_de = GREATEST(s_de, s_fr) THEN 'de'
-                ELSE 'fr' END AS predicted_lang
-    FROM s
+    )
+    SELECT doc_id, lang AS labeled_lang,
+           {", ".join(f"{e} AS s_{lang}" for lang, e in tx.lang_scores_sql("text").items())},
+           {tx.lang_id_sql("text")} AS predicted_lang
+    FROM src
     """,
 )
 def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -583,11 +557,11 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "doc_fingerprints",
-    "WITH " + _SQL_SHINGLES + r""",
+    "WITH " + _sql_shingles("documents") + f""",
     msh AS (SELECT doc_id, MIN(h) AS min_shingle_hash FROM hashed GROUP BY doc_id)
     SELECT n.doc_id,
            md5(n.t) AS fingerprint,
-           md5(substr(n.t, 1, 60)) AS prefix_fingerprint,
+           md5(substr(n.t, 1, {tx.PREFIX_CHARS})) AS prefix_fingerprint,
            m.min_shingle_hash
     FROM norm n LEFT JOIN msh m ON m.doc_id = n.doc_id
     """,
@@ -831,78 +805,52 @@ def multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact-dedup keeper ∧ not-a-near-dup) in ONE declarative plan
 # ---------------------------------------------------------------------------
 
-_SQL_QUALITY = r"""GREATEST(0, LEAST(10000,
-  LEAST(length(text), 400) * 10
-  - LEAST(CASE WHEN length(text) = 0 THEN 0
-               ELSE CAST(ROUND(10000.0 * (length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g'))) / length(text)) AS BIGINT) END, 3000)
-  + LEAST(CASE WHEN length(trim(text)) = 0 THEN 0
-               ELSE CAST(ROUND(10000.0 * len(regexp_extract_all(lower(text), '\b(the|a|and|of|to|in|is|it)\b'))
-                    / len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT) END, 3000)))"""
-
-_SQL_LANG_CASE = """CASE WHEN GREATEST(s_en, s_es, s_de, s_fr) = 0 THEN 'und'
-         WHEN s_en = GREATEST(s_en, s_es, s_de, s_fr) THEN 'en'
-         WHEN s_es = GREATEST(s_es, s_de, s_fr) THEN 'es'
-         WHEN s_de = GREATEST(s_de, s_fr) THEN 'de'
-         ELSE 'fr' END"""
-
-
-@query(
-    "corpus_clean_keep",
-    "WITH " + _SQL_SHINGLES + ", " + _SQL_MINHASH + ", " + _SQL_BUCKETS + ","
-    """
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM buckets a JOIN buckets b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ),
-    """ + _SQL_JACCARD + f""",
-    nd AS (SELECT DISTINCT j.doc_b FROM jac j
-           JOIN cand c ON c.doc_a = j.doc_a AND c.doc_b = j.doc_b
-           WHERE j.jaccard_bp >= 5000),
+def _sql_curate(src: str) -> str:
+    """The curate selection over ``src`` (doc_id, text) as CTEs — the
+    DuckDB twin of operators/curation.py's kernel. ``nd`` holds the
+    near-dup losers (``doc_b``); ``k`` holds every document's
+    ``quality_bp``, ``predicted_lang``, ``fp``, ``min_id`` (its
+    exact-dup group's keeper) and the ``ok_quality``/``ok_lang`` checks;
+    ``kept`` holds the survivors."""
+    langs = ", ".join(f"'{lang}'" for lang in cu.CURATE_LANGS)
+    return _sql_lsh_pairs(src) + f""",
+    nd AS (SELECT DISTINCT doc_b FROM lsh WHERE jaccard_bp >= {cu.JACCARD_MIN_BP}),
     scored AS (
-      SELECT doc_id, {_SQL_QUALITY} AS quality_bp,
-             md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp,
-             {_SQL_LANG_SCORES}
-      FROM documents
+      SELECT doc_id, {tx.quality_score_bp_sql("text")} AS quality_bp,
+             {tx.lang_id_sql("text")} AS predicted_lang,
+             {tx.doc_fingerprint_sql("text")} AS fp
+      FROM {src}
     ),
-    langed AS (SELECT doc_id, quality_bp, fp, {_SQL_LANG_CASE} AS predicted_lang FROM scored),
-    k AS (SELECT *, MIN(doc_id) OVER (PARTITION BY fp) AS min_id FROM langed)
-    SELECT doc_id, quality_bp, predicted_lang FROM k
-    WHERE quality_bp >= 2000 AND predicted_lang IN ('en', 'und')
-      AND doc_id = min_id AND doc_id NOT IN (SELECT doc_b FROM nd)
-    """,
-)
+    k AS (SELECT *, MIN(doc_id) OVER (PARTITION BY fp) AS min_id,
+                 quality_bp >= {cu.QUALITY_MIN_BP} AS ok_quality,
+                 predicted_lang IN ({langs}) AS ok_lang
+          FROM scored),
+    kept AS (
+      SELECT doc_id, quality_bp, predicted_lang FROM k
+      WHERE ok_quality AND ok_lang AND doc_id = min_id AND doc_id NOT IN (SELECT doc_b FROM nd))"""
+
+
+@query("corpus_clean_keep", "WITH " + _sql_curate("documents") + " SELECT * FROM kept")
 def corpus_clean_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LLM-pipeline capstone: which documents survive cleaning —
     quality >= 0.2, language en/und, the min-id keeper of each exact
     duplicate group, and not the discarded side of a MinHash-LSH near-dup
     pair (jaccard >= 0.5, keep-smaller-id). One declarative plan chaining
     four operator families; every stage shares the scan and Catalyst
-    pipelines the filters."""
-    from pyspark.sql import Window  # noqa: PLC0415
-
+    pipelines the filters. The selection is the curate kernel
+    (operators/curation.py) that llm-curate-corpus runs."""
     d = _docs(spark, sf_dir)
-    t = F.col("text")
-    base = d.select(
-        "doc_id",
-        tx.quality_score_bp(t).alias("quality_bp"),
-        tx.lang_id(t).alias("predicted_lang"),
-        tx.doc_fingerprint(t).alias("fp"),
-    ).withColumn("min_id", F.min("doc_id").over(Window.partitionBy("fp")))
-
-    near_dup_losers = (
-        dd.minhash_lsh_pairs(d)
-        .where(F.col("jaccard_bp") >= 5000)
-        .select("doc_b")
-        .distinct()
-    )
+    losers = cu.near_dup_losers(dd.minhash_lsh_pairs(d), cu.JACCARD_MIN_BP)
+    ok_quality, ok_lang, keeper = cu.curate_checks()
     return (
-        base.where(
-            (F.col("quality_bp") >= 2000)
-            & F.col("predicted_lang").isin("en", "und")
-            & (F.col("doc_id") == F.col("min_id"))
+        cu.curate_scores(d)
+        .where(ok_quality & ok_lang & keeper)
+        .select(
+            "doc_id",
+            F.col("_quality_bp").alias("quality_bp"),
+            F.col("_lang").alias("predicted_lang"),
         )
-        .join(near_dup_losers, F.col("doc_id") == F.col("doc_b"), "left_anti")
-        .select("doc_id", "quality_bp", "predicted_lang")
+        .join(losers, on="doc_id", how="left_anti")
     )
 
 
@@ -931,29 +879,10 @@ src AS (
 
 @query(
     "corpus_clean_verdicts",
-    "WITH " + _SQL_MULTILINGUAL_SRC + ", "
-    + _SQL_SHINGLES.replace("FROM documents", "FROM src") + ", "
-    + _SQL_MINHASH + ", " + _SQL_BUCKETS + ","
-    """
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM buckets a JOIN buckets b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ),
-    """ + _SQL_JACCARD + f""",
-    nd AS (SELECT DISTINCT j.doc_b FROM jac j
-           JOIN cand c ON c.doc_a = j.doc_a AND c.doc_b = j.doc_b
-           WHERE j.jaccard_bp >= 5000),
-    scored AS (
-      SELECT doc_id, {_SQL_QUALITY} AS quality_bp,
-             md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp,
-             {_SQL_LANG_SCORES}
-      FROM src
-    ),
-    langed AS (SELECT doc_id, quality_bp, fp, {_SQL_LANG_CASE} AS predicted_lang FROM scored),
-    k AS (SELECT *, MIN(doc_id) OVER (PARTITION BY fp) AS min_id FROM langed)
+    "WITH " + _SQL_MULTILINGUAL_SRC + ", " + _sql_curate("src") + """
     SELECT k.doc_id, k.quality_bp, k.predicted_lang,
-           CASE WHEN k.quality_bp < 2000 THEN 'quality'
-                WHEN k.predicted_lang NOT IN ('en', 'und') THEN 'lang'
+           CASE WHEN NOT k.ok_quality THEN 'quality'
+                WHEN NOT k.ok_lang THEN 'lang'
                 WHEN k.doc_id <> k.min_id THEN 'exact_dup'
                 WHEN nd.doc_b IS NOT NULL THEN 'near_dup'
                 ELSE 'keep' END AS verdict
@@ -967,9 +896,8 @@ def corpus_clean_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     is English-only, so both engines agreed on a branch that never
     fired. Here the lang_id suffix derivation (the late-r9 planting,
     same arithmetic in both engines) is threaded through the ENTIRE
-    clean-keep pipeline — the shingle/MinHash/LSH oracle chain is
-    re-anchored onto the derived corpus (``_SQL_SHINGLES`` with its
-    source CTE swapped to ``src``) — and instead of emitting survivors
+    clean-keep pipeline — the oracle's curate fragment takes the derived
+    corpus ``src`` as its source table — and instead of emitting survivors
     the query emits every document with its verdict: 'quality',
     'lang', 'exact_dup', 'near_dup' (CASE precedence pinned in that
     order, cross-engine), or 'keep'. The planted es/de/fr suffixes
@@ -996,8 +924,6 @@ def corpus_clean_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus and candidates stay occupancy-bound (lang scores are
     unaffected: the profile regex counts words regardless of
     neighboring number tokens)."""
-    from pyspark.sql import Window  # noqa: PLC0415
-
     d0 = _docs(spark, sf_dir)
     i = F.col("doc_id").cast("string")
 
@@ -1033,25 +959,18 @@ def corpus_clean_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # track_persist so release_cached() frees it deterministically at
     # the next query construction (bench/run_task stage boundaries).
     d = track_persist(src0.unionByName(clones))
-    base = d.select(
-        "doc_id",
-        tx.quality_score_bp(F.col("text")).alias("quality_bp"),
-        tx.lang_id(F.col("text")).alias("predicted_lang"),
-        tx.doc_fingerprint(F.col("text")).alias("fp"),
-    ).withColumn("min_id", F.min("doc_id").over(Window.partitionBy("fp")))
-    nd = (
-        dd.minhash_lsh_pairs(d)
-        .where(F.col("jaccard_bp") >= 5000)
-        .select("doc_b")
-        .distinct()
+    base = cu.curate_scores(d)
+    nd = cu.near_dup_losers(dd.minhash_lsh_pairs(d), cu.JACCARD_MIN_BP).select(
+        F.col("doc_id").alias("doc_b")
     )
+    ok_quality, ok_lang, keeper = cu.curate_checks()
     return base.join(nd, base["doc_id"] == nd["doc_b"], "left").select(
         "doc_id",
-        "quality_bp",
-        "predicted_lang",
-        F.when(F.col("quality_bp") < 2000, F.lit("quality"))
-        .when(~F.col("predicted_lang").isin("en", "und"), F.lit("lang"))
-        .when(F.col("doc_id") != F.col("min_id"), F.lit("exact_dup"))
+        F.col("_quality_bp").alias("quality_bp"),
+        F.col("_lang").alias("predicted_lang"),
+        F.when(~ok_quality, F.lit("quality"))
+        .when(~ok_lang, F.lit("lang"))
+        .when(~keeper, F.lit("exact_dup"))
         .when(F.col("doc_b").isNotNull(), F.lit("near_dup"))
         .otherwise(F.lit("keep"))
         .alias("verdict"),
@@ -1067,7 +986,7 @@ def corpus_clean_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quantile_quality_keep",
     f"""
     WITH scored AS (
-      SELECT doc_id, lang, {_SQL_QUALITY} AS quality_bp FROM documents
+      SELECT doc_id, lang, {tx.quality_score_bp_sql("text")} AS quality_bp FROM documents
     ),
     hist AS (SELECT lang, quality_bp, COUNT(*) AS c FROM scored GROUP BY lang, quality_bp),
     cum AS (
@@ -1191,12 +1110,8 @@ def epoch_upsample_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "split_leakage_check",
-    rf"""
-    WITH fp AS (
-      SELECT doc_id,
-             md5(substr(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), 1, 60)) AS f
-      FROM documents
-    ),
+    f"""
+    WITH fp AS (SELECT doc_id, {tx.prefix_fingerprint_sql("text")} AS f FROM documents),
     comp AS (
       SELECT doc_id, MIN(doc_id) OVER (PARTITION BY f) AS component_id FROM fp
     ),
@@ -1450,12 +1365,11 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "packed_batches",
-    rf"""
+    f"""
     WITH t AS (
       SELECT doc_id,
              CAST({md5_long_sql("CAST(doc_id AS VARCHAR) || ''")} % 8 AS INT) AS shard,
-             CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                  ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS INT) AS n_tokens
+             CAST({tx.ws_token_count_sql("text")} AS INT) AS n_tokens
       FROM documents
     ),
     c AS (
@@ -1485,10 +1399,7 @@ def packed_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_repetition",
-    r"""
-    WITH norm AS (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-                  FROM documents),
-    words AS (SELECT doc_id, string_split(t, ' ') AS w FROM norm),
+    "WITH " + _sql_words("documents") + """,
     bg AS (
       SELECT doc_id, s.bg
       FROM words, LATERAL (
@@ -1520,17 +1431,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "term_df_top20",
-    r"""
-    WITH norm AS (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-                  FROM documents),
-    words AS (SELECT doc_id, string_split(t, ' ') AS w FROM norm),
-    terms AS (SELECT doc_id, unnest(list_distinct(w)) AS term FROM words)
-    SELECT term, CAST(COUNT(*) AS BIGINT) AS df
-    FROM terms WHERE term <> ''
-    GROUP BY term
-    ORDER BY df DESC, term ASC
-    LIMIT 20
-    """,
+    "WITH " + _SQL_DFREQ + " SELECT term, df FROM dfreq ORDER BY df DESC, term ASC LIMIT 20",
 )
 def term_df_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The head of the corpus's document-frequency table (the IDF
@@ -1548,7 +1449,7 @@ def term_df_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "decontam_overlap",
-    "WITH " + _SQL_SHINGLES + """,
+    "WITH " + _sql_shingles("documents") + """,
     ev AS (SELECT DISTINCT h FROM hashed WHERE doc_id % 97 = 0)
     SELECT t.doc_id, CAST(COUNT(*) AS BIGINT) AS n_overlap
     FROM hashed t JOIN ev ON t.h = ev.h
@@ -1573,12 +1474,8 @@ def decontam_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "shared_span_pairs",
-    "WITH " + _SQL_SHINGLES + ", " + _SQL_MINHASH + ", " + _SQL_BUCKETS + ","
-    rf"""
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM buckets a JOIN buckets b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ),
+    "WITH " + ", ".join((_sql_shingles("documents"), _SQL_MINHASH, _SQL_BUCKETS, _SQL_LSH_CAND))
+    + f""",
     posh AS (
       SELECT doc_id, u.i AS pos,
              {md5_long_sql("w[u.i] || ' ' || w[u.i+1] || ' ' || w[u.i+2]")} AS h
@@ -1614,7 +1511,7 @@ def shared_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "boilerplate_ngrams",
-    "WITH " + _SQL_SHINGLES + """,
+    "WITH " + _sql_shingles("documents") + """,
     df AS (SELECT h, COUNT(*) AS df FROM hashed GROUP BY h),
     pd AS (SELECT t.doc_id, COUNT(*) AS n_shingles,
                   COUNT(CASE WHEN f.df >= 2 THEN 1 END) AS n_boiler
@@ -1881,7 +1778,7 @@ def semdedup_scaled_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pii_redaction_stats",
-    r"""
+    f"""
     WITH src AS (
       SELECT doc_id,
              (CASE WHEN doc_id % 25 = 0
@@ -1892,11 +1789,8 @@ def semdedup_scaled_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents
     )
     SELECT doc_id,
-           CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z][A-Za-z]+')) AS BIGINT) AS n_emails,
-           CAST(len(regexp_extract_all(text, '\+?[0-9][0-9 ()-]{6,}[0-9]')) AS BIGINT) AS n_phones,
-           CAST(length(regexp_replace(regexp_replace(text,
-                '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z][A-Za-z]+', '<EMAIL>', 'g'),
-                '\+?[0-9][0-9 ()-]{6,}[0-9]', '<PHONE>', 'g')) AS BIGINT) AS redacted_len
+           {", ".join(f"CAST({e} AS BIGINT) AS {c}" for c, e in tx.pii_counts_sql("text").items())},
+           CAST(length({tx.redact_pii_sql("text")}) AS BIGINT) AS redacted_len
     FROM src
     """,
 )
@@ -1937,11 +1831,9 @@ def pii_redaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_incremental",
-    r"""
+    f"""
     WITH fp AS (
-      SELECT doc_id,
-             md5(substr(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), 1, 60)) AS fingerprint
-      FROM documents
+      SELECT doc_id, {tx.prefix_fingerprint_sql("text")} AS fingerprint FROM documents
     ),
     hist AS (SELECT fingerprint, MIN(doc_id) AS dup_of FROM fp WHERE doc_id % 4 <> 3
              GROUP BY fingerprint)
@@ -1989,7 +1881,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ingest_replay_idempotence",
-    "WITH " + _SQL_SHINGLES + ", " + _SQL_MINHASH + ", " + _SQL_BUCKETS + """,
+    "WITH " + _sql_shingles("documents") + ", " + _SQL_MINHASH + ", " + _SQL_BUCKETS + """,
     idx0 AS (SELECT DISTINCT bucket FROM buckets WHERE doc_id % 2 = 0),
     hit1 AS (
       SELECT DISTINCT b.doc_id FROM buckets b JOIN idx0 i ON i.bucket = b.bucket
@@ -2171,35 +2063,13 @@ def shard_export_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "curate_incremental_noop",
-    "WITH " + _SQL_SHINGLES + ", " + _SQL_MINHASH + ", " + _SQL_BUCKETS + ","
-    """
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM buckets a JOIN buckets b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ),
-    """ + _SQL_JACCARD + f""",
-    nd AS (SELECT DISTINCT j.doc_b FROM jac j
-           JOIN cand c ON c.doc_a = j.doc_a AND c.doc_b = j.doc_b
-           WHERE j.jaccard_bp >= 5000),
-    scored AS (
-      SELECT doc_id, {_SQL_QUALITY} AS quality_bp,
-             md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp,
-             {_SQL_LANG_SCORES}
-      FROM documents
-    ),
-    langed AS (SELECT doc_id, quality_bp, fp, {_SQL_LANG_CASE} AS predicted_lang FROM scored),
-    k AS (SELECT *, MIN(doc_id) OVER (PARTITION BY fp) AS min_id FROM langed),
-    surv AS (
-      SELECT doc_id FROM k
-      WHERE quality_bp >= 2000 AND predicted_lang IN ('en', 'und')
-        AND doc_id = min_id AND doc_id NOT IN (SELECT doc_b FROM nd)
-    )
+    "WITH " + _sql_curate("documents") + f"""
     SELECT CAST(COUNT(*) AS BIGINT) AS n_final_run1,
            CAST(SUM({row_hash_sql("s.doc_id", "d.text")}) AS BIGINT) AS survivor_hash,
            CAST(0 AS BIGINT) AS n_final_run2,
            CAST(COUNT(*) AS BIGINT) AS n_seen_dropped_run2,
            CAST(COUNT(*) AS BIGINT) AS n_index_fps
-    FROM surv s JOIN documents d ON d.doc_id = s.doc_id
+    FROM kept s JOIN documents d ON d.doc_id = s.doc_id
     """,
 )
 def curate_incremental_noop(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2212,9 +2082,11 @@ def curate_incremental_noop(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed: n_seen_dropped == n_final_run1, n_final == 0) and must not
     grow the index. The run-1 artifact (what a downstream tokenizer
     reads) is pinned by an order-insensitive (doc_id, text) hash
-    against the corpus_clean_keep analytic oracle — the task's
-    selection logic IS that query's contract (quality >= 2000, lang
-    en/und, exact-dup min-id keeper, LSH near-dup loser pruning).
+    against the corpus_clean_keep analytic oracle: the task and the
+    corpus_clean_* queries call the same curate kernel
+    (operators/curation.py; quality >= QUALITY_MIN_BP, lang in
+    CURATE_LANGS, exact-dup min-id keeper, LSH near-dup loser pruning),
+    and the oracle reads the same selection off ``_sql_curate``.
 
     Scale shape (the task's): one map-combined scoring pass, the exact-
     dup fingerprint window, the flattened MinHash-LSH pair plan, and a

@@ -25,9 +25,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators import text as tx
 from ..session import configure
 from ..streaming.bounded import BatchFn, run_bounded, write_each_batch
-from .q_llm import _SQL_BUCKETS, _SQL_MINHASH, _SQL_SHINGLES
+from .q_llm import _SQL_BUCKETS, _SQL_MINHASH, _sql_shingles
 from .registry import query
 
 
@@ -431,11 +432,7 @@ def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @query(
     "streaming_dedup_exact",
-    r"""
-    SELECT DISTINCT
-      md5(substr(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), 1, 60)) AS fingerprint
-    FROM documents
-    """,
+    f"SELECT DISTINCT {tx.prefix_fingerprint_sql('text')} AS fingerprint FROM documents",
 )
 def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING exact dedup — the incremental-ingest twin of
@@ -463,7 +460,6 @@ def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrival-order dependent, so only the KEY column is emitted
     (deterministic by construction); survivor election on payload is
     the batch twin's job (min doc_id = keeper)."""
-    from ..operators.text import prefix_fingerprint  # noqa: PLC0415
     from ..sources.lake import load_table  # noqa: PLC0415
 
     span_s = (
@@ -474,7 +470,7 @@ def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     raw, src_dir = _table_stream(spark, sf_dir, "documents")
     d = raw.select(
-        prefix_fingerprint(F.col("text")).alias("fingerprint"),
+        tx.prefix_fingerprint(F.col("text")).alias("fingerprint"),
         F.timestamp_seconds(F.lit(1700000000) + F.col("doc_id")).alias("ingest_ts"),
     )
     deduped = (
@@ -578,7 +574,7 @@ def streaming_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "streaming_dedup_lsh",
     "WITH "
-    + _SQL_SHINGLES
+    + _sql_shingles("documents")
     + ", "
     + _SQL_MINHASH
     + ", "

@@ -40,12 +40,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 
-def connect_spillable() -> duckdb.DuckDBPyConnection:
+def connect_spillable(d: str) -> duckdb.DuckDBPyConnection:
     """File-backed DuckDB connection so big-SF oracle queries spill to
     disk instead of dying in RAM (an in-memory connection cannot offload
-    most operators). The DB file lives in a fresh temp dir; it holds only
-    views + spill blocks, and the OS reaps it."""
-    d = tempfile.mkdtemp(prefix="oracle_duck_")
+    most operators). The DB file and the spill blocks live in ``d``; the
+    file holds only views."""
     con = duckdb.connect(os.path.join(d, "oracle.db"))
     con.execute(f"SET temp_directory = '{d}'")
     return con
@@ -96,12 +95,16 @@ def norm_type(t: str) -> str:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    # The connection closes before its directory is removed.
+    with tempfile.TemporaryDirectory(prefix="oracle_duck_") as d, connect_spillable(d) as con:
+        return check(con, sf_dir, only)
 
+
+def check(con: duckdb.DuckDBPyConnection, sf_dir: str, only: set[str]) -> int:
     import __spark_entry__ as entry_mod
     from open_bus_stride_etl_spark.session import build_session
 
     spark = build_session("oracle-check")
-    con = connect_spillable()
     # Pin the DuckDB session timezone so TIMESTAMPTZ handling never
     # depends on the box (and matches Spark's UTC-pinned session).
     con.execute("SET TimeZone = 'UTC'")
