@@ -158,10 +158,13 @@ def lang_id(text: Column) -> Column:
     return out
 
 
-def lang_id_sql(expr: str) -> str:
-    """The CASE walks LANG_PROFILES in preference order: a language wins
-    when its score is the greatest of its own and every later one's."""
-    s = list(lang_scores_sql(expr).items())
+def lang_id_sql(scores: dict[str, str]) -> str:
+    """lang_id's CASE over the per-language scores: lang_scores_sql's
+    expressions, or the columns an oracle selected them into (then each
+    profile regex runs once per row). It walks LANG_PROFILES in
+    preference order: a language wins when its score is the greatest of
+    its own and every later one's."""
+    s = list(scores.items())
     top = ["GREATEST(" + ", ".join(e for _, e in s[i:]) + ")" for i in range(len(s))]
     whens = "".join(f" WHEN {e} = {top[i]} THEN '{lang}'" for i, (lang, e) in enumerate(s[:-1]))
     return f"CASE WHEN {top[0]} = 0 THEN 'und'{whens} ELSE '{s[-1][0]}' END"

@@ -168,35 +168,27 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Dedup: SimHash signatures
 # ---------------------------------------------------------------------------
 
-# Shared oracle twin of operators/dedup.py:simhash — ONE width-
+# Shared oracle twin of operators/dedup.py:simhash and of
+# simhash_hamming_pairs' banded candidate generation — ONE width-
 # parameterized definition for every simhash query below, so a
 # tokenization/banding tweak cannot desynchronize them. `bits` must
 # mirror the operator's contract (multiple of 4, <= 60: the hex prefix
 # parses into a signed 64-bit int in both engines).
-
-
-def _sql_simhash_sims(bits: int) -> str:
+def _sql_simhash_pairs(bits: int) -> str:
+    """The CTEs up to ``pairs`` (doc_a, doc_b, hamming)."""
     votes = ", ".join(f"SUM(((h >> {j}) & 1) * 2 - 1) AS v{j}" for j in range(bits))
     bit_sum = " + ".join(
         f"(CASE WHEN v{j} > 0 THEN CAST(1 AS BIGINT) ELSE 0 END << {j})" for j in range(bits)
     )
-    return (
-        _sql_words("documents") + """,
-    toks AS (SELECT doc_id, unnest(w) AS tok FROM words),
-    hashed AS (SELECT doc_id, """ + md5_long_sql("tok", bits // 4) + """ AS h FROM toks),
-    votes AS (SELECT doc_id, """ + votes + """ FROM hashed GROUP BY doc_id),
-    sims AS (SELECT doc_id, """ + bit_sum + """ AS simhash FROM votes)"""
-    )
-
-
-# ... and of simhash_hamming_pairs' banded candidate generation.
-def _sql_simhash_cand(bits: int) -> str:
     width = bits // dd.SIMHASH_BANDS
-    mask = (1 << width) - 1
     band_list = ", ".join(str(b) for b in range(dd.SIMHASH_BANDS))
-    return f"""
+    return _sql_words("documents") + f""",
+    toks AS (SELECT doc_id, unnest(w) AS tok FROM words),
+    hashed AS (SELECT doc_id, {md5_long_sql("tok", bits // 4)} AS h FROM toks),
+    votes AS (SELECT doc_id, {votes} FROM hashed GROUP BY doc_id),
+    sims AS (SELECT doc_id, {bit_sum} AS simhash FROM votes),
     bands AS (
-      SELECT doc_id, simhash, j.band, (simhash >> ({width} * j.band)) & {mask} AS bv
+      SELECT doc_id, simhash, j.band, (simhash >> ({width} * j.band)) & {(1 << width) - 1} AS bv
       FROM sims, LATERAL (SELECT unnest([{band_list}]) AS band) j
     ),
     cand AS (
@@ -204,13 +196,7 @@ def _sql_simhash_cand(bits: int) -> str:
              a.simhash AS sim_a, b.simhash AS sim_b
       FROM bands a JOIN bands b
         ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id
-    )"""
-
-
-def _sql_simhash_pairs(bits: int) -> str:
-    """simhash_hamming_pairs at ``bits``: the CTEs up to ``pairs``
-    (doc_a, doc_b, hamming)."""
-    return _sql_simhash_sims(bits) + "," + _sql_simhash_cand(bits) + """,
+    ),
     pairs AS (
       SELECT doc_a, doc_b, CAST(bit_count(xor(sim_a, sim_b)) AS BIGINT) AS hamming
       FROM cand WHERE bit_count(xor(sim_a, sim_b)) <= 3
@@ -360,7 +346,7 @@ _SQL_DFREQ = _sql_words("documents") + """,
 # Oracle twin of corpus_stats.py:tokenize_with_vocab over the corpus's
 # own top-100 DF vocabulary — shared by tokenize_vocab_ids and the
 # shard-export invariance query so a tokenization tweak cannot
-# desynchronize them (the _sql_simhash_sims pattern).
+# desynchronize them (the _sql_simhash_pairs pattern).
 _SQL_TOKENIZE = _SQL_DFREQ + """,
     vocab AS (
       SELECT term, CAST(rnk AS BIGINT) AS token_id FROM (
@@ -501,6 +487,10 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Text analysis: language-ID heuristic
 # ---------------------------------------------------------------------------
 
+# Oracles select the language scores once, as columns s_<lang>.
+_LANG_COLS = {lang: f"s_{lang}" for lang in tx.LANG_PROFILES}
+_SQL_LANG_SCORES = ", ".join(f"{e} AS s_{lang}" for lang, e in tx.lang_scores_sql("text").items())
+
 @query(
     "lang_id",
     f"""
@@ -513,11 +503,11 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
                             THEN repeat(' el y', 12) || repeat(' der ist', 12)
                           ELSE '' END AS text
       FROM documents
-    )
-    SELECT doc_id, lang AS labeled_lang,
-           {", ".join(f"{e} AS s_{lang}" for lang, e in tx.lang_scores_sql("text").items())},
-           {tx.lang_id_sql("text")} AS predicted_lang
-    FROM src
+    ),
+    s AS (SELECT doc_id, lang AS labeled_lang, {_SQL_LANG_SCORES} FROM src)
+    SELECT doc_id, labeled_lang, {", ".join(_LANG_COLS.values())},
+           {tx.lang_id_sql(_LANG_COLS)} AS predicted_lang
+    FROM s
     """,
 )
 def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -817,14 +807,16 @@ def _sql_curate(src: str) -> str:
     nd AS (SELECT DISTINCT doc_b FROM lsh WHERE jaccard_bp >= {cu.JACCARD_MIN_BP}),
     scored AS (
       SELECT doc_id, {tx.quality_score_bp_sql("text")} AS quality_bp,
-             {tx.lang_id_sql("text")} AS predicted_lang,
-             {tx.doc_fingerprint_sql("text")} AS fp
+             {tx.doc_fingerprint_sql("text")} AS fp, {_SQL_LANG_SCORES}
       FROM {src}
     ),
+    langed AS (
+      SELECT doc_id, quality_bp, fp, {tx.lang_id_sql(_LANG_COLS)} AS predicted_lang
+      FROM scored),
     k AS (SELECT *, MIN(doc_id) OVER (PARTITION BY fp) AS min_id,
                  quality_bp >= {cu.QUALITY_MIN_BP} AS ok_quality,
                  predicted_lang IN ({langs}) AS ok_lang
-          FROM scored),
+          FROM langed),
     kept AS (
       SELECT doc_id, quality_bp, predicted_lang FROM k
       WHERE ok_quality AND ok_lang AND doc_id = min_id AND doc_id NOT IN (SELECT doc_b FROM nd))"""

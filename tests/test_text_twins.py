@@ -33,7 +33,7 @@ KERNELS = {
     "punct_bp": (tx.punct_ratio_bp, tx.punct_ratio_bp_sql),
     "stopword_bp": (tx.stopword_ratio_bp, tx.stopword_ratio_bp_sql),
     "quality_bp": (tx.quality_score_bp, tx.quality_score_bp_sql),
-    "lang": (tx.lang_id, tx.lang_id_sql),
+    "lang": (tx.lang_id, lambda e: tx.lang_id_sql(tx.lang_scores_sql(e))),
     "redacted": (tx.redact_pii, tx.redact_pii_sql),
 }
 
