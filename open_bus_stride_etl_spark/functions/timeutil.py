@@ -33,15 +33,14 @@ def israel_iso_string(ts: Column) -> Column:
     )
 
 
-def israel_hour_to_utc_hour(hour: int, on_date: datetime.date | None = None) -> int:
+def israel_hour_to_utc_hour(hour: int, on_date: datetime.date) -> int:
     """Israel-local wall-clock hour -> UTC hour (common.py:69-71).
     DST-aware via the tz database; the reference anchors the conversion
     to *today's* date (``datetime.now().replace(hour=...)``), so the
     same config hour maps to different UTC hours across the DST switch —
-    ``on_date`` makes that anchor injectable for tests."""
+    the caller passes that anchor date."""
     from zoneinfo import ZoneInfo  # noqa: PLC0415
 
-    on_date = on_date or datetime.date.today()
     local = datetime.datetime.combine(on_date, datetime.time(int(hour))).replace(
         tzinfo=ZoneInfo(ISRAEL_TZ)
     )

@@ -22,17 +22,20 @@ from pyspark.sql import functions as F
 
 from .text import ws_token_count
 
-# Characters consecutive chunk_fixed windows share.
+# chunk_fixed's window width, and the characters consecutive windows
+# share. Read at call time, so tests monkeypatch them.
+CHUNK_CHARS = 120
 CHUNK_OVERLAP = 20
+# pack_greedy's shard count (md5 buckets of the doc id).
+PACK_SHARDS = 8
 
 
-def chunk_fixed(docs: DataFrame, chunk_chars: int = 120) -> DataFrame:
-    """Overlapping character windows: starts at 0, step
-    (chunk_chars - CHUNK_OVERLAP), until the text is consumed; short docs yield one chunk. Output:
-    id, chunk_no, chunk_start (0-based), chunk_text."""
-    step = chunk_chars - CHUNK_OVERLAP
-    if step <= 0:
-        raise ValueError("chunk_chars must exceed CHUNK_OVERLAP")
+def chunk_fixed(docs: DataFrame) -> DataFrame:
+    """Overlapping ``CHUNK_CHARS``-character windows: starts at 0, step
+    (CHUNK_CHARS - CHUNK_OVERLAP), until the text is consumed; short docs
+    yield one chunk. Output: id, chunk_no, chunk_start (0-based),
+    chunk_text."""
+    step = CHUNK_CHARS - CHUNK_OVERLAP
     n_chunks = F.greatest(
         F.lit(1),
         F.ceil((F.length(F.col("text")) - F.lit(CHUNK_OVERLAP)) / F.lit(step)).cast("int"),
@@ -45,22 +48,19 @@ def chunk_fixed(docs: DataFrame, chunk_chars: int = 120) -> DataFrame:
         F.col("doc_id"),
         F.col("chunk_no"),
         (F.col("_i") * step).alias("chunk_start"),
-        F.substring(F.col("text"), F.col("_i") * step + 1, chunk_chars).alias(
+        F.substring(F.col("text"), F.col("_i") * step + 1, CHUNK_CHARS).alias(
             "chunk_text"
         ),
     )
 
 
-def pack_greedy(
-    docs: DataFrame,
-    budget_tokens: int,
-    n_shards: int = 32,
-) -> DataFrame:
+def pack_greedy(docs: DataFrame, budget_tokens: int) -> DataFrame:
     """Assign each document to a (shard, bin) so each bin's token total
-    stays near ``budget_tokens``. Shard = deterministic md5 bucket of
-    the doc id (engine-portable, bounds the per-partition sequential
-    cumsum); within a shard, docs are packed in id order by a running
-    token sum. Output: id, shard, bin_id, n_tokens."""
+    stays near ``budget_tokens``. Shard = deterministic md5 bucket (of
+    ``PACK_SHARDS``) of the doc id (engine-portable, bounds the
+    per-partition sequential cumsum); within a shard, docs are packed in
+    id order by a running token sum. Output: id, shard, bin_id,
+    n_tokens."""
     from pyspark.sql import Window
 
     from .sampling import hash_bucket
@@ -74,7 +74,7 @@ def pack_greedy(
     return (
         docs.select(
             F.col("doc_id"),
-            hash_bucket(F.col("doc_id"), n_shards).cast("int").alias("shard"),
+            hash_bucket(F.col("doc_id"), PACK_SHARDS).cast("int").alias("shard"),
             toks.alias("n_tokens"),
         )
         .withColumn("_cum", F.sum("n_tokens").over(w))

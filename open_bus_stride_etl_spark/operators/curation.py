@@ -35,6 +35,9 @@ KEEP_NUM, KEEP_DEN = 1, 5
 # duplicate decisions never correlate.
 MIX_SEED = "mix"
 SPLIT_SEED = "split"
+# leakage_safe_split's split name -> basis points (sum 10000; cut points
+# follow dict order). Read at call time, so tests monkeypatch it.
+SPLIT_WEIGHTS_BP = {"train": 9000, "val": 500, "test": 500}
 
 # The curate selection (llm-curate-corpus, corpus_clean_*; oracle twin
 # q_llm._sql_curate): a document survives at quality >= QUALITY_MIN_BP,
@@ -194,43 +197,31 @@ def epoch_upsample(
     )
 
 
-def leakage_safe_split(
-    docs: DataFrame,
-    components: DataFrame | None = None,
-    weights_bp: dict[str, int] | None = None,
-) -> DataFrame:
+def leakage_safe_split(docs: DataFrame, components: DataFrame) -> DataFrame:
     """Train/val/test assignment with a DUPLICATE-LEAKAGE guard: the
     split key is the document's near-dup COMPONENT id (``components`` =
-    ``(doc_id, component_id)`` from ``dedup.connected_components``) when
-    it has one, else the doc id — so an entire near-duplicate group
-    lands in ONE split, and a test document can never have a training
-    twin. Splitting by plain doc hash silently leaks: with 10% dups a
-    naive 90/5/5 split puts ~9.5% of test docs' near-copies in train.
+    ``(doc_id, component_id)`` from ``dedup.connected_components``; it
+    holds only docs with a near-duplicate) when it has one, else the doc
+    id — so an entire near-duplicate group lands in ONE split, and a
+    test document can never have a training twin. Splitting by plain
+    doc hash silently leaks: with 10% dups a naive 90/5/5 split puts
+    ~9.5% of test docs' near-copies in train.
 
     Membership is the engine's deterministic md5-bucket rule
     (reproducible across engines/reruns/partitionings; salted with
     ``SPLIT_SEED`` so this decision stream is independent of every other
-    hash-membership stage — curation.py:hash_bucket_bp doctrine).
-    ``weights_bp`` maps split name -> basis points, must sum to 10000;
-    cut points follow dict order. Output: ``(doc_id, split)``.
+    hash-membership stage — curation.py:hash_bucket_bp doctrine), with
+    the ``SPLIT_WEIGHTS_BP`` cut points. Output: ``(doc_id, split)``.
 
     Scale shape: one left join against the slim component table (the
     dedup pipeline already materialized it) + a map-side bucket compare;
     nothing else shuffles."""
-    weights_bp = weights_bp or {"train": 9000, "val": 500, "test": 500}
-    if sum(weights_bp.values()) != 10000:
-        raise ValueError("weights_bp must sum to 10000")
-    if components is not None:
-        comp = components.select("doc_id", F.col("component_id").alias("_comp"))
-        keyed = docs.select("doc_id").join(comp, on="doc_id", how="left")
-        key = F.coalesce(F.col("_comp"), F.col("doc_id"))
-    else:
-        keyed = docs.select("doc_id")
-        key = F.col("doc_id")
-    bucket = hash_bucket_bp(key, SPLIT_SEED)
+    comp = components.select("doc_id", F.col("component_id").alias("_comp"))
+    keyed = docs.select("doc_id").join(comp, on="doc_id", how="left")
+    bucket = hash_bucket_bp(F.coalesce(F.col("_comp"), F.col("doc_id")), SPLIT_SEED)
     expr = None
     lo = 0
-    for name, w in weights_bp.items():
+    for name, w in SPLIT_WEIGHTS_BP.items():
         cond = (bucket >= lo) & (bucket < lo + w)
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
         lo += w

@@ -215,19 +215,18 @@ def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
     )
 
 
-def jaccard_pairs(docs: DataFrame, shingled: DataFrame | None = None) -> DataFrame:
+def jaccard_pairs(shingled: DataFrame) -> DataFrame:
     """Exact shingle-set Jaccard (basis points) for every doc pair
     sharing >= 1 shingle — the shingle itself is the blocker, so this
-    is only sane at small scale. ``shingled`` lets a caller pass a
-    persisted ``_shingled`` table: it is consumed three times here
-    (both self-join sides and the set sizes) with no exchange reuse.
+    is only sane at small scale. ``shingled`` is a ``_shingled(docs)``
+    table; it is consumed three times here (both self-join sides and
+    the set sizes) with no exchange reuse, so callers persist it.
 
     The end-to-end LSH dedup should use ``minhash_lsh_pairs``, which
     scores only candidate pairs and never runs a corpus-wide distinct
     or set-size pass."""
-    sh = shingled if shingled is not None else _shingled(docs)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = sh.alias("a"), sh.alias("b")
+    sizes = shingled.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    a, b = shingled.alias("a"), shingled.alias("b")
     inter = (
         a.join(
             b,
@@ -514,11 +513,7 @@ def _derived_finish_bound(spark) -> int:
     return max(500_000, min(heap // 2048, 16_000_000))
 
 
-def connected_components(
-    pairs: DataFrame,
-    input_simple: bool = False,
-    local_finish_edges: int | None = None,
-) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Connected components over a near-duplicate pair graph:
     ``(doc_id, component_id)`` where component_id = MIN doc id in the
     component. The missing last step of every dedup family above —
@@ -557,9 +552,9 @@ def connected_components(
 
     Only docs that appear in ``pairs`` are returned (singletons are
     their own trivial component — callers that need them can union).
-    ``input_simple=True`` skips the defensive dedup/self-loop filter for
-    inputs already known to be simple (e.g. LSH/SimHash pair outputs,
-    which are distinct with doc_a < doc_b).
+    ``pairs`` must hold no self-loop: the edges come from the LSH and
+    SimHash pair operators, which emit doc_a < doc_b (a self-loop alone
+    would surface as a one-doc component on the local finish).
 
     HYBRID FINISH: the distributed rounds do the heavy contraction;
     once the surviving edge count (from each round's fingerprint
@@ -574,21 +569,19 @@ def connected_components(
     the whole query). Every distributed round costs 4 shuffles + a
     checkpoint regardless of edge count, so the bound is set by what
     the driver comfortably absorbs — which depends on how the driver is
-    SIZED, so the default (``None``) derives it from the configured
-    driver heap (``_derived_finish_bound``: heap // 2048 edges, clamped
-    [500k, 16M]; r6 measurement in its docstring — the r4 500k
-    constant left the 2.47M-edge sf30 graph running star rounds a
-    driver with 8 GiB of headroom could absorb in one collect). At
-    corpus scale (billions of pair edges) the rounds keep running until
-    either the bound or fingerprint convergence is hit; set
-    ``local_finish_edges=0`` to force the fully-distributed path.
-    Every round boundary preserves the node set and the component
-    partition (the same invariant the converged read-off relies on), so
-    finishing at any boundary yields the same answer — pinned by tests
-    that run both paths on the same graphs.
+    SIZED, so it is derived from the configured driver heap
+    (``_derived_finish_bound``: heap // 2048 edges, clamped [500k, 16M];
+    r6 measurement in its docstring — the r4 500k constant left the
+    2.47M-edge sf30 graph running star rounds a driver with 8 GiB of
+    headroom could absorb in one collect). At corpus scale (billions of
+    pair edges) the rounds keep running until either the bound or
+    fingerprint convergence is hit. Every round boundary preserves the
+    node set and the component partition (the same invariant the
+    converged read-off relies on), so finishing at any boundary yields
+    the same answer — pinned by tests that patch the bound to 0 (the
+    fully-distributed path) and run both paths on the same graphs.
     """
-    if local_finish_edges is None:
-        local_finish_edges = _derived_finish_bound(pairs.sparkSession)
+    local_finish_edges = _derived_finish_bound(pairs.sparkSession)
 
     def _checkpoint_with_fingerprint(df: DataFrame):
         """Materialize one round, then collect its edge-set fingerprint
@@ -626,8 +619,6 @@ def connected_components(
         return ck, (m["n"], m["su"], m["sv"], m["sh"])
 
     e = pairs.select(F.col("doc_a").cast("long").alias("u"), F.col("doc_b").cast("long").alias("v"))
-    if not input_simple:
-        e = e.where(F.col("u") != F.col("v")).distinct()
     edges, fp = _checkpoint_with_fingerprint(e)
     for _ in range(CC_MAX_ROUNDS):
         if fp[0] <= local_finish_edges:

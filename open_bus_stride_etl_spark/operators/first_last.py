@@ -29,29 +29,24 @@ SETTLE_HOURS = 6
 STALE_DAYS = 2
 
 
-def first_last_by(
-    df: DataFrame,
-    group_col: str,
-    order_col: str,
-    payload_cols: list[str],
-    tie_cols: list[str] | str | None = None,
-) -> DataFrame:
-    """Per ``group_col``: the payload of the first and last row by
+def first_last_aggs(order_col: str, payload_cols: list[str], tie_cols: list[str]) -> list[Column]:
+    """The first/last aggregate list — the one spelling of it, shared by
+    ``first_last_by``, the streaming first/last query and
+    ``first_last_durations``: the payload of the first and last row by
     ``order_col`` (NULL ordering values ignored), plus min/max of the
     ordering column itself. Ties broken deterministically by ``tie_cols``
     — pass enough columns to pin a unique row, or each per-column
     min_by/max_by may pick payload values from *different* tied rows.
 
-    Output columns: group_col, first_<p>/last_<p> for each payload col,
-    min_<order>, max_<order>, n_rows.
+    Aliases: first_<p>/last_<p> for each payload col, min_<order>,
+    max_<order>, n_rows.
     """
-    if isinstance(tie_cols, str):
-        tie_cols = [tie_cols]
-    ties = [F.col(t) for t in (tie_cols or [])] or [F.lit(0)]
     # Composite ordering struct => deterministic tiebreak; struct ordering
     # is lexicographic. NULL order_col rows are excluded up front so that
     # min_by/max_by never pick them (NULLS LAST semantics).
-    okey = F.when(F.col(order_col).isNotNull(), F.struct(F.col(order_col), *ties))
+    okey = F.when(
+        F.col(order_col).isNotNull(), F.struct(F.col(order_col), *[F.col(t) for t in tie_cols])
+    )
     aggs: list[Column] = []
     for p in payload_cols:
         aggs.append(F.min_by(F.col(p), okey).alias(f"first_{p}"))
@@ -59,13 +54,19 @@ def first_last_by(
     aggs.append(F.min(order_col).alias(f"min_{order_col}"))
     aggs.append(F.max(order_col).alias(f"max_{order_col}"))
     aggs.append(F.count(F.lit(1)).alias("n_rows"))
-    return df.groupBy(group_col).agg(*aggs)
+    return aggs
 
 
-def ride_durations(
-    locations: DataFrame,
-    now: Column | None = None,
+def first_last_by(
+    df: DataFrame, group_col: str, order_col: str, payload_cols: list[str], tie_cols: list[str]
 ) -> DataFrame:
+    """Per ``group_col``: ``first_last_aggs``. Output columns: group_col,
+    first_<p>/last_<p> for each payload col, min_<order>, max_<order>,
+    n_rows."""
+    return df.groupBy(group_col).agg(*first_last_aggs(order_col, payload_cols, tie_cols))
+
+
+def ride_durations(locations: DataFrame, now: Column) -> DataFrame:
     """The add-ride-durations task semantics on a locations DataFrame.
 
     Mirrors add_ride_durations.py:68-84: duration is only *finalized*
@@ -75,8 +76,7 @@ def ride_durations(
     Returns: ride id, first/last location id, first/last ts,
     duration_minutes (int, NULL when not yet finalizable).
     """
-    now = now if now is not None else F.current_timestamp()
-    fl = first_last_by(locations, "siri_ride_id", "recorded_at_time", ["id"], tie_cols="id")
+    fl = first_last_by(locations, "siri_ride_id", "recorded_at_time", ["id"], ["id"])
     first_ts = F.col("min_recorded_at_time")
     last_ts = F.col("max_recorded_at_time")
     settled = last_ts < (now - F.expr(f"INTERVAL {SETTLE_HOURS} HOURS"))

@@ -347,25 +347,17 @@ def decode_audio(payload: bytes):
     return samples.reshape(-1, channels), int(sample_rate)
 
 
-def encode_wav(samples, sample_rate: int, bits: int = 16) -> bytes:
-    """Minimal stdlib WAV *encoder* (PCM): the inverse of
+def encode_wav(samples, sample_rate: int) -> bytes:
+    """Minimal stdlib 16-bit PCM WAV *encoder*: the inverse of
     ``decode_audio``. ``samples`` is a numpy int array ``(n_frames,
-    channels)`` in the signed range of ``bits``."""
+    channels)`` in the signed 16-bit range."""
     import struct  # noqa: PLC0415
 
-    import numpy as np  # noqa: PLC0415
-
-    if bits not in (8, 16):
-        raise ValueError("encode_wav: only 8/16-bit PCM supported")
-    frames, channels = samples.shape
-    width = bits // 8
-    if bits == 8:
-        body = (samples.astype(np.int32) + 128).clip(0, 255).astype(np.uint8).tobytes()
-    else:
-        body = samples.astype("<i2").tobytes()
-    block_align = channels * width
+    _frames, channels = samples.shape
+    body = samples.astype("<i2").tobytes()
+    block_align = channels * 2
     fmt = struct.pack(
-        "<HHIIHH", 1, channels, sample_rate, sample_rate * block_align, block_align, bits
+        "<HHIIHH", 1, channels, sample_rate, sample_rate * block_align, block_align, 16
     )
     out = b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(body)) + b"WAVE"
     out += b"fmt " + struct.pack("<I", len(fmt)) + fmt

@@ -45,16 +45,19 @@ def stratified_hash_sample(
     return df.where(bucket < rate)
 
 
-def reservoir_per_group(
-    df: DataFrame, group_col: str, key_col: str, k: int, seed: str = ""
-) -> DataFrame:
+# reservoir_per_group's hash salt (its own selection stream); read at
+# call time, so tests monkeypatch it.
+RESERVOIR_SEED = "rsv"
+
+
+def reservoir_per_group(df: DataFrame, group_col: str, key_col: str, k: int) -> DataFrame:
     """k 'random' rows per group, deterministically: rank rows inside
-    each group by their key hash and keep the k smallest. Equivalent in
-    distribution to a reservoir sample, but reproducible and
-    oracle-checkable; one shuffle on the group key."""
+    each group by their ``RESERVOIR_SEED``-salted key hash and keep the
+    k smallest. Equivalent in distribution to a reservoir sample, but
+    reproducible and oracle-checkable; one shuffle on the group key."""
     from pyspark.sql import Window
 
-    h = hash_bucket(F.col(key_col), 1 << 40, seed)
+    h = hash_bucket(F.col(key_col), 1 << 40, RESERVOIR_SEED)
     w = Window.partitionBy(group_col).orderBy(h.asc(), F.col(key_col).asc())
     return (
         df.withColumn("_rn", F.row_number().over(w))

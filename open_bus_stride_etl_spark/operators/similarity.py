@@ -25,8 +25,16 @@ from pyspark.sql import types as T
 from .util import fan_out as _fan_out
 
 QUANT = 1_000_000
+# The guards and sizes below are read at call time, so tests monkeypatch them.
 # Sign-LSH bucket width: the leading dimensions whose signs key a bucket.
 LSH_BITS = 8
+# cosine_topk collects the query set; above this many rows it raises.
+MAX_QUERY_ROWS = 100_000
+# clustered_near_dup_pairs raises above this many members in one cluster.
+MAX_CLUSTER_OCCUPANCY = 65536
+# ann_ivf_topk: neighbours kept per query, and index cells (pivots).
+IVF_K = 3
+IVF_PIVOTS = 8
 
 
 def _topk_per_column(cos, cand_ids, k):
@@ -89,12 +97,7 @@ def _query_block(rows):
     return ids, mat, np.sqrt((mat * mat).sum(axis=1))
 
 
-def cosine_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    max_query_rows: int = 100_000,
-) -> DataFrame:
+def cosine_topk(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k nearest (by cosine) corpus vectors per query vector.
     ``queries`` has the same schema; self-matches are excluded.
     Output: query_id, cand_id, rank, cos (double, bit-portable).
@@ -117,18 +120,18 @@ def cosine_topk(
     final divide matches the SQL expression bit-for-bit.
 
     The broadcast precondition is ENFORCED: ``queries`` above
-    ``max_query_rows`` raises immediately (one cheap limit-bounded
+    ``MAX_QUERY_ROWS`` raises immediately (one cheap limit-bounded
     count) instead of silently collecting an unbounded set and OOMing
     the driver at scale — point oversized query sets at the ANN
     operators (ivf_topk / lsh_topk), which never collect them."""
     import numpy as np
 
-    probe = queries.select(F.lit(1)).limit(max_query_rows + 1).count()
-    if probe > max_query_rows:
+    probe = queries.select(F.lit(1)).limit(MAX_QUERY_ROWS + 1).count()
+    if probe > MAX_QUERY_ROWS:
         raise ValueError(
-            f"cosine_topk query set exceeds max_query_rows={max_query_rows}: "
+            f"cosine_topk query set exceeds MAX_QUERY_ROWS={MAX_QUERY_ROWS}: "
             "the exact baseline collects+broadcasts the query set by design. "
-            "Raise max_query_rows only if the driver can hold the set; for "
+            "Raise MAX_QUERY_ROWS only if the driver can hold the set; for "
             "large query sets use the ANN operators (ivf_topk, lsh_topk)."
         )
     q_rows = queries.select("vec_id", quantized_vec()).collect()
@@ -143,11 +146,7 @@ def cosine_topk(
     )
 
 
-def embedding_near_dup_pairs(
-    emb: DataFrame,
-    threshold: float,
-    bits: int = LSH_BITS,
-) -> DataFrame:
+def embedding_near_dup_pairs(emb: DataFrame, threshold: float) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (the semantic-dedup stage of
     an LLM data pipeline): pairs sharing a sign-LSH bucket whose cosine
     is >= threshold. Bucketing makes candidate generation an equi-join —
@@ -161,23 +160,18 @@ def embedding_near_dup_pairs(
     formulation shuffled every candidate pair as a row and paid a
     per-pair Catalyst array dot). Work is O(occupancy^2) flops per
     bucket but memory stays O(block x occupancy) via row blocks. Hot
-    buckets at scale are handled by raising ``bits`` (each extra bit
+    buckets at scale are handled by raising ``LSH_BITS`` (each extra bit
     halves expected occupancy); exactness is the same integer-in-float64
     contract as cosine_topk."""
     v = emb.select(
         F.col("vec_id").alias("_id"),
-        sign_lsh_bucket(bits).alias("bucket"),
+        sign_lsh_bucket().alias("bucket"),
         quantized_vec().alias("_v"),
     )
     return _pairs_within_bucket(v, threshold)
 
 
-def clustered_near_dup_pairs(
-    emb: DataFrame,
-    clusters: DataFrame,
-    threshold: float,
-    max_occupancy: int = 65536,
-) -> DataFrame:
+def clustered_near_dup_pairs(emb: DataFrame, clusters: DataFrame, threshold: float) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023, public): score
     cosine pairs only WITHIN a k-means cluster — the trained-partition
     alternative to sign-LSH bucketing for near-dup candidate generation.
@@ -195,11 +189,11 @@ def clustered_near_dup_pairs(
     the assignment table is small relative to executors' memory.
 
     Fail-fast occupancy guard (same doctrine as ``cosine_topk``'s
-    ``max_query_rows``): per-cluster work is O(occupancy^2) flops, so a
+    ``MAX_QUERY_ROWS``): per-cluster work is O(occupancy^2) flops, so a
     caller pairing a big corpus with a small k would get a silent
     quadratic blowup. One cheap count aggregate over the assignment
     table probes the max cluster occupancy up front and raises with
-    "scale k" guidance when it exceeds ``max_occupancy`` (default 64k:
+    "scale k" guidance when it exceeds ``MAX_CLUSTER_OCCUPANCY`` (64k:
     ~4e9 pair-dots in the hottest cluster — bounded minutes of BLAS on
     one core, the ceiling of a reasonable task). SemDeDup itself scales
     k with corpus size (Abbas et al. 2023 use k=50k for LAION-440M); the
@@ -217,13 +211,13 @@ def clustered_near_dup_pairs(
         .agg(F.max("count").alias("m"))
         .collect()[0]["m"]
     )
-    if occ is not None and occ > max_occupancy:
+    if occ is not None and occ > MAX_CLUSTER_OCCUPANCY:
         raise ValueError(
             f"clustered_near_dup_pairs: max cluster occupancy {occ} exceeds "
-            f"max_occupancy={max_occupancy}; per-cluster scoring is "
-            "O(occupancy^2). Scale k with corpus size (SemDeDup trains "
+            f"MAX_CLUSTER_OCCUPANCY={MAX_CLUSTER_OCCUPANCY}; per-cluster scoring "
+            "is O(occupancy^2). Scale k with corpus size (SemDeDup trains "
             "k proportional to N) so clusters stay bounded, or raise "
-            "max_occupancy only if the executors can absorb the flops."
+            "MAX_CLUSTER_OCCUPANCY only if the executors can absorb the flops."
         )
     v = emb.join(clusters, on="vec_id").select(
         F.col("vec_id").alias("_id"),
@@ -275,16 +269,11 @@ def _pairs_within_bucket(v: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def ann_ivf_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    n_pivots: int = 8,
-) -> DataFrame:
-    """IVF-style approximate top-k: an inverted-file index with
-    ``n_pivots`` deterministic pivots (the first vectors by id — a real
-    deployment trains centroids offline; determinism is what makes this
-    oracle-checkable). Every vector is assigned to its nearest pivot
+def ann_ivf_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
+    """IVF-style approximate top-k (``IVF_K`` per query): an
+    inverted-file index with ``IVF_PIVOTS`` deterministic pivots (the
+    first vectors by id — a real deployment trains centroids offline;
+    determinism is what makes this oracle-checkable). Every vector is assigned to its nearest pivot
     (cell); queries only score their own cell's members.
 
     Scale shape: centroids AND the query set are small by construction
@@ -294,7 +283,7 @@ def ann_ivf_topk(
     matmul and (b) immediately scored against its own cell's query
     block — probe fused into assignment, zero shuffle before the tiny
     global top-k. Two earlier formulations lost to this: a crossJoin +
-    row_number window shuffled |corpus| x n_pivots rows, and a
+    row_number window shuffled |corpus| x IVF_PIVOTS rows, and a
     codegen'd array-expression argmax re-evaluated the interpreted
     (non-codegen) higher-order quantization once per pivot after
     project collapse.
@@ -305,7 +294,7 @@ def ann_ivf_topk(
     to the SQL (see cosine_topk)."""
     import numpy as np
 
-    piv_rows = emb.orderBy("vec_id").limit(n_pivots).select("vec_id", quantized_vec()).collect()
+    piv_rows = emb.orderBy("vec_id").limit(IVF_PIVOTS).select("vec_id", quantized_vec()).collect()
     q_rows = queries.select("vec_id", quantized_vec()).collect()
     if not q_rows or not piv_rows:
         return _empty_topk(emb)
@@ -326,7 +315,7 @@ def ann_ivf_topk(
     cv = _fan_out(
         emb.select(F.col("vec_id").alias("cand_id"), quantized_vec().alias("_cq"))
     )
-    return _partitioned_probe(cv, by_cell, k, key_of=cells_of)
+    return _partitioned_probe(cv, by_cell, IVF_K, key_of=cells_of)
 
 
 def ivf_probe_persisted(
@@ -454,11 +443,12 @@ def _partitioned_probe(cv, by_key, k, key_of=None):
     )
 
 
-def sign_lsh_bucket(bits: int = LSH_BITS) -> "F.Column":
-    """Bucket id from the sign pattern of the first ``bits`` dimensions
-    (axis-aligned hyperplane LSH — deterministic, engine-portable)."""
+def sign_lsh_bucket() -> "F.Column":
+    """Bucket id from the sign pattern of the first ``LSH_BITS``
+    dimensions (axis-aligned hyperplane LSH — deterministic,
+    engine-portable)."""
     out = F.lit(0).cast("long")
-    for j in range(bits):
+    for j in range(LSH_BITS):
         bit = F.when(F.element_at(F.col("embedding"), j + 1) > 0, F.lit(1).cast("long")).otherwise(
             F.lit(0).cast("long")
         )

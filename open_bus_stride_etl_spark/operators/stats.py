@@ -18,6 +18,8 @@ from pyspark.sql import functions as F
 # update_ride_aggregations.py:58-74: a date is complete when at least this
 # share of its rides has both a start and an end time.
 COMPLETE_PCT = 90.0
+# stats/api.py:102-112: the newest snapshot may be at most this old.
+MAX_AGE_SECONDS = 3600
 
 
 class FreshnessError(RuntimeError):
@@ -25,9 +27,10 @@ class FreshnessError(RuntimeError):
 
 
 def latest_snapshot_age_seconds(
-    snapshots: DataFrame, now: datetime.datetime | None = None
+    snapshots: DataFrame, now: datetime.datetime | None
 ) -> float | None:
-    """Age of the newest snapshot; None when the table is empty."""
+    """Age of the newest snapshot at ``now`` (None: the current UTC
+    time); None when the table is empty."""
     row = snapshots.agg(F.max("etl_start_time").alias("latest")).collect()[0]
     if row["latest"] is None:
         return None
@@ -40,17 +43,13 @@ def latest_snapshot_age_seconds(
     return (now - row["latest"]).total_seconds()
 
 
-def validate_freshness(
-    snapshots: DataFrame,
-    max_age_seconds: int = 3600,
-    now: datetime.datetime | None = None,
-) -> float:
-    """Raise FreshnessError when the newest snapshot is older than the
-    threshold (stats/api.py:102-112's exit-1 contract)."""
+def validate_freshness(snapshots: DataFrame, now: datetime.datetime | None = None) -> float:
+    """Raise FreshnessError when the newest snapshot is older than
+    ``MAX_AGE_SECONDS`` (stats/api.py:102-112's exit-1 contract)."""
     age = latest_snapshot_age_seconds(snapshots, now)
-    if age is None or age > max_age_seconds:
+    if age is None or age > MAX_AGE_SECONDS:
         raise FreshnessError(
-            f"latest snapshot age {age}s exceeds {max_age_seconds}s (or table empty)"
+            f"latest snapshot age {age}s exceeds {MAX_AGE_SECONDS}s (or table empty)"
         )
     return age
 

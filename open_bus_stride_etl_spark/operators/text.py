@@ -23,6 +23,12 @@ from ..functions.hashing import md5_long
 BPE_TOKEN_RE = r"\w+|[^\w\s]"
 PUNCT_RE = r"[^\w\s]"
 WS_RE = r"\s+"
+# The same three for DuckDB's RE2, whose \s lacks the vertical tab that
+# Java's \s matches: Java's class is spelled out.
+_JAVA_SPACE = r" \t\n\x0B\f\r"
+BPE_TOKEN_RE_SQL = rf"\w+|[^\w{_JAVA_SPACE}]"
+PUNCT_RE_SQL = rf"[^\w{_JAVA_SPACE}]"
+WS_RE_SQL = rf"[{_JAVA_SPACE}]+"
 # Every shingle operator reads word 3-grams (the oracles' shingle CTE).
 SHINGLE_K = 3
 # prefix_fingerprint's normalized-prefix length.
@@ -48,6 +54,13 @@ def _words_re(words: tuple[str, ...]) -> str:
     return r"\b(" + "|".join(words) + r")\b"
 
 
+def _lower_sql(expr: str) -> str:
+    """Java's ``toLowerCase`` in DuckDB: Java maps U+0130 (dotted
+    capital I) to ``i`` + U+0307, DuckDB to a plain ``i``, so the
+    replace comes first."""
+    return f"lower(replace({expr}, '\u0130', 'i\u0307'))"
+
+
 def normalize_text(text: Column) -> Column:
     """Lowercase + collapse whitespace — the canonical form every dedup/
     fingerprint operator hashes."""
@@ -55,7 +68,7 @@ def normalize_text(text: Column) -> Column:
 
 
 def normalize_text_sql(expr: str) -> str:
-    return f"trim(regexp_replace(lower({expr}), '{WS_RE}', ' ', 'g'))"
+    return f"trim(regexp_replace({_lower_sql(expr)}, '{WS_RE_SQL}', ' ', 'g'))"
 
 
 def ws_token_count(text: Column) -> Column:
@@ -67,7 +80,7 @@ def ws_token_count(text: Column) -> Column:
 def ws_token_count_sql(expr: str) -> str:
     return (
         f"CASE WHEN length(trim({expr})) = 0 THEN 0"
-        f" ELSE len(regexp_split_to_array(trim({expr}), '{WS_RE}')) END"
+        f" ELSE len(regexp_split_to_array(trim({expr}), '{WS_RE_SQL}')) END"
     )
 
 
@@ -76,7 +89,7 @@ def bpe_token_count(text: Column) -> Column:
 
 
 def bpe_token_count_sql(expr: str) -> str:
-    return f"len(regexp_extract_all({expr}, '{BPE_TOKEN_RE}'))"
+    return f"len(regexp_extract_all({expr}, '{BPE_TOKEN_RE_SQL}'))"
 
 
 def punct_ratio_bp(text: Column) -> Column:
@@ -88,7 +101,7 @@ def punct_ratio_bp(text: Column) -> Column:
 
 
 def punct_ratio_bp_sql(expr: str) -> str:
-    n_punct = f"(length({expr}) - length(regexp_replace({expr}, '{PUNCT_RE}', '', 'g')))"
+    n_punct = f"(length({expr}) - length(regexp_replace({expr}, '{PUNCT_RE_SQL}', '', 'g')))"
     return (
         f"CASE WHEN length({expr}) = 0 THEN 0"
         f" ELSE CAST(ROUND(10000.0 * {n_punct} / length({expr})) AS BIGINT) END"
@@ -104,8 +117,8 @@ def stopword_ratio_bp(text: Column) -> Column:
 
 
 def stopword_ratio_bp_sql(expr: str) -> str:
-    n_stop = f"len(regexp_extract_all(lower({expr}), '{_words_re(STOPWORDS)}'))"
-    n_tok = f"len(regexp_split_to_array(trim({expr}), '{WS_RE}'))"
+    n_stop = f"len(regexp_extract_all({_lower_sql(expr)}, '{_words_re(STOPWORDS)}'))"
+    n_tok = f"len(regexp_split_to_array(trim({expr}), '{WS_RE_SQL}'))"
     return (
         f"CASE WHEN length(trim({expr})) = 0 THEN 0"
         f" ELSE CAST(ROUND(10000.0 * {n_stop} / {n_tok}) AS BIGINT) END"
@@ -142,7 +155,7 @@ def lang_scores(text: Column) -> dict[str, Column]:
 
 def lang_scores_sql(expr: str) -> dict[str, str]:
     return {
-        lang: f"len(regexp_extract_all(lower({expr}), '{_words_re(words)}'))"
+        lang: f"len(regexp_extract_all({_lower_sql(expr)}, '{_words_re(words)}'))"
         for lang, words in LANG_PROFILES.items()
     }
 

@@ -368,7 +368,7 @@ def llm_ann_query(
         # The quality gate before an index replaces the exact path:
         # mean recall@k of the probed result against the brute-force
         # baseline over the SAME query set (bounded by cosine_topk's
-        # max_query_rows broadcast contract — query sets are small by
+        # MAX_QUERY_ROWS broadcast contract — query sets are small by
         # construction here).
         queries_df = emb.orderBy("vec_id").limit(n_queries)
         exact = cosine_topk(emb, queries_df, k=k_top)

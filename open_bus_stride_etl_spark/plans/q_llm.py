@@ -13,8 +13,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long_sql, row_hash, row_hash_sql
+from ..operators import chunking as ck
 from ..operators import curation as cu
 from ..operators import dedup as dd
+from ..operators import sampling as sp
 from ..operators import similarity as sim
 from ..operators import text as tx
 from ..operators.multimodal import fake_decode_stats
@@ -161,7 +163,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LSH variant's plan, gets no exchange reuse across them — persist
     # wins ~20% at sf0.1 AND sf1 (measured both ways at both scales)
     sh = track_persist(dd._shingled(d))
-    return dd.jaccard_pairs(d, shingled=sh).where(F.col("jaccard_bp") >= 5000)
+    return dd.jaccard_pairs(sh).where(F.col("jaccard_bp") >= 5000)
 
 
 # ---------------------------------------------------------------------------
@@ -274,9 +276,7 @@ def dedup_groups_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(log^2 n)-round large-star/small-star operator
     (operators/dedup.py:connected_components), the corpus-scale path."""
     pairs = dd.simhash_hamming_pairs(_docs(spark, sf_dir))
-    # simhash pairs are distinct with doc_a < doc_b by construction, so
-    # the CC operator's defensive dedup shuffle is skipped
-    return dd.connected_components(pairs, input_simple=True)
+    return dd.connected_components(pairs)
 
 
 @query(
@@ -296,9 +296,7 @@ def dedup_groups_cc60(spark: SparkSession, sf_dir: str) -> DataFrame:
     (VERDICT r7 ask #2); the 32-bit dedup_groups_cc moves to the tail
     as the historical oracle-chain twin."""
     pairs = dd.simhash_hamming_pairs(_docs(spark, sf_dir), sim_bits=60)
-    # simhash pairs are distinct with doc_a < doc_b by construction, so
-    # the CC operator's defensive dedup shuffle is skipped
-    return dd.connected_components(pairs, input_simple=True)
+    return dd.connected_components(pairs)
 
 
 # ---------------------------------------------------------------------------
@@ -573,7 +571,7 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ann_ivf_topk",
     "WITH " + _SQL_COMP + f""",
-    piv AS (SELECT vec_id AS pivot_id FROM embeddings ORDER BY vec_id LIMIT 8),
+    piv AS (SELECT vec_id AS pivot_id FROM embeddings ORDER BY vec_id LIMIT {sim.IVF_PIVOTS}),
     pd AS (
       SELECT c.vec_id, p.pivot_id, SUM(c.q * pc.q) AS dot
       FROM comp c
@@ -609,7 +607,7 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rank
           FROM sc)
-    SELECT query_id, cand_id, CAST(rank AS INTEGER) AS rank, cos FROM r WHERE rank <= 3
+    SELECT query_id, cand_id, CAST(rank AS INTEGER) AS rank, cos FROM r WHERE rank <= {sim.IVF_K}
     """,
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -619,7 +617,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered query quadratic-ish)."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.orderBy("vec_id").limit(_RECALL_EVAL_QUERIES)
-    return sim.ann_ivf_topk(emb, queries, k=3, n_pivots=8)
+    return sim.ann_ivf_topk(emb, queries)
 
 
 # ---------------------------------------------------------------------------
@@ -1162,7 +1160,7 @@ def split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = fp.select(
         "doc_id", F.min("doc_id").over(Window.partitionBy("_f")).alias("component_id")
     )
-    split = cu.leakage_safe_split(d, components=comp)
+    split = cu.leakage_safe_split(d, comp)
     g = track_persist(
         split.join(comp, on="doc_id")
         .groupBy("component_id", "split")
@@ -1204,7 +1202,6 @@ def training_shard_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reading shards interleaved replays an identical hash-random order
     on any engine/partitioning; the seed ('ep0') reshuffles per epoch.
     Bucket-then-rank, never one global sort partition."""
-    from ..operators import sampling as sp  # noqa: PLC0415
 
     return sp.shard_shuffle(_docs(spark, sf_dir), n_shards=16, seed="ep0")
 
@@ -1233,8 +1230,6 @@ _STRATA_CASE = "CASE event_type " + " ".join(
 def stratified_sample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-stratum rates (downsample dominant classes, keep rare ones
     whole) — the class-balancing step of a training-data pipeline."""
-    from ..operators import sampling as sp
-
     ev = load_table(spark, sf_dir, "events")
     return (
         sp.stratified_hash_sample(ev, "event_id", "event_type", _STRATA)
@@ -1251,7 +1246,7 @@ def stratified_sample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT user_id, event_id,
              row_number() OVER (
                PARTITION BY user_id
-               ORDER BY {md5_long_sql("CAST(event_id AS VARCHAR) || 'rsv'")} ASC,
+               ORDER BY {md5_long_sql(f"CAST(event_id AS VARCHAR) || '{sp.RESERVOIR_SEED}'")} ASC,
                         event_id ASC) AS rn
       FROM events) t
     WHERE rn <= 3
@@ -1260,10 +1255,8 @@ def stratified_sample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def reservoir_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k deterministic 'random' rows per group (hash-ranked) — the
     per-source/per-domain spot-check sample, reproducible run to run."""
-    from ..operators import sampling as sp
-
     ev = load_table(spark, sf_dir, "events")
-    return sp.reservoir_per_group(ev, "user_id", "event_id", 3, seed="rsv").select(
+    return sp.reservoir_per_group(ev, "user_id", "event_id", 3).select(
         "user_id", "event_id"
     )
 
@@ -1336,22 +1329,22 @@ def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Chunking + sequence packing: the context-window stage (operators/chunking.py)
 # ---------------------------------------------------------------------------
 
+_CHUNK_STEP = ck.CHUNK_CHARS - ck.CHUNK_OVERLAP
+
 @query(
     "doc_chunks",
-    r"""
+    f"""
     SELECT doc_id, CAST(t.i AS INT) AS chunk_no,
-           CAST(t.i * 100 AS INT) AS chunk_start,
-           substr(text, CAST(t.i * 100 + 1 AS INT), 120) AS chunk_text
+           CAST(t.i * {_CHUNK_STEP} AS INT) AS chunk_start,
+           substr(text, CAST(t.i * {_CHUNK_STEP} + 1 AS INT), {ck.CHUNK_CHARS}) AS chunk_text
     FROM documents, LATERAL (
       SELECT unnest(range(0, GREATEST(1,
-        CAST(CEIL((length(text) - 20) / 100.0) AS BIGINT)))) AS i) t
+        CAST(CEIL((length(text) - {ck.CHUNK_OVERLAP}) / {_CHUNK_STEP}.0) AS BIGINT)))) AS i) t
     """,
 )
 def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping 120-char windows with 20-char overlap — map-local
+    """Overlapping CHUNK_CHARS windows sharing CHUNK_OVERLAP chars — map-local
     posexplode, no shuffle; the shape of every context-window splitter."""
-    from ..operators import chunking as ck
-
     return ck.chunk_fixed(_docs(spark, sf_dir))
 
 
@@ -1360,7 +1353,8 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH t AS (
       SELECT doc_id,
-             CAST({md5_long_sql("CAST(doc_id AS VARCHAR) || ''")} % 8 AS INT) AS shard,
+             CAST({md5_long_sql("CAST(doc_id AS VARCHAR) || ''")} % {ck.PACK_SHARDS} AS INT)
+               AS shard,
              CAST({tx.ws_token_count_sql("text")} AS INT) AS n_tokens
       FROM documents
     ),
@@ -1379,9 +1373,7 @@ def packed_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum => bin id; every bin totals <= budget + max_doc_tokens. Shards
     bound the sequential cumsum so the window parallelizes — how a
     distributed packer actually shards a corpus."""
-    from ..operators import chunking as ck
-
-    return ck.pack_greedy(_docs(spark, sf_dir), budget_tokens=200, n_shards=8)
+    return ck.pack_greedy(_docs(spark, sf_dir), budget_tokens=200)
 
 
 # ---------------------------------------------------------------------------

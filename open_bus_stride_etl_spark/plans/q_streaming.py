@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators import text as tx
+from ..operators.first_last import first_last_aggs
 from ..session import configure
 from ..streaming.bounded import BatchFn, run_bounded, write_each_batch
 from .q_llm import _SQL_BUCKETS, _SQL_MINHASH, _sql_shingles
@@ -162,7 +163,7 @@ def streaming_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.incremental import stream_hourly_stats  # noqa: PLC0415
 
     stream, src_dir = _events_stream(spark, sf_dir)
-    agg = stream_hourly_stats(stream, ts_col="ts")
+    agg = stream_hourly_stats(stream.withColumnRenamed("ts", "recorded_at_time"))
     return _run_stream(agg, spark, src_dir, mode="complete")
 
 
@@ -193,28 +194,21 @@ def streaming_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_user_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming first/last event per user (the A4 aggregation under
     readStream): watermarked groupBy with the exact batch min_by/max_by
-    expressions from streaming/incremental.py:first_last_aggs."""
-    from ..streaming.incremental import first_last_aggs  # noqa: PLC0415
-
-    raw_stream, src_dir = _events_stream(spark, sf_dir)
-    stream = raw_stream.select(
-        F.col("user_id").alias("siri_ride_id"),
-        F.col("event_id").alias("id"),
-        F.col("ts").alias("recorded_at_time"),
-    )
+    expressions from operators/first_last.py:first_last_aggs."""
+    stream, src_dir = _events_stream(spark, sf_dir)
     agg = (
-        stream.withWatermark("recorded_at_time", "4 days")
-        .groupBy("siri_ride_id")
-        .agg(*first_last_aggs("recorded_at_time", "id"))
+        stream.withWatermark("ts", "4 days")
+        .groupBy("user_id")
+        .agg(*first_last_aggs("ts", ["event_id"], ["event_id"]))
     )
     out = _run_stream(agg, spark, src_dir, mode="complete")
     return out.select(
-        F.col("siri_ride_id").alias("user_id"),
-        F.col("first_vehicle_location_id").alias("first_event_id"),
-        F.col("last_vehicle_location_id").alias("last_event_id"),
-        F.col("first_ts"),
-        F.col("last_ts"),
-        F.col("n_points"),
+        "user_id",
+        "first_event_id",
+        "last_event_id",
+        F.col("min_ts").alias("first_ts"),
+        F.col("max_ts").alias("last_ts"),
+        F.col("n_rows").alias("n_points"),
     )
 
 

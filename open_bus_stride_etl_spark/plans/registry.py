@@ -20,6 +20,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.first_last import first_last_by
 from ..session import ship_package
 from ..sources.lake import load_table
 from .flat_join import flat_export
@@ -169,16 +170,17 @@ def first_last_durations(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None),
         ).otherwise(F.col("ts")),
     )
-    okey = F.when(F.col("ts_n").isNotNull(), F.struct(F.col("ts_n"), F.col("event_id")))
-    return ev.groupBy("user_id").agg(
-        F.min_by("event_id", okey).alias("first_event_id"),
-        F.max_by("event_id", okey).alias("last_event_id"),
-        F.min("ts_n").alias("first_ts"),
-        F.max("ts_n").alias("last_ts"),
-        F.round((F.unix_timestamp(F.max("ts_n")) - F.unix_timestamp(F.min("ts_n"))) / 60.0)
+    first_ts, last_ts = F.col("min_ts_n"), F.col("max_ts_n")
+    return first_last_by(ev, "user_id", "ts_n", ["event_id"], ["event_id"]).select(
+        "user_id",
+        "first_event_id",
+        "last_event_id",
+        first_ts.alias("first_ts"),
+        last_ts.alias("last_ts"),
+        F.round((F.unix_timestamp(last_ts) - F.unix_timestamp(first_ts)) / 60.0)
         .cast("long")
         .alias("duration_minutes"),
-        F.count(F.lit(1)).alias("n_rows"),
+        "n_rows",
     )
 
 

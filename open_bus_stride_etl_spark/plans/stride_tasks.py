@@ -580,7 +580,7 @@ def stats_collect(spark: SparkSession, base_dir: str, validate: bool = False):
     counts = status_counts(snaps, "etl_status")
     metrics = {"snapshot_status_counts": counts}
     if validate:
-        metrics["freshness_age_sec"] = validate_freshness(snaps, 3600)
+        metrics["freshness_age_sec"] = validate_freshness(snaps)
     return metrics
 
 

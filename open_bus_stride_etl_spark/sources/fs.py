@@ -41,6 +41,10 @@ T = TypeVar("T")
 # the os-module path, not silently route to the cluster's default FS.
 _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]+:(//|/)")
 
+# with_retries' total attempts: one try plus two retries, as the
+# reference's loop (packagers/common.py:42-62).
+RETRY_ATTEMPTS = 3
+
 
 def is_uri(path: str) -> bool:
     """True when the path carries a real scheme prefix (``s3a://…``,
@@ -69,19 +73,12 @@ def join_path(base: str, *parts: str) -> str:
     return os.path.join(base, *parts)
 
 
-def with_retries(
-    fn: Callable[[], T],
-    retries: int = 3,
-    sleep: Callable[[float], None] = time.sleep,
-) -> T:
-    """Run ``fn`` up to ``retries`` TOTAL attempts (retries=3 is one try
-    plus two retries, matching the reference's loop) with quadratic
-    backoff (attempt i>0 sleeps (i*i)/3 s; packagers/common.py:53-62).
+def with_retries(fn: Callable[[], T], sleep: Callable[[float], None] = time.sleep) -> T:
+    """Run ``fn`` up to ``RETRY_ATTEMPTS`` times with quadratic backoff
+    (attempt i>0 sleeps (i*i)/3 s; packagers/common.py:53-62).
     Re-raises the last error when every attempt fails."""
-    if retries < 1:
-        raise ValueError(f"retries must be >= 1 (total attempts), got {retries}")
     last: Exception | None = None
-    for i in range(retries):
+    for i in range(RETRY_ATTEMPTS):
         if i > 0:
             sleep((i * i) / 3)
         try:

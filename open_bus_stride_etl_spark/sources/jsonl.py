@@ -15,8 +15,7 @@ Design points, all Spark-native:
 - **Malformed lines are data, not crashes.** Real crawl dumps contain
   truncated/garbage lines. ``read_jsonl`` reads PERMISSIVE with a
   corrupt-record capture column so bad lines are quarantined by a
-  filter, not by a job failure; ``strict=True`` switches to FAILFAST
-  for contract-checked internal handoffs.
+  filter, not by a job failure.
 - **Splittable at scale**: uncompressed (or zstd/bzip2) JSONL splits on
   line boundaries, so one 10 TB dump still fans out across executors;
   gzip does not split.
@@ -39,25 +38,16 @@ DOCUMENTS_SCHEMA = T.StructType(
 )
 
 
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    strict: bool = False,
-) -> DataFrame:
-    """Read newline-delimited JSON with a declared schema.
-
-    PERMISSIVE mode (default): rows that fail to parse come back with
-    every schema column NULL and the raw line preserved in
-    ``_corrupt_record``; well-formed rows have it NULL. FAILFAST
-    (``strict=True``) aborts on the first malformed line instead.
+def read_jsonl(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """Read newline-delimited JSON with a declared schema, PERMISSIVE:
+    rows that fail to parse come back with every schema column NULL and
+    the raw line preserved in ``_corrupt_record``; well-formed rows have
+    it NULL.
 
     Note Spark's documented restriction: a query may not reference ONLY
     the corrupt column — always select at least one data column with it
     (``quarantine_corrupt`` below does this correctly).
     """
-    if strict:
-        return spark.read.schema(schema).option("mode", "FAILFAST").json(path)
     with_corrupt = T.StructType(
         list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
     )

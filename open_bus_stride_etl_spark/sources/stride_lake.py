@@ -16,9 +16,10 @@ renamed or retyped column would otherwise be lost silently.
 The reference keeps these tables in PostgreSQL and mutates them with
 UPDATEs (SURVEY.md §1.1). Re-running a window converges to the same
 state (the reference's ``IS NULL`` todo-marker contract), so a publish
-is safe to repeat. On a real cluster with date-partitioned facts the
-swap narrows to ``INSERT OVERWRITE`` of the affected date partitions
-(sources/lake.py:write_partitioned).
+is safe to repeat. Every table is one unpartitioned directory; a
+layout partitioned by date would narrow the swap to the affected date
+partitions (``partitionBy`` with dynamic partition overwrite), and no
+table has needed that yet.
 """
 
 from __future__ import annotations

@@ -12,10 +12,11 @@ temporal contracts map 1:1 onto Structured Streaming concepts:
 | 2d staleness -> duration 0            | state TTL                       |
 | per-hour package min/max/count        | 1h tumbling window aggregation  |
 
-Batch and streaming share the same aggregation expressions, so a query
-validated against the DuckDB oracle in batch mode computes identically
-under ``readStream`` — the Spark unification the reference's cron
-emulation was approximating.
+Batch and streaming share the same aggregation expressions
+(operators/first_last.py:first_last_aggs), so a query validated against
+the DuckDB oracle in batch mode computes identically under
+``readStream`` — the Spark unification the reference's cron emulation
+was approximating.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -34,26 +35,14 @@ from ..operators.first_last import SETTLE_HOURS
 # ---------------------------------------------------------------------------
 
 
-def first_last_aggs(ts_col: str, id_col: str) -> list[Column]:
-    """The A4 first/last aggregation exprs, shared verbatim by the batch
-    operator (operators/first_last.py) and the streaming variant. NULL
-    timestamps are excluded (NULLS LAST semantics)."""
-    okey = F.when(F.col(ts_col).isNotNull(), F.struct(F.col(ts_col), F.col(id_col)))
-    return [
-        F.min_by(F.col(id_col), okey).alias("first_vehicle_location_id"),
-        F.max_by(F.col(id_col), okey).alias("last_vehicle_location_id"),
-        F.min(ts_col).alias("first_ts"),
-        F.max(ts_col).alias("last_ts"),
-        F.count(F.lit(1)).alias("n_points"),
-    ]
-
-
-def stream_hourly_stats(locations: DataFrame, ts_col: str = "recorded_at_time") -> DataFrame:
-    """Per-hour min/max/count of telemetry — the packager's per-hour
-    bookkeeping (packagers/siri.py:460-482, SURVEY.md §2.4 A9) as a
-    tumbling-window aggregation. In append mode an hour emits exactly
-    once, when the watermark passes its close — the streaming analog of
-    'package the hour once it has settled' (the reference's 6h guard)."""
+def stream_hourly_stats(locations: DataFrame) -> DataFrame:
+    """Per-hour min/max/count of ``recorded_at_time`` — the packager's
+    per-hour bookkeeping (packagers/siri.py:460-482, SURVEY.md §2.4 A9)
+    as a tumbling-window aggregation. In append mode an hour emits
+    exactly once, when the watermark passes its close — the streaming
+    analog of 'package the hour once it has settled' (the reference's
+    6h guard)."""
+    ts_col = "recorded_at_time"
     return (
         locations.where(F.col(ts_col).isNotNull())
         .withWatermark(ts_col, "2 hours")
@@ -85,10 +74,7 @@ RIDE_OUTPUT_SCHEMA = (
 
 
 def _track_ride(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-    settle_hours: int = SETTLE_HOURS,
+    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState, settle_hours: int
 ) -> Iterator[pd.DataFrame]:
     """Per-ride state machine (the reference's add_ride_durations guards,
     siri/add_ride_durations.py:68-84, as explicit streaming state):
@@ -162,17 +148,16 @@ def _track_ride(
         )
 
 
-def stream_ride_tracker(
-    locations_with_ride: DataFrame,
-    watermark: str = "4 days",
-    settle_hours: int = SETTLE_HOURS,
-) -> DataFrame:
+def stream_ride_tracker(locations_with_ride: DataFrame, watermark: str) -> DataFrame:
     """Custom stateful streaming operator: ``applyInPandasWithState``
-    over rides, with event-time timeout implementing the settle guard.
-    Input needs columns (siri_ride_id, id, recorded_at_time)."""
+    over rides, with event-time timeout implementing the settle guard
+    (``SETTLE_HOURS``, read here on the driver so a test's patch reaches
+    the Python workers through the closure). Input needs columns
+    (siri_ride_id, id, recorded_at_time)."""
+    settle_hours = SETTLE_HOURS
 
     def fn(key, pdfs, state):
-        return _track_ride(key, pdfs, state, settle_hours=settle_hours)
+        return _track_ride(key, pdfs, state, settle_hours)
 
     return (
         locations_with_ride.withWatermark("recorded_at_time", watermark)

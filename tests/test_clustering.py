@@ -102,23 +102,20 @@ def test_clustered_near_dup_agrees_with_lsh_kernel(spark):
     assert got == want
 
 
-def test_clustered_near_dup_occupancy_guard(spark):
+def test_clustered_near_dup_occupancy_guard(spark, monkeypatch):
     """The fail-fast precondition (VERDICT r3 item 2): a hot cluster
-    whose occupancy exceeds max_occupancy must raise up front with
-    "scale k" guidance, not silently run O(occupancy^2) scoring."""
+    whose occupancy exceeds MAX_CLUSTER_OCCUPANCY must raise up front
+    with "scale k" guidance, not silently run O(occupancy^2) scoring."""
     import pytest
     from pyspark.sql import functions as F
 
-    from open_bus_stride_etl_spark.operators.similarity import (
-        clustered_near_dup_pairs,
-    )
+    from open_bus_stride_etl_spark.operators import similarity as sim
 
     d = _embs(spark, [(i, [1.0, 0.0, 0.0]) for i in range(6)])
     one = d.select("vec_id").withColumn("cluster", F.lit(0))
-    with pytest.raises(ValueError, match="max_occupancy"):
-        clustered_near_dup_pairs(d, one, threshold=0.9, max_occupancy=5)
+    monkeypatch.setattr(sim, "MAX_CLUSTER_OCCUPANCY", 5)
+    with pytest.raises(ValueError, match="MAX_CLUSTER_OCCUPANCY"):
+        sim.clustered_near_dup_pairs(d, one, threshold=0.9)
     # at the bound it still runs
-    assert (
-        clustered_near_dup_pairs(d, one, threshold=0.9, max_occupancy=6).count()
-        == 15
-    )
+    monkeypatch.setattr(sim, "MAX_CLUSTER_OCCUPANCY", 6)
+    assert sim.clustered_near_dup_pairs(d, one, threshold=0.9).count() == 15

@@ -23,8 +23,6 @@ PRODUCTION = [
 # Kept without a production caller: each carries a SURVEY.md §2 row (or
 # is the reference a test compares the production path against).
 ALLOWED = {
-    "sources/lake.py:load_table_jdbc": "S1 Postgres table scan (JDBC branch)",
-    "sources/lake.py:write_partitioned": "J8 partition-overwrite join-update",
     "sources/artifacts.py:latest_artifact": "O4 latest artifact (top-k by recency)",
     "sources/csv_package.py:load_package": "S5 datapackage load",
     "functions/timeutil.py:israel_iso_string": "F10 export datetime canonicalization",
@@ -95,18 +93,23 @@ def test_allowlist_has_no_stale_entries():
 
 # --- options guard -----------------------------------------------------------
 # An optional parameter of an operator-layer function is an option only if
-# some call site sets it: production code or a test passes it something other
-# than its literal default. A variable, a different literal, a ``*args`` or
-# ``**kwargs`` forward, a ``functools.partial`` binding and a call through an
-# import alias all count as setting it, so this guard, like the one above,
-# errs towards passing.
+# some production call site sets it: passes it something other than its
+# literal default. Tests do not count as callers — a guard or size only a
+# test turns is a module constant the test monkeypatches, and an input only
+# a test varies is one it builds itself. A variable, a different literal, a
+# ``*args`` or ``**kwargs`` forward, a ``functools.partial`` binding and a
+# call through an import alias all count as setting it, so this guard, like
+# the one above, errs towards passing.
 OPTION_ROOTS = [PACKAGE / d for d in ("operators", "functions", "sources", "streaming")]
-CALLERS = PRODUCTION + [ROOT / "tests"]
+CALLERS = PRODUCTION
 
+# The seams through which a test substitutes a fake clock or sleep.
 OPTIONS_ALLOWED = {
     "functions/timeutil.py:parse_window.today": "clock seam: the date every window resolves against",
-    "sources/lake.py:write_partitioned.partition_cols": "J8 carrier (ALLOWED above)",
-    "sources/lake.py:write_partitioned.mode": "J8 carrier (ALLOWED above)",
+    "operators/stats.py:validate_freshness.now": "clock seam: the instant snapshot age is taken at",
+    "sources/artifacts.py:register_artifact.now": "clock seam: the artifact's registration stamp",
+    "sources/artifacts.py:backup_and_cleanup.today": "clock seam: the date retention counts from",
+    "sources/fs.py:with_retries.sleep": "sleep seam: tests record the backoff instead of waiting",
 }
 
 
@@ -181,9 +184,9 @@ def never_set_options() -> tuple[str, ...]:
 def test_every_operator_option_has_a_caller_that_sets_it():
     unset = [k for k in never_set_options() if k not in OPTIONS_ALLOWED]
     assert not unset, (
-        "optional parameters that no call site (production or tests) sets to "
-        "anything but the default — fix them to the one schema/constant and "
-        f"delete the option, or set it where it matters: {unset}"
+        "optional parameters that no production call site sets to anything "
+        "but the default — fix them to the one schema/constant (a module "
+        f"constant tests monkeypatch) and delete the option: {unset}"
     )
 
 

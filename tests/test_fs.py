@@ -41,7 +41,7 @@ def test_with_retries_flaky_then_success():
             raise OSError("transient storage error")
         return "ok"
 
-    assert fs.with_retries(flaky, retries=5, sleep=sleeps.append) == "ok"
+    assert fs.with_retries(flaky, sleep=sleeps.append) == "ok"
     assert len(calls) == 3
     # reference backoff: attempt i sleeps (i*i)/3
     assert sleeps == [pytest.approx(1 / 3), pytest.approx(4 / 3)]
@@ -54,7 +54,7 @@ def test_with_retries_exhaustion_raises():
         raise OSError("bucket unreachable")
 
     with pytest.raises(OSError, match="bucket unreachable"):
-        fs.with_retries(always_down, retries=3, sleep=sleeps.append)
+        fs.with_retries(always_down, sleep=sleeps.append)
     assert len(sleeps) == 2
 
 

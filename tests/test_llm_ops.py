@@ -35,7 +35,7 @@ def test_jaccard_identical_is_10000(spark):
             Row(doc_id=3, text="a b c d e f g x"),
         ]
     )
-    pairs = {(r["doc_a"], r["doc_b"]): r["jaccard_bp"] for r in dd.jaccard_pairs(docs).collect()}
+    pairs = _pairs(dd.jaccard_pairs(dd._shingled(docs)))
     assert pairs[(1, 2)] == 10000
     # 8 words -> 6 shingles; docs 1 and 3 share 5 of 7 distinct
     assert pairs[(1, 3)] == round(10000 * 5 / 7)
@@ -65,7 +65,8 @@ def test_minhash_lsh_pairs_matches_primitive_composition(spark):
         (r["doc_a"], r["doc_b"])
         for r in dd.lsh_candidate_pairs(dd.minhash_signatures(docs)).collect()
     }
-    naive = {p: j for p, j in _pairs(dd.jaccard_pairs(docs)).items() if p in cands}
+    all_pairs = _pairs(dd.jaccard_pairs(dd._shingled(docs)))
+    naive = {p: j for p, j in all_pairs.items() if p in cands}
     tuned = _pairs(dd.minhash_lsh_pairs(docs))
     assert tuned == naive
     assert tuned[(1, 5)] == 10000 and tuned[(3, 4)] == 10000
@@ -164,15 +165,16 @@ def test_cosine_topk_orders_by_similarity(spark):
     assert out[0]["cos"] > 0.99
 
 
-def test_cosine_topk_rejects_oversized_query_set(spark):
+def test_cosine_topk_rejects_oversized_query_set(spark, monkeypatch):
     """The collect+broadcast precondition is enforced: an oversized
     query set must raise a clear error, never OOM the driver."""
+    monkeypatch.setattr(sim, "MAX_QUERY_ROWS", 5)
     emb = spark.range(10).select(
         F.col("id").alias("vec_id"),
         F.array(F.rand(seed=1), F.rand(seed=2)).alias("embedding"),
     )
-    with pytest.raises(ValueError, match="max_query_rows"):
-        sim.cosine_topk(emb, emb, k=2, max_query_rows=5)
+    with pytest.raises(ValueError, match="MAX_QUERY_ROWS"):
+        sim.cosine_topk(emb, emb, k=2)
 
 
 def test_lang_id_profiles(spark):
@@ -249,10 +251,28 @@ def test_decode_image_palette_and_errors():
         decode_image(deep)
 
 
+def wave_pcm8(samples, sample_rate):
+    """8-bit WAV bytes from the stdlib ``wave`` module (``encode_wav``
+    writes 16-bit only); 8-bit PCM is unsigned."""
+    import io
+    import wave
+
+    import numpy as np
+
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(samples.shape[1])
+        w.setsampwidth(1)
+        w.setframerate(sample_rate)
+        w.writeframes((samples + 128).astype(np.uint8).tobytes())
+    return buf.getvalue()
+
+
 @pytest.mark.parametrize("bits,channels", [(8, 1), (16, 1), (16, 2)])
 def test_decode_audio_roundtrip(bits, channels):
     """WAV PCM round-trips bit-exactly through the stdlib codec for
-    8-bit mono / 16-bit mono / 16-bit stereo."""
+    8-bit mono / 16-bit mono / 16-bit stereo (8-bit written by the
+    stdlib ``wave`` module, 16-bit by ``encode_wav``)."""
     import numpy as np
 
     from open_bus_stride_etl_spark.operators.multimodal import decode_audio, encode_wav
@@ -260,7 +280,7 @@ def test_decode_audio_roundtrip(bits, channels):
     rng = np.random.default_rng(7 + bits + channels)
     lo, hi = (-128, 128) if bits == 8 else (-32768, 32768)
     samples = rng.integers(lo, hi, size=(13, channels), dtype=np.int32)
-    payload = encode_wav(samples, sample_rate=16000, bits=bits)
+    payload = encode_wav(samples, sample_rate=16000) if bits == 16 else wave_pcm8(samples, 16000)
     got, sr = decode_audio(payload)
     assert sr == 16000
     assert got.shape == (13, channels)
@@ -336,9 +356,11 @@ def test_decode_image_stats_spark_stage(spark):
     assert not out[4]["decode_ok"]
 
 
-def test_ann_ivf_finds_planted_neighbor(spark):
+def test_ann_ivf_finds_planted_neighbor(spark, monkeypatch):
     """A vector nearly identical to a query lands in the same IVF cell
     (same nearest pivot) and ranks first."""
+    monkeypatch.setattr(sim, "IVF_K", 2)
+    monkeypatch.setattr(sim, "IVF_PIVOTS", 2)
     rows = [
         Row(vec_id=0, embedding=[1.0, 0.0, 0.0, 0.0]),   # pivot A
         Row(vec_id=1, embedding=[0.0, 1.0, 0.0, 0.0]),   # pivot B
@@ -348,20 +370,21 @@ def test_ann_ivf_finds_planted_neighbor(spark):
     ]
     emb = spark.createDataFrame(rows)
     q = emb.where(F.col("vec_id") == 50)
-    out = sim.ann_ivf_topk(emb, q, k=2, n_pivots=2).orderBy("rank").collect()
+    out = sim.ann_ivf_topk(emb, q).orderBy("rank").collect()
     assert out[0]["cand_id"] == 7 and out[0]["cos"] > 0.999
     # cell-B vector (8) must NOT be scored: candidates are cell-local
     assert all(r["cand_id"] != 8 for r in out)
 
 
-def test_embedding_near_dup_threshold(spark):
+def test_embedding_near_dup_threshold(spark, monkeypatch):
+    monkeypatch.setattr(sim, "LSH_BITS", 3)
     rows = [
         Row(vec_id=1, embedding=[1.0, 0.02, 0.2]),
         Row(vec_id=2, embedding=[0.99, 0.01, 0.2]),  # near-dup of 1, same sign bits
         Row(vec_id=3, embedding=[-1.0, 0.5, -0.2]),  # different bucket/sign
     ]
     emb = spark.createDataFrame(rows)
-    out = sim.embedding_near_dup_pairs(emb, threshold=0.95, bits=3).collect()
+    out = sim.embedding_near_dup_pairs(emb, threshold=0.95).collect()
     assert [(r["doc_a"], r["doc_b"]) for r in out] == [(1, 2)]
     assert out[0]["cos"] > 0.99
 
@@ -396,6 +419,12 @@ def test_topk_per_column_neginf_rows_never_emitted():
     assert got[0] == [10, 12] and got[1] == [11, 12]
 
 
+def _ivf_topk(emb, queries, k):
+    """``ann_ivf_topk`` keeps ``IVF_K`` per query; the test asks for 3."""
+    assert k == sim.IVF_K
+    return sim.ann_ivf_topk(emb, queries)
+
+
 def _ivf_persisted_topk(emb, queries, k):
     """The persisted-IVF probe draws its queries from the corpus itself,
     so the empty query set is an empty corpus over a one-cell index."""
@@ -409,7 +438,7 @@ def _ivf_persisted_topk(emb, queries, k):
 
 @pytest.mark.parametrize(
     "topk",
-    [sim.cosine_topk, sim.ann_ivf_topk, sim.ann_lsh_topk, _ivf_persisted_topk],
+    [sim.cosine_topk, _ivf_topk, sim.ann_lsh_topk, _ivf_persisted_topk],
     ids=["cosine_topk", "ann_ivf_topk", "ann_lsh_topk", "ivf_probe_persisted"],
 )
 def test_topk_empty_query_set_returns_empty(spark, topk):
@@ -453,7 +482,7 @@ def test_deterministic_sample_nested_and_stable(spark):
     assert sample(df.repartition(13), 10) == s10
 
 
-def test_reservoir_per_group_exactly_k_and_reproducible(spark):
+def test_reservoir_per_group_exactly_k_and_reproducible(spark, monkeypatch):
     from open_bus_stride_etl_spark.operators import sampling as sp
 
     df = spark.range(1, 501).select(
@@ -465,7 +494,8 @@ def test_reservoir_per_group_exactly_k_and_reproducible(spark):
     b = sorted(map(tuple, sp.reservoir_per_group(df.repartition(9), "g", "k", 7).collect()))
     assert a == b
     # a different seed draws a different sample
-    c = sorted(map(tuple, sp.reservoir_per_group(df, "g", "k", 7, seed="x").collect()))
+    monkeypatch.setattr(sp, "RESERVOIR_SEED", "x")
+    c = sorted(map(tuple, sp.reservoir_per_group(df, "g", "k", 7).collect()))
     assert a != c
 
 
@@ -484,14 +514,14 @@ def test_multiprobe_lsh_recall_dominates_exact_bucket(spark):
     assert all(multi[q] >= base[q] for q in base)
 
 
-def test_chunk_fixed_overlap_and_short_docs(spark):
+def test_chunk_fixed_overlap_and_short_docs(spark, monkeypatch):
     from open_bus_stride_etl_spark.operators import chunking as ck
 
+    monkeypatch.setattr(ck, "CHUNK_CHARS", 100)
     docs = spark.createDataFrame(
         [Row(doc_id=1, text="a" * 250), Row(doc_id=2, text="short")]
     )
-    out = {(r["doc_id"], r["chunk_no"]): r for r in ck.chunk_fixed(
-        docs, chunk_chars=100).collect()}
+    out = {(r["doc_id"], r["chunk_no"]): r for r in ck.chunk_fixed(docs).collect()}
     # 250 chars, step 80: starts 0/80/160 — last window still has >=20 new chars
     assert sorted(k[1] for k in out if k[0] == 1) == [0, 1, 2]
     assert out[(1, 1)]["chunk_start"] == 80
@@ -500,13 +530,14 @@ def test_chunk_fixed_overlap_and_short_docs(spark):
     assert out[(2, 0)]["chunk_text"] == "short"  # short doc: one chunk
 
 
-def test_pack_greedy_bins_bounded(spark):
+def test_pack_greedy_bins_bounded(spark, monkeypatch):
     from open_bus_stride_etl_spark.operators import chunking as ck
 
+    monkeypatch.setattr(ck, "PACK_SHARDS", 4)
     docs = spark.createDataFrame(
         [Row(doc_id=i, text=" ".join("w" for _ in range(5 + i % 17))) for i in range(200)]
     )
-    out = ck.pack_greedy(docs, budget_tokens=50, n_shards=4)
+    out = ck.pack_greedy(docs, budget_tokens=50)
     per_bin = out.groupBy("shard", "bin_id").agg(
         F.sum("n_tokens").alias("total"), F.max("n_tokens").alias("mx")
     ).collect()
@@ -555,25 +586,24 @@ def _uf_components(n_nodes, edges):
     ],
 )
 @pytest.mark.parametrize("local_finish", [0, 50_000])
-@pytest.mark.parametrize("input_simple", [False, True])
-def test_connected_components_matches_union_find(spark, edges, local_finish, input_simple):
+@pytest.mark.parametrize("distinct_edges", [False, True])
+def test_connected_components_matches_union_find(
+    spark, monkeypatch, edges, local_finish, distinct_edges
+):
     """local_finish=0 forces the fully-distributed star rounds;
-    50_000 takes the driver-side union-find tail finish; input_simple
-    skips the defensive dedup/self-loop filter (the setting the LSH
-    callers use), so its input is deduplicated first — all four
-    combinations must produce identical components."""
+    50_000 takes the driver-side union-find tail finish; distinct_edges
+    deduplicates the input first (the shape the LSH/SimHash pair
+    operators emit), the other setting keeps the pseudo-random graph's
+    repeated and reversed edges — all four combinations must produce
+    identical components."""
+    monkeypatch.setattr(dd, "_derived_finish_bound", lambda spark: local_finish)
     expected = _uf_components(200, edges)
-    if input_simple:
+    if distinct_edges:
         edges = sorted(set(edges))
     pairs = spark.createDataFrame(
         [Row(doc_a=u, doc_b=v) for u, v in edges], "doc_a long, doc_b long"
     )
-    got = {
-        r["doc_id"]: r["component_id"]
-        for r in dd.connected_components(
-            pairs, local_finish_edges=local_finish, input_simple=input_simple
-        ).collect()
-    }
+    got = {r["doc_id"]: r["component_id"] for r in dd.connected_components(pairs).collect()}
     assert got == expected
 
 
@@ -618,11 +648,19 @@ def test_local_cc_finish_kernel_matches_union_find(spark):
 
 
 @pytest.mark.parametrize("local_finish", [0, 50_000])
-def test_connected_components_empty_and_self_loops(spark, local_finish):
+def test_connected_components_empty_and_self_loops(spark, monkeypatch, local_finish):
+    """No edges, no components; a self-loop on a node that has a real
+    edge leaves the components unchanged (the star rounds and the local
+    finish both ignore it)."""
+    monkeypatch.setattr(dd, "_derived_finish_bound", lambda spark: local_finish)
     empty = spark.createDataFrame([], "doc_a long, doc_b long")
-    assert dd.connected_components(empty, local_finish_edges=local_finish).count() == 0
-    loops = spark.createDataFrame([Row(doc_a=7, doc_b=7)], "doc_a long, doc_b long")
-    assert dd.connected_components(loops, local_finish_edges=local_finish).count() == 0
+    assert dd.connected_components(empty).count() == 0
+    loops = spark.createDataFrame(
+        [Row(doc_a=7, doc_b=7), Row(doc_a=7, doc_b=9), Row(doc_a=9, doc_b=9)],
+        "doc_a long, doc_b long",
+    )
+    got = {r["doc_id"]: r["component_id"] for r in dd.connected_components(loops).collect()}
+    assert got == {7: 7, 9: 7}
 
 
 def test_quantile_threshold_filter_tie_inclusive(spark):
@@ -772,11 +810,9 @@ def test_leakage_safe_split_co_assigns_dup_groups(spark):
     # rough weight sanity on ~485 singletons: train is the large bucket
     n_train = sum(1 for v in out.values() if v == "train")
     assert n_train > 400
-    with pytest.raises(ValueError, match="10000"):
-        leakage_safe_split(docs, None, {"train": 5000, "test": 1000})
-    # without components: still total, deterministic
-    solo = {r["doc_id"]: r["split"] for r in leakage_safe_split(docs).collect()}
-    assert len(solo) == 500
+    # no near-duplicates at all: still total
+    no_comps = comps.where(F.col("doc_id") < 0)
+    assert leakage_safe_split(docs, no_comps).count() == 500
 
 
 def test_decode_stats_survive_corrupt_payloads(spark):

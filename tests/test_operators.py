@@ -26,7 +26,7 @@ def test_first_last_nulls_last(spark):
             Row(ride=2, ts=None, id=9),  # all-null group -> NULL first/last
         ]
     )
-    out = {r["ride"]: r for r in first_last_by(df, "ride", "ts", ["id"], tie_cols="id").collect()}
+    out = {r["ride"]: r for r in first_last_by(df, "ride", "ts", ["id"], ["id"]).collect()}
     assert out[1]["first_id"] == 5 and out[1]["last_id"] == 3
     assert out[2]["first_id"] is None and out[2]["last_id"] is None
     assert out[2]["n_rows"] == 1

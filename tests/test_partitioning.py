@@ -9,7 +9,6 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from open_bus_stride_etl_spark.operators.banded_join import banded_priority_join
-from open_bus_stride_etl_spark.sources.lake import write_partitioned
 
 
 def _explain(df, mode="formatted"):
@@ -23,7 +22,7 @@ def test_date_partition_pruning(spark, tmp_path):
         Row(id=i, date=datetime.date(2024, 5, 1 + i % 5), v=float(i)) for i in range(100)
     ]
     path = str(tmp_path / "dim")
-    write_partitioned(spark.createDataFrame(rows), path)
+    spark.createDataFrame(rows).write.partitionBy("date").parquet(path)
 
     df = spark.read.parquet(path).where(F.col("date") == "2024-05-03")
     plan = _explain(df)
@@ -32,26 +31,12 @@ def test_date_partition_pruning(spark, tmp_path):
     assert "PartitionFilters" in plan
     assert plan.count("date=2024-05-03") >= 1 or "isnotnull(date" in plan
     assert df.count() == 20
-    # all 5 partition dirs exist on disk (dynamic overwrite layout)
+    # all 5 partition dirs exist on disk
     import os
 
     assert sorted(d for d in os.listdir(path) if d.startswith("date=")) == [
         f"date=2024-05-0{i}" for i in range(1, 6)
     ]
-
-
-def test_dynamic_partition_overwrite(spark, tmp_path):
-    path = str(tmp_path / "dim")
-    df1 = spark.createDataFrame(
-        [Row(id=1, date=datetime.date(2024, 5, 1), v=1.0),
-         Row(id=2, date=datetime.date(2024, 5, 2), v=2.0)]
-    )
-    write_partitioned(df1, path)
-    # overwrite ONLY the 05-02 partition; 05-01 must survive
-    df2 = spark.createDataFrame([Row(id=9, date=datetime.date(2024, 5, 2), v=9.0)])
-    write_partitioned(df2, path)
-    got = {(r["id"], r["v"]) for r in spark.read.parquet(path).collect()}
-    assert got == {(1, 1.0), (9, 9.0)}
 
 
 def test_banded_join_is_equi_join(spark):
@@ -89,7 +74,7 @@ def test_dynamic_partition_pruning_on_dim_join(spark, tmp_path):
         [Row(id=i, date=datetime.date(2024, 5, 1 + i % 5), v=i) for i in range(1000)]
     )
     path = str(tmp_path / "dim")
-    write_partitioned(dim, path)
+    dim.write.partitionBy("date").parquet(path)
     fact = spark.createDataFrame(
         [Row(fid=i, date=datetime.date(2024, 5, 1 + i % 2), val=float(i)) for i in range(5000)]
     )

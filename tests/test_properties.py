@@ -48,7 +48,7 @@ def test_first_last_by_matches_python(spark, rows):
     df = spark.createDataFrame(rows, "id long, g long, ts timestamp")
     got = {
         r["g"]: (r["first_id"], r["last_id"], r["n_rows"])
-        for r in first_last_by(df, "g", "ts", ["id"], tie_cols="id").collect()
+        for r in first_last_by(df, "g", "ts", ["id"], ["id"]).collect()
     }
     want = {}
     for g in {r[1] for r in rows}:
@@ -258,10 +258,11 @@ def test_wav_roundtrip_property(frames, channels, bits, seed):
     import numpy as np
 
     from open_bus_stride_etl_spark.operators.multimodal import decode_audio, encode_wav
+    from tests.test_llm_ops import wave_pcm8
 
     rng = np.random.default_rng(seed)
     lo, hi = (-128, 128) if bits == 8 else (-32768, 32768)
     samples = rng.integers(lo, hi, size=(frames, channels), dtype=np.int32)
-    payload = encode_wav(samples, sample_rate=22050, bits=bits)
+    payload = encode_wav(samples, sample_rate=22050) if bits == 16 else wave_pcm8(samples, 22050)
     got, sr = decode_audio(payload)
     assert sr == 22050 and got.shape == (frames, channels) and (got == samples).all()

@@ -49,10 +49,11 @@ def test_stream_hourly_stats_matches_batch(spark, tables, loc_stream_dir, tmp_pa
     assert got == want and len(got) > 5
 
 
-def test_stream_ride_tracker_state_and_finalize(spark, tmp_path):
+def test_stream_ride_tracker_state_and_finalize(spark, tmp_path, monkeypatch):
     """Three micro-batches: ride 1 accumulates across batches 1-2, then
     finalizes by event-time timeout in batch 3 once the watermark passes
-    last_ts + settle_hours. Duration = round((last-first)/60) = 30."""
+    last_ts + SETTLE_HOURS (patched to 1). Duration = round((last-first)/60) = 30."""
+    monkeypatch.setattr(si, "SETTLE_HOURS", 1)
     D = datetime.datetime
     d = str(tmp_path / "stream")
     os.makedirs(d)
@@ -78,7 +79,7 @@ def test_stream_ride_tracker_state_and_finalize(spark, tmp_path):
         .parquet(d)
     )
     out = _run(
-        si.stream_ride_tracker(stream, watermark="10 minutes", settle_hours=1),
+        si.stream_ride_tracker(stream, watermark="10 minutes"),
         "update", tmp_path,
     )
     rows = out.collect()

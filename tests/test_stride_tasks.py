@@ -286,11 +286,11 @@ def test_stats_validations(spark, tables):
         "id long, etl_start_time timestamp",
     )
     now = datetime.datetime(2024, 5, 10, 12, 0)
-    assert validate_freshness(snaps, 3600, now=now) == 1800.0
+    assert validate_freshness(snaps, now=now) == 1800.0
+    with pytest.raises(FreshnessError):  # 3660 s > MAX_AGE_SECONDS
+        validate_freshness(snaps, now=datetime.datetime(2024, 5, 10, 12, 31))
     with pytest.raises(FreshnessError):
-        validate_freshness(snaps, 900, now=now)
-    with pytest.raises(FreshnessError):
-        validate_freshness(snaps.where(F.col("id") < 0), 3600, now=now)  # empty
+        validate_freshness(snaps.where(F.col("id") < 0), now=now)  # empty
 
     counts = status_counts(
         spark.createDataFrame(

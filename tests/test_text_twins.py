@@ -2,7 +2,9 @@
 values over the same rows — empty, whitespace-only and punctuation-only
 texts, tabs and newlines, mixed case, a normalized text that crosses the
 prefix-fingerprint boundary, stopwords glued to punctuation, an exact
-es/de language-score tie and planted PII included."""
+es/de language-score tie, planted PII, a vertical tab (Java's \\s
+matches it, RE2's does not) and a dotted capital I (Java lowercases it
+to two chars) included."""
 
 import duckdb
 from pyspark.sql import functions as F
@@ -21,6 +23,8 @@ TEXTS = [
     "el y der ist",
     "le et est la",
     "the el der le",
+    "a\x0bb c",
+    "İstanbul",
     "mail: user12@ex.org, tel +1 (055) 123-4567 or user@a.b",
 ]
 

@@ -40,10 +40,6 @@ ALLOWED = {
         "streaming sink into a run-private temp dir; complete mode "
         "rewrites the whole result table each batch"
     ),
-    "sources/lake.py:write_partitioned": (
-        "dynamic partition overwrite of date partitions (SURVEY J8); "
-        "no task calls it"
-    ),
 }
 
 
