@@ -50,8 +50,8 @@ def _q_bound(dim: int) -> float:
 
 def kmeans_fit(
     embs: DataFrame,
-    k: int = 8,
-    iters: int = 3,
+    k: int,
+    iters: int,
 ) -> tuple[DataFrame, DataFrame]:
     """``(assignments, centroids)`` after ``iters`` Lloyd rounds —
     ``centroids`` is the long-format ``(cluster, pos, cq)`` table the

@@ -43,6 +43,7 @@ SPLIT_WEIGHTS_BP = {"train": 9000, "val": 500, "test": 500}
 # q_llm._sql_curate): a document survives at quality >= QUALITY_MIN_BP,
 # language in CURATE_LANGS, as its exact-dup group's min-id keeper, and
 # off the higher-id side of every near-dup pair at >= JACCARD_MIN_BP.
+# Read at call time, so tests monkeypatch them.
 QUALITY_MIN_BP = 2000
 CURATE_LANGS = ("en", "und")
 JACCARD_MIN_BP = 5000
@@ -62,22 +63,22 @@ def curate_scores(docs: DataFrame) -> DataFrame:
     ).withColumn("_min_id", F.min("doc_id").over(Window.partitionBy("_fp")))
 
 
-def curate_checks(quality_min_bp: int = QUALITY_MIN_BP, langs=CURATE_LANGS) -> tuple[Column, ...]:
+def curate_checks() -> tuple[Column, ...]:
     """The per-document checks over ``curate_scores``' columns, in
     verdict order: quality floor, language allow-list, exact-dup keeper."""
     return (
-        F.col("_quality_bp") >= quality_min_bp,
-        F.col("_lang").isin(*langs),
+        F.col("_quality_bp") >= QUALITY_MIN_BP,
+        F.col("_lang").isin(*CURATE_LANGS),
         F.col("doc_id") == F.col("_min_id"),
     )
 
 
-def near_dup_losers(pairs: DataFrame, jaccard_min_bp: int) -> DataFrame:
+def near_dup_losers(pairs: DataFrame) -> DataFrame:
     """The distinct ``doc_id``s that lose a near-dup pair: the ``doc_b``
     (higher-id) side of every ``(doc_a, doc_b, jaccard_bp)`` pair at
-    ``jaccard_min_bp`` or more."""
+    ``JACCARD_MIN_BP`` or more."""
     return (
-        pairs.where(F.col("jaccard_bp") >= jaccard_min_bp)
+        pairs.where(F.col("jaccard_bp") >= JACCARD_MIN_BP)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )

@@ -66,9 +66,7 @@ def reservoir_per_group(df: DataFrame, group_col: str, key_col: str, k: int) -> 
     )
 
 
-def shard_shuffle(
-    df: DataFrame, n_shards: int = 32, seed: str = ""
-) -> DataFrame:
+def shard_shuffle(df: DataFrame, n_shards: int, seed: str) -> DataFrame:
     """Deterministic global training order as ``(id, shard, pos)`` —
     the reproducible corpus shuffle every training run needs. Each row
     gets an md5 rank key; ``shard`` is the key mod n_shards and ``pos``

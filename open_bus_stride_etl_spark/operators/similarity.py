@@ -97,7 +97,7 @@ def _query_block(rows):
     return ids, mat, np.sqrt((mat * mat).sum(axis=1))
 
 
-def cosine_topk(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
+def cosine_topk(emb: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     """Exact top-k nearest (by cosine) corpus vectors per query vector.
     ``queries`` has the same schema; self-matches are excluded.
     Output: query_id, cand_id, rank, cos (double, bit-portable).
@@ -322,9 +322,9 @@ def ivf_probe_persisted(
     emb: DataFrame,
     centroids: DataFrame,
     assignments: DataFrame,
-    n_queries: int = 16,
-    k_top: int = 5,
-    n_probe: int = 2,
+    n_queries: int,
+    k_top: int,
+    n_probe: int,
 ) -> tuple[DataFrame, dict]:
     """Top-k against a PERSISTED IVF index — the trained
     ``(cluster, pos, cq)`` ``centroids`` and the ``(vec_id, cluster)``

@@ -62,13 +62,17 @@ def _lower_sql(expr: str) -> str:
 
 
 def normalize_text(text: Column) -> Column:
-    """Lowercase + collapse whitespace — the canonical form every dedup/
-    fingerprint operator hashes."""
-    return F.trim(F.regexp_replace(F.lower(text), WS_RE, " "))
+    """Case-fold + collapse whitespace — the canonical form every dedup/
+    fingerprint operator hashes. The fold is ``lower`` with the final
+    sigma ``ς`` mapped to ``σ``, as ``str.casefold`` does: Java lowercases
+    a word-final ``Σ`` to ``ς``, DuckDB to ``σ``, and neither engine's
+    regex can spell Unicode's Final_Sigma context."""
+    return F.trim(F.regexp_replace(F.translate(F.lower(text), "ς", "σ"), WS_RE, " "))
 
 
 def normalize_text_sql(expr: str) -> str:
-    return f"trim(regexp_replace({_lower_sql(expr)}, '{WS_RE_SQL}', ' ', 'g'))"
+    folded = f"replace({_lower_sql(expr)}, 'ς', 'σ')"
+    return f"trim(regexp_replace({folded}, '{WS_RE_SQL}', ' ', 'g'))"
 
 
 def ws_token_count(text: Column) -> Column:

@@ -15,9 +15,9 @@ kernel (operators/curation.py: curate_scores, curate_checks,
 near_dup_losers and the QUALITY_MIN_BP / CURATE_LANGS / JACCARD_MIN_BP
 defaults): quality floor, language allow-list, exact-dup min-id
 keeper, MinHash-LSH near-dup loser pruning. This task adds what a query
-cannot carry: reading from parquet OR JSONL crawl dumps, writing the
-curated corpus (with text) as parquet, and per-stage survivor metrics
-for the run ledger.
+cannot carry: reading from parquet OR, when there is none, a JSONL
+crawl dump, writing the curated corpus (with text) as parquet, and
+per-stage survivor metrics for the run ledger.
 """
 
 from __future__ import annotations
@@ -34,6 +34,22 @@ from ..sources import stride_lake as lake
 from ..streaming.bounded import run_bounded
 from .tasks import task
 
+# The IVF index llm-build-ann-index trains (ANN_CELLS k-means cells after
+# LLOYD_ROUNDS rounds) and llm-ann-query's probe: the ANN_QUERIES
+# lowest-id vectors, each probing its ANN_N_PROBE nearest cells for its
+# ANN_TOP_K neighbours. Read at call time, so tests monkeypatch them.
+ANN_CELLS = 8
+LLOYD_ROUNDS = 3
+ANN_QUERIES = 16
+ANN_TOP_K = 5
+ANN_N_PROBE = 2
+# llm-export-training-shards: the corpus vocabulary size, the shard
+# count and the shuffle's epoch seed. Read at call time, so tests
+# monkeypatch them.
+VOCAB_SIZE = 100
+N_SHARDS = 8
+EPOCH_SEED = "ep0"
+
 
 def _indexed_lsh_pairs(
     spark: SparkSession,
@@ -47,10 +63,14 @@ def _indexed_lsh_pairs(
     index (r10, VERDICT r9 #1): ``{history_dir}/lsh_band_index.parquet``
     holds one ``(doc_id, fp, bucket)`` row per band per ever-indexed
     doc. Each incremental run tops the index up with the docs it does
-    not validly cover (one signature aggregation over THOSE docs only —
-    the full corpus is signed exactly once across the task's lifetime,
-    never rebuilt) and probes batch-vs-index, so the steady-state run's
-    only full-corpus work is one slim columnar scan of the index.
+    not validly cover (one signature aggregation over THOSE docs only;
+    the index is never rebuilt, and a validly indexed doc is never
+    signed again) and probes batch-vs-index, so the steady-state run's
+    only full-corpus work is one slim columnar scan of the index. The
+    first history-backed run (no ``seen_fingerprints`` yet) is not
+    indexed: it signs its corpus in-plan through ``minhash_lsh_pairs``
+    and appends no band index, so the next run's bootstrap signs those
+    docs a second time.
 
     Exactness: an index row is USED only when its ``fp`` (the task's
     md5 content fingerprint — the same text-identity the seen-index and
@@ -99,29 +119,28 @@ def _indexed_lsh_pairs(
     return dd.minhash_lsh_pairs_from_buckets(docs, buckets_now, b_ids, probe_rows)
 
 
-def _load_docs(spark: SparkSession, base_dir: str, input_format: str) -> DataFrame:
-    if input_format == "jsonl":
-        from ..sources.jsonl import load_documents_jsonl  # noqa: PLC0415
+def _load_docs(spark: SparkSession, base_dir: str) -> DataFrame:
+    """``documents.parquet``, or the ``documents_jsonl/`` crawl dump
+    when there is no parquet table."""
+    parquet = f"{base_dir}/documents.parquet"
+    if fs.exists(parquet, spark):
+        return spark.read.parquet(parquet)
+    from ..sources.jsonl import load_documents_jsonl  # noqa: PLC0415
 
-        return load_documents_jsonl(spark, f"{base_dir}/documents_jsonl")
-    return spark.read.parquet(f"{base_dir}/documents.parquet")
+    return load_documents_jsonl(spark, f"{base_dir}/documents_jsonl")
 
 
 @task("llm-curate-corpus", cadence="daily")
 def llm_curate_corpus(
     spark: SparkSession,
     base_dir: str,
-    quality_min_bp: int = cu.QUALITY_MIN_BP,
-    jaccard_min_bp: int = cu.JACCARD_MIN_BP,
-    langs: str = ",".join(cu.CURATE_LANGS),
-    input_format: str = "parquet",
     out_dir: str | None = None,
     history_dir: str | None = None,
 ) -> dict:
-    """Curate ``{base_dir}/documents.parquet`` (or ``documents_jsonl/``)
-    into ``{out_dir or base_dir/curated_documents}``: quality floor,
-    language allow-list, exact-dedup min-id keeper, LSH near-dup loser
-    pruning — then write the surviving documents WITH their text as
+    """Curate ``{base_dir}/documents.parquet`` (or, without it,
+    ``documents_jsonl/``) into ``{out_dir or base_dir/curated_documents}``:
+    quality floor, language allow-list, exact-dedup min-id keeper, LSH
+    near-dup loser pruning — then write the surviving documents WITH their text as
     parquet and report per-stage counts.
 
     ``history_dir`` (any path ``sources.fs`` accepts, URIs included)
@@ -135,14 +154,15 @@ def llm_curate_corpus(
     pipeline's signature aggregate (the flattened `minhash_lsh_pairs`
     plan) — and on INCREMENTAL runs even that disappears: signatures
     are read from the amortized persisted band-bucket index in
-    ``history_dir`` (see ``_indexed_lsh_pairs``; each doc is signed
-    exactly once across the task's lifetime). The final write streams
+    ``history_dir`` (see ``_indexed_lsh_pairs``: once indexed, a doc is
+    not signed again while its text is unchanged; the first
+    history-backed run's docs are signed twice, in that run and in the
+    next run's bootstrap). The final write streams
     the survivor rows — nothing collects to the driver but the metric
     scalars."""
-    allow = tuple(s.strip() for s in langs.split(",") if s.strip())
-    docs = _load_docs(spark, base_dir, input_format)
+    docs = _load_docs(spark, base_dir)
     scored = cu.curate_scores(docs)
-    ok_quality, ok_lang, keeper = cu.curate_checks(quality_min_bp, allow)
+    ok_quality, ok_lang, keeper = cu.curate_checks()
 
     # Incremental mode (the daily-crawl shape, same contract as the
     # dedup_incremental query): drop any document whose fingerprint is
@@ -233,7 +253,7 @@ def llm_curate_corpus(
             )
         else:
             pairs_src = dd.minhash_lsh_pairs(docs)
-        losers = cu.near_dup_losers(pairs_src, jaccard_min_bp)
+        losers = cu.near_dup_losers(pairs_src)
         kept = kept.join(losers, on="doc_id", how="left_anti")
     out = out_dir or f"{base_dir}/curated_documents"
     # n_final is counted in the write job itself (no read-back count)
@@ -266,8 +286,6 @@ def llm_curate_corpus(
 def llm_build_ann_index(
     spark: SparkSession,
     base_dir: str,
-    k: int = 8,
-    iters: int = 3,
     out_dir: str | None = None,
 ) -> dict:
     """Train and PERSIST the IVF index over ``{base_dir}/
@@ -286,7 +304,7 @@ def llm_build_ann_index(
     from ..operators.clustering import kmeans_fit  # noqa: PLC0415
 
     emb = spark.read.parquet(f"{base_dir}/embeddings.parquet")
-    assign, cents = kmeans_fit(emb, k=k, iters=iters)
+    assign, cents = kmeans_fit(emb, k=ANN_CELLS, iters=LLOYD_ROUNDS)
     out = out_dir or f"{base_dir}/ann_index"
     lake.overwrite_table(cents, out, "centroids")
     lake.overwrite_table(assign, out, "assignments")
@@ -303,8 +321,8 @@ def llm_build_ann_index(
         .collect()[0]
     )
     return {
-        "k": k,
-        "iters": iters,
+        "k": ANN_CELLS,
+        "iters": LLOYD_ROUNDS,
         "n_vectors": occ["n_vectors"],
         "n_cells_nonempty": occ["n_cells"],
         "occupancy_min": occ["occ_min"],
@@ -318,31 +336,23 @@ def llm_ann_query(
     spark: SparkSession,
     base_dir: str,
     index_dir: str | None = None,
-    k_top: int = 5,
-    n_probe: int = 2,
-    n_queries: int = 16,
     out_dir: str | None = None,
-    eval_recall: bool = False,
 ) -> dict:
     """Answer a query set against the PERSISTED IVF index (built by
     llm-build-ann-index) without retraining: queries are coarse-
     quantized against the loaded centroids driver-side (k x dim ints),
-    each probing its ``n_probe`` nearest cells; the corpus makes ONE
+    each probing its ``ANN_N_PROBE`` nearest cells; the corpus makes ONE
     mapInPandas pass keyed by its stored cell assignment, scoring each
     Arrow batch's cell-groups against the probing queries' blocks
     (operators/similarity.py:ivf_probe_persisted — only per-batch top-k
-    rows leave the workers). The query set is the ``n_queries`` lowest-id
+    rows leave the workers). The query set is the ``ANN_QUERIES`` lowest-id
     vectors (deterministic, like the oracle-checked ANN queries).
 
     Scale shape: the assignment join is an equi-join on the 8-byte id;
     nothing shuffles vectors except the one corpus scan's Arrow
-    batches; raising n_probe trades recall for the number of cell
+    batches; raising ANN_N_PROBE trades recall for the number of cell
     blocks each batch matmuls against."""
-    from ..operators.similarity import (  # noqa: PLC0415
-        ann_recall_at_k,
-        cosine_topk,
-        ivf_probe_persisted,
-    )
+    from ..operators.similarity import ivf_probe_persisted  # noqa: PLC0415
 
     idx = index_dir or f"{base_dir}/ann_index"
     emb = spark.read.parquet(f"{base_dir}/embeddings.parquet")
@@ -350,70 +360,47 @@ def llm_ann_query(
         emb,
         lake.read_table(spark, idx, "centroids"),
         lake.read_table(spark, idx, "assignments"),
-        n_queries=n_queries,
-        k_top=k_top,
-        n_probe=n_probe,
+        n_queries=ANN_QUERIES,
+        k_top=ANN_TOP_K,
+        n_probe=ANN_N_PROBE,
     )
     out = out_dir or f"{base_dir}/ann_results"
     n_rows = fs.publish_parquet(result, out)["rows"]
-    metrics = {
+    return {
         "n_queries": probe_meta["n_queries"],
-        "k_top": k_top,
-        "n_probe": n_probe,
+        "k_top": ANN_TOP_K,
+        "n_probe": ANN_N_PROBE,
         "n_result_rows": n_rows,
         "n_probed_cells": probe_meta["n_probed_cells"],
         "out_dir": out,
     }
-    if eval_recall:
-        # The quality gate before an index replaces the exact path:
-        # mean recall@k of the probed result against the brute-force
-        # baseline over the SAME query set (bounded by cosine_topk's
-        # MAX_QUERY_ROWS broadcast contract — query sets are small by
-        # construction here).
-        queries_df = emb.orderBy("vec_id").limit(n_queries)
-        exact = cosine_topk(emb, queries_df, k=k_top)
-        rec = (
-            ann_recall_at_k(exact, spark.read.schema(result.schema).parquet(out))
-            .agg(
-                F.sum("n_true").alias("t"),
-                F.sum("n_hit").alias("h"),
-            )
-            .collect()[0]
-        )
-        metrics["recall_bp"] = int(round(10000.0 * rec["h"] / rec["t"])) if rec["t"] else None
-    return metrics
 
 
-def build_training_shards(
-    docs: DataFrame, vocab_size: int = 100, n_shards: int = 8, seed: str = "ep0"
-) -> DataFrame:
+def build_training_shards(docs: DataFrame) -> DataFrame:
     """The export task's logical plan, pre-write (factored out r8 so
     tests/test_partitioning.py can canary the plan shape): the corpus's
-    top-``vocab_size`` DF vocabulary (corpus_stats.top_df_vocab),
-    tokenize_with_vocab, seeded shard_shuffle (bucket-then-rank:
-    n_shards window partitions, NEVER one global sort), one repartition
-    by shard with partition-local ordering by pos."""
+    top-``VOCAB_SIZE`` DF vocabulary (corpus_stats.top_df_vocab),
+    tokenize_with_vocab, ``EPOCH_SEED``-seeded shard_shuffle
+    (bucket-then-rank: ``N_SHARDS`` window partitions, NEVER one global
+    sort), one repartition by shard with partition-local ordering by
+    pos."""
     from ..operators import corpus_stats as cs  # noqa: PLC0415
     from ..operators import sampling as sp  # noqa: PLC0415
 
-    toks = cs.tokenize_with_vocab(docs, cs.top_df_vocab(docs, vocab_size))
-    order_df = sp.shard_shuffle(docs, n_shards=n_shards, seed=seed)
+    toks = cs.tokenize_with_vocab(docs, cs.top_df_vocab(docs, VOCAB_SIZE))
+    order_df = sp.shard_shuffle(docs, n_shards=N_SHARDS, seed=EPOCH_SEED)
     return (
         toks.join(order_df, on="doc_id")
         .select("doc_id", "shard", "pos", "n_tokens", "n_oov", "ids_csv")
-        .repartition(n_shards, "shard")
+        .repartition(N_SHARDS, "shard")
         .sortWithinPartitions("shard", "pos")
     )
-
 
 
 @task("llm-export-training-shards", cadence="daily")
 def llm_export_training_shards(
     spark: SparkSession,
     base_dir: str,
-    vocab_size: int = 100,
-    n_shards: int = 8,
-    seed: str = "ep0",
     in_dir: str | None = None,
     out_dir: str | None = None,
 ) -> dict:
@@ -421,22 +408,22 @@ def llm_export_training_shards(
     corpus into the sharded, shuffled, tokenized artifact a training
     loader consumes. Chains the already-oracle-checked operators:
 
-    1. vocabulary = the corpus's top-``vocab_size`` document-frequency
+    1. vocabulary = the corpus's top-``VOCAB_SIZE`` document-frequency
        terms (rank = token id, ties by term — the tokenize_vocab_ids
        contract; a production run passes a fixed external vocab
        instead),
     2. ``tokenize_with_vocab`` — token-id sequences, OOV = 0,
-    3. ``shard_shuffle(seed)`` — the reproducible hash-random global
-       order (bucket-then-rank; NEVER a single global sort), one seed
-       per epoch,
+    3. ``shard_shuffle(EPOCH_SEED)`` — the reproducible hash-random
+       global order (bucket-then-rank; NEVER a single global sort), one
+       seed per epoch,
     4. write parquet PARTITIONED BY shard, rows sorted by ``pos``
        within each shard file — a loader streams shards in any
        interleaving and replays the identical order on every engine.
 
     Scale shape: the vocab is a broadcast; tokenization is one
     posexplode + broadcast join + doc-keyed reassembly; the shuffle
-    order is n_shards independent window partitions (each bounded at
-    |corpus|/n_shards); the final exchange is one repartition by shard
+    order is N_SHARDS independent window partitions (each bounded at
+    |corpus|/N_SHARDS); the final exchange is one repartition by shard
     (one output file per shard partition at real scale). Reads
     ``in_dir`` (default: the llm-curate-corpus output if present, else
     the raw documents table)."""
@@ -445,8 +432,8 @@ def llm_export_training_shards(
         cur = f"{base_dir}/curated_documents"
         src = cur if fs.exists_restoring(cur, spark) else f"{base_dir}/documents.parquet"
     docs = spark.read.parquet(src)
-    sharded = build_training_shards(docs, vocab_size=vocab_size, n_shards=n_shards, seed=seed)
-    out = out_dir or f"{base_dir}/training_shards/{seed}"
+    sharded = build_training_shards(docs)
+    out = out_dir or f"{base_dir}/training_shards/{EPOCH_SEED}"
     sharded.write.mode("overwrite").partitionBy("shard").parquet(out)
     stats = spark.read.parquet(out).agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -461,8 +448,8 @@ def llm_export_training_shards(
         "oov_bp": int(round(10000.0 * stats["total_oov"] / stats["total_tokens"]))
         if stats["total_tokens"]
         else 0,
-        "vocab_size": vocab_size,
-        "seed": seed,
+        "vocab_size": VOCAB_SIZE,
+        "seed": EPOCH_SEED,
         "out_dir": out,
     }
 

@@ -317,9 +317,9 @@ n2 AS (SELECT vec_id, SUM(q * q) AS n2 FROM comp GROUP BY vec_id)
 # its measured cost grew quadratically with the corpus by construction.
 # The exact kernel (operators/similarity.py:cosine_topk) is unchanged and
 # still driver-verified every round INSIDE ann_recall_eval, which runs it
-# as the ground-truth baseline on the fixed lowest-100 query sample; the
-# production task surface (llm_tasks.py:llm_ann_query eval_recall=True)
-# uses the same fixed-count shape.
+# as the ground-truth baseline on the fixed lowest-100 query sample;
+# llm-ann-query (llm_tasks.py:ANN_QUERIES) probes the same fixed-count
+# shape.
 
 
 # ---------------------------------------------------------------------------
@@ -331,9 +331,9 @@ _SQL_BUCKET = " + ".join(
     for j in range(8)
 )
 
-# Fixed-count deterministic query sample for the recall eval (r5): the
-# production gate (llm_tasks.py:llm_ann_query eval_recall) samples a fixed
-# n_queries; the registered query mirrors it so the eval stays O(corpus).
+# Fixed-count deterministic query sample for the recall eval (r5), the
+# shape of llm-ann-query's fixed query set (llm_tasks.py:ANN_QUERIES): a
+# fixed count keeps the eval O(corpus).
 _RECALL_EVAL_QUERIES = 100
 
 # Oracle twin of corpus_stats.py:term_document_frequency (CTE dfreq).
@@ -438,8 +438,8 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two top-k operators and one counting join.
 
     The query set is a FIXED-COUNT deterministic sample (the
-    {_RECALL_EVAL_QUERIES} lowest vec_ids — the same shape as the
-    production gate, plans/llm_tasks.py:llm_ann_query eval_recall),
+    {_RECALL_EVAL_QUERIES} lowest vec_ids — the same shape as
+    llm-ann-query's query set, plans/llm_tasks.py:ANN_QUERIES),
     not a corpus-proportional slice: a recall estimate needs a bounded
     sample, and sampling makes the whole eval O(corpus) (one exact
     scan per fixed query set) instead of O(corpus^2 / p) — the r4
@@ -830,7 +830,7 @@ def corpus_clean_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipelines the filters. The selection is the curate kernel
     (operators/curation.py) that llm-curate-corpus runs."""
     d = _docs(spark, sf_dir)
-    losers = cu.near_dup_losers(dd.minhash_lsh_pairs(d), cu.JACCARD_MIN_BP)
+    losers = cu.near_dup_losers(dd.minhash_lsh_pairs(d))
     ok_quality, ok_lang, keeper = cu.curate_checks()
     return (
         cu.curate_scores(d)
@@ -950,7 +950,7 @@ def corpus_clean_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the next query construction (bench/run_task stage boundaries).
     d = track_persist(src0.unionByName(clones))
     base = cu.curate_scores(d)
-    nd = cu.near_dup_losers(dd.minhash_lsh_pairs(d), cu.JACCARD_MIN_BP).select(
+    nd = cu.near_dup_losers(dd.minhash_lsh_pairs(d)).select(
         F.col("doc_id").alias("doc_b")
     )
     ok_quality, ok_lang, keeper = cu.curate_checks()
@@ -2010,10 +2010,10 @@ def shard_export_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     per shard, the row count and the order-insensitive content hash
     over (doc_id, pos, n_tokens, n_oov, ids_csv) must equal the
     analytic prediction composed from the tokenize_vocab_ids and
-    training_shard_order oracle contracts (vocab_size=100, n_shards=8,
-    seed='ep0'). A lost/duplicated row, a wrong token id, or a
-    misassigned shard/pos all fail the value hash; a missing shard
-    partition fails the row count.
+    training_shard_order oracle contracts (the task's VOCAB_SIZE=100,
+    N_SHARDS=8, EPOCH_SEED='ep0'). A lost/duplicated row, a wrong token
+    id, or a misassigned shard/pos all fail the value hash; a missing
+    shard partition fails the row count.
 
     Scale shape (the task's): broadcast vocab, one posexplode +
     doc-keyed reassembly, n_shards bounded window partitions, one final
@@ -2027,10 +2027,7 @@ def shard_export_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         _docs(spark, sf_dir).select("doc_id", "text").write.mode("overwrite").parquet(
             f"{base}/documents.parquet"
         )
-        run_task(
-            spark, "llm-export-training-shards", base_dir=base,
-            vocab_size=100, n_shards=8, seed="ep0",
-        )
+        run_task(spark, "llm-export-training-shards", base_dir=base)
         out = spark.read.parquet(f"{base}/training_shards/ep0")
         h = row_hash(
             F.col("doc_id"), F.col("pos"), F.col("n_tokens"), F.col("n_oov"), F.col("ids_csv")

@@ -431,8 +431,7 @@ def compact_roundtrip_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.read.parquet(f"{base}/events"), "hash_before"
         ).localCheckpoint(eager=True)
         m = run_task(
-            spark, "lake-compact", base_dir=base, dataset="events",
-            target_mb=128, sort_cols="event_id",
+            spark, "lake-compact", base_dir=base, dataset="events", sort_cols="event_id"
         )
         after = _hash_agg(spark.read.parquet(f"{base}/events"), "hash_after")
         return (

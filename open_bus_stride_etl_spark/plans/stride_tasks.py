@@ -242,6 +242,14 @@ def gtfs_update_ride_aggregations(spark: SparkSession, base_dir: str):
 
 
 _HOUR_US = 3_600_000_000
+# The hourly sweep's wall-clock budget, the reference's 10 h
+# (packagers/siri.py:216), and the number of hours one hash/write
+# chunk covers. Read at call time, so tests monkeypatch them.
+BUDGET_SECONDS = 36000
+CHUNK_HOURS = 168
+# How many days back the fake-GTFS sweep ensures artifacts for. Read at
+# call time, so tests monkeypatch it.
+FAKE_GTFS_DAYS = 32
 
 
 def _hour_key(hour: datetime.datetime) -> str:
@@ -294,14 +302,12 @@ def siri_hourly_update_packages(
     out_dir: str | None = None,
     force_days: int = 5,
     max_hours: int | None = None,
-    budget_seconds: int = 36000,
-    chunk_hours: int = 168,
 ):
     """Hour sweep, newest first (packagers/siri.py:206-240): each hour's
     flat export becomes one package. Hours older than ``force_days`` that
     already have a manifest are skipped without recompute (:218's
     force-refresh horizon); otherwise the content-hash compare decides
-    created/updated/skipped (:194-202). ``budget_seconds`` is the
+    created/updated/skipped (:194-202). ``BUDGET_SECONDS`` is the
     reference's 10h wall-clock budget (:216).
 
     Execution shape (r9; guide §2.4 — the loop's DECISIONS are per-hour
@@ -317,13 +323,13 @@ def siri_hourly_update_packages(
     row-for-row), and writes just the changed hours in ONE partitioned
     write. The wall-clock budget bounds the sweep enumeration as before, AND
     (r10) the batched Spark work itself: hours needing a hash compare
-    are processed in ``chunk_hours`` chunks (newest first), with the
+    are processed in ``CHUNK_HOURS`` chunks (newest first), with the
     budget re-checked before every chunk's hash/write jobs — a catch-up
     sweep over an unbounded backlog stops mid-sweep like the
     reference's per-hour loop instead of running its whole enumerated
     window past the budget. Within one chunk the shape is unchanged
     (one hash aggregation + one partitioned write), so an in-budget
-    window no larger than ``chunk_hours`` runs exactly the r9 queries;
+    window no larger than ``CHUNK_HOURS`` runs exactly the r9 queries;
     each chunk's flat export carries its own [lo, hi) range so
     parquet pushdown prunes per chunk. Hours enumerated but left
     unprocessed by an exhausted budget contribute to ``hours_scanned``
@@ -342,7 +348,7 @@ def siri_hourly_update_packages(
     scanned = 0
     need: list[datetime.datetime] = []  # newest-first, hash compare required
     while hour >= bounds["lo"]:
-        if time.time() - t0 > budget_seconds or (max_hours and scanned >= max_hours):
+        if time.time() - t0 > BUDGET_SECONDS or (max_hours and scanned >= max_hours):
             break
         if hour < force_cutoff and read_manifest(out_dir, _hour_key(hour)) is not None:
             counts["skipped_exists"] += 1
@@ -351,11 +357,10 @@ def siri_hourly_update_packages(
         scanned += 1
         hour -= datetime.timedelta(hours=1)
 
-    step = max(1, int(chunk_hours))
-    for i in range(0, len(need), step):
-        if time.time() - t0 > budget_seconds:
+    for i in range(0, len(need), CHUNK_HOURS):
+        if time.time() - t0 > BUDGET_SECONDS:
             break  # budget exhausted between chunks: stop mid-sweep
-        sub = need[i : i + step]
+        sub = need[i : i + CHUNK_HOURS]
         # Range predicate keeps parquet pushdown (per chunk); the key
         # list drops any interior skipped_exists hours from the jobs.
         wide = _flat_export_hourly(
@@ -402,7 +407,6 @@ def update_areas_fake_gtfs(
     spark: SparkSession,
     base_dir: str,
     areas_file: str | None = None,
-    days: int = 32,
     only_area: str | None = None,
     only_hours: str | None = None,
     limit_fake_gtfs_processed: int | None = None,
@@ -410,9 +414,9 @@ def update_areas_fake_gtfs(
 ):
     """urbanaccess/update_areas_fake_gtfs.py:28-72 — per configured area
     (bbox), per configured Israel-local hour window, per date of a
-    backward sweep, ensure a "fake GTFS" artifact exists, keyed
-    ``{area}-{date}-{start_hour_utc:02}-{end_hour_utc:02}`` with
-    bbox-change invalidation (an existing artifact whose metadata bbox
+    ``FAKE_GTFS_DAYS``-day backward sweep, ensure a "fake GTFS" artifact
+    exists, keyed ``{area}-{date}-{start_hour_utc:02}-{end_hour_utc:02}``
+    with bbox-change invalidation (an existing artifact whose metadata bbox
     differs from the config is treated as absent and recreated,
     reference :37-39). The bbox predicate is a pure column filter
     (SURVEY.md §2.2 P9); the YAML area config (areas.yaml:1-17) is the
@@ -478,7 +482,7 @@ def update_areas_fake_gtfs(
                 continue
             sh_utc = israel_hour_to_utc_hour(sh, today)
             eh_utc = israel_hour_to_utc_hour(eh, today)
-            for i in range(1, int(days) + 1):
+            for i in range(1, FAKE_GTFS_DAYS + 1):
                 d = today - datetime.timedelta(days=i)
                 prefix = (
                     f"urbanaccess/areas_fake_gtfs/"
@@ -549,17 +553,18 @@ def _load_areas(areas_file: str | None) -> dict:
 @task("siri-storage-backup-cleanup", cadence="daily")
 def siri_storage_backup_cleanup(
     spark: SparkSession, base_dir: str, storage_root: str | None = None,
-    backup_dir: str | None = None, older_than_days: int = 7,
+    backup_dir: str | None = None,
 ):
     """siri/storage_backup_cleanup.py:46-73 — archive dated raw-SIRI dirs
-    older than the retention window to the backup store, prune locals."""
+    older than the retention window (``artifacts.RETENTION_DAYS``) to
+    the backup store, prune locals."""
     from ..sources.artifacts import backup_and_cleanup  # noqa: PLC0415
 
     storage_root = fs.local_path(storage_root or os.path.join(base_dir, "siri-storage"))
     backup_dir = fs.local_path(backup_dir or os.path.join(base_dir, "siri-storage-backup"))
     if not os.path.isdir(storage_root):
         return {"archived_days": 0, "pruned_dirs": 0}
-    return backup_and_cleanup(storage_root, backup_dir, older_than_days=older_than_days)
+    return backup_and_cleanup(storage_root, backup_dir)
 
 
 @task("db-copy-backup", cadence="daily")
@@ -589,21 +594,15 @@ def lake_compact(
     spark: SparkSession,
     base_dir: str,
     dataset: str,
-    target_mb: int = 128,
     sort_cols: str = "",
 ):
     """Small-file compaction for a lake dataset (no reference analog —
     Postgres has autovacuum; a parquet lake needs this pass after
     incremental/streaming writers fragment a table). Delegates to
-    sources/fs.py:compact_parquet; ``sort_cols`` (comma-separated)
-    additionally clusters rows so parquet min/max stats support range
-    pruning."""
+    sources/fs.py:compact_parquet (``COMPACT_TARGET_BYTES`` files);
+    ``sort_cols`` (comma-separated) additionally clusters rows so
+    parquet min/max stats support range pruning."""
     from ..sources.fs import compact_parquet, join_path  # noqa: PLC0415
 
     cols = [c.strip() for c in sort_cols.split(",") if c.strip()]
-    return compact_parquet(
-        spark,
-        join_path(base_dir, dataset),
-        target_file_bytes=target_mb << 20,
-        sort_cols=cols or None,
-    )
+    return compact_parquet(spark, join_path(base_dir, dataset), sort_cols=cols or None)

@@ -37,6 +37,9 @@ from . import stride_lake as lake
 
 # Destination names probe_free_name tries before giving up.
 NAME_TRIES = 30
+# backup_and_cleanup archives dated dirs older than this many days, as
+# the reference's raw-SIRI retention (siri/storage_backup_cleanup.py:48).
+RETENTION_DAYS = 7
 
 
 def read_registry(spark: SparkSession, base_dir: str) -> DataFrame:
@@ -103,14 +106,13 @@ def latest_artifact(spark: SparkSession, base_dir: str, file_prefix: str) -> Row
 def backup_and_cleanup(
     root: str,
     backup_dir: str,
-    older_than_days: int = 7,
     today: datetime.date | None = None,
 ) -> dict:
     """Retention walk over ``root/YYYY/MM/DD`` directories: archive each
-    dated dir older than the cutoff into ``backup_dir`` (same dated
+    dated dir older than ``RETENTION_DAYS`` into ``backup_dir`` (same dated
     layout), delete it locally, prune empty parents. Returns metrics."""
     today = today or datetime.date.today()
-    cutoff = today - datetime.timedelta(days=older_than_days)
+    cutoff = today - datetime.timedelta(days=RETENTION_DAYS)
     archived = pruned = 0
     for y in sorted(os.listdir(root)) if os.path.isdir(root) else []:
         ydir = os.path.join(root, y)

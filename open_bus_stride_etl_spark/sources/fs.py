@@ -45,6 +45,10 @@ _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]+:(//|/)")
 # reference's loop (packagers/common.py:42-62).
 RETRY_ATTEMPTS = 3
 
+# compact_parquet's output file size. Read at call time, so tests
+# monkeypatch it.
+COMPACT_TARGET_BYTES = 128 << 20
+
 
 def is_uri(path: str) -> bool:
     """True when the path carries a real scheme prefix (``s3a://…``,
@@ -55,11 +59,15 @@ def is_uri(path: str) -> bool:
 
 def local_path(path: str) -> str:
     """``path`` on the driver's own disk: a ``file:`` URI loses its
-    scheme, a plain path passes through. Any other scheme raises
-    ``ValueError``: packages and backups are assembled with the os
-    module, which would read ``file:/x`` as a relative directory."""
+    scheme and its empty or ``localhost`` authority, a plain path passes
+    through. Any other scheme or host raises ``ValueError``: packages
+    and backups are assembled with the os module, which would read
+    ``file:/x`` as a relative directory."""
     if path.startswith("file://"):
-        return path[7:]
+        host, _, rest = path[7:].partition("/")
+        if host not in ("", "localhost"):
+            raise ValueError(f"not a local path: {path}")
+        return "/" + rest
     if path.startswith("file:"):
         return path[5:]
     if is_uri(path):
@@ -249,7 +257,6 @@ def exists_restoring(final: str, spark: SparkSession | None = None) -> bool:
 def compact_parquet(
     spark: SparkSession,
     path: str,
-    target_file_bytes: int = 128 << 20,
     sort_cols: list | None = None,
 ) -> dict:
     """Small-file compaction for a parquet dataset directory — the lake
@@ -259,7 +266,7 @@ def compact_parquet(
     scan cost at 100 TB is dominated by file-open overhead once the
     small-file count explodes.
 
-    Rewrites ``path`` to ``ceil(total_bytes / target_file_bytes)``
+    Rewrites ``path`` to ``ceil(total_bytes / COMPACT_TARGET_BYTES)``
     files (coalesce if shrinking — no shuffle; repartition only if the
     dataset is somehow under-split), optionally sorting rows into the
     new files by ``sort_cols`` so parquet row-group min/max stats stay
@@ -284,7 +291,7 @@ def compact_parquet(
     files = _data_files(jfs, jpath) if jfs.exists(jpath) else []
     total = sum(sz for _, sz in files)
     n_before = len(files)
-    n_target = max(1, math.ceil(total / max(target_file_bytes, 1)))
+    n_target = max(1, math.ceil(total / COMPACT_TARGET_BYTES))
     df = spark.read.parquet(path)
     if sort_cols:
         out = df.repartitionByRange(n_target, *sort_cols).sortWithinPartitions(*sort_cols)

@@ -38,7 +38,7 @@ def test_backup_and_cleanup_retention(tmp_path):
         (d / "data.txt").write_text("x" * 100)
 
     m = art.backup_and_cleanup(
-        str(root), str(backup), older_than_days=7, today=datetime.date(2024, 5, 10)
+        str(root), str(backup), today=datetime.date(2024, 5, 10)
     )
     # 05-01 and 05-02 are older than 7 days; 05-09 stays
     assert m["archived_days"] == 2
@@ -49,6 +49,6 @@ def test_backup_and_cleanup_retention(tmp_path):
 
     # second run: nothing left to archive, layout unchanged
     m2 = art.backup_and_cleanup(
-        str(root), str(backup), older_than_days=7, today=datetime.date(2024, 5, 10)
+        str(root), str(backup), today=datetime.date(2024, 5, 10)
     )
     assert m2["archived_days"] == 0

@@ -32,6 +32,18 @@ def test_is_uri_and_join():
     assert fs.join_path("/tmp/base", "t.parquet") == "/tmp/base/t.parquet"
 
 
+def test_local_path_keeps_only_this_hosts_file_uris():
+    """A ``file:`` URI with an empty or ``localhost`` authority names an
+    absolute path on this host; another host is not a local path."""
+    assert fs.local_path("file:///tmp/x") == "/tmp/x"
+    assert fs.local_path("file://localhost/tmp/x") == "/tmp/x"
+    assert fs.local_path("file:/tmp/x") == "/tmp/x"
+    assert fs.local_path("/tmp/x") == "/tmp/x"
+    for remote in ("file://elsewhere/tmp/x", "s3a://bucket/x"):
+        with pytest.raises(ValueError, match="not a local path"):
+            fs.local_path(remote)
+
+
 def test_with_retries_flaky_then_success():
     calls, sleeps = [], []
 
@@ -96,13 +108,13 @@ def test_compact_parquet_shrinks_and_preserves(spark, tmp_path):
     df = spark.range(2000).selectExpr("id", "id * 2 AS v")
     df.repartition(20).write.parquet(path)
     before = sorted((r["id"], r["v"]) for r in spark.read.parquet(path).collect())
-    m = compact_parquet(spark, path, target_file_bytes=1 << 30)
+    m = compact_parquet(spark, path)
     assert m["files_before"] >= 20 and m["files_after"] == 1
     after = sorted((r["id"], r["v"]) for r in spark.read.parquet(path).collect())
     assert after == before
 
 
-def test_compact_parquet_sorted_tightens_rowgroups(spark, tmp_path):
+def test_compact_parquet_sorted_tightens_rowgroups(spark, tmp_path, monkeypatch):
     """sort_cols compaction must leave files whose parquet min/max id
     ranges are disjoint (tight stats -> range pruning), and content
     unchanged."""
@@ -110,14 +122,13 @@ def test_compact_parquet_sorted_tightens_rowgroups(spark, tmp_path):
 
     import pyarrow.parquet as pq
 
-    from open_bus_stride_etl_spark.sources.fs import compact_parquet
-
+    monkeypatch.setattr(fs, "COMPACT_TARGET_BYTES", 20_000)
     path = str(tmp_path / "sorted")
     # interleaved writes: every file spans nearly the full id range
     spark.range(4000).selectExpr("CAST(id % 97 AS BIGINT) AS k", "id AS v") \
         .repartition(8).write.parquet(path)
     before = sorted((r["k"], r["v"]) for r in spark.read.parquet(path).collect())
-    compact_parquet(spark, path, target_file_bytes=20_000, sort_cols=["k"])
+    fs.compact_parquet(spark, path, sort_cols=["k"])
     after = sorted((r["k"], r["v"]) for r in spark.read.parquet(path).collect())
     assert after == before
     ranges = []
@@ -139,7 +150,7 @@ def test_compact_parquet_on_fs_uri(spark, tmp_path):
     path = f"file://{tmp_path}/uri_ds"
     spark.range(500).selectExpr("id", "id % 5 AS g").repartition(10).write.parquet(path)
     before = sorted(r["id"] for r in spark.read.parquet(path).collect())
-    m = compact_parquet(spark, path, target_file_bytes=1 << 30)
+    m = compact_parquet(spark, path)
     assert m["files_before"] >= 10 and m["files_after"] == 1
     assert sorted(r["id"] for r in spark.read.parquet(path).collect()) == before
 

@@ -433,7 +433,7 @@ def _ivf_persisted_topk(emb, queries, k):
     spark = emb.sparkSession
     cents = spark.createDataFrame([(0, p, 500_000) for p in range(1, 5)], schema("centroids"))
     assign = spark.createDataFrame([(1, 0)], schema("assignments"))
-    return sim.ivf_probe_persisted(queries, cents, assign, k_top=k)[0]
+    return sim.ivf_probe_persisted(queries, cents, assign, n_queries=16, k_top=k, n_probe=2)[0]
 
 
 @pytest.mark.parametrize(

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from open_bus_stride_etl_spark.plans import llm_tasks  # noqa: F401 - registers
+from open_bus_stride_etl_spark.plans import llm_tasks
 from open_bus_stride_etl_spark.plans.tasks import run_task
 
 GOOD = (
@@ -48,23 +48,25 @@ def test_curate_corpus_task_parquet(spark, lake, capsys):
 
 
 def test_curate_corpus_task_jsonl(spark, lake, tmp_path):
+    """Without a documents.parquet table the task reads the
+    ``documents_jsonl/`` crawl dump."""
     docs = spark.read.parquet(f"{lake}/documents.parquet")
-    docs.coalesce(1).write.mode("overwrite").json(f"{lake}/documents_jsonl")
-    m = run_task(
-        spark,
-        "llm-curate-corpus",
-        base_dir=lake,
-        input_format="jsonl",
-        out_dir=str(tmp_path / "out"),
-    )
+    base = str(tmp_path / "jsonl_lake")
+    docs.coalesce(1).write.json(f"{base}/documents_jsonl")
+    m = run_task(spark, "llm-curate-corpus", base_dir=base, out_dir=str(tmp_path / "out"))
     assert m["n_total"] == 5 and m["n_final"] == 1
     assert spark.read.parquet(m["out_dir"]).count() == 1
 
 
 @pytest.fixture
-def emb_lake(spark, tmp_path):
+def emb_lake(spark, tmp_path, monkeypatch):
     """Embeddings with 3 well-separated direction groups + noise dims,
-    so trained cells are meaningful and near-neighbors share a group."""
+    so trained cells are meaningful and near-neighbors share a group.
+    The index has 3 cells; queries are the 6 lowest ids, 3 neighbours
+    each, probing 2 cells."""
+    monkeypatch.setattr(llm_tasks, "ANN_CELLS", 3)
+    monkeypatch.setattr(llm_tasks, "ANN_QUERIES", 6)
+    monkeypatch.setattr(llm_tasks, "ANN_TOP_K", 3)
     import math
 
     rows = []
@@ -88,9 +90,7 @@ def test_ann_index_build_and_query(spark, emb_lake, tmp_path):
     index without retraining, deterministically, self-excluded, and
     with in-group nearest neighbors."""
     idx = str(tmp_path / "idx")
-    m = run_task(
-        spark, "llm-build-ann-index", base_dir=emb_lake, k=3, iters=3, out_dir=idx
-    )
+    m = run_task(spark, "llm-build-ann-index", base_dir=emb_lake, out_dir=idx)
     assert m["n_vectors"] == 60
     assert 1 <= m["n_cells_nonempty"] <= 3
     assert m["occupancy_max"] >= m["occupancy_min"] >= 1
@@ -98,10 +98,7 @@ def test_ann_index_build_and_query(spark, emb_lake, tmp_path):
     assert cents.count() == 3 * 8  # k x dim long format
 
     out = str(tmp_path / "res")
-    q = run_task(
-        spark, "llm-ann-query", base_dir=emb_lake, index_dir=idx,
-        k_top=3, n_probe=2, n_queries=6, out_dir=out,
-    )
+    q = run_task(spark, "llm-ann-query", base_dir=emb_lake, index_dir=idx, out_dir=out)
     assert q["n_queries"] == 6
     res = spark.read.parquet(out).collect()
     assert q["n_result_rows"] == len(res) == 6 * 3
@@ -116,10 +113,7 @@ def test_ann_index_build_and_query(spark, emb_lake, tmp_path):
         assert (top - 1) % 3 == (qid - 1) % 3
     # determinism: a second run reproduces the result exactly
     out2 = str(tmp_path / "res2")
-    run_task(
-        spark, "llm-ann-query", base_dir=emb_lake, index_dir=idx,
-        k_top=3, n_probe=2, n_queries=6, out_dir=out2,
-    )
+    run_task(spark, "llm-ann-query", base_dir=emb_lake, index_dir=idx, out_dir=out2)
     a = sorted(map(tuple, spark.read.parquet(out).collect()))
     b = sorted(map(tuple, spark.read.parquet(out2).collect()))
     assert a == b
@@ -134,8 +128,8 @@ def test_ann_query_after_a_crash_in_the_index_rebuild(spark, emb_lake, tmp_path,
     from open_bus_stride_etl_spark.sources import fs
 
     idx = str(tmp_path / "idx")
-    build = {"base_dir": emb_lake, "k": 3, "iters": 3, "out_dir": idx}
-    query = {"base_dir": emb_lake, "index_dir": idx, "k_top": 3, "n_probe": 2, "n_queries": 6}
+    build = {"base_dir": emb_lake, "out_dir": idx}
+    query = {"base_dir": emb_lake, "index_dir": idx}
     run_task(spark, "llm-build-ann-index", **build)
     run_task(spark, "llm-ann-query", out_dir=str(tmp_path / "clean"), **query)
 
@@ -148,10 +142,9 @@ def test_ann_query_after_a_crash_in_the_index_rebuild(spark, emb_lake, tmp_path,
             raise OSError("crash between renames")
         return real_rename(src, dest, spark)
 
-    monkeypatch.setattr(fs, "rename", crash_on_second)
-    with pytest.raises(OSError, match="crash between renames"):
+    with monkeypatch.context() as m, pytest.raises(OSError, match="crash between renames"):
+        m.setattr(fs, "rename", crash_on_second)
         run_task(spark, "llm-build-ann-index", **build)
-    monkeypatch.undo()
     assert not os.path.exists(f"{idx}/centroids.parquet")
     assert os.path.isdir(f"{idx}/centroids.parquet.old")
 
@@ -205,31 +198,39 @@ def test_curate_corpus_incremental_history(spark, lake, tmp_path, monkeypatch):
     assert os.listdir(cwd) == []
 
 
-def test_ann_query_recall_gate(spark, emb_lake, tmp_path):
-    """eval_recall reports the mean recall@k against the exact baseline
-    — on the well-separated fixture, probing 2 of 3 trained cells must
-    recover most of the true neighbors, and probing all 3 recovers all."""
+def test_ann_query_recall_gate(spark, emb_lake, tmp_path, monkeypatch):
+    """The written result, scored against the exact baseline over the
+    same query set: probing all 3 trained cells recovers every true
+    neighbour."""
+    from open_bus_stride_etl_spark.operators.similarity import ann_recall_at_k, cosine_topk
+
+    monkeypatch.setattr(llm_tasks, "ANN_N_PROBE", 3)
     idx = str(tmp_path / "idx")
-    run_task(spark, "llm-build-ann-index", base_dir=emb_lake, k=3, iters=3, out_dir=idx)
+    run_task(spark, "llm-build-ann-index", base_dir=emb_lake, out_dir=idx)
     q = run_task(
-        spark, "llm-ann-query", base_dir=emb_lake, index_dir=idx,
-        k_top=3, n_probe=3, n_queries=6, out_dir=str(tmp_path / "r"),
-        eval_recall=True,
+        spark, "llm-ann-query", base_dir=emb_lake, index_dir=idx, out_dir=str(tmp_path / "r")
     )
-    assert q["recall_bp"] == 10000  # all cells probed -> exact recall
+    emb = spark.read.parquet(f"{emb_lake}/embeddings.parquet")
+    exact = cosine_topk(emb, emb.orderBy("vec_id").limit(6), k=3)
+    rec = ann_recall_at_k(exact, spark.read.parquet(q["out_dir"])).collect()
+    assert len(rec) == 6 and all(r["n_hit"] == r["n_true"] for r in rec)
 
 
-def test_export_training_shards(spark, lake, tmp_path):
+@pytest.fixture
+def small_export(monkeypatch):
+    """A 10-term vocabulary over 4 shards, for the 5-doc corpus."""
+    monkeypatch.setattr(llm_tasks, "VOCAB_SIZE", 10)
+    monkeypatch.setattr(llm_tasks, "N_SHARDS", 4)
+
+
+def test_export_training_shards(spark, lake, tmp_path, small_export, monkeypatch):
     """End-to-end last mile: vocab -> tokenize -> shuffle -> sharded
     write. Every doc appears exactly once, per-shard positions are
     contiguous from 1, rows inside a shard file are stored in pos
     order, and the same seed reproduces the identical artifact while a
     different seed permutes the order."""
     out = str(tmp_path / "shards")
-    m = run_task(
-        spark, "llm-export-training-shards", base_dir=lake,
-        vocab_size=10, n_shards=4, seed="ep0", out_dir=out,
-    )
+    m = run_task(spark, "llm-export-training-shards", base_dir=lake, out_dir=out)
     assert m["n_docs"] == 5 and m["total_tokens"] > 0
     back = spark.read.parquet(out)
     assert sorted(r["doc_id"] for r in back.collect()) == [1, 2, 3, 4, 5]
@@ -249,20 +250,19 @@ def test_export_training_shards(spark, lake, tmp_path):
 
     # reproducibility: same seed -> identical mapping; new seed -> reshuffle
     out2 = str(tmp_path / "shards2")
-    run_task(spark, "llm-export-training-shards", base_dir=lake,
-             vocab_size=10, n_shards=4, seed="ep0", out_dir=out2)
+    run_task(spark, "llm-export-training-shards", base_dir=lake, out_dir=out2)
     a = sorted(map(tuple, spark.read.parquet(out).select("doc_id", "shard", "pos").collect()))
     b = sorted(map(tuple, spark.read.parquet(out2).select("doc_id", "shard", "pos").collect()))
     assert a == b
     out3 = str(tmp_path / "shards3")
-    run_task(spark, "llm-export-training-shards", base_dir=lake,
-             vocab_size=10, n_shards=4, seed="ep1", out_dir=out3)
+    monkeypatch.setattr(llm_tasks, "EPOCH_SEED", "ep1")
+    run_task(spark, "llm-export-training-shards", base_dir=lake, out_dir=out3)
     c = sorted(map(tuple, spark.read.parquet(out3).select("doc_id", "shard", "pos").collect()))
     assert c != a  # different epoch seed permutes shard/pos assignment
 
 
 def test_export_training_shards_reads_curated_output_at_uri_base(
-    spark, lake, tmp_path, monkeypatch
+    spark, lake, tmp_path, monkeypatch, small_export
 ):
     """With a URI ``base_dir`` (``file:/…`` here, ``s3a://…`` in a
     deployment) the export reads the curated output when it exists, not
@@ -277,8 +277,7 @@ def test_export_training_shards_reads_curated_output_at_uri_base(
     curated = run_task(spark, "llm-curate-corpus", base_dir=base)
     assert curated["n_final"] == 1
     m = run_task(
-        spark, "llm-export-training-shards", base_dir=base,
-        vocab_size=10, n_shards=2, out_dir=str(tmp_path / "shards"),
+        spark, "llm-export-training-shards", base_dir=base, out_dir=str(tmp_path / "shards")
     )
     assert m["n_docs"] == curated["n_final"]
     got = {r["doc_id"] for r in spark.read.parquet(m["out_dir"]).collect()}
@@ -286,7 +285,9 @@ def test_export_training_shards_reads_curated_output_at_uri_base(
     assert os.listdir(cwd) == []
 
 
-def test_export_restores_curated_output_parked_by_a_crashed_swap(spark, lake, tmp_path):
+def test_export_restores_curated_output_parked_by_a_crashed_swap(
+    spark, lake, tmp_path, small_export
+):
     """A crash between ``swap_dir``'s two renames leaves only
     ``curated_documents.old``. The export puts it back and exports the
     curated docs, not the raw documents table."""
@@ -296,8 +297,7 @@ def test_export_restores_curated_output_parked_by_a_crashed_swap(spark, lake, tm
     final = f"{lake}/curated_documents"
     os.rename(final, f"{final}.old")
     m = run_task(
-        spark, "llm-export-training-shards", base_dir=lake,
-        vocab_size=10, n_shards=2, out_dir=str(tmp_path / "shards"),
+        spark, "llm-export-training-shards", base_dir=lake, out_dir=str(tmp_path / "shards")
     )
     assert m["n_docs"] == curated["n_final"] == 1
     assert os.path.isdir(final) and not os.path.exists(f"{final}.old")
@@ -444,9 +444,9 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def _incremental_vs_full(spark, hist, base, out_prefix, **params):
+def _incremental_vs_full(spark, hist, base, out_prefix):
     """One incremental run against ``hist`` and one history-free run of
-    the same generation with the same ``params``. Asserts the
+    the same generation. Asserts the
     incremental artifact is the full one restricted to fingerprints the
     history had not seen; returns (incremental metrics, admitted ids,
     the full run's admitted ids)."""
@@ -455,11 +455,9 @@ def _incremental_vs_full(spark, hist, base, out_prefix, **params):
     seen = [r[0] for r in spark.read.parquet(f"{hist}/seen_fingerprints.parquet").collect()]
     m = run_task(
         spark, "llm-curate-corpus", base_dir=base,
-        out_dir=f"{out_prefix}_inc", history_dir=hist, **params,
+        out_dir=f"{out_prefix}_inc", history_dir=hist,
     )
-    ref = run_task(
-        spark, "llm-curate-corpus", base_dir=base, out_dir=f"{out_prefix}_full", **params
-    )
+    ref = run_task(spark, "llm-curate-corpus", base_dir=base, out_dir=f"{out_prefix}_full")
     ref_out = spark.read.parquet(ref["out_dir"])
     want = _rows(ref_out.where(~tx.doc_fingerprint(F.col("text")).isin(seen)))
     assert _rows(spark.read.parquet(m["out_dir"])) == want
@@ -477,7 +475,7 @@ def _with_docs(spark, lake, base, rows):
     return base
 
 
-def test_curate_band_index_matches_recompute_path(spark, lake, tmp_path):
+def test_curate_band_index_matches_recompute_path(spark, lake, tmp_path, monkeypatch):
     """The amortized persisted band-bucket index (r10, VERDICT r9 #1)
     admits exactly what a full non-incremental recompute of the same
     generation admits, restricted to documents whose fingerprint the
@@ -493,6 +491,8 @@ def test_curate_band_index_matches_recompute_path(spark, lake, tmp_path):
     import os
 
     from pyspark.sql import Row as R
+
+    from open_bus_stride_etl_spark.operators import curation as cu
 
     hist = str(tmp_path / "hist")
     idx_path = f"{hist}/lsh_band_index.parquet"
@@ -558,9 +558,8 @@ def test_curate_band_index_matches_recompute_path(spark, lake, tmp_path):
     # the same generation under a lowered quality floor: the unseen
     # low-quality doc 4, inadmissible in every run so far, enters the
     # remainder and is admitted, as the full run at that floor says
-    m4, got4, _full4 = _incremental_vs_full(
-        spark, hist, base3, str(tmp_path / "g4"), quality_min_bp=0
-    )
+    monkeypatch.setattr(cu, "QUALITY_MIN_BP", 0)
+    m4, got4, _full4 = _incremental_vs_full(spark, hist, base3, str(tmp_path / "g4"))
     assert got4 == {4} and m4["n_near_dup_dropped"] > 0
 
 

@@ -188,13 +188,13 @@ def test_banded_join_keeps_selective_key_in_join_condition(spark, sf_dir):
 def test_training_shard_export_plan_has_no_global_sort(spark, sf_dir):
     """The export pipeline's 100TB contract (llm_tasks.py:
     build_training_shards): the epoch shuffle is bucket-then-rank —
-    n_shards bounded window partitions plus ONE repartition by shard
+    N_SHARDS bounded window partitions plus ONE repartition by shard
     with partition-local ordering. A refactor that collapses the order
     into a global sort (Sort with global=true) or drops the vocab
     broadcast would still pass row-level tests at sf0.01 while
     serializing the whole corpus through one partition at scale, so pin
     the plan: no global Sort node anywhere, and the only
-    SinglePartition exchange is the bounded vocab_size-row vocab rank."""
+    SinglePartition exchange is the bounded VOCAB_SIZE-row vocab rank."""
     from open_bus_stride_etl_spark.plans.llm_tasks import build_training_shards
     from open_bus_stride_etl_spark.sources.lake import load_table
 
@@ -206,6 +206,6 @@ def test_training_shard_export_plan_has_no_global_sort(spark, sf_dir):
     ]
     assert not global_sorts, f"global sort entered the export plan:\n{global_sorts}"
     # the vocab head is the one legitimate single-partition stage
-    # (bounded at vocab_size rows before it); the corpus must never be
+    # (bounded at VOCAB_SIZE rows before it); the corpus must never be
     single = [l for l in phys.splitlines() if "SinglePartition" in l]
     assert len(single) <= 1, f"corpus-wide SinglePartition exchange:\n{single}"

@@ -179,7 +179,6 @@ def test_backup_tasks(spark, lake_dir, tmp_path):
     m = run_task(
         spark, "siri-storage-backup-cleanup", base_dir=lake_dir,
         storage_root=str(root), backup_dir=str(tmp_path / "bk"),
-        older_than_days=7,
     )
     assert m["archived_days"] == (1 if datetime.date.today() > datetime.date(2024, 4, 8) else 0)
 
@@ -211,7 +210,7 @@ def test_file_uri_base_dir_packages_and_backups(spark, lake_dir, tmp_path, monke
         d = pathlib.Path(lake_dir, "siri-storage", day)
         d.mkdir(parents=True)
         (d / "x.json").write_text("{}")
-    m3 = run_task(spark, "siri-storage-backup-cleanup", base_dir=base, older_than_days=7)
+    m3 = run_task(spark, "siri-storage-backup-cleanup", base_dir=base)
     assert m3["archived_days"] == len(days)
     backup = pathlib.Path(lake_dir, "siri-storage-backup")
     assert sorted(p.relative_to(backup).as_posix() for p in backup.rglob("*.tar.bz2")) == [
@@ -248,7 +247,7 @@ def test_cli_run(spark, lake_dir):
     assert rc == 0
 
 
-def test_update_areas_fake_gtfs_sweep(spark, lake_dir, tmp_path):
+def test_update_areas_fake_gtfs_sweep(spark, lake_dir, tmp_path, monkeypatch):
     """Reference-shaped config drives the per-(area, hour-window, date)
     artifact sweep (urbanaccess/update_areas_fake_gtfs.py:28-60): key
     layout, bbox filtering, skip-when-current, bbox-change invalidation,
@@ -258,15 +257,17 @@ def test_update_areas_fake_gtfs_sweep(spark, lake_dir, tmp_path):
     import json
     import zipfile
 
+    import open_bus_stride_etl_spark.plans.stride_tasks as st
     from open_bus_stride_etl_spark.sources.artifacts import latest_artifact
 
+    monkeypatch.setattr(st, "FAKE_GTFS_DAYS", 3)
     today = datetime.date(2024, 5, 11)  # fixture stop dates: 05-08..05-10
     areas = tmp_path / "areas_sweep.json"
     cfg = {
         "tlv": {"bbox": "34.70,32.00,34.80,32.10", "hours": [[8, 12], [15, 19]]}
     }
     areas.write_text(json.dumps(cfg))
-    kw = dict(base_dir=lake_dir, areas_file=str(areas), days=3, today=today)
+    kw = dict(base_dir=lake_dir, areas_file=str(areas), today=today)
 
     m = run_task(spark, "update-areas-fake-gtfs", **kw)
     # 2 hour windows x 3 dates, all missing
@@ -320,10 +321,10 @@ def test_update_areas_fake_gtfs_sweep(spark, lake_dir, tmp_path):
 
 def test_hourly_sweep_budget_stops_between_chunks(spark, lake_dir, tmp_path, monkeypatch):
     """The wall-clock budget bounds the batched Spark work, not just the
-    manifest enumeration (r10 — VERDICT r9 #5): with chunk_hours=1 and a
+    manifest enumeration (r10 — VERDICT r9 #5): with CHUNK_HOURS=1 and a
     clock that jumps past the budget after the first chunk's hash job,
     the sweep stops mid-sweep with correct partial counts. And with the
-    default chunk_hours the whole gate window fits one chunk — the r9
+    default CHUNK_HOURS the whole gate window fits one chunk — the r9
     two-job shape (one hash aggregation, one partitioned write) is
     unchanged for an in-budget window."""
     import open_bus_stride_etl_spark.plans.stride_tasks as st
@@ -356,10 +357,11 @@ def test_hourly_sweep_budget_stops_between_chunks(spark, lake_dir, tmp_path, mon
 
     calls["hash_jobs"] = 1  # so the jump arms after the NEXT (first) chunk
     monkeypatch.setattr(st, "time", _JumpyClock())
+    monkeypatch.setattr(st, "CHUNK_HOURS", 1)
     out2 = str(tmp_path / "p2")
     m2 = run_task(
         spark, "siri-hourly-update-packages", base_dir=lake_dir, out_dir=out2,
-        max_hours=3, chunk_hours=1,
+        max_hours=3,
     )
     # enumeration saw the whole window; only chunk 1's hour was decided
     assert m2["hours_scanned"] == 3

@@ -3,8 +3,9 @@ values over the same rows — empty, whitespace-only and punctuation-only
 texts, tabs and newlines, mixed case, a normalized text that crosses the
 prefix-fingerprint boundary, stopwords glued to punctuation, an exact
 es/de language-score tie, planted PII, a vertical tab (Java's \\s
-matches it, RE2's does not) and a dotted capital I (Java lowercases it
-to two chars) included."""
+matches it, RE2's does not), a dotted capital I (Java lowercases it
+to two chars) and a word-final capital sigma (Java lowercases it to
+``ς``, DuckDB to ``σ``) included."""
 
 import duckdb
 from pyspark.sql import functions as F
@@ -25,6 +26,7 @@ TEXTS = [
     "the el der le",
     "a\x0bb c",
     "İstanbul",
+    "ΟΔΟΣ οδος",
     "mail: user12@ex.org, tel +1 (055) 123-4567 or user@a.b",
 ]
 
